@@ -76,13 +76,4 @@ object Fingerprint {
     */
   def winnow(c: Column, k: Int, w: Int): Column =
     Kernels.winnowFp(c, k, w)
-
-  /** Portable twin of [[winnow]]: fingerprints are `substr(md5(gram),
-    * 1, 16)` strings instead of FNV-1a longs, so any SQL engine
-    * reproduces the exact fingerprint set (the `corpus_split` md5
-    * portability argument) — oracle-checkable. Same window semantics,
-    * ~5-10x the per-gram hash cost; keep [[winnow]] for production.
-    */
-  def winnowPortable(c: Column, k: Int, w: Int): Column =
-    Kernels.winnowMd5Fp(c, k, w)
 }

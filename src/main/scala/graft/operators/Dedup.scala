@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Fnv64, TextFunctions}
+import graft.functions.{Fnv64, SigHash, TextFunctions}
 
 /** Deduplication operators for training-data pipelines, designed to scale:
   * every variant is expressed as shuffle-on-key DataFrame operations
@@ -710,21 +710,15 @@ object Dedup {
     * persisted at its 3-way fan-out (same lifecycle contract as the
     * other fan-out operators — clearCache() between runs in long-lived
     * sessions). Fingerprints are FNV-1a engine hashes by default
-    * (`engineHash` — pass false for the portable md5-hex variant that
-    * answers an exact DuckDB oracle).
+    * (`SigHash.Md5` gives the md5-hex variant, identical window
+    * semantics, that answers an exact DuckDB oracle).
     */
   def boilerplateScores(df: DataFrame, id: Column, text: Column,
                         k: Int = 8, w: Int = 8,
                         minDocs: Int = 2,
-                        engineHash: Boolean = true): DataFrame = {
-    import graft.functions.Fingerprint
+                        hash: SigHash = SigHash.Engine): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    // engineHash=false swaps the FNV-1a fingerprints for portable
-    // md5-hex ones (identical window semantics) so the whole operator
-    // answers an exact DuckDB oracle; true stays the production default
-    val fpArr =
-      if (engineHash) Fingerprint.winnow(text, k, w)
-      else Fingerprint.winnowPortable(text, k, w)
+    val fpArr = hash.winnow(text, k, w)
     // explode_OUTER: a document shorter than ~k+w-1 chars yields no
     // fingerprints, and a plain explode would drop it from the output
     // entirely (r7 advice) — the outer row carries fp=null and the doc
@@ -948,27 +942,31 @@ object Dedup {
     * computed by the codegen kernel ([[graft.functions.Kernels]]) — the
     * nested-HOF form costs numHashes × shingles INTERPRETED evals per
     * document, which is minutes-per-core at even 5k docs.
-    * Output columns: doc_id, sig: array<bigint>, n_sh.
+    * `SigHash.Md5` emits md5-hex elements instead (array<string>).
+    * Output columns: doc_id, sig, n_sh.
     */
   def minhashSignatures(df: DataFrame, id: Column, text: Column,
-                        numHashes: Int = 128, shingleSize: Int = 5): DataFrame = {
+                        numHashes: Int = 128, shingleSize: Int = 5,
+                        hash: SigHash = SigHash.Engine): DataFrame = {
     val sh = array_distinct(TextFunctions.wordShingles(text, shingleSize))
     df.select(id.as("doc_id"),
-      graft.functions.Kernels.minhashSig(sh, numHashes).as("sig"),
+      hash.minhash(sh, numHashes).as("sig"),
       size(sh).as("n_sh"))
   }
 
   /** LSH banding over MinHash signatures: split the signature into
-    * `bands` bands of `rows = numHashes / bands` values, hash each band,
-    * and emit (band_idx, band_hash, doc_id) — candidate pairs are rows
-    * agreeing on any (band_idx, band_hash), found with an equi-join.
+    * `bands` bands of `rows = numHashes / bands` values, key each band
+    * ([[graft.functions.SigHash.bandKey]]), and emit
+    * (doc_id, band_idx, band_hash) — candidate pairs are rows agreeing
+    * on any (band_idx, band_hash), found with an equi-join.
     */
-  def lshBands(signatures: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  def lshBands(signatures: DataFrame, numHashes: Int, bands: Int,
+               hash: SigHash = SigHash.Engine): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
     val rowsPerBand = numHashes / bands
-    val bandHashes = array((0 until bands).map { b =>
-      hash(slice(col("sig"), lit(b * rowsPerBand + 1), lit(rowsPerBand)), lit(b))
+    val bandKeys = array((0 until bands).map { b =>
+      hash.bandKey(col("sig"), b, rowsPerBand)
     }: _*)
     signatures
       // gate on n_sh, NOT size(sig): sig is empty exactly when n_sh = 0
@@ -978,7 +976,7 @@ object Dedup {
       // Filter below the parallelizing exchange and runs 2-3x per row in
       // one pre-repartition task (measured 8x wall on the md5 form)
       .filter(col("n_sh") > 0)
-      .select(col("doc_id"), posexplode(bandHashes))
+      .select(col("doc_id"), posexplode(bandKeys))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_hash")
   }
@@ -990,17 +988,18 @@ object Dedup {
   def minhashDedupPairs(df: DataFrame, id: Column, text: Column,
                         numHashes: Int = 128, shingleSize: Int = 5,
                         bands: Int = 32, minEstJaccard: Double = 0.5,
-                        persistLineage: Boolean = true): DataFrame = {
+                        persistLineage: Boolean = true,
+                        hash: SigHash = SigHash.Engine): DataFrame = {
     // The signature lineage fans out 4 ways (both sides of the banding
     // self-join + both est_jaccard lookups); without persist Spark
     // recomputes the full minhash kernel per consumer. Same cache
     // lifecycle note as ngramJaccardPairs.
-    val sigsRaw = minhashSignatures(df, id, text, numHashes, shingleSize)
+    val sigsRaw = minhashSignatures(df, id, text, numHashes, shingleSize, hash)
     val sigs =
       if (persistLineage)
         sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sigsRaw
-    minhashDedupPairsFromSigs(sigs, numHashes, bands, minEstJaccard)
+    minhashDedupPairsFromSigs(sigs, numHashes, bands, minEstJaccard, hash)
   }
 
   /** Within-corpus LSH pair generation over PRE-COMPUTED signatures — the
@@ -1009,29 +1008,35 @@ object Dedup {
     * funnel, which needs the SAME signatures again for its cross-corpus
     * join — generates self-pairs without paying the per-row minhash
     * kernel a second time. `sigs` is a (doc_id, sig, n_sh) frame from
-    * [[minhashSignatures]]; it is referenced four times here (both
-    * banding sides + both verification lookups), so the caller should
-    * persist it.
+    * [[minhashSignatures]] under the same `hash`; it is referenced four
+    * times here (both banding sides + both verification lookups), so the
+    * caller should persist it.
     */
   def minhashDedupPairsFromSigs(sigs: DataFrame, numHashes: Int, bands: Int,
-                                minEstJaccard: Double): DataFrame = {
-    val banded = lshBands(sigs, numHashes, bands)
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") < col("b.doc_id"))
+                                minEstJaccard: Double,
+                                hash: SigHash = SigHash.Engine): DataFrame =
+    verifyCandidatePairs(selfBandCandidates(sigs, numHashes, bands, hash),
+      sigs, sigs, minEstJaccard, hash)
+
+  /** Distinct (id_a, id_b) over banded rows `a` × `b` matching `on` —
+    * the candidate step of every LSH pair generator.
+    */
+  private def bandCandidates(a: DataFrame, b: DataFrame, on: Column): DataFrame =
+    a.as("a").join(b.as("b"), on)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    cands
-      .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      // codegen kernel, not zip_with+filter: the HOF form runs 3
-      // interpreted lambdas × numHashes per candidate pair
-      .withColumn("est_jaccard",
-        graft.functions.Kernels.agreeCountCol(col("sig_a"), col("sig_b"))
-          .cast("double") / size(col("sig_a")).cast("double"))
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("id_a", "id_b", "est_jaccard")
+
+  /** Both band columns in the key: collisions stay within a band
+    * (expected spurious candidates ~ N_a·N_b·bands/2^32, not ·bands²).
+    */
+  private def sameBand: Column =
+    col("a.band_idx") === col("b.band_idx") && col("a.band_hash") === col("b.band_hash")
+
+  /** Self-join candidates (id_a < id_b) of signatures sharing any band. */
+  private def selfBandCandidates(sigs: DataFrame, numHashes: Int, bands: Int,
+                                 hash: SigHash): DataFrame = {
+    val banded = lshBands(sigs, numHashes, bands, hash)
+    bandCandidates(banded, banded, sameBand && col("a.doc_id") < col("b.doc_id"))
   }
 
   /** MinHash-LSH candidate pairs verified by the EXACT shingle Jaccard —
@@ -1059,13 +1064,7 @@ object Dedup {
       if (persistLineage)
         sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sigsRaw
-    val banded = lshBands(sigs, numHashes, bands)
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cands = selfBandCandidates(sigs, numHashes, bands, SigHash.Engine)
     // exact verification: distinct TEXT shingle sets joined onto the
     // (small) candidate pair set. The pair side broadcasts, so the
     // corpus streams through two broadcast-hash probes — two projected
@@ -1094,12 +1093,13 @@ object Dedup {
     * signatures and an accumulated REFERENCE corpus's signatures — the
     * shape a daily pipeline needs at scale, where re-LSHing the whole
     * lake per increment is not an option. Both inputs are
-    * (doc_id, sig) frames from [[minhashSignatures]]; the reference side
-    * is typically read back from a staged signature table (store it
-    * bucketed/partitioned by band hash and the daily join prunes to the
-    * increment's buckets — the increment is small, so its banded form
-    * broadcasts). Output: (id_a = ref doc, id_b = new doc, est_jaccard);
-    * feed to [[applyPairDedup]] to drop the increment's duplicates.
+    * (doc_id, sig) frames from [[minhashSignatures]] under the same
+    * `hash`; the reference side is typically read back from a staged
+    * signature table (store it bucketed/partitioned by band hash and the
+    * daily join prunes to the increment's buckets — the increment is
+    * small, so its banded form broadcasts). Output: (id_a = ref doc,
+    * id_b = new doc, est_jaccard); feed to [[applyPairDedup]] to drop
+    * the increment's duplicates.
     * Contract: the two id spaces should be disjoint; self-pairs are
     * excluded defensively if they overlap. Dedup WITHIN the increment is
     * [[minhashDedupPairs]] on the increment alone.
@@ -1107,7 +1107,8 @@ object Dedup {
   def minhashPairsAgainst(newSigs: DataFrame, refSigs: DataFrame,
                           numHashes: Int, bands: Int,
                           minEstJaccard: Double,
-                          persistLineage: Boolean = true): DataFrame = {
+                          persistLineage: Boolean = true,
+                          hash: SigHash = SigHash.Engine): DataFrame = {
     // the REFERENCE side is consumed twice (banding + candidate
     // verification) and its lineage is typically the expensive half — a
     // full annotate/gate/minhash chain over the accumulated corpus when
@@ -1123,17 +1124,10 @@ object Dedup {
       if (persistLineage && !refCached)
         refSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else refSigs
-    val bn = lshBands(newSigs, numHashes, bands)
-    val br = lshBands(ref, numHashes, bands)
-    // both band columns in the key: collisions stay within a band
-    // (expected spurious candidates ~ N_ref·N_new·bands/2^32, not ·bands²)
-    val cands = br.as("a").join(bn.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    verifyCandidatePairs(cands, newSigs, ref, minEstJaccard)
+    val bn = lshBands(newSigs, numHashes, bands, hash)
+    val cands = bandCandidates(lshBands(ref, numHashes, bands, hash), bn,
+      sameBand && col("a.doc_id") =!= col("b.doc_id"))
+    verifyCandidatePairs(cands, newSigs, ref, minEstJaccard, hash)
   }
 
   /** [[minhashPairsAgainst]] where the reference side is a PRE-BANDED
@@ -1150,7 +1144,8 @@ object Dedup {
     * join keys are bucket keys (spark.sql.requireAllClusterKeysForCoPartition),
     * and the store is bucketed by the one column. [[lshBands]] seeds each
     * band's hash with its band index, so band identity is still encoded
-    * in the hash; the cost is cross-band 32-bit collisions inflating the
+    * in the hash (the `SigHash.Md5` key is the raw slice: a cross-band
+    * match needs equal md5 values at different positions); the cost is cross-band 32-bit collisions inflating the
     * candidate set ~bands× relative to the two-key join (still
     * ~N_ref·N_new·bands²/2^32 — negligible until corpus×increment
     * approaches 2^32/bands², and every candidate is verified against the
@@ -1159,154 +1154,34 @@ object Dedup {
     */
   def minhashPairsAgainstBanded(newSigs: DataFrame, refBanded: DataFrame,
                                 refSigs: DataFrame, numHashes: Int, bands: Int,
-                                minEstJaccard: Double): DataFrame = {
-    val bn = lshBands(newSigs, numHashes, bands)
-    val cands = refBanded.as("a").join(bn.as("b"),
-        col("a.band_hash") === col("b.band_hash") &&
+                                minEstJaccard: Double,
+                                hash: SigHash = SigHash.Engine): DataFrame = {
+    val cands = bandCandidates(refBanded, lshBands(newSigs, numHashes, bands, hash),
+      col("a.band_hash") === col("b.band_hash") &&
         col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    verifyCandidatePairs(cands, newSigs, refSigs, minEstJaccard)
+    verifyCandidatePairs(cands, newSigs, refSigs, minEstJaccard, hash)
   }
 
-  /** Shared verification tail of the cross-corpus pair generators: fetch
-    * both signatures for each candidate and keep pairs whose agreeing
-    * fraction clears `minEstJaccard`.
+  /** Shared verification tail of the pair generators: fetch both
+    * signatures for each candidate and keep pairs whose agreeing
+    * fraction clears `minEstJaccard` — an integer agree count over one
+    * exact IEEE division, so the md5 form answers an exact oracle.
     */
   private def verifyCandidatePairs(cands: DataFrame, newSigs: DataFrame,
                                    refSigs: DataFrame,
-                                   minEstJaccard: Double): DataFrame =
+                                   minEstJaccard: Double,
+                                   hash: SigHash): DataFrame =
     cands
       .join(refSigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(newSigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), "id_b")
+      // codegen kernel on the engine form, not zip_with+filter: the HOF
+      // form runs 3 interpreted lambdas × numHashes per candidate pair
       .withColumn("est_jaccard",
-        graft.functions.Kernels.agreeCountCol(col("sig_a"), col("sig_b"))
+        hash.agreeCount(col("sig_a"), col("sig_b"))
           .cast("double") / size(col("sig_a")).cast("double"))
       .filter(col("est_jaccard") >= minEstJaccard)
       .select("id_a", "id_b", "est_jaccard")
 
-  // --- Portable (md5) MinHash twins ------------------------------------
-  //
-  // Engine-exact mirrors of the MinHash family above, for oracle-anchored
-  // runs: signatures are md5-hex ([[graft.functions.Kernels.minhashMd5]]),
-  // band keys are the RAW comma-joined signature slices (no engine hash
-  // anywhere — a DuckDB twin recomputes every value bit-for-bit), and the
-  // Jaccard estimate is an integer agree-count over one exact double
-  // division. Join/shuffle shapes are identical to the production forms;
-  // only the per-row hash kernel and the band-key encoding differ (band
-  // keys are ~64 bytes instead of 4 — immaterial at candidate counts).
-
-  /** [[minhashSignatures]] with portable md5-hex signature elements.
-    * Output: (doc_id, sig: array<string>, n_sh).
-    */
-  def minhashSignaturesPortable(df: DataFrame, id: Column, text: Column,
-                                numHashes: Int, shingleSize: Int): DataFrame = {
-    val sh = array_distinct(TextFunctions.wordShingles(text, shingleSize))
-    df.select(id.as("doc_id"),
-      graft.functions.Kernels.minhashMd5SigCol(sh, numHashes).as("sig"),
-      size(sh).as("n_sh"))
-  }
-
-  /** [[lshBands]] over portable signatures: the band key is the
-    * comma-joined signature slice itself — identical candidate semantics
-    * minus the engine hash's (rare, benign) cross-band collisions.
-    * Output: (doc_id, band_idx, band_key).
-    */
-  def lshBandsPortable(signatures: DataFrame, numHashes: Int,
-                       bands: Int): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val bandKeys = array((0 until bands).map { b =>
-      concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))
-    }: _*)
-    signatures
-      // n_sh, not size(sig) — see lshBands (pushdown would evaluate the
-      // md5 kernel inside the pre-exchange Filter)
-      .filter(col("n_sh") > 0)
-      .select(col("doc_id"), posexplode(bandKeys))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
-  }
-
-  /** Portable est-jaccard verification tail: agreeing-position count
-    * over the hex signatures (integer) / signature length — one exact
-    * IEEE division, same formula as [[verifyCandidatePairs]].
-    */
-  private def verifyCandidatePairsPortable(cands: DataFrame,
-                                           newSigs: DataFrame,
-                                           refSigs: DataFrame,
-                                           minEstJaccard: Double): DataFrame =
-    cands
-      .join(refSigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(newSigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          p => p)).cast("double") / size(col("sig_a")).cast("double"))
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("id_a", "id_b", "est_jaccard")
-
-  /** [[minhashDedupPairs]] with portable signatures and band keys —
-    * within-corpus pair generation a DuckDB oracle reproduces exactly.
-    */
-  def minhashDedupPairsPortable(df: DataFrame, id: Column, text: Column,
-                                numHashes: Int, shingleSize: Int,
-                                bands: Int, minEstJaccard: Double,
-                                persistLineage: Boolean = true): DataFrame = {
-    val sigsRaw = minhashSignaturesPortable(df, id, text, numHashes, shingleSize)
-    val sigs =
-      if (persistLineage)
-        sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigsRaw
-    minhashDedupPairsPortableFromSigs(sigs, numHashes, bands, minEstJaccard)
-  }
-
-  /** [[minhashDedupPairsFromSigs]] over portable signatures — the same
-    * kernel-reuse split for the md5 twins, whose signature kernel is
-    * ~10x the engine hash and therefore gains the most from being
-    * computed once (r18). `sigs` should be persisted by the caller.
-    */
-  def minhashDedupPairsPortableFromSigs(sigs: DataFrame, numHashes: Int,
-                                        bands: Int,
-                                        minEstJaccard: Double): DataFrame = {
-    val banded = lshBandsPortable(sigs, numHashes, bands)
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    verifyCandidatePairsPortable(cands, sigs, sigs, minEstJaccard)
-  }
-
-  /** [[minhashPairsAgainst]] with portable signatures and band keys —
-    * the cross-corpus increment join a DuckDB oracle reproduces exactly.
-    * Output: (id_a = ref doc, id_b = new doc, est_jaccard).
-    */
-  def minhashPairsAgainstPortable(newSigs: DataFrame, refSigs: DataFrame,
-                                  numHashes: Int, bands: Int,
-                                  minEstJaccard: Double,
-                                  persistLineage: Boolean = true): DataFrame = {
-    // same ref-side persist rationale as minhashPairsAgainst — and the
-    // md5 signature chain behind an unstaged reference is the single
-    // most expensive subtree of the portable funnel, so evaluating it
-    // once instead of twice matters even more here
-    val refCached =
-      refSigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val ref =
-      if (persistLineage && !refCached)
-        refSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else refSigs
-    val bn = lshBandsPortable(newSigs, numHashes, bands)
-    val br = lshBandsPortable(ref, numHashes, bands)
-    val cands = br.as("a").join(bn.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    verifyCandidatePairsPortable(cands, newSigs, ref, minEstJaccard)
-  }
 
   // --- SimHash ---------------------------------------------------------
 
@@ -1315,18 +1190,14 @@ object Dedup {
     * code. SimHash is a per-document reduction, so it needs NO shuffle at
     * all — one codegen kernel call per row (the round-1 explode +
     * double-shuffle plan inflated rows 64× for nothing).
-    * `portableHash = true` votes over md5-derived bits instead
+    * `SigHash.Md5` votes over md5-derived bits instead
     * ([[graft.functions.Kernels.simhashMd5]]), which a DuckDB oracle
     * reproduces exactly; FNV stays the production default.
     */
   def simhash64(df: DataFrame, id: Column, text: Column,
-                portableHash: Boolean = false): DataFrame = {
-    val kernel =
-      if (portableHash) graft.functions.Kernels.simhashMd5Col _
-      else graft.functions.Kernels.simhash64 _
+                hash: SigHash = SigHash.Engine): DataFrame =
     df.select(id.as("doc_id"),
-      kernel(TextFunctions.tokens(text)).as("simhash"))
-  }
+      hash.simhash(TextFunctions.tokens(text)).as("simhash"))
 
   /** Pairs with SimHash Hamming distance ≤ `maxHamming`, using the
     * pigeonhole block trick: split the 64-bit code into `maxHamming + 1`
@@ -1336,7 +1207,7 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, id: Column, text: Column,
                    maxHamming: Int = 3,
-                   portableHash: Boolean = false): DataFrame = {
+                   hash: SigHash = SigHash.Engine): DataFrame = {
     require(maxHamming <= 3, "block trick below uses 4 blocks of 16 bits")
     // persist the (tiny: id + long) code frame at the fan-out: the block
     // join reads it TWICE, and without the cache boundary the join keys'
@@ -1344,7 +1215,7 @@ object Dedup {
     // text)) and pushdown plants the HASH KERNEL inside each side's scan
     // Filter — 2 extra kernel evals per row per side (the lshBands
     // pushdown lesson; same persist convention as minhashDedupPairs)
-    val codes = simhash64(df, id, text, portableHash)
+    val codes = simhash64(df, id, text, hash)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val blockVals = array((0 until 4).map { b =>
       shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xffffL))

@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Fingerprint, TextFunctions}
+import graft.functions.{SigHash, TextFunctions}
 import graft.operators.{Dedup, Multimodal}
 import graft.sinks.ParquetSink
 
@@ -23,6 +23,11 @@ import graft.sinks.ParquetSink
   */
 object CorpusPipeline {
 
+  /** Funnel parameters. `hash` picks the MinHash / SimHash / winnowing
+    * family for every hashing stage: `SigHash.Engine` is production,
+    * `SigHash.Md5` runs the identical funnel on portable md5 kernels so
+    * its output answers an exact DuckDB oracle.
+    */
   final case class Config(minQuality: Double = 0.3,
                           keepLangs: Seq[String] = Seq("en"),
                           minTokens: Int = 5,
@@ -30,7 +35,8 @@ object CorpusPipeline {
                           numHashes: Int = 128,
                           bands: Int = 32,
                           minEstJaccard: Double = 0.8,
-                          featureDim: Int = 16)
+                          featureDim: Int = 16,
+                          hash: SigHash = SigHash.Engine)
 
   /** Stage 1: annotate with the text-analysis features. */
   def annotate(docs: DataFrame): DataFrame =
@@ -67,16 +73,16 @@ object CorpusPipeline {
   def nearDedup(docs: DataFrame, cfg: Config): DataFrame =
     Dedup.applyPairDedup(docs, col("doc_id"),
       Dedup.minhashDedupPairs(docs, col("doc_id"), col("text"),
-        cfg.numHashes, cfg.shingleSize, cfg.bands, cfg.minEstJaccard))
+        cfg.numHashes, cfg.shingleSize, cfg.bands, cfg.minEstJaccard,
+        hash = cfg.hash))
 
   /** Stage 5: enrich the surviving corpus with dedup-ready artifacts for
     * downstream consumers (all per-row kernels, zero shuffle).
     */
   def enrich(docs: DataFrame, cfg: Config): DataFrame =
     docs.select(col("*"),
-      Fingerprint.winnow(col("text"), k = 5, w = 4).as("fingerprints"),
-      graft.functions.Kernels.simhash64(TextFunctions.tokens(col("text")))
-        .as("simhash"),
+      cfg.hash.winnow(col("text"), k = 5, w = 4).as("fingerprints"),
+      cfg.hash.simhash(TextFunctions.tokens(col("text"))).as("simhash"),
       Multimodal.stubFeatureVector(col("text").cast("binary"), cfg.featureDim)
         .as("features"))
 
@@ -121,7 +127,7 @@ object CorpusPipeline {
       else refSigs.persist(StorageLevel.MEMORY_AND_DISK)
     val (curated, keptSigs, persisted) = curateAgainst(newDocs, cfg)(sigs =>
       Dedup.minhashPairsAgainst(sigs, ref,
-        cfg.numHashes, cfg.bands, cfg.minEstJaccard))
+        cfg.numHashes, cfg.bands, cfg.minEstJaccard, hash = cfg.hash))
     (curated, keptSigs, if (refCached) persisted else persisted :+ ref)
   }
 
@@ -144,7 +150,7 @@ object CorpusPipeline {
     // over selfClean for the cross join, recomputing identical values
     // for every surviving doc.
     val sigsAll = Dedup.minhashSignatures(exact, col("doc_id"), col("text"),
-        cfg.numHashes, cfg.shingleSize)
+        cfg.numHashes, cfg.shingleSize, cfg.hash)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // self-pairs from the shared signatures, persisted LAZILY on
     // purpose (r18 re-measured): an eager Pin here hands both anti-join
@@ -156,7 +162,7 @@ object CorpusPipeline {
     // refactor) and the two consumers' broadcast BUILDS serialize the
     // cache fill, so the LSH self-join still evaluates once.
     val selfPairs = Dedup.minhashDedupPairsFromSigs(sigsAll, cfg.numHashes,
-        cfg.bands, cfg.minEstJaccard)
+        cfg.bands, cfg.minEstJaccard, cfg.hash)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val selfDropIds = selfPairs.select(col("id_b").as("doc_id")).distinct()
     val selfClean = Dedup.applyPairDedup(exact, col("doc_id"), selfPairs)
@@ -170,7 +176,7 @@ object CorpusPipeline {
     val clean = Dedup.applyPairDedup(selfClean, col("doc_id"), crossPairsOf(sigs))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val keptSigs = sigs.join(clean.select("doc_id"), Seq("doc_id"), "left_semi")
-    (enrich(clean, cfg), keptSigs, Seq(gated, sigsAll, clean))
+    (enrich(clean, cfg), keptSigs, Seq(gated, sigsAll, selfPairs, clean))
   }
 
   /** Stage a day's kept signatures as the accumulated signature STORE —
@@ -202,7 +208,7 @@ object CorpusPipeline {
                           mode: SaveMode = SaveMode.Append): Unit = {
     sigs.write.mode(mode).format("parquet").saveAsTable(table)
     ParquetSink.writeBucketed(
-      Dedup.lshBands(sigs, cfg.numHashes, cfg.bands),
+      Dedup.lshBands(sigs, cfg.numHashes, cfg.bands, cfg.hash),
       s"${table}_banded", "band_hash", buckets, mode)
   }
 
@@ -225,7 +231,7 @@ object CorpusPipeline {
   def repairSignatureStore(spark: org.apache.spark.sql.SparkSession,
                            table: String, cfg: Config, buckets: Int): Unit =
     ParquetSink.writeBucketed(
-      Dedup.lshBands(spark.table(table), cfg.numHashes, cfg.bands),
+      Dedup.lshBands(spark.table(table), cfg.numHashes, cfg.bands, cfg.hash),
       s"${table}_banded", "band_hash", buckets, SaveMode.Overwrite)
 
   /** [[curateIncrement]] against the staged signature store written by
@@ -240,7 +246,8 @@ object CorpusPipeline {
     val spark = newDocs.sparkSession
     val (curated, keptSigs, _) = curateAgainst(newDocs, cfg)(sigs =>
       Dedup.minhashPairsAgainstBanded(sigs, spark.table(s"${table}_banded"),
-        spark.table(table), cfg.numHashes, cfg.bands, cfg.minEstJaccard))
+        spark.table(table), cfg.numHashes, cfg.bands, cfg.minEstJaccard,
+        cfg.hash))
     (curated, keptSigs)
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Fingerprint, Fnv64, LogParse, TextFunctions, Timestamps, VectorFunctions}
+import graft.functions.{Fingerprint, Fnv64, LogParse, SigHash, TextFunctions, Timestamps, VectorFunctions}
 import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Sampling, Similarity}
 import graft.sources.Tables
 
@@ -13,6 +13,20 @@ import QueryHelpers._
   * (mechanical split; entries verbatim).
   */
 private[graft] object QueriesDedup {
+
+  /** The corpus_curation body: gate -> exact dedup -> MinHash near-dedup
+    * -> enrich over the whole documents table.
+    */
+  private def curateCorpusQuery(docs: DataFrame,
+                                cfg: graft.pipelines.CorpusPipeline.Config): DataFrame = {
+    import graft.pipelines.CorpusPipeline
+    val gated = CorpusPipeline.qualityGate(CorpusPipeline.annotate(docs), cfg)
+    val deduped = CorpusPipeline.nearDedup(CorpusPipeline.exactDedup(gated), cfg)
+    CorpusPipeline.enrich(deduped, cfg)
+      .select(col("doc_id"), col("lang_pred"), col("n_tokens"),
+        col("simhash"), size(col("fingerprints")).as("n_fp"),
+        size(col("features")).as("n_features"))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- LLM-pipeline: dedup ------------------------------------------
@@ -1290,43 +1304,17 @@ private[graft] object QueriesDedup {
     "corpus_curation" -> ((s, dir) => { // engine-hash based: rows-only
       // the composed training-data path: annotate -> quality/lang gate ->
       // exact dedup -> MinHash near-dedup -> enriched curated corpus
-      import graft.pipelines.CorpusPipeline
-      val cfg = CorpusPipeline.Config(minQuality = 0.3,
-        keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
-        numHashes = 64, bands = 16, minEstJaccard = 0.7, featureDim = 8)
-      val gated = CorpusPipeline.qualityGate(
-        CorpusPipeline.annotate(t(s, dir, "documents")), cfg)
-      val deduped = CorpusPipeline.nearDedup(
-        CorpusPipeline.exactDedup(gated), cfg)
-      CorpusPipeline.enrich(deduped, cfg)
-        .select(col("doc_id"), col("lang_pred"), col("n_tokens"),
-          col("simhash"), size(col("fingerprints")).as("n_fp"),
-          size(col("features")).as("n_features"))
+      curateCorpusQuery(t(s, dir, "documents"), curationCfg)
     }),
     "corpus_curation_portable" -> ((s, dir) => {
-      // oracle twin of the composed funnel: every engine-hash stage
-      // swapped for its proven portable form (md5 minhash self-dedup,
-      // md5-vote simhash, md5 winnowing), so the END-TO-END composition
-      // — gate ∘ exact-dedup ∘ LSH-dedup ∘ enrich — hash-matches one
-      // DuckDB query, not just each primitive in isolation. Engine-hash
-      // corpus_curation stays the production path.
-      import graft.pipelines.CorpusPipeline
-      import graft.functions.Kernels
-      val cfg = CorpusPipeline.Config(minQuality = 0.3,
-        keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
-        numHashes = 64, bands = 16, minEstJaccard = 0.7, featureDim = 8)
-      val gated = CorpusPipeline.qualityGate(
-        CorpusPipeline.annotate(t(s, dir, "documents")), cfg)
-      val exact = CorpusPipeline.exactDedup(gated)
-      val deduped = Dedup.applyPairDedup(exact, col("doc_id"),
-        Dedup.minhashDedupPairsPortable(exact, col("doc_id"), col("text"),
-          cfg.numHashes, cfg.shingleSize, cfg.bands, cfg.minEstJaccard))
-      deduped.select(col("doc_id"), col("lang_pred"), col("n_tokens"),
-        Kernels.simhashMd5Col(TextFunctions.tokens(col("text")))
-          .as("simhash"),
-        size(Kernels.winnowMd5Fp(col("text"), 5, 4)).as("n_fp"),
-        size(graft.operators.Multimodal.stubFeatureVector(
-          col("text").cast("binary"), cfg.featureDim)).as("n_features"))
+      // oracle twin of the composed funnel under SigHash.Md5 (md5
+      // minhash self-dedup, md5-vote simhash, md5 winnowing), so the
+      // END-TO-END composition — gate ∘ exact-dedup ∘ LSH-dedup ∘
+      // enrich — hash-matches one DuckDB query, not just each primitive
+      // in isolation. Engine-hash corpus_curation stays the production
+      // path.
+      curateCorpusQuery(t(s, dir, "documents"),
+        curationCfg.copy(hash = SigHash.Md5))
     }),
     "source_jaccard_exact" -> ((s, dir) => {
       // the audit-time exact twin of source_minhash_jaccard: true
@@ -1369,8 +1357,8 @@ private[graft] object QueriesDedup {
       // applies the same cut (still the costliest query in the spread
       // at %5; the sketch math is size-independent).
       val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-      val sigs = Dedup.minhashSignaturesPortable(docs, col("doc_id"),
-          col("text"), numHashes = 64, shingleSize = 3)
+      val sigs = Dedup.minhashSignatures(docs, col("doc_id"),
+          col("text"), numHashes = 64, shingleSize = 3, SigHash.Md5)
         // n_sh, not size(sig): a size(sig) predicate pushes the md5
         // kernel into the pre-exchange Filter (2-3 evals/row, one task —
         // measured 8x the query's real cost); see Dedup.lshBands
@@ -1407,7 +1395,7 @@ private[graft] object QueriesDedup {
       // so DuckDB reproduces it bit-for-bit → the whole simhash
       // construction is oracle-checked (FNV stays production)
       Dedup.simhash64(t(s, dir, "documents"), col("doc_id"), col("text"),
-        portableHash = true)
+        SigHash.Md5)
     }),
     "simhash_pairs_portable" -> ((s, dir) => {
       // the pigeonhole block join is EXACT at a fixed code function
@@ -1415,7 +1403,7 @@ private[graft] object QueriesDedup {
       // portable codes the pair set answers an exact all-pairs hamming
       // oracle — the LSH recall proof the FNV twin can only property-test
       Dedup.simhashPairs(t(s, dir, "documents"), col("doc_id"), col("text"),
-        maxHamming = 3, portableHash = true)
+        maxHamming = 3, SigHash.Md5)
     }),
     "winnow_fingerprints" -> ((s, dir) => { // FNV-1a based: rows-only check
       t(s, dir, "documents").select(col("doc_id"),
@@ -1429,21 +1417,20 @@ private[graft] object QueriesDedup {
       // fingerprint, so both the count and the min are oracle-exact
       // (the k=8/w=8 variant is already proven inside boilerplate_scores;
       // this pins the standalone fingerprint query). FNV stays default.
-      import graft.functions.Kernels
       t(s, dir, "documents").select(col("doc_id"),
-        Kernels.winnowMd5Fp(col("text"), k = 5, w = 4).as("fp"))
+        SigHash.Md5.winnow(col("text"), k = 5, w = 4).as("fp"))
         .select(col("doc_id"), size(col("fp")).as("n_fp"),
           element_at(col("fp"), 1).as("min_fp"))
     }),
     "boilerplate_scores" -> ((s, dir) => {
       // repeated-passage fraction per doc from the winnowed fingerprint
       // sample — template/licence-block detection; only the fingerprint
-      // sample ever shuffles, never the text. engineHash=false: the
+      // sample ever shuffles, never the text. SigHash.Md5: the
       // md5-hex fingerprint variant reproduces in DuckDB SQL, so the
       // whole operator is oracle-checked; production keeps the FNV
       // default (winnow_fingerprints benches that kernel)
       Dedup.boilerplateScores(t(s, dir, "documents"), col("doc_id"),
-        col("text"), k = 8, w = 8, minDocs = 2, engineHash = false)
+        col("text"), k = 8, w = 8, minDocs = 2, SigHash.Md5)
     })
   )
 }

@@ -14,6 +14,21 @@ import QueryHelpers._
   */
 private[graft] object QueriesMultimodal {
 
+  /** The dedup_incremental body: sources src10-src19 are the increment,
+    * curated against the signatures of the gated src0-src9 reference.
+    */
+  private def curateIncrementQuery(docs: DataFrame,
+                                   cfg: graft.pipelines.CorpusPipeline.Config): DataFrame = {
+    import graft.pipelines.CorpusPipeline
+    val ref = docs.filter(col("source").rlike("^src[0-9]$"))
+    val inc = docs.filter(col("source").rlike("^src1[0-9]$"))
+    val refSigs = Dedup.minhashSignatures(
+      CorpusPipeline.qualityGate(CorpusPipeline.annotate(ref), cfg),
+      col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, cfg.hash)
+    val (curated, _) = CorpusPipeline.curateIncrement(inc, refSigs, cfg)
+    curated.select(col("doc_id"), col("lang_pred"), col("n_tokens"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- LLM-pipeline: multimodal columns -----------------------------
     "media_meta" -> ((s, dir) => {
@@ -358,68 +373,20 @@ private[graft] object QueriesMultimodal {
       // the new batch and are near-deduped against the accumulated corpus
       // (src0-src9) via its STORED MinHash signatures — the accumulated
       // text is never rescanned
-      import graft.pipelines.CorpusPipeline
-      val cfg = CorpusPipeline.Config(minQuality = 0.3,
-        keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
-        numHashes = 64, bands = 16, minEstJaccard = 0.7, featureDim = 8)
-      val docs = t(s, dir, "documents")
-      val ref = docs.filter(col("source").rlike("^src[0-9]$"))
-      val inc = docs.filter(col("source").rlike("^src1[0-9]$"))
-      val refSigs = Dedup.minhashSignatures(
-        CorpusPipeline.qualityGate(CorpusPipeline.annotate(ref), cfg),
-        col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
-      val (curated, _) = CorpusPipeline.curateIncrement(inc, refSigs, cfg)
-      curated.select(col("doc_id"), col("lang_pred"), col("n_tokens"))
+      curateIncrementQuery(t(s, dir, "documents"), curationCfg)
     }),
     "dedup_incremental_portable" -> ((s, dir) => {
-      // oracle twin of dedup_incremental: the SAME funnel (gate ->
-      // exact self-dedup -> LSH self-dedup -> cross-corpus band join ->
-      // prune) with md5-hex signatures and raw-slice band keys, so
-      // every signature element, band key, candidate pair and
-      // est_jaccard reproduces bit-for-bit in DuckDB. Engine-hash forms
-      // stay the production default (cheaper kernels, 4-byte band keys).
-      // Runs on the deterministic doc_id%5 slice (the bounded-anchor
-      // convention, like source_minhash_jaccard_portable): the md5
-      // signature kernel is ~10x the engine hash and this twin was the
-      // slowest query in the r10 spread — the oracle applies the same
-      // predicate, so exactness is untouched.
-      import graft.pipelines.CorpusPipeline
-      val cfg = CorpusPipeline.Config(minQuality = 0.3,
-        keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
-        numHashes = 64, bands = 16, minEstJaccard = 0.7, featureDim = 8)
-      val docs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-      val ref = docs.filter(col("source").rlike("^src[0-9]$"))
-      val inc = docs.filter(col("source").rlike("^src1[0-9]$"))
-      val refSigs = Dedup.minhashSignaturesPortable(
-        CorpusPipeline.qualityGate(CorpusPipeline.annotate(ref), cfg),
-        col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
-      // single md5-signature pass over the increment (r18, the
-      // curateAgainst shape): signatures are pure per-row functions of
-      // the text, so the self-LSH pairs and the cross-corpus join share
-      // one persisted frame instead of running the ~10x-cost md5 kernel
-      // twice; the ref side persists inside minhashPairsAgainstPortable
-      // (it is otherwise planned once for banding and once for
-      // verification). Identical survivor set — the oracle re-proves it.
-      val gated = CorpusPipeline.qualityGate(CorpusPipeline.annotate(inc), cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val selfExact = CorpusPipeline.exactDedup(gated)
-      val sigsAll = Dedup.minhashSignaturesPortable(selfExact,
-          col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // lazy persist, not an eager pin — pinned leaves lose size
-      // statistics and flip the drop-list anti-joins to sort-merge
-      // (see curateAgainst)
-      val selfPairs = Dedup.minhashDedupPairsPortableFromSigs(sigsAll,
-          cfg.numHashes, cfg.bands, cfg.minEstJaccard)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val selfClean = Dedup.applyPairDedup(selfExact, col("doc_id"), selfPairs)
-      val incSigs = sigsAll.join(
-        selfPairs.select(col("id_b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      Dedup.applyPairDedup(selfClean, col("doc_id"),
-          Dedup.minhashPairsAgainstPortable(incSigs, refSigs,
-            cfg.numHashes, cfg.bands, cfg.minEstJaccard))
-        .select(col("doc_id"), col("lang_pred"), col("n_tokens"))
+      // oracle twin of dedup_incremental: the SAME funnel under
+      // SigHash.Md5 (md5-hex signatures, raw-slice band keys), so every
+      // signature element, band key, candidate pair and est_jaccard
+      // reproduces bit-for-bit in DuckDB. Runs on the deterministic
+      // doc_id%5 slice (the bounded-anchor convention, like
+      // source_minhash_jaccard_portable): the md5 signature kernel is
+      // ~10x the engine hash — the oracle applies the same predicate,
+      // so exactness is untouched.
+      curateIncrementQuery(
+        t(s, dir, "documents").filter(col("doc_id") % 5 === 0),
+        curationCfg.copy(hash = graft.functions.SigHash.Md5))
     }),
     "dedup_incremental_stored" -> ((s, dir) => { // engine-hash: rows-only
       // the 100-TB-relevant DAILY MARGINAL COST: dedup_incremental above
@@ -431,9 +398,6 @@ private[graft] object QueriesMultimodal {
       // measures only what a daily run pays — the store side of the
       // band join plans no exchange (PlanAuditSpec pins it).
       import graft.pipelines.CorpusPipeline
-      val cfg = CorpusPipeline.Config(minQuality = 0.3,
-        keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
-        numHashes = 64, bands = 16, minEstJaccard = 0.7, featureDim = 8)
       // The table name is scoped by applicationId: a FRESH JVM's
       // in-memory catalog does not know tables a previous JVM created,
       // but their warehouse LOCATIONS survive on disk, and saveAsTable
@@ -474,14 +438,15 @@ private[graft] object QueriesMultimodal {
         val ref = t(s, dir, "documents")
           .filter(col("source").rlike("^src[0-9]$"))
         val refSigs = Dedup.minhashSignatures(
-          CorpusPipeline.qualityGate(CorpusPipeline.annotate(ref), cfg),
-          col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
-        CorpusPipeline.writeSignatureStore(refSigs, table, cfg,
+          CorpusPipeline.qualityGate(CorpusPipeline.annotate(ref), curationCfg),
+          col("doc_id"), col("text"), curationCfg.numHashes, curationCfg.shingleSize)
+        CorpusPipeline.writeSignatureStore(refSigs, table, curationCfg,
           buckets = 32, org.apache.spark.sql.SaveMode.Overwrite)
       }
       val inc = t(s, dir, "documents")
         .filter(col("source").rlike("^src1[0-9]$"))
-      val (curated, _) = CorpusPipeline.curateIncrementFromStore(inc, table, cfg)
+      val (curated, _) = CorpusPipeline.curateIncrementFromStore(inc, table,
+        curationCfg)
       curated.select(col("doc_id"), col("lang_pred"), col("n_tokens"))
     }),
     "embed_quantize" -> ((s, dir) => {

@@ -20,6 +20,14 @@ private[graft] object QueryHelpers {
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** The curation-funnel parameters every corpus_curation* and
+    * dedup_incremental* query (and its DuckDB oracle) runs at; the
+    * `_portable` twins copy it with `hash = SigHash.Md5`.
+    */
+  private[graft] val curationCfg = graft.pipelines.CorpusPipeline.Config(
+    minQuality = 0.3, keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
+    numHashes = 64, bands = 16, minEstJaccard = 0.7, featureDim = 8)
+
   /** Deterministic CDC delta for the cdc_merge/cdc_merge_summary pair:
     * inserts (src15-19), updates (in-range de docs uppercased), deletes
     * (doc_id%7), a later-seq re-upsert (doc_id%11 — overrides the

@@ -202,7 +202,7 @@ object Streams {
               fs.listStatus(hPath).exists(_.getPath.getName.endsWith(".parquet")))
             spark.read.parquet(sigStorePath)
           else graft.operators.Dedup.minhashSignatures(batch.toDF().limit(0),
-            col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
+            col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, cfg.hash)
         val (curated, keptSigs, persisted) =
           graft.pipelines.CorpusPipeline.curateIncrementManaged(
             batch.toDF(), refSigs, cfg)

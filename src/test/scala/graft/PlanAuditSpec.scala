@@ -609,12 +609,22 @@ class PlanAuditSpec extends SparkTestBase {
         "Exchange rangepartitioning".r.findFirstIn(l).isDefined ||
         "Exchange SinglePartition".r.findFirstIn(l).isDefined) &&
         // ignore ONLY the loader's split-up shape (r18 advice): a hash
-        // REPARTITION_BY_NUM on the table's unique id column. A future
-        // operator-level repartition(n, otherCol) must count as a data
-        // exchange, not hide behind the loader's exemption.
+        // REPARTITION_BY_NUM on the table's unique id column ALONE. A
+        // future operator-level repartition(n, otherCol) — or one keyed
+        // on (doc_id, otherCol) — must count as a data exchange, not
+        // hide behind the loader's exemption.
         !("REPARTITION_BY_NUM".r.findFirstIn(l).isDefined &&
-          "hashpartitioning\\((doc_id|vec_id)#\\d+L".r.findFirstIn(l).isDefined)
+          "hashpartitioning\\((doc_id|vec_id)#\\d+L, \\d+\\)".r.findFirstIn(l).isDefined)
     }
+
+  test("dataExchanges exempts only the loader's single-id-column repartition") {
+    def line(keys: String) =
+      s"+- Exchange hashpartitioning($keys, 8), REPARTITION_BY_NUM, [plan_id=1]"
+    assert(dataExchanges(line("doc_id#1L")) == 0)
+    assert(dataExchanges(line("vec_id#7L")) == 0)
+    assert(dataExchanges(line("doc_id#1L, lang#2")) == 1)
+    assert(dataExchanges(line("source#3")) == 1)
+  }
 
   test("gopher flags and shard assignment are zero-exchange projections") {
     for (q <- Seq("gopher_quality_flags", "corpus_shards")) {

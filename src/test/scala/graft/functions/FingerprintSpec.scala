@@ -50,39 +50,50 @@ class FingerprintSpec extends SparkTestBase {
     assert(a.toSet.intersect(c.toSet).isEmpty)
   }
 
-  test("winnowPortable matches a naive md5 witness (short, astral, long)") {
-    // independent O(n·w) witness: md5-hex-16 per code-point k-gram,
-    // plain min per window (min-of-all when 1..w-1 grams); validates the
-    // deque kernel AND that its hex matches the JDK md5 the oracle's
-    // DuckDB substr(md5(g),1,16) also implements
-    def witness(text: String, k: Int, w: Int): Seq[String] = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def h16(g: String): String =
-        md.digest(g.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+  // the md5-hex-16 gram hash SigHash.Md5 winnows over — the value the
+  // oracle's DuckDB substr(md5(g),1,16) also computes
+  private def md5Hex16(g: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(g.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  test("winnow matches a naive witness per SigHash (short, astral, long)") {
+    // independent O(n·w) witness: per-code-point-k-gram hash, plain min
+    // per window (min-of-all when 1..w-1 grams); validates the deque
+    // kernel AND that its per-gram hash is the reference one
+    def witness[T: Ordering](h: String => T, text: String, k: Int, w: Int): Seq[T] = {
       val cps = text.codePoints().toArray
       val grams = (0 to cps.length - k).map(i => new String(cps, i, k))
       if (grams.isEmpty) Seq.empty
-      else if (grams.length < w) Seq(grams.map(h16).min)
-      else grams.map(h16).sliding(w).map(_.min).toSeq.distinct.sorted
+      else if (grams.length < w) Seq(grams.map(h).min)
+      else grams.map(h).sliding(w).map(_.min).toSeq.distinct.sorted
     }
     val texts = Seq("abcdefghijklmnop", "abcdef", "", "ab",
       "a😀b😀c😀d😀e😀f",
       "the quick brown fox jumps over the lazy dog")
-    for (t <- texts; (k, w) <- Seq((5, 3), (3, 4))) {
-      val got = one(Fingerprint.winnowPortable(lit(t), k, w))
-        .asInstanceOf[scala.collection.Seq[String]]
-      assert(got.toSeq == witness(t, k, w), s"text=$t k=$k w=$w")
+    for (hash <- SigHash.values; t <- texts; (k, w) <- Seq((5, 3), (3, 4))) {
+      val got = one(hash.winnow(lit(t), k, w))
+        .asInstanceOf[scala.collection.Seq[Any]].toSeq
+      val want = hash match {
+        case SigHash.Engine => witness((g: String) => Fnv64.hash(g), t, k, w)
+        case SigHash.Md5 => witness(md5Hex16, t, k, w)
+      }
+      assert(got == want, s"hash=$hash text=$t k=$k w=$w")
     }
   }
 
-  test("winnowPortable hex-16 equals Spark's own md5 prefix") {
-    // the oracle depends on kernel md5 == SQL md5: check against the
-    // builtin md5() for a handful of grams including non-ASCII
-    Seq("abcde", "é中xyz", " spac").foreach { g =>
-      val sql = one(substring(md5(lit(g)), 1, 16)).asInstanceOf[String]
-      val got = one(Fingerprint.winnowPortable(lit(g), g.length, 1))
-        .asInstanceOf[scala.collection.Seq[String]]
-      assert(got.toSeq == Seq(sql), s"gram=$g")
+  test("SigHash winnow's per-gram hash equals the engine's own expression") {
+    // the oracle depends on kernel md5 == SQL md5 (and the engine kernel
+    // on fnv64 == the Fnv64 expression): check a handful of grams
+    // including non-ASCII, against both the SQL form and the JVM one
+    for (hash <- SigHash.values; g <- Seq("abcde", "é中xyz", " spac")) {
+      val (sql, jvm) = hash match {
+        case SigHash.Engine => (Fnv64.fnv64(lit(g)), Fnv64.hash(g))
+        case SigHash.Md5 => (substring(md5(lit(g)), 1, 16), md5Hex16(g))
+      }
+      val got = one(hash.winnow(lit(g), g.length, 1))
+        .asInstanceOf[scala.collection.Seq[Any]].toSeq
+      assert(got == Seq(one(sql)), s"hash=$hash gram=$g")
+      assert(got == Seq(jvm), s"hash=$hash gram=$g")
     }
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
+import graft.functions.SigHash
 
 class DedupSpec extends SparkTestBase {
 
@@ -93,21 +94,16 @@ class DedupSpec extends SparkTestBase {
     "full operator (engine and portable forms) — the r18 funnel split") {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toSet
-    val full = asSet(Dedup.minhashDedupPairs(docs, col("id"), col("text"),
-      numHashes = 64, shingleSize = 2, bands = 16, minEstJaccard = 0.4))
-    val sigs = Dedup.minhashSignatures(docs, col("id"), col("text"),
-      numHashes = 64, shingleSize = 2)
-    val split = asSet(Dedup.minhashDedupPairsFromSigs(sigs,
-      numHashes = 64, bands = 16, minEstJaccard = 0.4))
-    assert(split == full, s"split=$split full=$full")
-    val fullP = asSet(Dedup.minhashDedupPairsPortable(docs, col("id"),
-      col("text"), numHashes = 16, shingleSize = 2, bands = 4,
-      minEstJaccard = 0.4))
-    val sigsP = Dedup.minhashSignaturesPortable(docs, col("id"), col("text"),
-      numHashes = 16, shingleSize = 2)
-    val splitP = asSet(Dedup.minhashDedupPairsPortableFromSigs(sigsP,
-      numHashes = 16, bands = 4, minEstJaccard = 0.4))
-    assert(splitP == fullP, s"splitP=$splitP fullP=$fullP")
+    for ((hash, numHashes, bands) <- Seq((SigHash.Engine, 64, 16),
+                                         (SigHash.Md5, 16, 4))) {
+      val full = asSet(Dedup.minhashDedupPairs(docs, col("id"), col("text"),
+        numHashes, shingleSize = 2, bands, minEstJaccard = 0.4, hash = hash))
+      val sigs = Dedup.minhashSignatures(docs, col("id"), col("text"),
+        numHashes, shingleSize = 2, hash)
+      val split = asSet(Dedup.minhashDedupPairsFromSigs(sigs,
+        numHashes, bands, minEstJaccard = 0.4, hash))
+      assert(split == full, s"$hash split=$split full=$full")
+    }
   }
 
   test("noveltyScores: known/unknown shingle split per incoming doc") {
@@ -334,7 +330,7 @@ class DedupSpec extends SparkTestBase {
       (0 until 64).foldLeft(0L)((c, b) => if (votes(b) > 0) c | (1L << b) else c)
     }
     val in = docs.filter(col("text") =!= "")
-    val got = Dedup.simhash64(in, col("id"), col("text"), portableHash = true)
+    val got = Dedup.simhash64(in, col("id"), col("text"), SigHash.Md5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val texts = in.select("id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -342,7 +338,7 @@ class DedupSpec extends SparkTestBase {
       assert(got(id) == witness(text), s"doc $id")
     // pigeonhole pairs over portable codes equal brute-force hamming<=3
     val pairs = Dedup.simhashPairs(in, col("id"), col("text"),
-      maxHamming = 3, portableHash = true)
+      maxHamming = 3, SigHash.Md5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val brute = (for {
       (a, _) <- texts; (b, _) <- texts if a < b
@@ -788,7 +784,7 @@ class DedupSpec extends SparkTestBase {
       (4L, "tiny"), (5L, "")
     ).toDF("doc_id", "text")
     val got = Dedup.boilerplateScores(docs, col("doc_id"), col("text"),
-        engineHash = false)
+        hash = SigHash.Md5)
       .select("doc_id", "n_fp", "n_shared", "boilerplate_frac")
       .as[(Long, Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -798,7 +794,7 @@ class DedupSpec extends SparkTestBase {
     for (id <- Seq(4L, 5L)) assert(got(id) == ((0L, 0L, 0.0)), s"$id: ${got(id)}")
     // minDocs still raises the bar in portable mode
     val atThree = Dedup.boilerplateScores(docs, col("doc_id"), col("text"),
-        minDocs = 3, engineHash = false)
+        minDocs = 3, hash = SigHash.Md5)
       .select("doc_id", "boilerplate_frac").as[(Long, Double)].collect().toMap
     assert(atThree(1L) == 0.0 && atThree(2L) == 0.0)
     spark.catalog.clearCache()

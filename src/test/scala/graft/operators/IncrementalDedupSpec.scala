@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.functions.SigHash
 import graft.pipelines.CorpusPipeline
 
 /** Incremental near-dedup: a day's increment is deduped against the
@@ -118,8 +119,8 @@ class IncrementalDedupSpec extends SparkTestBase {
     // as substr(md5(sh || ':' || k), 1, 16); pin it against Spark's own
     // md5 (itself standard, hence equal to DuckDB's) via the HOF twin
     val docs = Seq((1L, refText1), (2L, refText2)).toDF("doc_id", "text")
-    val kernel = Dedup.minhashSignaturesPortable(docs, col("doc_id"),
-      col("text"), numHashes = 8, shingleSize = 3)
+    val kernel = Dedup.minhashSignatures(docs, col("doc_id"),
+      col("text"), numHashes = 8, shingleSize = 3, SigHash.Md5)
       .select("doc_id", "sig").as[(Long, Seq[String])].collect().toMap
     val sh = array_distinct(
       graft.functions.TextFunctions.wordShingles(col("text"), 3))
@@ -132,30 +133,32 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(kernel == hof)
     assert(kernel(1L).forall(_.matches("[0-9a-f]{16}")))
     // shingle-less doc -> empty signature (mirrors the engine kernel)
-    val empty = Dedup.minhashSignaturesPortable(
+    val empty = Dedup.minhashSignatures(
       Seq((9L, "one two")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), numHashes = 8, shingleSize = 3)
+      col("doc_id"), col("text"), numHashes = 8, shingleSize = 3, SigHash.Md5)
       .select("sig").as[Seq[String]].head()
     assert(empty.isEmpty)
   }
 
   test("portable pair generators mirror the engine-hash semantics") {
-    val refSigs = Dedup.minhashSignaturesPortable(refDocs, col("doc_id"),
-      col("text"), cfg.numHashes, cfg.shingleSize)
-    val newSigs = Dedup.minhashSignaturesPortable(
-      Seq((10L, refText1), (11L, novel)).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
-    val cross = Dedup.minhashPairsAgainstPortable(newSigs, refSigs,
-        cfg.numHashes, cfg.bands, cfg.minEstJaccard)
-      .as[(Long, Long, Double)].collect()
-    assert(cross.toSeq == Seq((1L, 10L, 1.0)))
-    val selfPairs = Dedup.minhashDedupPairsPortable(
-      Seq((20L, novel), (21L, novel), (22L, refText2))
-        .toDF("doc_id", "text"),
-      col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize,
-      cfg.bands, cfg.minEstJaccard)
-      .as[(Long, Long, Double)].collect()
-    assert(selfPairs.toSeq == Seq((20L, 21L, 1.0)))
+    for (hash <- SigHash.values) {
+      val refSigs = Dedup.minhashSignatures(refDocs, col("doc_id"),
+        col("text"), cfg.numHashes, cfg.shingleSize, hash)
+      val newSigs = Dedup.minhashSignatures(
+        Seq((10L, refText1), (11L, novel)).toDF("doc_id", "text"),
+        col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, hash)
+      val cross = Dedup.minhashPairsAgainst(newSigs, refSigs,
+          cfg.numHashes, cfg.bands, cfg.minEstJaccard, hash = hash)
+        .as[(Long, Long, Double)].collect()
+      assert(cross.toSeq == Seq((1L, 10L, 1.0)), s"$hash")
+      val selfPairs = Dedup.minhashDedupPairs(
+        Seq((20L, novel), (21L, novel), (22L, refText2))
+          .toDF("doc_id", "text"),
+        col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize,
+        cfg.bands, cfg.minEstJaccard, hash = hash)
+        .as[(Long, Long, Double)].collect()
+      assert(selfPairs.toSeq == Seq((20L, 21L, 1.0)), s"$hash")
+    }
   }
 
   test("curateIncrement with an empty reference keeps the whole (self-deduped) increment") {

@@ -43,6 +43,31 @@ class CorpusPipelineSpec extends SparkTestBase {
     assert(r.getAs[String]("lang_pred") == "en")
   }
 
+  test("curateIncrement keeps the same doc_ids under SigHash.Md5 as under Engine") {
+    import graft.TestSpark.spark.implicits._
+    import graft.functions.SigHash
+    import graft.operators.Dedup
+    val refDocs = Seq(
+      (1L, "the cat and the dog walk to the old mill by the river road"),
+      (2L, "the sun is warm and the wind is cold over the high green hills")
+    ).toDF("doc_id", "text")
+    val increment = Seq(
+      (10L, "the cat and the dog walk to the old mill by the river road"), // re-sent
+      (11L, "the children read the books and the teacher is glad of the quiet room")
+    ).toDF("doc_id", "text")
+    val kept = SigHash.values.map { hash =>
+      val cfg = CorpusPipeline.Config(minQuality = 0.0, keepLangs = Seq("en"),
+        minTokens = 5, shingleSize = 3, numHashes = 64, bands = 16,
+        minEstJaccard = 0.5, featureDim = 4, hash = hash)
+      val refSigs = Dedup.minhashSignatures(refDocs, col("doc_id"),
+        col("text"), cfg.numHashes, cfg.shingleSize, hash)
+      val (curated, _) = CorpusPipeline.curateIncrement(increment, refSigs, cfg)
+      hash -> curated.select("doc_id").as[Long].collect().sorted.toSeq
+    }.toMap
+    assert(kept(SigHash.Engine) == Seq(11L), kept)
+    assert(kept(SigHash.Md5) == kept(SigHash.Engine), kept)
+  }
+
   test("cluster products derive from the STORED label table, not a recompute") {
     // the production path behind dedup_cluster_sizes: materialize the
     // (doc_id, component) cluster view once, then every cluster-level

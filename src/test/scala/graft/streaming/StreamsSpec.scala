@@ -276,8 +276,15 @@ class StreamsSpec extends SparkTestBase {
         sigStore, curated, tempDir("dedup_stream_ckpt").toString, cfg,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       .start()
+    // every batch frees the funnel's persisted intermediates: the count
+    // of persistent RDDs must not grow from one batch to the next
+    def cachedRdds: Int = spark.sparkContext.getPersistentRDDs.size
+    val cachedBefore = cachedRdds
     mem.addData((1L, textA), (2L, textB))
     q.processAllAvailable()
+    val cachedAfter1 = cachedRdds
+    assert(cachedAfter1 <= cachedBefore,
+      s"batch 1 leaked ${cachedAfter1 - cachedBefore} cached RDD(s)")
     // batch 1 bootstrapped an empty store: both docs kept, sigs appended
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L))
@@ -288,6 +295,9 @@ class StreamsSpec extends SparkTestBase {
       (11L, "the children read the books and the teacher is glad today"))
     q.processAllAvailable()
     q.stop()
+    val cachedAfter2 = cachedRdds
+    assert(cachedAfter2 <= cachedAfter1,
+      s"batch 2 leaked ${cachedAfter2 - cachedAfter1} cached RDD(s)")
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 11L))
     // and batch 2's survivor handed its signature forward for batch 3
