@@ -103,7 +103,7 @@ object Anomaly {
 
   /** [[robustCountAnomalies]] over a pre-aggregated
     * `(group, bucket, cnt)` series — the form a streaming count store
-    * feeds ([[graft.streaming.Streams.anomalyStoreView]]).
+    * feeds ([[graft.streaming.SliceStore.Count]]'s view).
     */
   def robustCountAnomaliesFromSeries(series: DataFrame,
                                      thresh: Double = 3.0): DataFrame = {

@@ -398,7 +398,7 @@ object Ivf {
 
   /** [[topK]] against a STORED index (an append-only parquet table of
     * `(list_id, vec_id, v)` rows, e.g. one maintained by
-    * [[graft.streaming.Streams.ivfIndexStream]]) — identical semantics,
+    * [[graft.streaming.SliceStore.Ivf]]) — identical semantics,
     * plus tolerance for the store's replay model: an at-least-once
     * appender can leave duplicate appendixes of a whole batch, so
     * candidates are deduplicated per (query_id, vec_id) AFTER the probe

@@ -27,7 +27,7 @@ import org.apache.spark.sql.{Column, SaveMode, SparkSession}
   * Zone maps under compaction: [[Layout.zoneMap]] is a function of the
   * DATA, not the file layout, so a compaction that preserves rows
   * preserves the zone map VERBATIM — previously appended per-slice
-  * maps ([[graft.streaming.Streams.zoneMapStream]]) stay exact under
+  * maps ([[graft.streaming.SliceStore.ZoneMap]]) stay exact under
   * [[Layout.mergeZoneMaps]] with no rescan (MaintenanceSpec pins both
   * claims: merged-slices ≡ rebuild, before ≡ after).
   *
@@ -232,11 +232,10 @@ object Maintenance {
 
   /** Rewrite an append-only SLICE STORE through its own merge algebra
     * — the OPTIMIZE for the streaming stores, which grow one slice
-    * per micro-batch forever. The caller supplies the fold (the view
-    * logic minus the detector: OR for Bloom words, max-then-sum for
-    * count partials, register-max for sketches, box-union for zone
-    * maps). Served views are IDENTICAL before and after by
-    * construction — the fold IS the view's collapse.
+    * per micro-batch forever. The caller supplies the fold;
+    * [[graft.streaming.SliceStore.compact]] passes the store kind's
+    * own replay collapse + merge, so served views are IDENTICAL before
+    * and after by construction.
     *
     * Unlike [[compactTable]] (whole-directory swap, caller owns
     * quiescence), this is safe against a CONCURRENT APPENDER — the
@@ -249,6 +248,15 @@ object Maintenance {
     * contract composes: the snapshot bounds WHICH files fold, the
     * batch stamp bounds which ROWS collapse.
     *
+    * `partitionColumn` names the `k=v` directory level of a
+    * partitioned store (the IVF store's `list_id`): the snapshot, the
+    * manifest entries and the park/promote renames all use paths
+    * RELATIVE to the store root (`list_id=3/part-x`), the snapshot is
+    * read under its `basePath` so the column survives, and the fold is
+    * rewritten one file per partition, keeping the pruned layout. A
+    * slice appended mid-compaction into a brand-new `k=v` directory is
+    * never touched either. A flat store's fold is written as one file.
+    *
     * Crash matrix (manifest = commit record; [[recoverStoreCompaction]]
     * repairs, and runs automatically at entry):
     *   1. crash while writing the fold to `<path>.__compact_tmp` → the
@@ -256,14 +264,14 @@ object Maintenance {
     *   2. crash after the manifest exists (while parking snapshot
     *      files into `<path>.__compact_parked` or promoting tmp files
     *      in) → recovery ROLLS BACK: the manifest lists exactly the
-    *      folded file names, so they are removed from the store,
+    *      folded file paths, so they are removed from the store,
     *      every parked original is restored, and the store is
     *      byte-identical to pre-compaction (originals are never
     *      deleted before cleanup, so rollback never loses a row);
     *   3. crash during cleanup (manifest already deleted) → the
     *      folded files are live; recovery just clears the redundant
     *      parked/tmp leftovers.
-    * Readers: the serving views read through
+    * Readers: [[graft.streaming.SliceStore.view]] reads through
     * [[consistentStoreFiles]], which reconstructs the pre-compaction
     * file set whenever the manifest is present — so a compaction that
     * CRASHED mid-park/mid-promote does NOT leave the store partially
@@ -275,50 +283,53 @@ object Maintenance {
   def compactStore(spark: SparkSession, path: String,
                    fold: org.apache.spark.sql.DataFrame =>
                      org.apache.spark.sql.DataFrame,
-                   targetFiles: Int = 1): CompactionResult = {
-    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
+                   partitionColumn: Option[String] = None): CompactionResult = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompaction(spark, path)
-    recoverStoreCompaction(spark, path)
-    val snapshot = dataFiles(fs, p) // files appended after this survive
+    recoverCompaction(spark, path)       // legacy whole-directory swaps
+    recoverStoreCompaction(spark, path)  // manifest-protocol states
+    val snapshot = dataFilesRecursive(fs, p) // appends after this survive
     val bytesBefore = snapshot.map(_.getLen).sum
     if (snapshot.isEmpty)
       return CompactionResult(0, 0L, 0, 0L)
     val tmp = new Path(path + ".__compact_tmp")
     val parked = new Path(path + ".__compact_parked")
     val manifest = new Path(path + ".__compact_manifest")
-    fold(spark.read.parquet(snapshot.map(_.getPath.toString): _*))
-      .coalesce(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val folded = dataFiles(fs, tmp)
-    // the manifest (folded file names) is written BEFORE any mutation
-    // of the store — from here until its deletion, recovery rolls back
+    val rewritten = fold(spark.read.option("basePath", path)
+      .parquet(snapshot.map(_.getPath.toString).toIndexedSeq: _*))
+    (partitionColumn match {
+      case Some(c) =>
+        rewritten.repartition(org.apache.spark.sql.functions.col(c))
+          .write.partitionBy(c)
+      case None => rewritten.coalesce(1).write
+    }).mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val folded = dataFilesRecursive(fs, tmp)
+    // the manifest (folded relative paths) is written BEFORE any
+    // mutation of the store — from here until its deletion, recovery
+    // rolls back
     val out = fs.create(manifest, true)
-    try out.write(folded.map(_.getPath.getName).mkString("\n")
+    try out.write(folded.map(f => relPath(tmp, f.getPath)).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    fs.mkdirs(parked)
-    snapshot.foreach { f =>
-      require(fs.rename(f.getPath, new Path(parked, f.getPath.getName)),
-        s"could not park ${f.getPath}")
-    }
-    folded.foreach { f =>
-      require(fs.rename(f.getPath, new Path(p, f.getPath.getName)),
-        s"could not promote ${f.getPath}")
-    }
+    def move(files: Array[FileStatus], from: Path, to: Path, what: String) =
+      files.foreach { f =>
+        val dest = new Path(to, relPath(from, f.getPath))
+        fs.mkdirs(dest.getParent)
+        require(fs.rename(f.getPath, dest), s"could not $what ${f.getPath}")
+      }
+    move(snapshot, p, parked, "park")
+    move(folded, tmp, p, "promote")
     // commit: deleting the manifest makes the promotion final
     fs.delete(manifest, false)
     fs.delete(parked, true)
     fs.delete(tmp, true)
-    val after = dataFiles(fs, p)
+    val after = dataFilesRecursive(fs, p)
     CompactionResult(snapshot.length, bytesBefore,
       after.length, after.map(_.getLen).sum)
   }
 
   /** READ-ONLY crash-consistent file listing for a [[compactStore]]
-    * store, used by the serving views
-    * ([[graft.streaming.Streams.zoneStatsView]] et al.) so a CRASHED
+    * store, used by [[graft.streaming.SliceStore.view]] so a CRASHED
     * compaction never serves a partial store until someone explicitly
     * runs recovery: when the manifest is present (compaction in its
     * park/promote window, live or crashed), the pre-compaction state
@@ -411,210 +422,5 @@ object Maintenance {
       // the directory-swap states)
       if (fs.exists(p) && fs.exists(tmp)) fs.delete(tmp, true)
     }
-  }
-
-  /** [[compactStore]] for a [[graft.streaming.Streams.bloomIndexStream]]
-    * store: OR-fold per (chunk, word). No replay contract needed — OR
-    * is idempotent, so a batch replayed AFTER compaction re-ORs into
-    * the folded rows harmlessly.
-    */
-  def compactBloomStore(spark: SparkSession, path: String): CompactionResult =
-    compactStore(spark, path, df => df
-      .groupBy(org.apache.spark.sql.functions.col("chunk"),
-        org.apache.spark.sql.functions.col("word"))
-      .agg(org.apache.spark.sql.functions
-        .bit_or(org.apache.spark.sql.functions.col("bitmap")).as("bitmap")))
-
-  /** [[compactStore]] for an [[graft.streaming.Streams.anomalyStream]]
-    * count store: collapse replayed appendixes (max per batch), sum
-    * partials across the folded batches, restamp as one slice carrying
-    * `throughBatch`. CONTRACT: `throughBatch` must be a batch id that
-    * can never replay again — i.e. a LATER batch has already committed
-    * to the stream's checkpoint (Structured Streaming replays at most
-    * the last uncommitted batch). Folding a batch that then replays
-    * would double-count it: the replayed appendix gets max-collapsed
-    * against nothing (its original rows were folded away) and summed
-    * on top of the folded base. Slices newer than `throughBatch` are
-    * kept verbatim, so the stream keeps appending undisturbed.
-    */
-  def compactCountStore(spark: SparkSession, path: String,
-                        throughBatch: Long): CompactionResult = {
-    import org.apache.spark.sql.functions._
-    compactStore(spark, path, { df =>
-      val oldSlices = df.where(col("batch_id") <= throughBatch)
-        .groupBy(col("batch_id"), col("group"), col("bucket"))
-        .agg(max(col("cnt")).as("cnt"))
-        .groupBy(col("group"), col("bucket"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .select(col("group"), col("bucket"), col("cnt"),
-          lit(throughBatch).as("batch_id"))
-      val newSlices = df.where(col("batch_id") > throughBatch)
-        .select(col("group"), col("bucket"), col("cnt"), col("batch_id"))
-      oldSlices.unionByName(newSlices)
-    })
-  }
-
-  /** [[compactStore]] for a [[graft.streaming.Streams.cardinalityStream]]
-    * store: replay-collapse per (batch, group) — idempotent register
-    * union + max n_rows, the view's own fold — then union the
-    * committed batches' sketches into one slice per group stamped
-    * `throughBatch`. Same replay contract as [[compactCountStore]].
-    * The served `n_distinct` and `n_rows` are invariant (specs pin
-    * it); `n_slices` DROPS to `1 + tail` — that is the point, not a
-    * divergence: it counts physical slices, and after folding the
-    * store genuinely holds one historical slice.
-    */
-  def compactCardinalityStore(spark: SparkSession, path: String,
-                              throughBatch: Long): CompactionResult = {
-    import org.apache.spark.sql.functions._
-    compactStore(spark, path, { df =>
-      val oldSlices = df.where(col("batch_id") <= throughBatch)
-        .groupBy(col("batch_id"), col("group"))
-        .agg(hll_union_agg(col("sketch")).as("sketch"),
-          max(col("n_rows")).as("n_rows"))
-        .groupBy(col("group"))
-        .agg(hll_union_agg(col("sketch")).as("sketch"),
-          sum(col("n_rows")).as("n_rows"))
-        .select(lit(throughBatch).as("batch_id"), col("group"),
-          col("sketch"), col("n_rows"))
-      val newSlices = df.where(col("batch_id") > throughBatch)
-        .select(col("batch_id"), col("group"), col("sketch"),
-          col("n_rows"))
-      oldSlices.unionByName(newSlices)
-    })
-  }
-
-  /** [[compactStore]] for an [[graft.streaming.Streams.ivfIndexStream]]
-    * store: drop the bit-identical duplicate appendixes an
-    * at-least-once writer can leave (the probe path tolerates them,
-    * but they cost candidate rows on EVERY query forever) and rewrite
-    * one file per list partition, preserving the `list_id` directory
-    * layout the partition-pruned probe scan depends on. No
-    * through-batch contract: rows are keyed by (list_id, vec_id) and
-    * duplicates are bit-identical by the store's own invariant, so
-    * the dedup is idempotent under any replay — like the Bloom OR.
-    *
-    * CONCURRENCY: same snapshot + manifest protocol as
-    * [[compactStore]], carried per partition LEAF (manifest entries
-    * and park/promote renames use `list_id=N/part-x` RELATIVE paths):
-    * the fold reads only the file-listing snapshot taken at entry, and
-    * only those files are parked and retired, so a slice a live
-    * [[graft.streaming.Streams.ivfIndexStream]] appends mid-compaction
-    * — including into a brand-new `list_id=` directory — is never
-    * touched. Same crash matrix as [[compactStore]]
-    * ([[recoverStoreCompaction]] rolls a torn park/promote back to the
-    * exact pre-compaction store); [[graft.streaming.Streams.ivfIndexView]]
-    * reads through the manifest, so a crashed compaction never serves
-    * a partial index.
-    */
-  def compactIvfStore(spark: SparkSession, path: String): CompactionResult =
-    compactIvfStoreImpl(spark, path, identity)
-
-  /** [[compactIvfStore]] with a test seam: `tap` runs on the deduped
-    * frame AFTER the snapshot listing and before the tmp write —
-    * exactly where a concurrent `foreachBatch` append lands relative
-    * to the protocol (MaintenanceSpec drives one through it).
-    */
-  private[graft] def compactIvfStoreImpl(spark: SparkSession, path: String,
-      tap: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : CompactionResult = {
-    import org.apache.spark.sql.functions.col
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompaction(spark, path)       // legacy whole-directory swaps
-    recoverStoreCompaction(spark, path)  // manifest-protocol states
-    val snapshot = dataFilesRecursive(fs, p) // appends after this survive
-    val bytesBefore = snapshot.map(_.getLen).sum
-    if (snapshot.isEmpty)
-      return CompactionResult(0, 0L, 0, 0L)
-    val tmp = new Path(path + ".__compact_tmp")
-    val parked = new Path(path + ".__compact_parked")
-    val manifest = new Path(path + ".__compact_manifest")
-    // basePath keeps the list_id partition column on an explicit-file
-    // read, so the rewrite preserves the pruned directory layout
-    tap(spark.read.option("basePath", path)
-        .parquet(snapshot.map(_.getPath.toString): _*)
-        .dropDuplicates("list_id", "vec_id"))
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id")
-      .mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val folded = dataFilesRecursive(fs, tmp)
-    val out = fs.create(manifest, true)
-    try out.write(folded.map(f => relPath(tmp, f.getPath)).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.mkdirs(parked)
-    snapshot.foreach { f =>
-      val dest = new Path(parked, relPath(p, f.getPath))
-      fs.mkdirs(dest.getParent)
-      require(fs.rename(f.getPath, dest), s"could not park ${f.getPath}")
-    }
-    folded.foreach { f =>
-      val dest = new Path(p, relPath(tmp, f.getPath))
-      fs.mkdirs(dest.getParent)
-      require(fs.rename(f.getPath, dest), s"could not promote ${f.getPath}")
-    }
-    fs.delete(manifest, false) // commit
-    fs.delete(parked, true)
-    fs.delete(tmp, true)
-    val after = dataFilesRecursive(fs, p)
-    CompactionResult(snapshot.length, bytesBefore,
-      after.length, after.map(_.getLen).sum)
-  }
-
-  /** [[compactStore]] for a [[graft.streaming.Streams.zoneStatsStream]]
-    * RAW-stats store (the one the pruning rule attaches from):
-    * per-batch replay collapse, then the box-union merge
-    * ([[Layout.mergeRawZoneMaps]]) folds the committed batches into
-    * one slice stamped `throughBatch`; newer slices stay verbatim.
-    * Same replay contract as [[compactCountStore]]. Dimensions are
-    * inferred from the store's `min_`/`max_` columns, string and
-    * integral alike (both orders are associative-commutative under
-    * min/max, so the fold is exact either way).
-    */
-  def compactZoneStatsStore(spark: SparkSession, path: String,
-                            throughBatch: Long): CompactionResult = {
-    import org.apache.spark.sql.functions._
-    compactStore(spark, path, { df =>
-      val dims = df.columns.filter(_.startsWith("min_"))
-        .map(_.stripPrefix("min_")).toSeq
-        .filter(c => df.columns.contains(s"max_$c"))
-      val collapsed = dims.flatMap { c =>
-        Seq(min(col(s"min_$c")).as(s"min_$c"),
-          max(col(s"max_$c")).as(s"max_$c"))
-      } :+ max(col("n_rows")).as("n_rows")
-      val oldSlices = Layout.mergeRawZoneMaps(dims)(
-        df.where(col("batch_id") <= throughBatch)
-          .groupBy(col("batch_id"), col("bucket"))
-          .agg(collapsed.head, collapsed.tail: _*)
-          .drop("batch_id"))
-        .withColumn("batch_id", lit(throughBatch))
-      val newSlices = df.where(col("batch_id") > throughBatch)
-      oldSlices.unionByName(newSlices, allowMissingColumns = false)
-    })
-  }
-
-  /** [[compactStore]] for a [[graft.streaming.Streams.zoneMapStream]]
-    * store: per-batch replay collapse, then the zone-map merge
-    * algebra ([[Layout.mergeZoneMaps]] — box union + row-count sum)
-    * folds the committed batches into one slice stamped
-    * `throughBatch`. Same replay contract as [[compactCountStore]]
-    * (fold only batches a committed later batch has superseded).
-    */
-  def compactZoneStore(spark: SparkSession, path: String,
-                       throughBatch: Long): CompactionResult = {
-    import org.apache.spark.sql.functions._
-    compactStore(spark, path, { df =>
-      val oldSlices = Layout.mergeZoneMaps(
-        df.where(col("batch_id") <= throughBatch)
-          .groupBy(col("batch_id"), col("bucket"))
-          .agg(min(col("min_x")).as("min_x"), max(col("max_x")).as("max_x"),
-            min(col("min_y")).as("min_y"), max(col("max_y")).as("max_y"),
-            max(col("n_rows")).as("n_rows"))
-          .drop("batch_id"))
-        .withColumn("batch_id", lit(throughBatch))
-      val newSlices = df.where(col("batch_id") > throughBatch)
-      oldSlices.unionByName(newSlices, allowMissingColumns = false)
-    })
   }
 }

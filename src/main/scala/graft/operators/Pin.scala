@@ -30,12 +30,19 @@ import org.apache.spark.sql.DataFrame
   * that calls this runs Spark jobs at plan-construction time (visible in
   * PlanDump), and the pinned blocks live until the frame is GC'd or the
   * session cache is cleared — the documented lifecycle of the fan-out
-  * operators.
+  * operators. Reliable checkpoint FILES outlive the frame: they stay
+  * under the checkpoint dir until the context cleaner removes them,
+  * which it only does when `spark.cleaner.referenceTracking
+  * .cleanCheckpoints` is set (a deployment setting, off by default).
   */
 object Pin {
 
   /** Materialize `df` now (one job), truncating lineage: reliable
     * checkpoint when the context has a checkpoint dir, local otherwise.
+    * Both forms run the subtree once: the eager checkpoint writes its
+    * files from the job that computes the frame (`RDD.doCheckpoint`,
+    * not a count followed by a second write job), so no persist is
+    * needed around it — PinSpec counts the evaluations.
     */
   def eager(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)

@@ -61,7 +61,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     silently prune LIVE rows (wrong results, not a loud failure).
   *     The contract is the external-index contract: the stats writer
   *     and the table writer must move together (the
-  *     [[graft.streaming.Streams.zoneStatsStream]] path does, one
+  *     [[graft.streaming.SliceStore.ZoneStats]] stream does, one
   *     stats slice per data micro-batch), and any out-of-band rewrite
   *     requires re-attach. As a cheap tripwire, the metadata attach
   *     paths VALIDATE bucket coverage when the table directory is
@@ -94,9 +94,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * writer persisted its stats: [[attachFromStats]] takes a
   * [[graft.operators.Layout.rawZoneMap]]-shaped frame (the
   * `<path>.__zonemap` convention), [[attachFromStore]] folds an
-  * append-only slice store ([[graft.streaming.Streams.zoneStatsStream]]
-  * output, compactable via
-  * [[graft.operators.Maintenance.compactZoneStatsStore]]) — both read
+  * append-only slice store ([[graft.streaming.SliceStore.ZoneStats]],
+  * compactable through its `compact`) — both read
   * only bucket-bounded stats rows (ZoneMapPruningSpec proves it by
   * attaching with the table itself absent). [[attach]] without stats
   * derives them with one aggregation over the table — the bootstrap
@@ -550,16 +549,16 @@ object ZoneMapPruning {
   }
 
   /** Register `path` for pruning from an APPEND-ONLY zone-stats slice
-    * store ([[graft.streaming.Streams.zoneStatsStream]] output: one
+    * store ([[graft.streaming.SliceStore.ZoneStats]]: one
     * [[graft.operators.Layout.rawZoneMap]] slice per micro-batch,
-    * stamped `batch_id`): replay-collapse per (batch_id, bucket), then
-    * the box-union merge — the store view's own fold. Bucket-bounded
+    * stamped `batch_id`): the store's view — replay-collapse per
+    * (batch_id, bucket), then the box-union merge. Bucket-bounded
     * metadata I/O only.
     */
   def attachFromStore(spark: SparkSession, path: String, bucketCol: String,
                       storePath: String): Unit =
     attachFromStats(spark, path, bucketCol,
-      graft.streaming.Streams.zoneStatsView(spark, storePath))
+      graft.streaming.SliceStore.ZoneStats.view(spark, storePath))
 
   /** (column, isString) pairs from a stats frame's min_/max_ columns,
     * in min_ appearance order; rejects non-integral non-string dims.

@@ -240,7 +240,7 @@ private[graft] object QueriesAnn {
       // twin: ivf_topk re-assigns the corpus inline, so its number
       // conflates index build with the probe; this entry probes a
       // PRE-MATERIALIZED list-partitioned index (built once per
-      // session+dir, the ivfIndexStream layout: slices stamped with
+      // session+dir, the SliceStore.Ivf layout: slices stamped with
       // batch ids, partitioned by list_id so probes prune directories —
       // PlanAuditSpec pins the PartitionFilters). The store carries a
       // deliberately REPLAYED appendix of slice 1, so the self-hit gate
@@ -249,6 +249,7 @@ private[graft] object QueriesAnn {
       // self-hit TWICE and the === 1 assert fails. Full identity to the
       // fresh in-memory index is spec-pinned (StreamsSpec).
       import graft.operators.Ivf
+      import graft.streaming.SliceStore
       val model = ivfModelFor(s, dir) // memoized bit-stable fit
       val embs = t(s, dir, "embeddings")
       val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "")
@@ -268,17 +269,15 @@ private[graft] object QueriesAnn {
             fs.delete(st.getPath, true)
         }
         def appendSlice(p: Column, bid: Long): Unit =
-          Ivf.assign(model, embs.filter(p), col("vec_id"), col("embedding"))
-            .withColumn("batch_id", lit(bid))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .partitionBy("list_id").parquet(store.toString)
+          SliceStore.Ivf.append(Ivf.assign(model, embs.filter(p),
+            col("vec_id"), col("embedding")), bid, store.toString)
         appendSlice(col("vec_id") % 2 === 0, 0L)
         appendSlice(col("vec_id") % 2 === 1, 1L)
         appendSlice(col("vec_id") % 2 === 1, 1L) // the replayed appendix
       }
       val q = embs.filter(col("vec_id") < 64)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Ivf.topKStored(model, s.read.parquet(store.toString), q,
+      Ivf.topKStored(model, SliceStore.Ivf.view(s, store.toString), q,
           col("qid"), col("qv"), k = 10, nprobe = 4, excludeSelf = false)
         .withColumn("__self",
           sum(when(col("query_id") === col("neighbor_id"), 1L).otherwise(0L))

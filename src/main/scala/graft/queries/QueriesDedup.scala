@@ -917,15 +917,16 @@ private[graft] object QueriesDedup {
     }),
     "bloom_store_compaction" -> ((s, dir) => {
       // OPTIMIZE for the streaming Bloom store: four "daily" partial
-      // builds appended (the bloomIndexStream accretion pattern), one
-      // OR-fold compaction (crash-safe two-phase swap), then the
+      // builds appended as SliceStore.Bloom slices, one OR-fold
+      // compaction (crash-safe manifest protocol), then the
       // SERVED VIEW is the query result — and its oracle is the
       // bloom_index_build SQL VERBATIM, because OR-folding partial
       // builds must equal building over the whole table. A hash match
       // here is a bit-level losslessness proof for the maintenance
       // op, not a checksum-boolean; the driver-side require pins the
       // file-count drop.
-      import graft.operators.{BloomIndex, Maintenance}
+      import graft.operators.BloomIndex
+      import graft.streaming.SliceStore
       val storePath = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft_bloomstore_" + java.lang.Integer.toHexString(dir.hashCode) +
@@ -936,28 +937,28 @@ private[graft] object QueriesDedup {
       fs.delete(fsP, true)
       val orders = t(s, dir, "orders")
       (0 until 4).foreach { i =>
-        BloomIndex.build(orders.where(col("o_orderkey") % 4 === i),
+        SliceStore.Bloom.append(
+          BloomIndex.build(orders.where(col("o_orderkey") % 4 === i),
             expr("CAST(o_orderkey DIV 256 AS BIGINT)"), col("o_custkey"),
-            3, 4096)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
+            3, 4096), i.toLong, storePath)
       }
-      val res = Maintenance.compactBloomStore(s, storePath)
+      val res = SliceStore.Bloom.compact(s, storePath)
       require(res.filesAfter < res.filesBefore,
         s"bloom store compaction did not reduce files: $res")
-      graft.streaming.Streams.bloomIndexView(s, storePath)
+      SliceStore.Bloom.view(s, storePath)
     }),
     "count_store_compaction" -> ((s, dir) => {
       // the count-store twin of bloom_store_compaction: the events
       // stream's count partials staged as three "committed batch"
-      // slices, folded through compactCountStore (batches 0-1 — a
+      // SliceStore.Count slices, compacted through batch 1 (0-1 — a
       // committed later batch supersedes them, the documented replay
       // contract), then the served ANOMALY VERDICT is the query
       // result — and its oracle is event_anomalies' SQL VERBATIM,
       // because fold-then-detect must equal detecting over all events
       // ever streamed. Hash match == losslessness proof for the
       // maintenance op; driver require pins the file-count drop.
-      import graft.operators.{Anomaly, Maintenance}
+      import graft.operators.Anomaly
+      import graft.streaming.SliceStore
       val storePath = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft_countstore_" + java.lang.Integer.toHexString(dir.hashCode) +
@@ -968,16 +969,16 @@ private[graft] object QueriesDedup {
       fs.delete(fsP, true)
       val ev = t(s, dir, "events")
       (0 until 3).foreach { i =>
-        Anomaly.countSeries(ev.where(col("event_id") % 3 === i),
-            col("event_type"), ntz(date_trunc("hour", col("ts"))))
-          .withColumn("batch_id", lit(i.toLong))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
+        SliceStore.Count.append(
+          Anomaly.countSeries(ev.where(col("event_id") % 3 === i),
+            col("event_type"), ntz(date_trunc("hour", col("ts")))),
+          i.toLong, storePath)
       }
-      val res = Maintenance.compactCountStore(s, storePath, throughBatch = 1)
+      val res = SliceStore.Count.compact(s, storePath, throughBatch = Some(1))
       require(res.filesAfter < res.filesBefore,
         s"count store compaction did not reduce files: $res")
-      graft.streaming.Streams.anomalyStoreView(s, storePath, 3.0)
+      Anomaly.robustCountAnomaliesFromSeries(
+          SliceStore.Count.view(s, storePath), 3.0)
         .withColumnRenamed("group", "event_type")
         .withColumnRenamed("bucket", "event_hour")
     }),
@@ -1035,14 +1036,15 @@ private[graft] object QueriesDedup {
       // into directory pruning (ZoneMapPruningSpec pins the
       // PartitionFilters and the bail-outs). Registration is a
       // METADATA READ, not a rescan: the build appends per-ingest
-      // rawZoneMap slices to a zone-stats store (what zoneStatsStream
-      // does per micro-batch), folds it with compactZoneStatsStore,
+      // rawZoneMap slices to a SliceStore.ZoneStats store (what its
+      // stream does per micro-batch), compacts it through batch 1,
       // and attachFromStore collects only the bucket-bounded boxes —
       // the spec proves it by attaching with the table absent. The
       // oracle recomputes the SAME filter over raw lineitem — a hash
       // match is the proof the rewrite lost and duplicated nothing.
-      import graft.operators.{Layout, Maintenance}
+      import graft.operators.Layout
       import graft.plans.ZoneMapPruning
+      import graft.streaming.SliceStore
       val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "")
       val wh = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir"))
@@ -1077,14 +1079,13 @@ private[graft] object QueriesDedup {
         // store fold — history never rescanned
         val clustered = s.read.parquet(store.toString)
         (0 until 3).foreach { b =>
-          Layout.rawZoneMap(clustered.where(col("l_orderkey") % 3 === b),
-              col("z_bucket"), Seq("l_partkey", "l_suppkey"))
-            .withColumn("batch_id", lit(b.toLong))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(statsStore.toString)
+          SliceStore.ZoneStats.append(
+            Layout.rawZoneMap(clustered.where(col("l_orderkey") % 3 === b),
+              col("z_bucket"), Seq("l_partkey", "l_suppkey")),
+            b.toLong, statsStore.toString)
         }
-        val cres = Maintenance.compactZoneStatsStore(s,
-          statsStore.toString, throughBatch = 1)
+        val cres = SliceStore.ZoneStats.compact(s, statsStore.toString,
+          throughBatch = Some(1))
         require(cres.filesAfter < cres.filesBefore,
           s"zone-stats compaction did not reduce files: $cres")
         ZoneMapPruning.attachFromStore(s, store.toString, "z_bucket",

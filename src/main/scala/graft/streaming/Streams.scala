@@ -113,9 +113,9 @@ object Streams {
     * ONE path (jhub_proc.py:268-276: process the latest hour partition,
     * append into the dated staging table): each micro-batch lands
     * through the contract dual-sink ([[dualSinkStream]] semantics
-    * verbatim) AND appends its zone-stats slice ([[zoneStatsStream]]
-    * semantics, bucket = the batch's `load_date` stamp) to
-    * `storePath` — the stats writer moves WITH the table writer,
+    * verbatim) AND appends its zone-stats slice
+    * ([[SliceStore.ZoneStats]], bucket = the batch's `load_date` stamp)
+    * to `storePath` — the stats writer moves WITH the table writer,
     * which is exactly the freshness contract
     * [[graft.plans.ZoneMapPruning]]'s soundness note demands of the
     * metadata attach paths. After (any number of) runs,
@@ -147,13 +147,10 @@ object Streams {
         saveBatchOrFail(ctx, contract, batch, batchId, Some(loadDate))
         // slice over the CONTRACT-projected frame — the stats must
         // describe exactly what landed in staging, not the raw batch
-        graft.operators.Layout.rawZoneMap(
+        SliceStore.ZoneStats.append(graft.operators.Layout.rawZoneMap(
             contract.select(batch.toDF()).withColumn("load_date",
               lit(loadDate)),
-            col("load_date"), zoneDims)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
+            col("load_date"), zoneDims), batchId, storePath)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -450,384 +447,6 @@ object Streams {
       graft.operators.Cdc.snapshotView(readGeneration(spark, storePath, fromGen)),
       graft.operators.Cdc.snapshotView(readGeneration(spark, storePath, toGen)),
       id, content)
-
-  /** Continuously maintain layout statistics: each micro-batch computes
-    * its OWN zone map ([[graft.operators.Layout.zoneMap]] — one
-    * map-side agg over just the new rows) and APPENDS it to the store;
-    * the served zone map is [[graft.operators.Layout.mergeZoneMaps]]
-    * over the appended slices, which the merge algebra makes EXACT
-    * (min/max/sum are associative-commutative — zorder_zonemap
-    * _incremental's in-plan identity). Append-only, so no pointer
-    * dance is needed ([[cdcMergeStream]] swaps because its store is
-    * replaced; this one only grows) and replay of a batch merely
-    * appends a duplicate slice — min/max absorb it, only n_rows would
-    * double-count, which is why the slice carries the batch id: the
-    * reader deduplicates per (batch_id, bucket), making the view
-    * replay-proof too.
-    *
-    * `x`/`y` must be the NORMALIZED curve inputs with bounds fixed at
-    * stream start ([[graft.operators.Layout.normalize16]] with a
-    * constant max): an unbounded stream cannot re-derive its domain
-    * per batch without the bucket boundaries drifting between slices.
-    */
-  def zoneMapStream(rows: DataFrame, x: Column, y: Column,
-                    bucketBits: Int, storePath: String,
-                    checkpointDir: String,
-                    trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Layout.zoneMap(batch.toDF(), x, y, bucketBits)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-
-  /** The RAW-stats twin of [[zoneMapStream]], feeding the optimizer
-    * rule instead of the pruning-stats arithmetic: each micro-batch
-    * computes its own [[graft.operators.Layout.rawZoneMap]] slice
-    * (per-bucket raw min/max of the registered columns — integral or
-    * string — one map-side agg over just the new rows) and APPENDS it
-    * stamped with the batch id. The served stats are [[zoneStatsView]]
-    * (replay-collapse + box-union merge, exact by the same
-    * associative-commutative algebra), and
-    * [[graft.plans.ZoneMapPruning.attachFromStore]] registers a scan
-    * for pruning straight from this store — a bucket-bounded metadata
-    * read, never a rescan of the table the stats describe.
-    *
-    * `bucket` must be the same pure projection the table's layout
-    * writer used (stable across batches); replay of a batch appends a
-    * duplicate slice that min/max absorb, with n_rows deduplicated per
-    * (batch_id, bucket) by the view.
-    */
-  def zoneStatsStream(rows: DataFrame, bucket: Column, dims: Seq[String],
-                      storePath: String, checkpointDir: String,
-                      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Layout.rawZoneMap(batch.toDF(), bucket, dims)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-
-  /** The pruning-ready stats a [[zoneStatsStream]] store currently
-    * serves: replay-collapse per (batch_id, bucket) — min/max are
-    * idempotent over a replayed identical slice, n_rows needs the max
-    * — then the box-union fold across batches
-    * ([[graft.operators.Layout.mergeRawZoneMaps]]). Identical to
-    * rebuilding the raw zone map from all rows ever streamed.
-    * Dimensions are inferred from the store's `min_`/`max_` columns.
-    */
-  /** Flat-store read shared by the serving views: crash-consistent
-    * against an interrupted [[graft.operators.Maintenance.compactStore]]
-    * — when a compaction manifest is present the pre-compaction file
-    * set is read instead of the (possibly partial) directory, without
-    * mutating the store (recovery stays the writer's job; see
-    * [[graft.operators.Maintenance.consistentStoreFiles]]).
-    */
-  private def readStore(spark: SparkSession, storePath: String,
-                        retries: Int = 3): DataFrame =
-    graft.operators.Maintenance.consistentStoreFiles(spark, storePath) match {
-      case Some(files) =>
-        // a LIVE compaction can race this read's footer pass two ways,
-        // and an FNFE does NOT distinguish them by itself: (a) the
-        // compaction COMMITTED (manifest deleted, parked files vanished)
-        // — the directory is consistent again and the plain read is
-        // right; (b) the compaction PARKED a file this listing saw as
-        // live — the manifest is still present and a plain directory
-        // read would silently serve a mid-compaction partial store
-        // (zone boxes narrow, pruning drops rows). Arbitration is the
-        // manifest itself: fnfeFallback re-derives from a fresh
-        // consistent listing while the manifest persists and only
-        // falls back to the plain read once it is confirmed absent.
-        // Scope, stated honestly: the guard covers the CONSTRUCTION-time
-        // footer read; a view held across the commit can still fail at
-        // ACTION time if the engine re-lists — the same tiny
-        // reader-vs-live-rename window consistentStoreFiles has always
-        // documented, for which the remedy is re-deriving the view
-        try spark.read.parquet(files: _*)
-        catch { case e: java.io.FileNotFoundException =>
-          fnfeFallback(spark, storePath, retries, e)(
-            readStore(spark, storePath, retries - 1))
-        }
-      case None => spark.read.parquet(storePath)
-    }
-
-  /** FNFE arbitration for the serving views' footer pass (see
-    * [[readStore]]): plain directory read ONLY when the compaction
-    * manifest is confirmed absent (post-commit — the store is whole
-    * again); while the manifest persists (park phase of a live
-    * compactStore) re-derive from a fresh consistent listing, and if
-    * retries exhaust with the manifest still there, fail LOUDLY rather
-    * than serve a silently partial store view.
-    */
-  private def fnfeFallback(spark: SparkSession, storePath: String,
-                           retries: Int,
-                           cause: java.io.FileNotFoundException)
-                          (retry: => DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest =
-      new org.apache.hadoop.fs.Path(storePath + ".__compact_manifest")
-    if (!fs.exists(manifest)) spark.read.parquet(storePath)
-    else if (retries > 0) retry
-    else throw new java.io.FileNotFoundException(
-      s"store $storePath: listed files kept vanishing while a compaction " +
-        "manifest is present (live compaction park race, retries " +
-        "exhausted) — refusing the plain directory read, which would " +
-        s"serve a partial mid-compaction store: ${cause.getMessage}")
-  }
-
-  def zoneStatsView(spark: SparkSession, storePath: String): DataFrame = {
-    val df = readStore(spark, storePath)
-    val dims = df.columns.filter(_.startsWith("min_"))
-      .map(_.stripPrefix("min_")).toSeq
-      .filter(c => df.columns.contains(s"max_$c"))
-    val collapsed = dims.flatMap { c =>
-      Seq(min(col(s"min_$c")).as(s"min_$c"),
-        max(col(s"max_$c")).as(s"max_$c"))
-    } :+ max(col("n_rows")).as("n_rows")
-    graft.operators.Layout.mergeRawZoneMaps(dims)(
-      df.groupBy(col("batch_id"), col("bucket"))
-        .agg(collapsed.head, collapsed.tail: _*)
-        .drop("batch_id"))
-  }
-
-  /** Continuously maintain per-group distinct counts: each micro-batch
-    * appends its OWN constant-size HLL sketch rows
-    * ([[graft.operators.Cardinality.sliceSketches]] keyed by the batch
-    * id) and the served view folds the store by register-max union —
-    * the cardinality twin of [[zoneMapStream]]: append-only, history
-    * never rescanned, replay-proof. Replay safety needs no dedup at
-    * all for the sketch itself (a sketch's registers are the max over
-    * the batch's value hashes, so a replayed duplicate unions to the
-    * identical registers — union is idempotent); only the row COUNT
-    * would double-count, which is why the view folds n_rows with max
-    * per (batch_id, group) before summing.
-    */
-  def cardinalityStream(rows: DataFrame, group: Column, value: Column,
-                        lgK: Int, storePath: String, checkpointDir: String,
-                        trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Cardinality.sliceSketches(
-            batch.toDF(), lit(batchId).as("batch_id"), group, value, lgK)
-          .withColumnRenamed("slice", "batch_id")
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-
-  /** Continuously maintain the volume-monitoring count store behind
-    * [[graft.operators.Anomaly]]: each micro-batch collapses to its
-    * own `(group, bucket, cnt)` partial counts (one map-side agg —
-    * slice size is bounded by groups × buckets TOUCHED by the batch,
-    * not by batch rows), stamped with the batch id and appended. The
-    * served view ([[anomalyStoreView]]) folds replayed duplicate
-    * appendixes with max per (batch_id, group, bucket) — a replay
-    * rewrites the identical partial, so max is exact — then sums
-    * partials across batches into the total series and runs the
-    * detector. Late events for an old bucket are NOT a special case:
-    * their batch appends another partial for that bucket and the sum
-    * absorbs it — the monitor's verdict converges to the batch
-    * recompute for every arrival order.
-    */
-  def anomalyStream(rows: DataFrame, group: Column, bucket: Column,
-                    storePath: String, checkpointDir: String,
-                    trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Anomaly.countSeries(batch.toDF(), group, bucket)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-
-  /** The monitoring verdict an [[anomalyStream]] store currently
-    * serves: replay-collapse, cross-batch sum, then the median/MAD
-    * detector — identical output to running
-    * [[graft.operators.Anomaly.robustCountAnomalies]] over all events
-    * ever streamed.
-    */
-  def anomalyStoreView(spark: SparkSession, storePath: String,
-                       thresh: Double = 3.0): DataFrame =
-    graft.operators.Anomaly.robustCountAnomaliesFromSeries(
-      readStore(spark, storePath)
-        .groupBy(col("batch_id"), col("group"), col("bucket"))
-        .agg(max(col("cnt")).as("cnt"))
-        .groupBy(col("group"), col("bucket"))
-        .agg(sum(col("cnt")).as("cnt")),
-      thresh)
-
-  /** Continuously maintain a file-level Bloom index
-    * ([[graft.operators.BloomIndex]]): each micro-batch builds the
-    * `(chunk, word, bitmap)` rows for ITS rows and appends. The view
-    * folds everything with `bit_or` per (chunk, word) — OR is
-    * idempotent, so this loop needs NO replay bookkeeping at all: a
-    * replayed batch re-appends the identical bit rows and the fold
-    * absorbs them; late rows for an old chunk OR into it. The
-    * simplest replay story in the streaming family, bought entirely
-    * by the index's merge algebra.
-    */
-  def bloomIndexStream(rows: DataFrame, chunk: Column, key: Column,
-                       k: Int, mBits: Int, storePath: String,
-                       checkpointDir: String,
-                       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.BloomIndex.build(batch.toDF(), chunk, key, k, mBits)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-
-  /** The probe-ready index a [[bloomIndexStream]] store currently
-    * serves: one `bit_or` fold per (chunk, word) — identical to
-    * rebuilding from all rows ever streamed.
-    */
-  def bloomIndexView(spark: SparkSession, storePath: String): DataFrame =
-    readStore(spark, storePath)
-      .groupBy(col("chunk"), col("word"))
-      .agg(org.apache.spark.sql.functions.bit_or(col("bitmap")).as("bitmap"))
-
-  /** The CUSUM level-shift verdict over the same [[anomalyStream]]
-    * store — one store, both detectors (point spikes via
-    * [[anomalyStoreView]], sustained shifts here), same replay
-    * collapse.
-    */
-  def driftStoreView(spark: SparkSession, storePath: String,
-                     slack: Double = 0.5, h: Double = 5.0): DataFrame =
-    graft.operators.Anomaly.cusumDriftFromSeries(
-      readStore(spark, storePath)
-        .groupBy(col("batch_id"), col("group"), col("bucket"))
-        .agg(max(col("cnt")).as("cnt"))
-        .groupBy(col("group"), col("bucket"))
-        .agg(sum(col("cnt")).as("cnt")),
-      slack, h)
-
-  /** Continuously maintain an IVF vector index: each micro-batch of
-    * (id, embedding) rows is assigned to its nearest centroid — a pure
-    * per-row codegen kernel over the broadcast model, ZERO shuffle —
-    * and appended to the store PARTITIONED BY `list_id`, so a query's
-    * probe of nprobe lists reads nprobe/nlist of the index directories
-    * and the accumulated index is never rescanned or refit per batch.
-    * This is the vector-index twin of [[incrementalDedupStream]]'s
-    * signature store: the model (an nlist×dim matrix) is fit ONCE
-    * ([[graft.operators.Ivf.fitDistributed]] for the bit-stable form)
-    * and must stay FIXED for the life of the store — re-fitting would
-    * silently re-route new vectors to lists old ones were filed under
-    * (rebuild into a fresh store to re-center; the standard IVF
-    * operating model).
-    *
-    * Replay semantics: append-only, same as [[zoneMapStream]] — a
-    * replayed batch re-appends its slice verbatim (stamped with the
-    * same batch id). No view-side dedup is needed for the store
-    * itself; the probe path collapses duplicates AFTER candidate
-    * pruning ([[graft.operators.Ivf.topKStored]]), which keeps the
-    * dedup candidate-sized and the partition-pruned scan intact.
-    * Contract: `id` values are unique across the stream's life (an
-    * append-only corpus); route vector UPDATES through a CDC store
-    * instead — an updated vector may belong to a DIFFERENT list, so
-    * latest-wins cannot be resolved inside one list's partition.
-    */
-  def ivfIndexStream(vectors: DataFrame, model: graft.operators.Ivf.IvfModel,
-                     storePath: String, checkpointDir: String,
-                     id: Column, vec: Column,
-                     trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Ivf.assign(model, batch.toDF(), id, vec)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("list_id")
-          .parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-
-  /** The raw assigned-vector frame an [[ivfIndexStream]] store
-    * currently serves — `(vec_id, v, batch_id, list_id)`, list_id a
-    * partition column so a static or dynamic list filter prunes
-    * directories (PlanAuditSpec pins the PartitionFilters). Feed it to
-    * [[graft.operators.Ivf.topKStored]], which also absorbs replayed
-    * duplicate appendixes; do NOT hand it to plain `topK`, which
-    * assumes a dedup'd assignment.
-    */
-  def ivfIndexView(spark: SparkSession, storePath: String): DataFrame =
-    ivfIndexViewWithRetry(spark, storePath, retries = 3)
-
-  private def ivfIndexViewWithRetry(spark: SparkSession, storePath: String,
-                                    retries: Int): DataFrame =
-    graft.operators.Maintenance.consistentStoreFiles(spark, storePath) match {
-      // crashed-compaction window: read the pre-compaction file set.
-      // The set can span TWO roots — files still in the store and files
-      // already parked under <store>.__compact_parked (same list_id=
-      // leaf layout) — and Spark's partition discovery rejects one read
-      // over two base paths ("conflicting directory structures"), so
-      // each root is read under its OWN basePath (keeping list_id a
-      // partition column) and the halves union
-      case Some(files) =>
-        val p = new org.apache.hadoop.fs.Path(storePath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val base = fs.makeQualified(p).toString
-        val parkedBase = base + ".__compact_parked"
-        val (parked, live) = files.partition(_.startsWith(parkedBase + "/"))
-        def read(group: Seq[String], b: String) =
-          spark.read.option("basePath", b).parquet(group: _*)
-        // same commit race as readStore, same arbitration: a vanished
-        // file only licenses the plain directory read once the manifest
-        // is confirmed absent (commit happened); while it persists,
-        // re-derive from a fresh consistent listing (fnfeFallback).
-        // Same construction-time scope note as readStore: an
-        // already-built view crossing the commit can still fail at
-        // action time (re-derive it)
-        try (live.nonEmpty, parked.nonEmpty) match {
-          case (true, true) =>
-            read(live, base).unionByName(read(parked, parkedBase))
-          case (true, false) => read(live, base)
-          case _             => read(parked, parkedBase)
-        } catch { case e: java.io.FileNotFoundException =>
-          fnfeFallback(spark, storePath, retries, e)(
-            ivfIndexViewWithRetry(spark, storePath, retries - 1))
-        }
-      case None => spark.read.parquet(storePath)
-    }
-
-  /** The per-group distinct view a [[cardinalityStream]] store
-    * currently serves: replayed appendixes collapse (idempotent sketch
-    * union + max n_rows per batch slice), then one store-row-sized
-    * merge. Output: (group, n_distinct, n_rows, n_slices).
-    */
-  def cardinalityStoreView(spark: SparkSession, storePath: String): DataFrame =
-    graft.operators.Cardinality.mergeSliceSketches(
-      readStore(spark, storePath)
-        .groupBy(col("batch_id"), col("group"))
-        .agg(org.apache.spark.sql.functions.hll_union_agg(col("sketch"))
-            .as("sketch"),
-          max(col("n_rows")).as("n_rows"))
-        .drop("batch_id"))
-      .drop("sketch")
-
-  /** The zone map a [[zoneMapStream]] store currently serves: slices
-    * deduplicated per (batch_id, bucket) — a replayed batch's
-    * duplicate appendix collapses — then folded by the merge algebra.
-    */
-  def zoneMapStoreView(spark: SparkSession, storePath: String): DataFrame =
-    graft.operators.Layout.mergeZoneMaps(
-      readStore(spark, storePath)
-        .groupBy(col("batch_id"), col("bucket"))
-        .agg(min(col("min_x")).as("min_x"), max(col("max_x")).as("max_x"),
-          min(col("min_y")).as("min_y"), max(col("max_y")).as("max_y"),
-          max(col("n_rows")).as("n_rows"))
-        .drop("batch_id"))
 
   /** Read the live snapshot a [[cdcMergeStream]] store currently
     * serves (resolve CURRENT, project the live rows). Falls back to a

@@ -27,7 +27,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("stored IVF index: a list filter prunes partition directories") {
-    // the whole point of partitionBy(list_id) in ivfIndexStream: a
+    // the whole point of SliceStore.Ivf's list_id partitioning: a
     // probe of nprobe lists must read nprobe/nlist of the store, not
     // scan-and-filter it
     val store = java.nio.file.Files
@@ -42,7 +42,7 @@ class PlanAuditSpec extends SparkTestBase {
     operators.Ivf.assign(model, vecs, col("vec_id"), col("embedding"))
       .withColumn("batch_id", lit(0L))
       .write.partitionBy("list_id").parquet(store)
-    val probed = graft.streaming.Streams.ivfIndexView(spark, store)
+    val probed = graft.streaming.SliceStore.Ivf.view(spark, store)
       .where(col("list_id").isin(0, 2))
     val plan = planOf(probed)
     assert(plan.contains("PartitionFilters") &&

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.plans.ZoneMapPruning
+import graft.streaming.SliceStore
 
 /** The zone-map skipping optimizer rule: result identity with the
   * unpruned scan (soundness), actual directory pruning in the physical
@@ -163,7 +164,7 @@ class ZoneMapPruningSpec extends SparkTestBase {
   test("attachFromStore: the streaming zone-stats store (appended " +
       "slices, replayed appendix, compaction) registers pruning without " +
       "touching the table") {
-    import graft.operators.{Layout, Maintenance}
+    import graft.operators.Layout
     val root = tempDir("zm_store_attach")
     val dir = root.resolve("t").toString
     val store = root.resolve("stats_store").toString
@@ -173,19 +174,18 @@ class ZoneMapPruningSpec extends SparkTestBase {
       .withColumn("z_bucket", shiftright(col("x"), 8))
     df.write.partitionBy("z_bucket").parquet(dir)
     // three ingest slices append their own raw stats (what
-    // zoneStatsStream's foreachBatch does per micro-batch)
+    // SliceStore.ZoneStats's stream does per micro-batch)
     val t = spark.read.parquet(dir)
     (0 until 3).foreach { b =>
-      Layout.rawZoneMap(t.where(col("payload") % 3 === b),
-          col("z_bucket"), Seq("x", "y"))
-        .withColumn("batch_id", lit(b.toLong))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.ZoneStats.append(Layout.rawZoneMap(
+        t.where(col("payload") % 3 === b), col("z_bucket"), Seq("x", "y")),
+        b.toLong, store)
     }
     // a replayed appendix of batch 1 must be absorbed by the view
     val slice1 = spark.read.parquet(store).where(col("batch_id") === 1)
     slice1.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
     // view == full rebuild (the fold is exact)
-    val served = graft.streaming.Streams.zoneStatsView(spark, store)
+    val served = SliceStore.ZoneStats.view(spark, store)
       .collect().map(r => r.getAs[Long]("bucket") ->
         (r.getAs[Long]("min_x"), r.getAs[Long]("max_x"),
           r.getAs[Long]("min_y"), r.getAs[Long]("max_y"),
@@ -198,10 +198,10 @@ class ZoneMapPruningSpec extends SparkTestBase {
     assert(served == rebuilt, "store view diverged from full rebuild")
     // compact the store (batches 0-1 superseded by committed 2) —
     // served stats must be invariant
-    val res = Maintenance.compactZoneStatsStore(spark, store,
-      throughBatch = 1)
+    val res = SliceStore.ZoneStats.compact(spark, store,
+      throughBatch = Some(1))
     assert(res.filesAfter < res.filesBefore, res.toString)
-    assert(graft.streaming.Streams.zoneStatsView(spark, store)
+    assert(SliceStore.ZoneStats.view(spark, store)
       .collect().map(r => r.getAs[Long]("bucket") ->
         (r.getAs[Long]("min_x"), r.getAs[Long]("max_x"),
           r.getAs[Long]("min_y"), r.getAs[Long]("max_y"),

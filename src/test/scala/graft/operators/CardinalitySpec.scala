@@ -44,7 +44,7 @@ class CardinalitySpec extends SparkTestBase {
       col("value"))
     val replayed = slices.unionByName(
       slices.where(col("slice") === "slice0"))
-    // collapse duplicate appendixes the way cardinalityStoreView does
+    // collapse duplicate appendixes the way SliceStore.Cardinality does
     val collapsed = replayed.groupBy(col("slice"), col("group"))
       .agg(hll_union_agg(col("sketch")).as("sketch"),
         max(col("n_rows")).as("n_rows"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.streaming.SliceStore
 
 class MaintenanceSpec extends SparkTestBase {
   import graft.TestSpark.spark
@@ -144,21 +145,19 @@ class MaintenanceSpec extends SparkTestBase {
       (0 until 60).map(i => (i / 30L, i.toLong)),
       (60 until 120).map(i => (i / 30L, i.toLong)),
       (120 until 150).map(i => (i / 30L, i.toLong)))
-    batches.foreach { b =>
-      BloomIndex.build(b.toDF("chunk", "key"), col("chunk"), col("key"),
-          3, 1024)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      SliceStore.Bloom.append(BloomIndex.build(b.toDF("chunk", "key"),
+        col("chunk"), col("key"), 3, 1024), i.toLong, store)
     }
-    def served = graft.streaming.Streams.bloomIndexView(spark, store)
+    def served = SliceStore.Bloom.view(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val before = served
-    val r = Maintenance.compactBloomStore(spark, store)
+    val r = SliceStore.Bloom.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(served == before, "compaction changed the served index")
     // a batch replayed AFTER compaction re-ORs harmlessly
-    BloomIndex.build(batches(1).toDF("chunk", "key"), col("chunk"),
-        col("key"), 3, 1024)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+    SliceStore.Bloom.append(BloomIndex.build(batches(1).toDF("chunk", "key"),
+      col("chunk"), col("key"), 3, 1024), 1L, store)
     assert(served == before, "post-compaction replay changed the index")
   }
 
@@ -167,18 +166,16 @@ class MaintenanceSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val store = tempDir("count_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
-      graft.operators.Anomaly.countSeries(rows.toDF("g", "b"),
-          col("g"), col("b"))
-        .withColumn("batch_id", org.apache.spark.sql.functions.lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.Count.append(graft.operators.Anomaly.countSeries(
+        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
     append(0, (1 to 5).flatMap(b => Seq.fill(4)(("a", b))))
     append(1, Seq.fill(6)(("a", 6)) ++ Seq.fill(2)(("a", 2)))   // late b=2
     append(2, Seq.fill(3)(("a", 7)))
-    def snap = graft.streaming.Streams.anomalyStoreView(spark, store)
+    def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val before = snap
     // batches 0 and 1 are superseded by committed batch 2 -> foldable
-    val r = Maintenance.compactCountStore(spark, store, throughBatch = 1)
+    val r = SliceStore.Count.compact(spark, store, throughBatch = Some(1))
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(snap == before, "compaction changed the served counts")
     assert(before(("a", 2)) == 6L, "late partial must stay folded in")
@@ -201,20 +198,17 @@ class MaintenanceSpec extends SparkTestBase {
       .toDF("vec_id", "embedding")
     val model = Ivf.fitDistributed(vecs, col("vec_id"), col("embedding"),
       nlist = 4)
-    def append(batch: Long): Unit =
-      Ivf.assign(model, vecs, col("vec_id"), col("embedding"))
-        .withColumn("batch_id", lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("list_id").parquet(store)
+    def append(batch: Long): Unit = SliceStore.Ivf.append(
+      Ivf.assign(model, vecs, col("vec_id"), col("embedding")), batch, store)
     append(0)
     append(0) // replayed appendix: bit-identical duplicate of batch 0
     val queries = vecs.where(col("vec_id") % 40 === 0)
     def probe = Ivf.topKStored(model,
-        graft.streaming.Streams.ivfIndexView(spark, store), queries,
+        SliceStore.Ivf.view(spark, store), queries,
         col("vec_id"), col("embedding"), k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = probe
-    val r = Maintenance.compactIvfStore(spark, store)
+    val r = SliceStore.Ivf.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(probe == before, "compaction changed probe results")
     val rows = spark.read.parquet(store)
@@ -242,16 +236,14 @@ class MaintenanceSpec extends SparkTestBase {
     val model = Ivf.fitDistributed(vecs, col("vec_id"), col("embedding"),
       nlist = 4)
     def append(df: org.apache.spark.sql.DataFrame, batch: Long): Unit =
-      Ivf.assign(model, df, col("vec_id"), col("embedding"))
-        .withColumn("batch_id", lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("list_id").parquet(store)
+      SliceStore.Ivf.append(
+        Ivf.assign(model, df, col("vec_id"), col("embedding")), batch, store)
     append(vecs, 0)
     append(vecs, 0) // replayed duplicate appendix
     // the tap runs after the snapshot listing — this append is a live
-    // ivfIndexStream batch landing mid-compaction
+    // SliceStore.Ivf stream batch landing mid-compaction
     var appended = false
-    val r = Maintenance.compactIvfStoreImpl(spark, store, { df =>
+    val r = SliceStore.Ivf.compactWith(spark, store, None, { df =>
       if (!appended) { appended = true; append(late, 1) }
       df
     })
@@ -263,7 +255,7 @@ class MaintenanceSpec extends SparkTestBase {
       "the concurrently appended slice must survive the compaction")
     // probes see every vector, replay absorption intact
     val probe = Ivf.topKStored(model,
-        graft.streaming.Streams.ivfIndexView(spark, store),
+        SliceStore.Ivf.view(spark, store),
         late.where(col("vec_id") % 20 === 0),
         col("vec_id"), col("embedding"), k = 3, nprobe = 4)
       .collect()
@@ -280,12 +272,10 @@ class MaintenanceSpec extends SparkTestBase {
       .toDF("vec_id", "embedding")
     val model = Ivf.fitDistributed(vecs, col("vec_id"), col("embedding"),
       nlist = 4)
-    Ivf.assign(model, vecs, col("vec_id"), col("embedding"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("list_id").parquet(store)
+    SliceStore.Ivf.append(
+      Ivf.assign(model, vecs, col("vec_id"), col("embedding")), 0L, store)
     def probe = Ivf.topKStored(model,
-        graft.streaming.Streams.ivfIndexView(spark, store),
+        SliceStore.Ivf.view(spark, store),
         vecs.where(col("vec_id") % 30 === 0),
         col("vec_id"), col("embedding"), k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -320,7 +310,7 @@ class MaintenanceSpec extends SparkTestBase {
     assert(!new java.io.File(storeDir, tornRel).exists() && !parked.exists())
     assert(probe == before, "recovery must restore the exact store")
     // and a fresh compaction completes on the recovered store
-    val r = Maintenance.compactIvfStore(spark, store)
+    val r = SliceStore.Ivf.compact(spark, store)
     assert(r.filesAfter >= 1 && probe == before, r.toString)
   }
 
@@ -330,21 +320,19 @@ class MaintenanceSpec extends SparkTestBase {
     import graft.operators.Cardinality
     val store = tempDir("card_cstore").toString
     def append(batch: Long, rows: Seq[(String, String)]): Unit =
-      Cardinality.sliceSketches(rows.toDF("g", "v"),
-          org.apache.spark.sql.functions.lit(batch).as("batch_id"),
-          col("g"), col("v"), lgK = 12)
-        .withColumnRenamed("slice", "batch_id")
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.Cardinality.append(Cardinality.sliceSketches(
+          rows.toDF("g", "v"), org.apache.spark.sql.functions.lit(batch),
+          col("g"), col("v"), lgK = 12).drop("slice"), batch, store)
     append(0, (0 until 200).map(i => (s"g${i % 2}", s"v${i % 30}")))
     append(1, (0 until 150).map(i => (s"g${i % 2}", s"v${i % 50}")))
     append(2, (0 until 80).map(i => (s"g${i % 2}", s"v${i % 10}")))
-    def snap = graft.streaming.Streams.cardinalityStoreView(spark, store)
+    def snap = SliceStore.Cardinality.view(spark, store)
       .collect().map(r => r.getAs[String]("group") ->
         (r.getAs[Long]("n_distinct"), r.getAs[Long]("n_rows"),
           r.getAs[Long]("n_slices"))).toMap
     val before = snap
-    val r = Maintenance.compactCardinalityStore(spark, store,
-      throughBatch = 1)
+    val r = SliceStore.Cardinality.compact(spark, store,
+      throughBatch = Some(1))
     assert(r.filesAfter < r.filesBefore, r.toString)
     val after = snap
     after.foreach { case (g, (est, n, slices)) =>
@@ -365,13 +353,11 @@ class MaintenanceSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val store = tempDir("concurrent_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
-      graft.operators.Anomaly.countSeries(rows.toDF("g", "b"),
-          col("g"), col("b"))
-        .withColumn("batch_id", org.apache.spark.sql.functions.lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.Count.append(graft.operators.Anomaly.countSeries(
+        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
-    def snap = graft.streaming.Streams.anomalyStoreView(spark, store)
+    def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     // the fold callback runs AFTER the snapshot listing — appending a
     // new slice from inside it is exactly a concurrent foreachBatch
@@ -399,13 +385,11 @@ class MaintenanceSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val store = tempDir("rollback_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
-      graft.operators.Anomaly.countSeries(rows.toDF("g", "b"),
-          col("g"), col("b"))
-        .withColumn("batch_id", org.apache.spark.sql.functions.lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.Count.append(graft.operators.Anomaly.countSeries(
+        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
-    def snap = graft.streaming.Streams.anomalyStoreView(spark, store)
+    def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val before = snap
     // simulate a crash mid-promotion: originals parked, one folded file
@@ -432,7 +416,7 @@ class MaintenanceSpec extends SparkTestBase {
       !new java.io.File(store + ".__compact_manifest").exists())
     assert(snap == before, "rollback must restore the exact store")
     // and the next compaction (which auto-recovers) proceeds cleanly
-    val r = Maintenance.compactCountStore(spark, store, throughBatch = 0)
+    val r = SliceStore.Count.compact(spark, store, throughBatch = Some(0))
     assert(r.filesAfter >= 1 && snap == before, r.toString)
   }
 
@@ -442,13 +426,11 @@ class MaintenanceSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val store = tempDir("crashview_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
-      graft.operators.Anomaly.countSeries(rows.toDF("g", "b"),
-          col("g"), col("b"))
-        .withColumn("batch_id", org.apache.spark.sql.functions.lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.Count.append(graft.operators.Anomaly.countSeries(
+        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
-    def snap = graft.streaming.Streams.anomalyStoreView(spark, store)
+    def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val before = snap
     // crash mid-promotion: ALL originals parked, a torn folded file in
@@ -484,16 +466,15 @@ class MaintenanceSpec extends SparkTestBase {
     val nx = Layout.normalize16(col("x"), 255L)
     val ny = Layout.normalize16(col("y"), 255L)
     def append(batch: Long, rows: Seq[(Long, Long)]): Unit =
-      Layout.zoneMap(rows.toDF("x", "y"), nx, ny, 4)
-        .withColumn("batch_id", lit(batch))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+      SliceStore.ZoneMap.append(Layout.zoneMap(rows.toDF("x", "y"), nx, ny, 4),
+        batch, store)
     append(0, (0 until 200).map(i => ((i * 613L) % 256, (i * 389L) % 256)))
     append(1, (0 until 150).map(i => ((i * 97L) % 256, (i * 31L) % 256)))
     append(2, (0 until 50).map(i => ((i * 17L) % 256, (i * 11L) % 256)))
-    def snap = graft.streaming.Streams.zoneMapStoreView(spark, store)
+    def snap = SliceStore.ZoneMap.view(spark, store)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     val before = snap
-    val r = Maintenance.compactZoneStore(spark, store, throughBatch = 1)
+    val r = SliceStore.ZoneMap.compact(spark, store, throughBatch = Some(1))
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(snap == before, "compaction changed the served zone map")
     // the tail batch still replays into the view exactly as before

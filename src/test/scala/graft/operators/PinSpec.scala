@@ -47,4 +47,24 @@ class PinSpec extends SparkTestBase {
     }
     assert(sc.getCheckpointDir.isEmpty, "checkpoint dir must be restored")
   }
+
+  test("Pin.eager on the reliable path evaluates the pinned subtree once " +
+    "per row (the checkpoint is written by the job that computes it)") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    sc.setCheckpointDir(tempDir("pin_once").toString)
+    try {
+      val evals = sc.longAccumulator("pin_evals")
+      val bump = udf { (x: Int) => evals.add(1L); x * 3 }
+      val df = (1 to 40).toDF("x").withColumn("y", bump(col("x")))
+      val pinned = Pin.eager(df)
+      assert(evals.value == 40L,
+        s"pinned subtree evaluated ${evals.value} times for 40 rows")
+      assert(pinned.as[(Int, Int)].collect().toSet ==
+        (1 to 40).map(i => (i, i * 3)).toSet)
+    } finally {
+      org.apache.spark.GraftTestHooks.clearCheckpointDir(sc)
+    }
+  }
 }

@@ -906,10 +906,11 @@ class StreamsSpec extends SparkTestBase {
     import graft.operators.Cardinality
     val store = tempDir("card_store").toString
     val mem = MemoryStream[(String, String)]
-    val q = Streams.cardinalityStream(mem.toDF().toDF("grp", "v"),
-        col("grp"), col("v"), lgK = 12, store,
-        tempDir("card_ckpt").toString,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = SliceStore.Cardinality.stream(mem.toDF().toDF("grp", "v"),
+        store, tempDir("card_ckpt").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+        Cardinality.sliceSketches(_, lit(0L), col("grp"), col("v"),
+          lgK = 12).drop("slice"))
       .start()
     val b1 = (0 until 300).map(i => (s"g${i % 2}", s"v${i % 40}"))
     val b2 = (0 until 200).map(i => (s"g${i % 2}", s"v${i % 70}"))
@@ -918,7 +919,7 @@ class StreamsSpec extends SparkTestBase {
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val served = Streams.cardinalityStoreView(spark, store)
+    val served = SliceStore.Cardinality.view(spark, store)
       .collect().map(r => r.getAs[String]("group") ->
         (r.getAs[Long]("n_distinct"), r.getAs[Long]("n_rows"),
           r.getAs[Long]("n_slices"))).toMap
@@ -934,7 +935,7 @@ class StreamsSpec extends SparkTestBase {
     // the served view (idempotent union + max-n_rows collapse)
     val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
     slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    val replayed = Streams.cardinalityStoreView(spark, store)
+    val replayed = SliceStore.Cardinality.view(spark, store)
       .collect().map(r => r.getAs[String]("group") ->
         (r.getAs[Long]("n_distinct"), r.getAs[Long]("n_rows"),
           r.getAs[Long]("n_slices"))).toMap
@@ -949,9 +950,10 @@ class StreamsSpec extends SparkTestBase {
     import graft.operators.Anomaly
     val store = tempDir("anom_store").toString
     val mem = MemoryStream[(String, Int)]
-    val q = Streams.anomalyStream(mem.toDF().toDF("g", "b"),
-        col("g"), col("b"), store, tempDir("anom_ckpt").toString,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = SliceStore.Count.stream(mem.toDF().toDF("g", "b"),
+        store, tempDir("anom_ckpt").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+        Anomaly.countSeries(_, col("g"), col("b")))
       .start()
     // batch 1: steady traffic; batch 2: a spike bucket PLUS late
     // events for bucket 2 (already counted in batch 1)
@@ -965,7 +967,8 @@ class StreamsSpec extends SparkTestBase {
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getInt(1)) ->
         (r.getLong(2), r.getBoolean(5))).toMap
-    val served = snap(Streams.anomalyStoreView(spark, store))
+    val served = snap(Anomaly.robustCountAnomaliesFromSeries(
+      SliceStore.Count.view(spark, store)))
     val full = snap(Anomaly.robustCountAnomalies(
       (b1 ++ b2).toDF("g", "b"), col("g"), col("b")))
     assert(served == full, s"served=$served\nfull=$full")
@@ -975,13 +978,15 @@ class StreamsSpec extends SparkTestBase {
     // must collapse them (max per batch) and stay identical
     val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
     slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    assert(snap(Streams.anomalyStoreView(spark, store)) == served,
+    assert(snap(Anomaly.robustCountAnomaliesFromSeries(
+      SliceStore.Count.view(spark, store))) == served,
       "replayed appendix changed the verdict")
     // the drift view reads the same store and must equal ITS batch twin
     def dsnap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getInt(1)) ->
         (r.getDouble(3), r.getDouble(4), r.getBoolean(5))).toMap
-    assert(dsnap(Streams.driftStoreView(spark, store)) ==
+    assert(dsnap(Anomaly.cusumDriftFromSeries(
+      SliceStore.Count.view(spark, store))) ==
       dsnap(Anomaly.cusumDrift((b1 ++ b2).toDF("g", "b"),
         col("g"), col("b"))),
       "drift view diverged from the batch recompute")
@@ -995,10 +1000,10 @@ class StreamsSpec extends SparkTestBase {
     import graft.operators.BloomIndex
     val store = tempDir("bloom_store").toString
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.bloomIndexStream(mem.toDF().toDF("chunk", "key"),
-        col("chunk"), col("key"), k = 3, mBits = 1024, store,
-        tempDir("bloom_ckpt").toString,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = SliceStore.Bloom.stream(mem.toDF().toDF("chunk", "key"),
+        store, tempDir("bloom_ckpt").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+        BloomIndex.build(_, col("chunk"), col("key"), k = 3, mBits = 1024))
       .start()
     val b1 = (0 until 100).map(i => (i / 40L, i.toLong))
     val b2 = (100 until 160).map(i => (i / 40L, i.toLong)) // extends chunk 2, adds 3
@@ -1009,14 +1014,14 @@ class StreamsSpec extends SparkTestBase {
     q.stop()
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val served = m(Streams.bloomIndexView(spark, store))
+    val served = m(SliceStore.Bloom.view(spark, store))
     val rebuilt = m(BloomIndex.build((b1 ++ b2).toDF("chunk", "key"),
       col("chunk"), col("key"), 3, 1024))
     assert(served == rebuilt, "served index diverged from full rebuild")
     // replay: OR is idempotent — no batch ids, no dedup, still exact
     val slice = spark.read.parquet(store).limit(50)
     slice.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    assert(m(Streams.bloomIndexView(spark, store)) == rebuilt,
+    assert(m(SliceStore.Bloom.view(spark, store)) == rebuilt,
       "replayed appendix changed the index")
   }
 
@@ -1031,9 +1036,10 @@ class StreamsSpec extends SparkTestBase {
     val rows = mem.toDF().toDF("x", "y")
       .withColumn("z_bucket", org.apache.spark.sql.functions
         .shiftright(col("x"), 4))
-    val q = Streams.zoneStatsStream(rows, col("z_bucket"), Seq("x", "y"),
-        store, tempDir("zs_ckpt").toString,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = SliceStore.ZoneStats.stream(rows, store,
+        tempDir("zs_ckpt").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+        Layout.rawZoneMap(_, col("z_bucket"), Seq("x", "y")))
       .start()
     val b1 = (0 until 300).map(i => ((i * 613L) % 256, (i * 389L) % 256))
     val b2 = (0 until 200).map(i => ((i * 97L) % 256, (i * 31L) % 256))
@@ -1050,12 +1056,12 @@ class StreamsSpec extends SparkTestBase {
     val all = (b1 ++ b2).toDF("x", "y")
       .withColumn("z_bucket", org.apache.spark.sql.functions
         .shiftright(col("x"), 4))
-    assert(snap(Streams.zoneStatsView(spark, store)) ==
+    assert(snap(SliceStore.ZoneStats.view(spark, store)) ==
       snap(Layout.rawZoneMap(all, col("z_bucket"), Seq("x", "y"))))
     // replayed slice 0: min/max absorb it, n_rows deduped per batch
     val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
     slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    assert(snap(Streams.zoneStatsView(spark, store)) ==
+    assert(snap(SliceStore.ZoneStats.view(spark, store)) ==
       snap(Layout.rawZoneMap(all, col("z_bucket"), Seq("x", "y"))),
       "replayed appendix changed the served stats")
   }
@@ -1069,9 +1075,10 @@ class StreamsSpec extends SparkTestBase {
     val mem = MemoryStream[(Long, Long)]
     val nx = Layout.normalize16(col("x"), 255L)
     val ny = Layout.normalize16(col("y"), 255L)
-    val q = Streams.zoneMapStream(mem.toDF().toDF("x", "y"), nx, ny,
-        bucketBits = 4, store, tempDir("zm_ckpt").toString,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = SliceStore.ZoneMap.stream(mem.toDF().toDF("x", "y"), store,
+        tempDir("zm_ckpt").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+        Layout.zoneMap(_, nx, ny, bucketBits = 4))
       .start()
     val b1 = (0 until 300).map(i => ((i * 613L) % 256, (i * 389L) % 256))
     val b2 = (0 until 200).map(i => ((i * 97L) % 256, (i * 31L) % 256))
@@ -1080,7 +1087,7 @@ class StreamsSpec extends SparkTestBase {
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val served = Streams.zoneMapStoreView(spark, store)
+    val served = SliceStore.ZoneMap.view(spark, store)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     val full = Layout.zoneMap((b1 ++ b2).toDF("x", "y"), nx, ny, 4)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
@@ -1089,7 +1096,7 @@ class StreamsSpec extends SparkTestBase {
     // the served view (per-(batch_id, bucket) dedup)
     val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
     slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    val replayed = Streams.zoneMapStoreView(spark, store)
+    val replayed = SliceStore.ZoneMap.view(spark, store)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     assert(replayed == full)
   }
@@ -1115,10 +1122,10 @@ class StreamsSpec extends SparkTestBase {
       nlist = 3, maxIter = 10, seed = 7L)
     val store = tempDir("ivf_index_store").toString
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = Streams.ivfIndexStream(mem.toDF().toDF("vec_id", "embedding"),
-        model, store, tempDir("ivf_index_ckpt").toString,
-        col("vec_id"), col("embedding"),
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = SliceStore.Ivf.stream(mem.toDF().toDF("vec_id", "embedding"),
+        store, tempDir("ivf_index_ckpt").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+        Ivf.assign(model, _, col("vec_id"), col("embedding")))
       .start()
     mem.addData(batch1: _*)
     q.processAllAvailable()
@@ -1130,7 +1137,7 @@ class StreamsSpec extends SparkTestBase {
       .map(_.getName).filter(_.startsWith("list_id=")).sorted
     assert(dirs.length == 3, dirs.mkString(","))
     // stored assignment == fresh kernel assignment, id for id
-    val view = Streams.ivfIndexView(spark, store)
+    val view = SliceStore.Ivf.view(spark, store)
     val fresh = Ivf.assign(model, all, col("vec_id"), col("embedding"))
     assert(view.select(col("vec_id"), col("list_id")).as[(Long, Int)]
       .collect().toMap ==
@@ -1155,7 +1162,7 @@ class StreamsSpec extends SparkTestBase {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("list_id").parquet(store)
     assert(res(Ivf.topKStored(model,
-      Streams.ivfIndexView(spark, store), queries, col("qid"), col("qv"),
+      SliceStore.Ivf.view(spark, store), queries, col("qid"), col("qv"),
       k = 5, nprobe = 2, excludeSelf = false)) == exp)
   }
 }
