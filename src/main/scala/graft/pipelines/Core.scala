@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,7 +15,12 @@ import graft.sinks.{Contract, ParquetSink, Reconcile, ServingSink}
   *   - O6: fan-out lineages are persisted (MEMORY_AND_DISK) instead of the
   *     reference's recompute-from-source-per-action — a pure physical
   *     optimization, same semantics, and the difference between 4 and 1
-  *     source scans at 100 TB.
+  *     source scans at 100 TB;
+  *   - O7: sibling tables run concurrently ([[PipelineContext.parallel]])
+  *     where the reference stages them one after another; every call
+  *     `saveTable` makes into the serving sink is serialized behind one
+  *     lock the context owns, and `report` lists entries in declaration
+  *     order — the order the sequential reference records them in.
   */
 final case class TableResult(table: String, rows: Long, served: Long,
                              consistent: Boolean)
@@ -23,12 +29,40 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
                             val stagingDir: String, val mode: SaveMode,
                             val stagingFormat: String = "parquet") {
 
+  private type Entry = (String, Either[Throwable, TableResult])
+
   // synchronized: streaming drains (Streams.dualSinkStream) append from
   // the micro-batch thread while a caller may read report/failed
-  private val results = scala.collection.mutable.ArrayBuffer.empty[(String, Either[Throwable, TableResult])]
+  private val results = scala.collection.mutable.ArrayBuffer.empty[Entry]
 
-  private def record(entry: (String, Either[Throwable, TableResult])): Unit =
-    results.synchronized { results += entry; () }
+  // the buffer this thread records into: `results`, or inside a
+  // `parallel` branch the branch's own buffer, which the join appends to
+  // its caller's buffer in declaration order
+  private val buffer =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[Entry]] {
+      override def initialValue() = results
+    }
+
+  private def record(entry: Entry): Unit = {
+    val b = buffer.get
+    b.synchronized { b += entry; () }
+  }
+
+  /** O7: the one door from [[saveTable]] into `sink`. Every call holds
+    * this object's monitor, so concurrent branches reach the serving
+    * store one at a time (a JDBC deployment opens no more connections
+    * than one table's `numPartitions`); staging writes and read-backs
+    * stay outside it.
+    */
+  private object serving extends ServingSink {
+    override def execute(sql: String): Unit = synchronized(sink.execute(sql))
+    override def write(df: DataFrame, table: String, mode: SaveMode): Unit =
+      synchronized(sink.write(df, table, mode))
+    override def count(table: String): Long = synchronized(sink.count(table))
+    override def writeDated(df: DataFrame, table: String, mode: SaveMode,
+                            dateCol: String, date: java.sql.Date): Unit =
+      synchronized(sink.writeDated(df, table, mode, dateCol, date))
+  }
 
   /** O2: run one table stage in isolation; failures are recorded, siblings
     * continue.
@@ -45,6 +79,38 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
     try body catch { case e: Throwable =>
       record(name -> Left(e))
     }
+
+  /** O7: sibling stages run at once, each branch on its own thread
+    * carrying the caller's Spark local properties (job group, job
+    * description, scheduler pool) and active session. Returns only after
+    * every branch has finished, so `persisted(df) { m => parallel(...) }`
+    * never unpersists under a live reader. `stage`/`guard` failures inside
+    * a branch stay recorded and isolated (O2); a branch's uncaught
+    * throwable is rethrown after the join — the first in declaration
+    * order, the others suppressed onto it. Each call owns its threads, so
+    * nested calls never wait on a pool their own caller holds.
+    */
+  def parallel(branches: (() => Unit)*): Unit = {
+    val outer = buffer.get
+    val threads = java.util.concurrent.Executors.newCachedThreadPool()
+    try {
+      val running = branches.map { branch =>
+        val own = scala.collection.mutable.ArrayBuffer.empty[Entry]
+        own -> SQLExecution.withThreadLocalCaptured(
+            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+            threads) {
+          buffer.set(own)
+          try { branch(); None } catch { case e: Throwable => Some(e) }
+        }
+      }
+      val errors = running.flatMap(_._2.join())
+      outer.synchronized { running.foreach(r => outer ++= r._1) }
+      errors.headOption.foreach { first =>
+        errors.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally threads.shutdown()
+  }
 
   def report: Seq[(String, Either[Throwable, TableResult])] =
     results.synchronized(results.toSeq)
@@ -92,7 +158,7 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
       s"${contract.table}: dropOnOverwrite with a dated Overwrite backfill " +
         "would truncate the serving table the backfill is meant to preserve")
     if (dropOnOverwrite && m == SaveMode.Overwrite)
-      sink.execute(s"DROP TABLE IF EXISTS ${contract.table}")
+      serving.execute(s"DROP TABLE IF EXISTS ${contract.table}")
     // serving DDL must declare the stamp column too, or the JDBC insert
     // (which carries it) would fail against a freshly-created table
     val ddlContract = loadDate match {
@@ -100,7 +166,7 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
         contract.schema.add("load_date", org.apache.spark.sql.types.DateType))
       case None => contract
     }
-    sink.execute(ddlContract.ddl)
+    serving.execute(ddlContract.ddl)
     val projected = if (applyContract) contract.select(df) else df
     val out = loadDate match {
       case Some(d) => projected.withColumn("load_date", lit(d))
@@ -131,11 +197,11 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
     // partition overwrite replaces one day, so the serving side must too
     // (a plain Overwrite would truncate the whole serving table)
     loadDate match {
-      case Some(d) => sink.writeDated(out, contract.table, m, "load_date", d)
-      case None    => sink.write(out, contract.table, m)
+      case Some(d) => serving.writeDated(out, contract.table, m, "load_date", d)
+      case None    => serving.write(out, contract.table, m)
     }
     val (staged, served, ok) =
-      Reconcile.check(spark, path, sink, contract.table, stagingFormat)
+      Reconcile.check(spark, path, serving, contract.table, stagingFormat)
     TableResult(contract.table, staged, served, ok)
   }
 

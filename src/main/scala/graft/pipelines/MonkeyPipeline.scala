@@ -135,31 +135,33 @@ object MonkeyPipeline {
           loadDatetime: Timestamp): Unit = {
     val drop = ctx.mode == SaveMode.Overwrite
 
-    ctx.guard("monkey_surveys_source") {
-    val surveysFlat = surveysTransform(Tables.json(ctx.spark, surveysGlob),
-      loadDatetime)
-    ctx.persisted(surveysFlat) { sv =>
-      ctx.stage("hst_surveys")(
-        ctx.saveTable(sv, surveys, dropOnOverwrite = drop))
-      val qFlat = questionsTransform(sv)
-      ctx.persisted(qFlat) { q =>
-        ctx.stage("hst_surveys_questions")(
-          ctx.saveTable(q, questions, dropOnOverwrite = drop))
-        ctx.stage("hst_surveys_choices")(
-          ctx.saveTable(choicesTransform(q), choices, dropOnOverwrite = drop))
-      }
-    }
-    }
-
-    ctx.guard("monkey_responses_source") {
-    val respFlat = responsesTransform(Tables.json(ctx.spark, responsesGlob),
-      loadDatetime)
-    ctx.persisted(respFlat) { r =>
-      ctx.stage("hst_surveys_responses")(
-        ctx.saveTable(r, responses, dropOnOverwrite = drop))
-      ctx.stage("hst_surveys_answers")(
-        ctx.saveTable(answersTransform(r), answers, dropOnOverwrite = drop))
-    }
-    }
+    ctx.parallel(
+      () => ctx.guard("monkey_surveys_source") {
+        val surveysFlat = surveysTransform(
+          Tables.json(ctx.spark, surveysGlob), loadDatetime)
+        ctx.persisted(surveysFlat) { sv =>
+          ctx.parallel(
+            () => ctx.stage("hst_surveys")(
+              ctx.saveTable(sv, surveys, dropOnOverwrite = drop)),
+            () => ctx.persisted(questionsTransform(sv)) { q =>
+              ctx.parallel(
+                () => ctx.stage("hst_surveys_questions")(
+                  ctx.saveTable(q, questions, dropOnOverwrite = drop)),
+                () => ctx.stage("hst_surveys_choices")(ctx.saveTable(
+                  choicesTransform(q), choices, dropOnOverwrite = drop)))
+            })
+        }
+      },
+      () => ctx.guard("monkey_responses_source") {
+        val respFlat = responsesTransform(
+          Tables.json(ctx.spark, responsesGlob), loadDatetime)
+        ctx.persisted(respFlat) { r =>
+          ctx.parallel(
+            () => ctx.stage("hst_surveys_responses")(
+              ctx.saveTable(r, responses, dropOnOverwrite = drop)),
+            () => ctx.stage("hst_surveys_answers")(ctx.saveTable(
+              answersTransform(r), answers, dropOnOverwrite = drop)))
+        }
+      })
   }
 }

@@ -174,43 +174,48 @@ object VkPipeline {
           wallsGlob: String, loadDatetime: Timestamp): Unit = {
     val drop = ctx.mode == SaveMode.Overwrite
 
-    ctx.guard("vk_groups_source") {
-    val groupsFlat = groupsTransform(Tables.json(ctx.spark, groupsGlob),
-      loadDatetime)
-    ctx.persisted(groupsFlat) { g =>
-      ctx.stage("groups")(ctx.saveTable(g, groups, dropOnOverwrite = drop))
-      ctx.stage("groups_contacts")(
-        ctx.saveTable(contactsTransform(g), groupsContacts, dropOnOverwrite = drop))
-      ctx.stage("groups_links")(
-        ctx.saveTable(linksTransform(g), groupsLinks, dropOnOverwrite = drop))
-
-      // A3 (vk_proc.py:465): the members FK is a collected scalar.
-      ctx.guard("vk_members_source") {
-      val groupId = g.select(col("group_id")).first().getLong(0)
-      val membersFlat = membersTransform(
-        Tables.json(ctx.spark, membersGlob), groupId, loadDatetime)
-      ctx.persisted(membersFlat) { m =>
-        ctx.stage("members")(ctx.saveTable(m, members, dropOnOverwrite = drop))
-        ctx.stage("members_careers")(
-          ctx.saveTable(careersTransform(m), membersCareers, dropOnOverwrite = drop))
-        ctx.stage("members_schools")(
-          ctx.saveTable(schoolsTransform(m), membersSchools, dropOnOverwrite = drop))
-        ctx.stage("members_universities")(
-          ctx.saveTable(universitiesTransform(m), membersUniversities,
-            dropOnOverwrite = drop))
-      }
-      }
-    }
-    }
-
-    ctx.guard("vk_walls_source") {
-    val wallFlat = wallTransform(Tables.json(ctx.spark, wallsGlob), loadDatetime)
-    ctx.persisted(wallFlat) { w =>
-      ctx.stage("wall_items")(
-        ctx.saveTable(wallItemsTransform(w), wallItems, dropOnOverwrite = drop))
-      ctx.stage("wall_history")(
-        ctx.saveTable(wallHistoryTransform(w), wallHistory, dropOnOverwrite = drop))
-    }
-    }
+    ctx.parallel(
+      () => ctx.guard("vk_groups_source") {
+        val groupsFlat = groupsTransform(Tables.json(ctx.spark, groupsGlob),
+          loadDatetime)
+        ctx.persisted(groupsFlat) { g =>
+          ctx.parallel(
+            () => ctx.stage("groups")(
+              ctx.saveTable(g, groups, dropOnOverwrite = drop)),
+            () => ctx.stage("groups_contacts")(ctx.saveTable(
+              contactsTransform(g), groupsContacts, dropOnOverwrite = drop)),
+            () => ctx.stage("groups_links")(ctx.saveTable(
+              linksTransform(g), groupsLinks, dropOnOverwrite = drop)),
+            // A3 (vk_proc.py:465): the members FK is a collected scalar.
+            () => ctx.guard("vk_members_source") {
+              val groupId = g.select(col("group_id")).first().getLong(0)
+              val membersFlat = membersTransform(
+                Tables.json(ctx.spark, membersGlob), groupId, loadDatetime)
+              ctx.persisted(membersFlat) { m =>
+                ctx.parallel(
+                  () => ctx.stage("members")(
+                    ctx.saveTable(m, members, dropOnOverwrite = drop)),
+                  () => ctx.stage("members_careers")(ctx.saveTable(
+                    careersTransform(m), membersCareers, dropOnOverwrite = drop)),
+                  () => ctx.stage("members_schools")(ctx.saveTable(
+                    schoolsTransform(m), membersSchools, dropOnOverwrite = drop)),
+                  () => ctx.stage("members_universities")(ctx.saveTable(
+                    universitiesTransform(m), membersUniversities,
+                    dropOnOverwrite = drop)))
+              }
+            })
+        }
+      },
+      () => ctx.guard("vk_walls_source") {
+        val wallFlat = wallTransform(Tables.json(ctx.spark, wallsGlob),
+          loadDatetime)
+        ctx.persisted(wallFlat) { w =>
+          ctx.parallel(
+            () => ctx.stage("wall_items")(ctx.saveTable(
+              wallItemsTransform(w), wallItems, dropOnOverwrite = drop)),
+            () => ctx.stage("wall_history")(ctx.saveTable(
+              wallHistoryTransform(w), wallHistory, dropOnOverwrite = drop)))
+        }
+      })
   }
 }

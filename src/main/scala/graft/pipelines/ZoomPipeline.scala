@@ -124,18 +124,20 @@ object ZoomPipeline {
     val raw = Tables.json(ctx.spark, meetingsGlob)
     if (ctx.sumGate(raw, "total_records") > 0) {
       val flat = meetingsTransform(raw)
-      ctx.persisted(flat) { m =>
-        ctx.stage("meetings")(ctx.saveTable(m, meetings))
-        ctx.stage("records")(
-          ctx.saveTable(recordsTransform(m), records, applyContract = false))
-      }
-      ctx.stage("participants") {
-        val pts = participantsTransform(
-          Tables.json(ctx.spark, participantsGlob), None)
-        // zoom_proc.py:477: participants is always rebuilt.
-        ctx.saveTable(pts, participants,
-          modeOverride = Some(SaveMode.Overwrite), applyContract = false)
-      }
+      ctx.parallel(
+        () => ctx.persisted(flat) { m =>
+          ctx.parallel(
+            () => ctx.stage("meetings")(ctx.saveTable(m, meetings)),
+            () => ctx.stage("records")(
+              ctx.saveTable(recordsTransform(m), records, applyContract = false)))
+        },
+        () => ctx.stage("participants") {
+          val pts = participantsTransform(
+            Tables.json(ctx.spark, participantsGlob), None)
+          // zoom_proc.py:477: participants is always rebuilt.
+          ctx.saveTable(pts, participants,
+            modeOverride = Some(SaveMode.Overwrite), applyContract = false)
+        })
       // zoom_proc.py:482-486: BOTH reader grants issued after the loads
       ctx.guard("grants") {
         ctx.sink.execute(
@@ -155,16 +157,18 @@ object ZoomPipeline {
     val raw = Tables.json(ctx.spark, meetingsGlob)
     if (ctx.sumGate(raw, "total_records") > 0) {
       val flat = stamp(meetingsTransform(raw), loadDatetime)
-      ctx.persisted(flat) { m =>
-        ctx.stage("hst_meetings")(ctx.saveTable(m, hstMeetings))
-        ctx.stage("hst_records")(
-          ctx.saveTable(stamp(recordsTransform(m), loadDatetime), hstRecords))
-      }
-      ctx.stage("hst_participants") {
-        val pts = stamp(participantsTransform(
-          Tables.json(ctx.spark, participantsGlob), Some("pts_")), loadDatetime)
-        ctx.saveTable(pts, hstParticipants)
-      }
+      ctx.parallel(
+        () => ctx.persisted(flat) { m =>
+          ctx.parallel(
+            () => ctx.stage("hst_meetings")(ctx.saveTable(m, hstMeetings)),
+            () => ctx.stage("hst_records")(
+              ctx.saveTable(stamp(recordsTransform(m), loadDatetime), hstRecords)))
+        },
+        () => ctx.stage("hst_participants") {
+          val pts = stamp(participantsTransform(
+            Tables.json(ctx.spark, participantsGlob), Some("pts_")), loadDatetime)
+          ctx.saveTable(pts, hstParticipants)
+        })
     }
   }
 }

@@ -9,6 +9,12 @@ import org.apache.spark.sql.types._
   * DDL (`send_query` zoom_proc.py:106-128). The JDBC side is behind a
   * trait so tests run parquet-only with the serving sink mocked — the
   * harness has no Postgres.
+  *
+  * Contract: one call at a time per pipeline context, possibly from
+  * different threads — [[graft.pipelines.PipelineContext.saveTable]]
+  * serializes its calls behind one lock while sibling tables stage
+  * concurrently, so an implementation needs no locking of its own for
+  * that caller.
   */
 trait ServingSink {
   /** Out-of-band DDL/DML (CREATE/DROP/GRANT), reference K3. */
@@ -83,23 +89,29 @@ class MockServingSink extends ServingSink {
   private val counts =
     scala.collection.mutable.Map.empty[(String, Option[java.sql.Date]), Long]
   override def execute(sql: String): Unit = synchronized { ddl += sql }
-  override def write(df: DataFrame, table: String, mode: SaveMode): Unit = synchronized {
+  // the row count runs OUTSIDE the monitor: a Spark job held under it
+  // would block every other caller of a shared mock for the job's length
+  override def write(df: DataFrame, table: String, mode: SaveMode): Unit = {
     val n = df.count()
-    val k = (table, Option.empty[java.sql.Date])
-    if (mode == SaveMode.Append) counts(k) = counts.getOrElse(k, 0L) + n
-    else { // full overwrite truncates the whole table, dated buckets included
-      counts.keys.filter(_._1 == table).toSeq.foreach(counts.remove)
-      counts(k) = n
+    synchronized {
+      val k = (table, Option.empty[java.sql.Date])
+      if (mode == SaveMode.Append) counts(k) = counts.getOrElse(k, 0L) + n
+      else { // full overwrite truncates the whole table, dated buckets included
+        counts.keys.filter(_._1 == table).toSeq.foreach(counts.remove)
+        counts(k) = n
+      }
     }
   }
   override def writeDated(df: DataFrame, table: String, mode: SaveMode,
-                          dateCol: String, date: java.sql.Date): Unit = synchronized {
+                          dateCol: String, date: java.sql.Date): Unit = {
     val n = df.count()
-    val k = (table, Some(date): Option[java.sql.Date])
-    if (mode == SaveMode.Append) counts(k) = counts.getOrElse(k, 0L) + n
-    else { // mirror the trait's delete-then-append, with the DDL recorded
-      ddl += s"DELETE FROM $table WHERE $dateCol = CAST('$date' AS DATE)"
-      counts(k) = n
+    synchronized {
+      val k = (table, Some(date): Option[java.sql.Date])
+      if (mode == SaveMode.Append) counts(k) = counts.getOrElse(k, 0L) + n
+      else { // mirror the trait's delete-then-append, with the DDL recorded
+        ddl += s"DELETE FROM $table WHERE $dateCol = CAST('$date' AS DATE)"
+        counts(k) = n
+      }
     }
   }
   override def count(table: String): Long = synchronized(
