@@ -22,10 +22,24 @@ object SessionFactory {
     * escapes its checkpoint discipline would otherwise spend minutes
     * (and GiBs) stringifying plans before any work runs — 1 MB is far
     * beyond any sane plan and far below the 2 GiB default.
+    *
+    * `canChangeCachedPlanOutputPartitioning` lets a cache fill keep
+    * AQE's final-stage shuffle optimizations. With the Spark 4.1.2
+    * default (false), `CacheManager.getOrCloneSessionWithConfigsOff`
+    * switches `ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS`
+    * off for every fill, so a persisted frame that ends in a shuffle
+    * (an aggregate, a `distinct()`) is never coalesced: it fills into
+    * all `shufflePartitions` partitions however few rows it holds, and
+    * every later stage that reads it runs one task per partition. In
+    * the incremental curation funnel (`selfPairs` ends in `distinct()`)
+    * that made most of a 200-document stream batch's tasks. The price,
+    * as Spark documents it: a cached frame's output partitioning may
+    * change, so a query reading it may need one more shuffle.
     */
   def baseConf(shufflePartitions: Int = 32): Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.maxPlanStringLength" -> "1000000",
     "spark.sql.extensions" -> classOf[GraftExtensions].getName,
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->

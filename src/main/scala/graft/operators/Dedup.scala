@@ -947,11 +947,17 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, id: Column, text: Column,
                         numHashes: Int = 128, shingleSize: Int = 5,
-                        hash: SigHash = SigHash.Engine): DataFrame = {
+                        hash: SigHash = SigHash.Engine): DataFrame =
+    df.select(id.as("doc_id") +:
+      minhashSigCols(text, numHashes, shingleSize, hash): _*)
+
+  /** The `sig` and `n_sh` columns of [[minhashSignatures]], for a caller
+    * that keeps its other columns beside the signature.
+    */
+  def minhashSigCols(text: Column, numHashes: Int, shingleSize: Int,
+                     hash: SigHash): Seq[Column] = {
     val sh = array_distinct(TextFunctions.wordShingles(text, shingleSize))
-    df.select(id.as("doc_id"),
-      hash.minhash(sh, numHashes).as("sig"),
-      size(sh).as("n_sh"))
+    Seq(hash.minhash(sh, numHashes).as("sig"), size(sh).as("n_sh"))
   }
 
   /** LSH banding over MinHash signatures: split the signature into

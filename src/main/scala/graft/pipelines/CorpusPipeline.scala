@@ -114,6 +114,13 @@ object CorpusPipeline {
     * cache-manager plan entry, which an RDD-level unpersist would leak —
     * one leaked entry per persist per batch, scanned by every
     * subsequent query's cache lookup.
+    *
+    * The handles come in the order to free them: every frame before the
+    * frames it reads. Unpersisting a frame that other cached frames are
+    * built on makes the cache manager walk and re-examine each of them;
+    * freed the other way round, the funnel's handles cost about 0.7 s
+    * of driver time per 200-document stream batch, in this order a few
+    * milliseconds.
     */
   def curateIncrementManaged(newDocs: DataFrame, refSigs: DataFrame,
                              cfg: Config = Config()): (DataFrame, DataFrame, Seq[DataFrame]) = {
@@ -131,52 +138,44 @@ object CorpusPipeline {
     (curated, keptSigs, if (refCached) persisted else persisted :+ ref)
   }
 
-  /** The shared incremental funnel: gate → self-dedup → signatures →
-    * cross-pairs (strategy supplied by the caller) → prune → enrich.
-    * Returns (curated, keptSigs, persisted intermediates).
+  /** The shared incremental funnel: gate → exact dedup + signatures →
+    * self-pairs → cross-pairs (strategy supplied by the caller) → prune
+    * → enrich. Returns (curated, keptSigs, persisted intermediates in
+    * the order to free them).
     */
   private def curateAgainst(newDocs: DataFrame, cfg: Config)(
       crossPairsOf: DataFrame => DataFrame): (DataFrame, DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.storage.StorageLevel
     val gated = qualityGate(annotate(newDocs), cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // within-increment dedup: exact survivors first ...
-    val exact = exactDedup(gated)
-    // ... then ONE signature pass over them (r18): a MinHash signature
-    // is a pure per-row function of the text, so the self-LSH pairs,
-    // the cross-corpus band join and keptSigs can all share the same
-    // frame — the previous shape ran the (dominant) minhash kernel
-    // TWICE, once inside nearDedup over the exact survivors and again
-    // over selfClean for the cross join, recomputing identical values
-    // for every surviving doc.
-    val sigsAll = Dedup.minhashSignatures(exact, col("doc_id"), col("text"),
-        cfg.numHashes, cfg.shingleSize, cfg.hash)
+    // the exact survivors, planned once, each row carrying its MinHash
+    // signature (a pure per-row function of the text): the self-LSH
+    // pairs, the cross-corpus band join and keptSigs all read it off the
+    // rows, and every later frame is a filter of this one
+    val exactSigs = exactDedup(gated)
+      .select(col("*") +: Dedup.minhashSigCols(col("text"), cfg.numHashes,
+        cfg.shingleSize, cfg.hash): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // self-pairs from the shared signatures, persisted LAZILY on
-    // purpose (r18 re-measured): an eager Pin here hands both anti-join
-    // consumers an ExistingRDD with no size statistics, and the
-    // planner flipped every drop-list anti-join from broadcast-hash to
-    // sort-merge (the graph_triangles stats-loss lesson — full-stream
-    // sorts to drop a thresholded pair list). With a lazy persist the
-    // plan keeps the child's small estimate (broadcast, as before the
-    // refactor) and the two consumers' broadcast BUILDS serialize the
-    // cache fill, so the LSH self-join still evaluates once.
-    val selfPairs = Dedup.minhashDedupPairsFromSigs(sigsAll, cfg.numHashes,
+    // self-pairs, persisted LAZILY on purpose (r18 re-measured): an
+    // eager Pin here hands the drop-list anti-join an ExistingRDD with
+    // no size statistics, and the planner flipped it from
+    // broadcast-hash to sort-merge (the graph_triangles stats-loss
+    // lesson — full-stream sorts to drop a thresholded pair list). With
+    // a lazy persist the plan keeps the child's small estimate and
+    // broadcasts it; selfClean is read three times below (clean's left
+    // side, and the new side of the cross join's banding and
+    // verification), and the persist keeps the LSH self-join to one
+    // evaluation across them.
+    val selfPairs = Dedup.minhashDedupPairsFromSigs(exactSigs, cfg.numHashes,
         cfg.bands, cfg.minEstJaccard, cfg.hash)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val selfDropIds = selfPairs.select(col("id_b").as("doc_id")).distinct()
-    val selfClean = Dedup.applyPairDedup(exact, col("doc_id"), selfPairs)
-    // signatures of the self-clean survivors = the shared frame minus
-    // the dropped ids (identical values: signatures depend only on the
-    // text, and selfClean ⊆ exact)
-    val sigs = sigsAll.join(selfDropIds, Seq("doc_id"), "left_anti")
-    // clean is consumed TWICE (enrich -> curated, and the keptSigs
-    // semi-join); persisting it keeps the expensive cross-corpus band
-    // join from running once per consumer
-    val clean = Dedup.applyPairDedup(selfClean, col("doc_id"), crossPairsOf(sigs))
+    val selfClean = Dedup.applyPairDedup(exactSigs, col("doc_id"), selfPairs)
+    // clean feeds both results (curated and keptSigs); persisting it
+    // keeps the cross-corpus band join from running once per consumer
+    val clean = Dedup.applyPairDedup(selfClean, col("doc_id"), crossPairsOf(selfClean))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val keptSigs = sigs.join(clean.select("doc_id"), Seq("doc_id"), "left_semi")
-    (enrich(clean, cfg), keptSigs, Seq(gated, sigsAll, selfPairs, clean))
+    (enrich(clean.drop("sig", "n_sh"), cfg), clean.select("doc_id", "sig", "n_sh"),
+      Seq(clean, selfPairs, exactSigs, gated))
   }
 
   /** Stage a day's kept signatures as the accumulated signature STORE —

@@ -217,7 +217,8 @@ object Streams {
           // handles: unlike an RDD-level unpersist this also removes the
           // cache-manager plan entries, which would otherwise accumulate
           // per batch for the stream's lifetime and slow every cache
-          // lookup
+          // lookup; in the order given, which frees every frame before
+          // the frames it reads
           persisted.foreach(_.unpersist(blocking = false))
         }
       }

@@ -17,6 +17,40 @@ class SessionFactorySpec extends SparkTestBase {
     assert(c("spark.sql.session.timeZone") == "UTC")
     assert(c("spark.sql.shuffle.partitions") == "32")
     assert(c("spark.sql.extensions") == "graft.GraftExtensions")
+    // cache fills keep AQE's final-stage coalescing (scaladoc)
+    assert(c("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+  }
+
+  test("a persisted small aggregate fills into fewer than shuffle.partitions") {
+    import graft.TestSpark.spark.implicits._
+    val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevFlag = spark.conf.getOption(flag)
+    val base = SessionFactory.baseConf(shufflePartitions = 32)
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions",
+        base("spark.sql.shuffle.partitions"))
+      spark.conf.set(flag, base(flag))
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val counts = (1 to 10).map(i => (i % 3, i)).toDF("k", "v")
+        .groupBy("k").count().persist()
+      try {
+        assert(counts.count() == 3)
+        val filled = spark.sparkContext.getPersistentRDDs
+          .filter { case (id, _) => !before.contains(id) }.values.toSeq
+        assert(filled.size == 1, filled)
+        // without the flag the fill's final stage keeps all 32 shuffle
+        // partitions, and every reader of the cache runs 32 tasks
+        assert(filled.head.getNumPartitions < 32,
+          s"cache fill kept ${filled.head.getNumPartitions} partitions")
+      } finally counts.unpersist(blocking = true)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      prevFlag match {
+        case Some(v) => spark.conf.set(flag, v)
+        case None => spark.conf.unset(flag)
+      }
+    }
   }
 
   test("session() retrofits fs settings and SQL functions onto a live context") {

@@ -161,6 +161,32 @@ class IncrementalDedupSpec extends SparkTestBase {
     }
   }
 
+  test("keptSigs are the curated docs' own signatures, under every SigHash") {
+    // the funnel carries each survivor's signature on its row; what it
+    // hands forward must equal a fresh signature pass over the curated
+    // documents — same ids, same sig and n_sh
+    val increment = Seq(
+      (10L, refText1), // cross-increment dup -> dropped
+      (11L, novel),
+      (12L, novel),    // within-increment dup of 11 -> dropped
+      (13L, "the old boat sails past the grey harbour wall at first light"),
+      (14L, "one two")  // gated out by minTokens
+    ).toDF("doc_id", "text")
+    for (hash <- SigHash.values) {
+      val hcfg = cfg.copy(hash = hash)
+      val refSigs = Dedup.minhashSignatures(refDocs, col("doc_id"),
+        col("text"), cfg.numHashes, cfg.shingleSize, hash)
+      val (curated, keptSigs) =
+        CorpusPipeline.curateIncrement(increment, refSigs, hcfg)
+      val recomputed = Dedup.minhashSignatures(curated, col("doc_id"),
+        col("text"), cfg.numHashes, cfg.shingleSize, hash)
+      val kept = keptSigs.orderBy("doc_id").collect().toSeq
+      assert(kept.map(_.getLong(0)) == Seq(11L, 13L), s"$hash")
+      assert(kept == recomputed.orderBy("doc_id").collect().toSeq, s"$hash")
+      assert(keptSigs.columns.toSeq == Seq("doc_id", "sig", "n_sh"), s"$hash")
+    }
+  }
+
   test("curateIncrement with an empty reference keeps the whole (self-deduped) increment") {
     val increment = Seq((10L, refText1), (11L, novel)).toDF("doc_id", "text")
     val emptyRef = Dedup.minhashSignatures(

@@ -276,33 +276,50 @@ class StreamsSpec extends SparkTestBase {
         sigStore, curated, tempDir("dedup_stream_ckpt").toString, cfg,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       .start()
-    // every batch frees the funnel's persisted intermediates: the count
-    // of persistent RDDs must not grow from one batch to the next
-    def cachedRdds: Int = spark.sparkContext.getPersistentRDDs.size
-    val cachedBefore = cachedRdds
+    // every batch frees the funnel's persisted intermediates: neither
+    // the persistent RDDs nor the cache manager's plan entries (which
+    // `Dataset.unpersist` removes and an RDD-level unpersist would leak)
+    // may grow from one batch to the next
+    def cached: (Int, Int) = (spark.sparkContext.getPersistentRDDs.size,
+      org.apache.spark.sql.graftbridge.CacheBridge.numCachedEntries(spark))
+    var last = cached
+    def assertNoGrowth(batch: Int): Unit = {
+      val now = cached
+      assert(now._1 <= last._1,
+        s"batch $batch leaked ${now._1 - last._1} cached RDD(s)")
+      assert(now._2 <= last._2,
+        s"batch $batch leaked ${now._2 - last._2} cache-manager entr(ies)")
+      last = now
+    }
     mem.addData((1L, textA), (2L, textB))
     q.processAllAvailable()
-    val cachedAfter1 = cachedRdds
-    assert(cachedAfter1 <= cachedBefore,
-      s"batch 1 leaked ${cachedAfter1 - cachedBefore} cached RDD(s)")
+    assertNoGrowth(1)
     // batch 1 bootstrapped an empty store: both docs kept, sigs appended
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L))
     assert(spark.read.parquet(sigStore).count() == 2)
     // batch 2 re-sends textA under a new id, plus one genuinely new doc:
     // the re-send is a cross-batch duplicate against the store
-    mem.addData((10L, textA),
-      (11L, "the children read the books and the teacher is glad today"))
+    val textC = "the children read the books and the teacher is glad today"
+    mem.addData((10L, textA), (11L, textC))
     q.processAllAvailable()
-    q.stop()
-    val cachedAfter2 = cachedRdds
-    assert(cachedAfter2 <= cachedAfter1,
-      s"batch 2 leaked ${cachedAfter2 - cachedAfter1} cached RDD(s)")
+    assertNoGrowth(2)
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 11L))
     // and batch 2's survivor handed its signature forward for batch 3
     assert(spark.read.parquet(sigStore).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 11L))
+    // batch 3 re-sends batch 2's survivor and adds one new doc: the
+    // re-send is dropped against the signature batch 2 appended
+    mem.addData((20L, textC),
+      (21L, "a small red boat sails past the grey harbour wall at dawn"))
+    q.processAllAvailable()
+    q.stop()
+    assertNoGrowth(3)
+    assert(spark.read.parquet(curated).select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 11L, 21L))
+    assert(spark.read.parquet(sigStore).select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 11L, 21L))
   }
 
   test("streamStreamJoin: time-bounded attribution over two memory streams") {

@@ -1,0 +1,136 @@
+#!/usr/bin/env python3
+"""One row per Spark job from a Spark event log.
+
+  python3 tools/eventlog_jobs.py <event-log-dir> [--jobs N-M]
+
+For every application log in the directory (oldest first), prints per
+job: the job id, the SQL execution id that submitted it (`-` if none),
+the stages that ran with their task counts (`name (tasks)`, joined by
+`; `), the summed executor run time of those stages' tasks in ms, and
+the job's wall time (submission to completion) in ms. A stage is counted
+in the first job that lists it; later jobs that reuse its shuffle output
+skip it. `--jobs N-M` keeps only job ids N..M (inclusive).
+
+Spark 4 writes each application's log as a rolling-log directory
+(`eventlog_v2_<app>/events_<n>_<app>[.zstd]`); its parts are read in
+order, and a plain single-file log is read as it is. Parts compressed
+with zstd (Spark 4's default event-log codec) are read through the
+`zstd` command-line tool.
+
+Event logs need no code change to turn on, e.g. for the benchmark:
+
+  JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true \\
+    -Dspark.eventLog.dir=file:///tmp/eventlogs" \\
+    python3 perfbench/run.py --workload curate_stream --seed 7 --seconds 30 --trace 0
+"""
+import argparse
+import json
+import os
+import subprocess
+import sys
+
+
+def app_logs(path):
+    """The application logs in `path`, oldest first; each is the list of
+    its files in reading order."""
+    logs = []
+    for name in os.listdir(path):
+        p = os.path.join(path, name)
+        if os.path.isdir(p):
+            parts = [f for f in os.listdir(p) if f.startswith("events_")]
+            parts.sort(key=lambda f: int(f.split("_")[1]))
+            logs.append([os.path.join(p, f) for f in parts])
+        elif not name.startswith("."):
+            logs.append([p])
+    return sorted((files for files in logs if files),
+                  key=lambda files: os.path.getmtime(files[0]))
+
+
+def events(files):
+    for f in files:
+        if f.endswith(".zstd"):
+            text = subprocess.run(["zstd", "-dcq", f], check=True,
+                                  stdout=subprocess.PIPE).stdout.decode()
+        elif f.endswith((".lz4", ".lzf", ".snappy")):
+            raise SystemExit(f"{f}: only zstd-compressed or plain logs are read")
+        else:
+            with open(f) as fh:
+                text = fh.read()
+        for line in text.splitlines():
+            # an in-progress log may end in a partly written line
+            try:
+                yield json.loads(line)
+            except json.JSONDecodeError:
+                pass
+
+
+def jobs_of(evs):
+    """(job rows, application name) from one application's events."""
+    jobs, stage_job, stages, app = {}, {}, {}, "?"
+    for e in evs:
+        kind = e.get("Event")
+        if kind == "SparkListenerApplicationStart":
+            app = e.get("App ID") or e.get("App Name", "?")
+        elif kind == "SparkListenerJobStart":
+            jid = e["Job ID"]
+            props = e.get("Properties") or {}
+            jobs[jid] = {"exec": props.get("spark.sql.execution.id", "-"),
+                         "start": e.get("Submission Time"), "end": None,
+                         "stages": []}
+            for sid in e.get("Stage IDs", []):
+                stage_job.setdefault(sid, jid)
+        elif kind == "SparkListenerJobEnd":
+            if e["Job ID"] in jobs:
+                jobs[e["Job ID"]]["end"] = e.get("Completion Time")
+        elif kind == "SparkListenerStageSubmitted":
+            info = e["Stage Info"]
+            sid = info["Stage ID"]
+            st = stages.setdefault(sid, {"name": info.get("Stage Name", "?"),
+                                         "tasks": 0, "run_ms": 0})
+            st["tasks"] += info.get("Number of Tasks", 0)
+            jid = stage_job.get(sid)
+            if jid in jobs and sid not in jobs[jid]["stages"]:
+                jobs[jid]["stages"].append(sid)
+        elif kind == "SparkListenerTaskEnd":
+            st = stages.get(e.get("Stage ID"))
+            metrics = e.get("Task Metrics") or {}
+            if st is not None:
+                st["run_ms"] += metrics.get("Executor Run Time", 0)
+    rows = []
+    for jid in sorted(jobs):
+        j = jobs[jid]
+        wall = (j["end"] - j["start"]) if j["end"] and j["start"] else None
+        ran = [stages[s] for s in j["stages"]]
+        rows.append({"job": jid, "exec": j["exec"],
+                     "stages": "; ".join(f"{s['name']} ({s['tasks']})" for s in ran),
+                     "tasks": sum(s["tasks"] for s in ran),
+                     "run_ms": sum(s["run_ms"] for s in ran),
+                     "wall_ms": wall})
+    return rows, app
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("path", help="event-log directory (spark.eventLog.dir)")
+    ap.add_argument("--jobs", help="job id range N-M (inclusive)")
+    a = ap.parse_args()
+    lo, hi = 0, sys.maxsize
+    if a.jobs:
+        n, _, m = a.jobs.partition("-")
+        lo, hi = int(n), int(m or n)
+    logs = app_logs(a.path)
+    if not logs:
+        raise SystemExit(f"no event logs under {a.path}")
+    for files in logs:
+        rows, app = jobs_of(events(files))
+        rows = [r for r in rows if lo <= r["job"] <= hi]
+        print(f"{app}: {len(rows)} jobs, {sum(r['tasks'] for r in rows)} tasks")
+        print(f"  {'job':>5} {'exec':>5} {'tasks':>5} {'run_ms':>8} {'wall_ms':>8}  stages")
+        for r in rows:
+            wall = "-" if r["wall_ms"] is None else r["wall_ms"]
+            print(f"  {r['job']:>5} {r['exec']:>5} {r['tasks']:>5} {r['run_ms']:>8} "
+                  f"{wall:>8}  {r['stages']}")
+
+
+if __name__ == "__main__":
+    main()
