@@ -130,7 +130,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -139,29 +138,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "120").toInt
     require(watchdogSec >= 1,
       s"SPARK_GRAFT_BENCH_TIMEOUT_SEC must be >= 1, got $watchdogSec")
-    // Shuffle-partition override for scale-tail runs: the r16 100x audit
-    // attributed 1.2-1.9x over-linear legs to sort spill at the fixed 32
-    // partitions (SCALE.md) — on a real cluster that's AQE / partition-
-    // count territory, so the tail runner scales this with fixture size
-    // instead of conflating spill overhang with algorithmic shape.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings are built per-action for listener events; cap them
-      // so a lineage regression costs a truncated debug string, not
-      // minutes of 2 GiB string building (the r9 bench-timeout mode)
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // bounded-buffer typed aggregates must not fall back to sort-based
-      // aggregation at 128 groups/task — see SessionFactory scaladoc
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SessionFactory.objAggFallbackThreshold)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionFactory.driver("graft-bench", defaultCpus = "32")
     // Untimed warmup: initialize codegen, parquet reader and scheduler
     // paths so the alphabetically-first query doesn't absorb session
     // startup in its timing.
@@ -233,18 +210,6 @@ object Bench {
       s.split(" ").take(3).mkString("[", ",", "]")
     } catch { case _: Exception => "[]" }
     val passLoads = scala.collection.mutable.ArrayBuffer.empty[String]
-    // HOSTMARK: a fixed, data-independent CPU calibration timed once per
-    // pass — the discriminator loadavg cannot be. The r16 closing window
-    // measured EVERY query (pure-JVM kernels included) uniformly ~1.54×
-    // of r15 on an IDLE host (loadavg 0.08): a host-throughput level
-    // shift, which per-query min-of-N (additive-noise armor) and the
-    // bless dispersion gate (uniform ⇒ low dispersion ⇒ blessed) are
-    // both structurally blind to. Two marks: single-thread (per-core
-    // throughput — the thing a noisy hypervisor neighbor or frequency
-    // change moves) and a 32-way parallel variant (adds contention).
-    // check_bench divides round-over-round ratios by the hostmark ratio
-    // when both artifacts carry it, so "the host got slower" and "the
-    // code got slower" finally separate mechanically.
     Hostmark.warm()
     val marks1t = scala.collection.mutable.ArrayBuffer.empty[Double]
     val marksMt = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -331,7 +296,7 @@ object Bench {
     val hostmarks =
       s""""hostmark_1t":${ms(marks1t.min)},"hostmark_mt":${ms(marksMt.min)},""" +
         s""""hostmark_sink":${Hostmark.sinkValue},"""
-    val full = s"""{"metric":"total_min","value":${ms(totalMin)},"total_min":${ms(totalMin)},"total_med":${ms(totalMed)},"unit":"sec","queries":$qs3,"spread":$spread,"failures":$fstr,"runs":$runs,$hostmarks"shuffle_partitions":$shufflePartitions,"loadavg":$loadavg,"pass_loadavg":${passLoads.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total_min","value":${ms(totalMin)},"total_min":${ms(totalMin)},"total_med":${ms(totalMed)},"unit":"sec","queries":$qs3,"spread":$spread,"failures":$fstr,"runs":$runs,$hostmarks"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},"loadavg":$loadavg,"pass_loadavg":${passLoads.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     val spreadOut = sys.env.getOrElse("SPARK_GRAFT_SPREAD_OUT", "tools/bench_spread.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(spreadOut), (full + "\n").getBytes("UTF-8"))

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan evidence dump: writes `.explain("formatted")` for the
   * named registered queries to `<outDir>/<name><suffix>.txt` — the
   * before/after plan artifacts the optimization rounds commit under
@@ -12,26 +10,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...|all>
   *
-  * Same session shape as [[Bench]] (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cores, UTC, 64 MB broadcast threshold) so the dumped
-  * plan is the one the bench actually runs.
+  * The session is [[SessionFactory.driver]], the one [[Bench]] times,
+  * so the dumped plan is the one the bench runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, namesArg) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // same bounded-buffer aggregate setting as Bench (SessionFactory)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SessionFactory.objAggFallbackThreshold)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionFactory.driver("graft-plandump", defaultCpus = "32")
     Files.createDirectories(Paths.get(outDir))
     val names =
       if (namesArg == "all") SparkEntry.queries.keys.toSeq.sorted

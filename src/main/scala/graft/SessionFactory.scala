@@ -101,12 +101,19 @@ object SessionFactory {
               master: Option[String] = None,
               shufflePartitions: Int = 32,
               endpoint: Option[String] = sys.env.get("GRAFT_S3_ENDPOINT"))
+      : SparkSession.Builder =
+    configured(appName,
+      fullConf(shufflePartitions, endpoint) ++ master.map("spark.master" -> _))
+
+  private def fullConf(shufflePartitions: Int, endpoint: Option[String])
+      : Map[String, String] =
+    baseConf(shufflePartitions) ++
+      s3aConf(endpoint).map { case (k, v) => s"spark.hadoop.$k" -> v }
+
+  private def configured(appName: String, conf: Map[String, String])
       : SparkSession.Builder = {
     val b = SparkSession.builder().appName(appName)
-    master.foreach(b.master)
-    (baseConf(shufflePartitions) ++
-      s3aConf(endpoint).map { case (k, v) => s"spark.hadoop.$k" -> v })
-      .foreach { case (k, v) => b.config(k, v) }
+    conf.foreach { case (k, v) => b.config(k, v) }
     b
   }
 
@@ -121,11 +128,47 @@ object SessionFactory {
               master: Option[String] = None,
               shufflePartitions: Int = 32,
               endpoint: Option[String] = sys.env.get("GRAFT_S3_ENDPOINT"))
+      : SparkSession =
+    retrofit(builder(appName, master, shufflePartitions, endpoint)
+      .getOrCreate(), endpoint)
+
+  private def retrofit(spark: SparkSession, endpoint: Option[String])
       : SparkSession = {
-    val spark = builder(appName, master, shufflePartitions, endpoint).getOrCreate()
     val hc = spark.sparkContext.hadoopConfiguration
     s3aConf(endpoint).foreach { case (k, v) => hc.set(k, v) }
     GraftExtensions.register(spark)
+    spark
+  }
+
+  /** Conf of the registry drivers (Bench, Verify, PlanDump): [[builder]]'s
+    * conf on `local[$SPARK_GRAFT_CPUS]` (`defaultCpus` when unset) with
+    * `$SPARK_GRAFT_SHUFFLE_PARTITIONS` shuffle partitions (default: the
+    * core count; the scale tail raises it with fixture size so sort
+    * spill is not read as algorithmic shape), plus the two settings
+    * only the harness uses: the 64 MiB broadcast threshold and no UI.
+    */
+  def driverConf(defaultCpus: String, env: Map[String, String] = sys.env)
+      : Map[String, String] = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val shufflePartitions =
+      env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toInt
+    fullConf(shufflePartitions, env.get("GRAFT_S3_ENDPOINT")) ++ Map(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+      "spark.ui.enabled" -> "false")
+  }
+
+  /** The one session recipe of the registry drivers, so the bench times,
+    * the correctness dump checks and the plan dump shows the same plans:
+    * [[driverConf]] with the same retrofits as [[session]], logging at
+    * WARN.
+    */
+  def driver(appName: String, defaultCpus: String,
+             env: Map[String, String] = sys.env): SparkSession = {
+    val spark = retrofit(
+      configured(appName, driverConf(defaultCpus, env)).getOrCreate(),
+      env.get("GRAFT_S3_ENDPOINT"))
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same plan-string cap as Bench: a lineage regression must fail
-      // fast/truncated, not stall the round's correctness dump
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      // same bounded-buffer aggregate setting as Bench (SessionFactory
-      // scaladoc): the dump must run the plans the bench times
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SessionFactory.objAggFallbackThreshold)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionFactory.driver("graft-verify", defaultCpus = "4")
     new java.io.File(outDir).mkdirs()
     // per-query wall cap (same containment as Bench's watchdog): one
     // pathological query must cost the round ONE red correctness row,

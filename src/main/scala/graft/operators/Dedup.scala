@@ -49,6 +49,28 @@ object Dedup {
                         maxDocFreq: Option[Long] = None,
                         hashShingles: Boolean = true,
                         persistLineage: Boolean = true): DataFrame = {
+    val (sizes, inter) = shinglePairCounts(df, id, text, n, maxDocFreq,
+      hashShingles, persistLineage)
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
+      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** The shared skeleton of [[ngramJaccardPairs]] and
+    * [[ngramContainmentPairs]]: per-doc distinct shingle counts (`doc_id`,
+    * `n_sh`) and the intersection count of every unordered pair sharing
+    * a shingle (`id_a` < `id_b`, `inter`), over the df-capped shingle
+    * universe when `maxDocFreq` is set.
+    */
+  private def shinglePairCounts(df: DataFrame, id: Column, text: Column,
+                                n: Int, maxDocFreq: Option[Long],
+                                hashShingles: Boolean,
+                                persistLineage: Boolean)
+      : (DataFrame, DataFrame) = {
     // Shingles are hashed to int64 before the self-join by default: an
     // 8-byte fixed-width key shuffles a fraction of the raw text and
     // hash-joins faster. A 64-bit collision (~1e-7 at millions of
@@ -79,7 +101,8 @@ object Dedup {
     // the worst key at maxDocFreq^2 and is standard practice at scale; the
     // uncapped form stays available for exact-oracle verification. The cap
     // is applied consistently to intersections AND set sizes, so the
-    // result is the exact Jaccard over the capped shingle universe.
+    // result is the exact Jaccard / containment over the capped shingle
+    // universe (hash-checkable by a twin with the identical cap).
     //
     // Fans out 3 ways (self-join both sides + sizes); persist beats
     // recomputing the shingle explode per consumer. The blocks live until
@@ -113,8 +136,8 @@ object Dedup {
           capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else capped
     }
-    // Per-doc set sizes as ONE eagerly-materialized frame (r17): both
-    // endpoint joins below consume `sizes`, and with a lazy frame
+    // Per-doc set sizes as ONE eagerly-materialized frame (r17): the
+    // callers' endpoint joins consume `sizes`, and with a lazy frame
     // Catalyst plans the aggregate subtree TWICE inside the final job
     // (two aggregate + broadcast builds over the cached stream). The
     // eager pin runs the (map-side-combined, n_docs-row) aggregate once
@@ -126,13 +149,7 @@ object Dedup {
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
+    (sizes, inter)
   }
 
   /** Exact shingle-set CONTAINMENT — the asymmetric companion to
@@ -160,52 +177,12 @@ object Dedup {
                             maxDocFreq: Option[Long] = None,
                             hashShingles: Boolean = true,
                             persistLineage: Boolean = true): DataFrame = {
-    val shingleKey =
-      if (hashShingles) xxhash64(col("sh_text")) else col("sh_text")
-    // raw-expression explode, same InferFiltersFromGenerate trap note as
-    // [[ngramJaccardPairs]]
-    val shRaw = df
-      .select(id.as("doc_id"),
-        explode(array_distinct(TextFunctions.wordShingles(text, n))).as("sh_text"))
-      .select(col("doc_id"), shingleKey.as("sh"))
-    // Same skew guard as ngramJaccardPairs, same consistency rule: a
-    // shingle shared by k docs contributes k² join rows (the whole
-    // family's cost is Σ df(sh)²), so capping document frequency bounds
-    // the worst key at cap² — and the cap is applied to intersections
-    // AND the |A| denominators, so the result is the exact containment
-    // over the capped shingle universe (hash-checkable by a twin with
-    // the identical cap). A df-capped shingle is boilerplate by
-    // definition — it stops being evidence that one doc CONTAINS
+    // Same skew guard, consistency rule and persist contract as
+    // ngramJaccardPairs (its helper). A df-capped shingle is boilerplate
+    // by definition — it stops being evidence that one doc CONTAINS
     // another precisely because everything contains it.
-    // fans out 3 ways (both self-join sides + sizes) — same persist
-    // contract as ngramJaccardPairs, and the same capped-case rule: cache
-    // the RAW stream so the hot aggregate and the anti-join probe share
-    // one shingle-explode evaluation (r18)
-    val sh = maxDocFreq match {
-      case None =>
-        if (persistLineage)
-          shRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else shRaw
-      case Some(cap) =>
-        val base =
-          if (persistLineage)
-            shRaw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          else shRaw
-        val hot = base.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") > cap).select("sh")
-        val capped = base.join(broadcast(hot), Seq("sh"), "left_anti")
-        if (persistLineage)
-          capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else capped
-    }
-    // eager sizes frame — same single-aggregate rationale as
-    // ngramJaccardPairs (one small job instead of a planned-twice
-    // aggregate subtree)
-    val sizes = Pin.eager(sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
-    val inter = sh.as("a").join(sh.as("b"), col("a.sh") === col("b.sh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
+    val (sizes, inter) = shinglePairCounts(df, id, text, n, maxDocFreq,
+      hashShingles, persistLineage)
     // mirror AFTER the reduction, and as ONE explode projection — a
     // union of two selects over `inter` makes Catalyst plan the whole
     // self-join + aggregate subtree TWICE (observed in the physical

@@ -23,14 +23,10 @@ class SessionFactorySpec extends SparkTestBase {
 
   test("a persisted small aggregate fills into fewer than shuffle.partitions") {
     import graft.TestSpark.spark.implicits._
-    val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevFlag = spark.conf.getOption(flag)
-    val base = SessionFactory.baseConf(shufflePartitions = 32)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        base("spark.sql.shuffle.partitions"))
-      spark.conf.set(flag, base(flag))
+    // the suite session carries baseConf's cache-fill flag; only the
+    // width is production's
+    TestSpark.withConfRestored("spark.sql.shuffle.partitions") {
+      spark.conf.set("spark.sql.shuffle.partitions", "32")
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val counts = (1 to 10).map(i => (i % 3, i)).toDF("k", "v")
         .groupBy("k").count().persist()
@@ -44,39 +40,64 @@ class SessionFactorySpec extends SparkTestBase {
         assert(filled.head.getNumPartitions < 32,
           s"cache fill kept ${filled.head.getNumPartitions} partitions")
       } finally counts.unpersist(blocking = true)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevFlag match {
-        case Some(v) => spark.conf.set(flag, v)
-        case None => spark.conf.unset(flag)
+    }
+  }
+
+  test("driver conf: every entry point carries baseConf plus the harness settings") {
+    def check(defaultCpus: String, env: Map[String, String],
+              master: String, width: Int): Unit = {
+      val c = SessionFactory.driverConf(defaultCpus, env)
+      SessionFactory.baseConf(width).foreach { case (k, v) =>
+        assert(c.get(k).contains(v), s"$k with cpus $defaultCpus, env $env")
       }
+      SessionFactory.s3aConf(env.get("GRAFT_S3_ENDPOINT")).foreach {
+        case (k, v) => assert(c.get(s"spark.hadoop.$k").contains(v), k)
+      }
+      assert(c("spark.master") == master)
+      assert(c("spark.sql.autoBroadcastJoinThreshold") == "67108864") // 64 MiB
+      assert(c("spark.ui.enabled") == "false")
+    }
+    // Bench and PlanDump default to 32 cores, Verify to 4
+    check("32", Map.empty, "local[32]", 32)
+    check("4", Map.empty, "local[4]", 4)
+    check("32", Map("SPARK_GRAFT_CPUS" -> "8"), "local[8]", 8)
+    // the scale tail's shuffle-width override, independent of cores
+    check("32", Map("SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "256"), "local[32]", 256)
+    check("4", Map("SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "256",
+      "GRAFT_S3_ENDPOINT" -> "http://lake.example:9000"), "local[4]", 256)
+  }
+
+  test("the suite session runs production's baseConf at width 4") {
+    SessionFactory.baseConf(shufflePartitions = 4).foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, k)
+    }
+    SessionFactory.s3aConf(endpoint = None).foreach { case (k, v) =>
+      assert(spark.sparkContext.hadoopConfiguration.get(k) == v, k)
     }
   }
 
   test("session() retrofits fs settings and SQL functions onto a live context") {
     spark // materialize the suite's session first — the case under test
           // is exactly "a context already exists"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val hc0 = spark.sparkContext.hadoopConfiguration
-    try {
-      val s = SessionFactory.session(endpoint = Some("http://lake.example:9000"))
-      val hc = s.sparkContext.hadoopConfiguration
-      assert(hc.get("fs.s3a.multipart.size") == "104857600")
-      assert(hc.get("fs.s3a.block.size") == "33554432")
-      assert(hc.get("fs.s3a.threads.max") == "256")
-      assert(hc.get("fs.s3a.endpoint") == "http://lake.example:9000")
-      // extensions registered imperatively (builder path can't fire here —
-      // the suite's context already exists)
-      import s.implicits._
-      val h = Seq("x").toDF("t").selectExpr("graft_fnv64(t)").head().getLong(0)
-      assert(h != 0L)
-    } finally {
-      // getOrCreate() returned the SHARED suite session — restore what
-      // this test mutated so later suites don't inherit a fake endpoint
-      // or a different shuffle width
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      Seq("fs.s3a.multipart.size", "fs.s3a.block.size", "fs.s3a.threads.max",
-        "fs.s3a.endpoint").foreach(hc0.unset)
+    val endpointKey = "fs.s3a.endpoint"
+    // getOrCreate() returns the SHARED suite session: put back the
+    // width, app name and fake endpoint this case writes onto it
+    TestSpark.withConfRestored("spark.sql.shuffle.partitions",
+        "spark.app.name", s"spark.hadoop.$endpointKey") {
+      try {
+        val s = SessionFactory.session(endpoint = Some("http://lake.example:9000"))
+        val hc = s.sparkContext.hadoopConfiguration
+        assert(hc.get("fs.s3a.multipart.size") == "104857600")
+        assert(hc.get("fs.s3a.block.size") == "33554432")
+        assert(hc.get("fs.s3a.threads.max") == "256")
+        assert(hc.get("fs.s3a.endpoint") == "http://lake.example:9000")
+        // extensions registered imperatively (builder path can't fire here —
+        // the suite's context already exists)
+        import s.implicits._
+        val h = Seq("x").toDF("t").selectExpr("graft_fnv64(t)").head().getLong(0)
+        assert(h != 0L)
+      } finally hc0.unset(endpointKey)
     }
   }
 }

@@ -7,15 +7,35 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = SessionFactory.builder("graft-tests", Some("local[4]"),
+        shufflePartitions = 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body`, which may join this shared session through a
+    * production `getOrCreate()` that writes its builder's runtime conf
+    * onto it, then puts `keys` back and asserts the whole session conf
+    * equals its snapshot from before: a key the body wrote and `keys`
+    * does not name fails here instead of leaking into every later suite.
+    */
+  def withConfRestored[A](keys: String*)(body: => A): A = {
+    val conf = spark.conf
+    val before = conf.getAll
+    val saved = keys.map(k => k -> conf.getOption(k))
+    val out =
+      try body
+      finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    val after = conf.getAll
+    val leaked = (after.toSet diff before.toSet).map(_._1) ++
+      (before.keySet diff after.keySet)
+    assert(after == before, s"session conf leaked: ${leaked.toSeq.sorted}")
+    out
   }
 }
 

@@ -33,24 +33,14 @@ class CliSpec extends AnyFunSuite {
   }
 
   /** The mains join the suite's shared session via getOrCreate, which
-    * re-applies SessionFactory's runtime SQL conf (shuffle.partitions
-    * 32, plan-string cap) onto it — correct production behavior, but a
-    * LEAK here: every suite running after this one would silently
-    * inherit the pipeline tuning instead of TestSpark's (the bucketed
-    * plan audits key on the 4-partition test default). Snapshot and
-    * restore around each main() call.
+    * writes SessionFactory's runtime conf onto it. The suite session
+    * already carries the same `baseConf`; what differs is the shuffle
+    * width, which every later suite keys on (the bucketed plan audits
+    * assume the 4-partition default), and the app name.
     */
-  private def withSessionConfRestored[A](body: => A): A = {
-    val conf = graft.TestSpark.spark.conf
-    val keys =
-      Seq("spark.sql.shuffle.partitions", "spark.sql.maxPlanStringLength")
-    val saved = keys.map(k => k -> conf.getOption(k))
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
+  private def withSessionConfRestored[A](body: => A): A =
+    graft.TestSpark.withConfRestored("spark.sql.shuffle.partitions",
+      "spark.app.name")(body)
 
   test("JhubMain end-to-end: argv -> glob -> pipeline -> staging parquet") {
     withSessionConfRestored {
