@@ -103,10 +103,17 @@ object GraftExtensions {
       (args: Seq[Expression]) => { arity("graft_vector_sum", args, 2)
         VectorSumAgg(args.head, intArg(args(1), "dim")) })))
 
-  /** Imperative registration for an already-built session (tests, REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Imperative registration for an already-built session (tests, REPL):
+    * adds the functions the session's registry lacks, so a session that
+    * `spark.sql.extensions` already equipped keeps its registrations
+    * (and logs no "replaced a previously registered function" warning
+    * per name).
+    */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, (_, builder)) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

@@ -128,12 +128,12 @@ object BpeStats {
         // eager truncation materializes the frame AND replaces its plan
         // with a leaf; the previous anchor's blocks are then safe to drop
         val p = Pin.eager(frame)
-        anchored.foreach(_.unpersist())
+        anchored.foreach(Pin.free)
         anchored = Some(p)
         frame = p
       }
     }
-    anchored.foreach(_.unpersist())
+    anchored.foreach(Pin.free)
     merges.toSeq
   }
 }

@@ -323,7 +323,7 @@ object Centrality {
       .join(surv.withColumn("__in", lit(true)), Seq("id"), "left")
       .select(col("id"), coalesce(col("__in"), lit(false)).as("in_kcore")))
     cached.foreach(_.unpersist(blocking = false))
-    und.unpersist(blocking = false)
+    Pin.free(und)
     result
   }
 

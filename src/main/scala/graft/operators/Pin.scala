@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.PinBridge
 
 /** Eager materialization of a small multi-consumer frame with lineage
   * truncation — the one place that decides between RELIABLE and LOCAL
@@ -14,6 +16,17 @@ import org.apache.spark.sql.DataFrame
   * in its own small job up front runs the expensive subtree exactly once
   * and hands every consumer a leaf.
   *
+  * Why measured statistics: Spark's checkpoint leaf keeps the ORIGIN
+  * plan's size estimate, which for an aggregate or a join is a guess far
+  * above what the job produced (a 1,000-row aggregate reads ~11.4 MiB),
+  * enough to flip a downstream broadcast-hash join to sort-merge. The
+  * pin has just stored the rows, so it knows their size: the leaf it
+  * returns carries the bytes actually stored (the blocks of a local
+  * pin, the checkpoint files of a reliable one) as its `sizeInBytes`.
+  * The origin estimate stays only when nothing was measured. A pin is
+  * also cheap to PLAN on: consumers plan over a leaf, not over the
+  * lineage a lazy `persist` keeps and re-matches on every cache lookup.
+  *
   * Why the dir switch: `localCheckpoint` stores blocks on executors and
   * SKIPS the lineage — on a real cluster one lost executor FAILS the job
   * (a truncated leaf cannot be recomputed), which is the wrong trade for
@@ -26,14 +39,15 @@ import org.apache.spark.sql.DataFrame
   * always applied to its iteration frames; centralized here (r18) so the
   * gate/sizes/pair pins follow it too.
   *
-  * Note the pins are EAGER BY CONSTRUCTION: building an operator graph
-  * that calls this runs Spark jobs at plan-construction time (visible in
-  * PlanDump), and the pinned blocks live until the frame is GC'd or the
-  * session cache is cleared — the documented lifecycle of the fan-out
-  * operators. Reliable checkpoint FILES outlive the frame: they stay
-  * under the checkpoint dir until the context cleaner removes them,
-  * which it only does when `spark.cleaner.referenceTracking
-  * .cleanCheckpoints` is set (a deployment setting, off by default).
+  * Lifecycle: pins are EAGER BY CONSTRUCTION — building an operator
+  * graph that calls this runs Spark jobs at plan-construction time
+  * (visible in PlanDump). [[free]] releases a pin at once: its blocks,
+  * and a reliable pin's checkpoint files. An unfreed pin's blocks live
+  * until the frame is GC'd or the session cache is cleared (the
+  * documented lifecycle of the fan-out operators), and its reliable
+  * checkpoint FILES until the context cleaner removes them, which it only
+  * does when `spark.cleaner.referenceTracking.cleanCheckpoints` is set (a
+  * deployment setting, off by default).
   */
 object Pin {
 
@@ -42,10 +56,44 @@ object Pin {
     * Both forms run the subtree once: the eager checkpoint writes its
     * files from the job that computes the frame (`RDD.doCheckpoint`,
     * not a count followed by a second write job), so no persist is
-    * needed around it — PinSpec counts the evaluations.
+    * needed around it — PinSpec counts the evaluations. The returned
+    * leaf carries the measured size (see the object doc).
     */
-  def eager(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(true)
-    else df.localCheckpoint(true)
+  def eager(df: DataFrame): DataFrame = {
+    val pinned =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(true)
+      else df.localCheckpoint(true)
+    measuredBytes(pinned).fold(pinned)(PinBridge.withSize(pinned, _))
+  }
+
+  /** Release what holds `df`'s rows, without blocking: a pin's stored
+    * blocks and a reliable pin's checkpoint files, or, for a frame that
+    * is not a pin, its `persist` cache entry. A freed pin cannot be read
+    * again (its lineage is gone), so free it only after every frame
+    * built on it has been materialized.
+    */
+  def free(df: DataFrame): Unit = PinBridge.leafRdd(df) match {
+    case Some(rdd) =>
+      PinBridge.release(rdd)
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+    case None => df.unpersist(blocking = false)
+  }
+
+  /** Bytes a pin stored: its checkpoint files when reliable, its blocks
+    * when local; None when neither can be read.
+    */
+  private def measuredBytes(pinned: DataFrame): Option[Long] =
+    PinBridge.leafRdd(pinned).flatMap { rdd =>
+      rdd.getCheckpointFile match {
+        case Some(f) =>
+          val p = new Path(f)
+          Some(p.getFileSystem(rdd.sparkContext.hadoopConfiguration)
+            .getContentSummary(p).getLength)
+        case None => PinBridge.storedBytes(rdd)
+      }
+    }
 }

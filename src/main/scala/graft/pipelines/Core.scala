@@ -201,7 +201,8 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
       case None    => serving.write(out, contract.table, m)
     }
     val (staged, served, ok) =
-      Reconcile.check(spark, path, serving, contract.table, stagingFormat)
+      Reconcile.check(spark, path, out.schema, serving, contract.table,
+        stagingFormat)
     TableResult(contract.table, staged, served, ok)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SigHash, TextFunctions}
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Dedup, Multimodal, Pin}
 import graft.sinks.ParquetSink
 
 /** The training-data curation pipeline — the composed "what this engine
@@ -98,8 +98,9 @@ object CorpusPipeline {
     * one banded equi-join against a signature table (a few hundred bytes
     * per accumulated doc), not a re-scan of the accumulated text.
     *
-    * Both returned frames share persisted intermediates (same lifecycle
-    * note as the pair operators: blocks live until session cache cleanup).
+    * Both returned frames share pinned intermediates, whose blocks live
+    * until the frames are garbage-collected ([[curateIncrementManaged]]
+    * hands them back for an explicit free).
     */
   def curateIncrement(newDocs: DataFrame, refSigs: DataFrame,
                       cfg: Config = Config()): (DataFrame, DataFrame) = {
@@ -107,20 +108,19 @@ object CorpusPipeline {
     (curated, keptSigs)
   }
 
-  /** [[curateIncrement]] plus handles to the funnel's persisted
-    * intermediates, for callers that own a long-lived session (e.g. the
-    * streaming loop) and must free them after materializing both
-    * results: `Dataset.unpersist` drops the cached blocks AND the
-    * cache-manager plan entry, which an RDD-level unpersist would leak —
-    * one leaked entry per persist per batch, scanned by every
-    * subsequent query's cache lookup.
+  /** [[curateIncrement]] plus handles to the funnel's pinned and
+    * persisted intermediates, for callers that own a long-lived session
+    * (e.g. the streaming loop) and must free them with [[Pin.free]]
+    * after materializing both results: the funnel's four pins hold
+    * blocks until freed, and the ref side's `persist` a cache-manager
+    * plan entry that an RDD-level unpersist would leak — one leaked
+    * entry per batch, scanned by every subsequent query's cache lookup.
     *
-    * The handles come in the order to free them: every frame before the
-    * frames it reads. Unpersisting a frame that other cached frames are
-    * built on makes the cache manager walk and re-examine each of them;
-    * freed the other way round, the funnel's handles cost about 0.7 s
-    * of driver time per 200-document stream batch, in this order a few
-    * milliseconds.
+    * Free order matters only for the ref side's persist, the one cache
+    * entry left: unpersisting a frame that other cached frames are built
+    * on makes the cache manager walk and re-examine each of them. The
+    * pins are leaves the cache manager never sees, so the ref handle
+    * comes last and drops with no dependent entry to walk.
     */
   def curateIncrementManaged(newDocs: DataFrame, refSigs: DataFrame,
                              cfg: Config = Config()): (DataFrame, DataFrame, Seq[DataFrame]) = {
@@ -132,48 +132,47 @@ object CorpusPipeline {
     val refCached = refSigs.storageLevel != StorageLevel.NONE
     val ref = if (refCached) refSigs
       else refSigs.persist(StorageLevel.MEMORY_AND_DISK)
-    val (curated, keptSigs, persisted) = curateAgainst(newDocs, cfg)(sigs =>
+    val (curated, keptSigs, pinned) = curateAgainst(newDocs, cfg)(sigs =>
       Dedup.minhashPairsAgainst(sigs, ref,
         cfg.numHashes, cfg.bands, cfg.minEstJaccard, hash = cfg.hash))
-    (curated, keptSigs, if (refCached) persisted else persisted :+ ref)
+    (curated, keptSigs, if (refCached) pinned else pinned :+ ref)
   }
 
   /** The shared incremental funnel: gate → exact dedup + signatures →
     * self-pairs → cross-pairs (strategy supplied by the caller) → prune
-    * → enrich. Returns (curated, keptSigs, persisted intermediates in
-    * the order to free them).
+    * → enrich. Returns (curated, keptSigs, the funnel's pins).
+    *
+    * Each stage that more than one consumer reads is an eager [[Pin]]:
+    * four small jobs, each planned over the leaves of the stage before
+    * it, in place of four lazy persists whose plans each nest the whole
+    * funnel beneath them (every `persist` plans its frame at once, with
+    * a cache lookup over that plan). The pins carry measured sizes, so
+    * the drop-list anti-joins over `selfPairs` and the cross pairs keep
+    * broadcasting the thresholded pair lists.
     */
   private def curateAgainst(newDocs: DataFrame, cfg: Config)(
       crossPairsOf: DataFrame => DataFrame): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val gated = qualityGate(annotate(newDocs), cfg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val gated = Pin.eager(qualityGate(annotate(newDocs), cfg))
     // the exact survivors, planned once, each row carrying its MinHash
     // signature (a pure per-row function of the text): the self-LSH
     // pairs, the cross-corpus band join and keptSigs all read it off the
     // rows, and every later frame is a filter of this one
-    val exactSigs = exactDedup(gated)
+    val exactSigs = Pin.eager(exactDedup(gated)
       .select(col("*") +: Dedup.minhashSigCols(col("text"), cfg.numHashes,
-        cfg.shingleSize, cfg.hash): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // self-pairs, persisted LAZILY on purpose (r18 re-measured): an
-    // eager Pin here hands the drop-list anti-join an ExistingRDD with
-    // no size statistics, and the planner flipped it from
-    // broadcast-hash to sort-merge (the graph_triangles stats-loss
-    // lesson — full-stream sorts to drop a thresholded pair list). With
-    // a lazy persist the plan keeps the child's small estimate and
-    // broadcasts it; selfClean is read three times below (clean's left
-    // side, and the new side of the cross join's banding and
-    // verification), and the persist keeps the LSH self-join to one
-    // evaluation across them.
-    val selfPairs = Dedup.minhashDedupPairsFromSigs(exactSigs, cfg.numHashes,
-        cfg.bands, cfg.minEstJaccard, cfg.hash)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        cfg.shingleSize, cfg.hash): _*))
+    // selfClean is read three times below (clean's left side, and the
+    // new side of the cross join's banding and verification); the pin
+    // keeps the LSH self-join to one evaluation across them, and its
+    // measured size keeps selfClean's anti-join a broadcast: the origin
+    // estimate of a band self-join (the product of its inputs' sizes)
+    // flips that join to sort-merge
+    val selfPairs = Pin.eager(Dedup.minhashDedupPairsFromSigs(exactSigs,
+      cfg.numHashes, cfg.bands, cfg.minEstJaccard, cfg.hash))
     val selfClean = Dedup.applyPairDedup(exactSigs, col("doc_id"), selfPairs)
-    // clean feeds both results (curated and keptSigs); persisting it
+    // clean feeds both results (curated and keptSigs); pinning it
     // keeps the cross-corpus band join from running once per consumer
-    val clean = Dedup.applyPairDedup(selfClean, col("doc_id"), crossPairsOf(selfClean))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val clean = Pin.eager(Dedup.applyPairDedup(selfClean, col("doc_id"),
+      crossPairsOf(selfClean)))
     (enrich(clean.drop("sig", "n_sh"), cfg), clean.select("doc_id", "sig", "n_sh"),
       Seq(clean, selfPairs, exactSigs, gated))
   }

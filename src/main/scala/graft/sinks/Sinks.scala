@@ -250,10 +250,16 @@ case class Contract(table: String, schema: StructType) {
 }
 
 object Reconcile {
-  /** O4: dual-sink consistency — staging count vs serving count. */
-  def check(spark: SparkSession, stagingPath: String, sink: ServingSink,
-            table: String, format: String = "parquet"): (Long, Long, Boolean) = {
-    val staged = spark.read.format(format).load(stagingPath).count()
+  /** O4: dual-sink consistency — staging count vs serving count.
+    * `schema` is the schema of the frame just written to `stagingPath`:
+    * reading with it skips the schema inference a schema-less load runs
+    * as a job of its own (a footer read per table).
+    */
+  def check(spark: SparkSession, stagingPath: String, schema: StructType,
+            sink: ServingSink, table: String,
+            format: String = "parquet"): (Long, Long, Boolean) = {
+    val staged = spark.read.format(format).schema(schema).load(stagingPath)
+      .count()
     val served = sink.count(table)
     (staged, served, staged == served)
   }

@@ -200,7 +200,7 @@ object Streams {
             spark.read.parquet(sigStorePath)
           else graft.operators.Dedup.minhashSignatures(batch.toDF().limit(0),
             col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, cfg.hash)
-        val (curated, keptSigs, persisted) =
+        val (curated, keptSigs, handles) =
           graft.pipelines.CorpusPipeline.curateIncrementManaged(
             batch.toDF(), refSigs, cfg)
         try {
@@ -213,13 +213,13 @@ object Streams {
           graft.sinks.ParquetSink.write(keptSigs, sigStorePath,
             org.apache.spark.sql.SaveMode.Append)
         } finally {
-          // free this batch's persisted intermediates via the DATASET
-          // handles: unlike an RDD-level unpersist this also removes the
-          // cache-manager plan entries, which would otherwise accumulate
-          // per batch for the stream's lifetime and slow every cache
-          // lookup; in the order given, which frees every frame before
-          // the frames it reads
-          persisted.foreach(_.unpersist(blocking = false))
+          // free this batch's pins and the ref side's persist: pinned
+          // blocks would otherwise accumulate per batch for the stream's
+          // lifetime, and the persist's cache-manager plan entry would
+          // slow every cache lookup (Pin.free unpersists it through the
+          // DATASET handle, which removes the entry; an RDD-level
+          // unpersist would not)
+          handles.foreach(graft.operators.Pin.free)
         }
       }
       .option("checkpointLocation", checkpointDir)

@@ -77,4 +77,31 @@ class GraftExtensionsSpec extends SparkTestBase {
       assert(registry.functionExists(FunctionIdentifier(name)), name)
     }
   }
+
+  test("register keeps the registrations spark.sql.extensions made and " +
+    "adds only missing names") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def entry(name: String) = registry.lookupFunction(FunctionIdentifier(name))
+    // the suite session runs baseConf, so the extension injected all
+    val before = GraftExtensions.builders.map { case (name, _) =>
+      name -> entry(name) }.toMap
+    assert(before.values.forall(_.isDefined), before)
+    registry.dropFunction(FunctionIdentifier("graft_fnv64"))
+    try {
+      GraftExtensions.register(spark)
+      // a replaced entry is a new ExpressionInfo (and a logged warning)
+      GraftExtensions.builders.collect { case (name, _) if name != "graft_fnv64" =>
+        assert(entry(name).get eq before(name).get, s"$name was replaced")
+      }
+      assert(registry.functionExists(FunctionIdentifier("graft_fnv64")))
+      assert(spark.sql("SELECT graft_fnv64('hello')").head().getLong(0) ==
+        Fnv64.hash("hello"))
+    } finally {
+      registry.dropFunction(FunctionIdentifier("graft_fnv64"))
+      val (_, (info, builder)) =
+        GraftExtensions.builders.find(_._1 == "graft_fnv64").get
+      registry.registerFunction(FunctionIdentifier("graft_fnv64"), info, builder)
+    }
+  }
 }

@@ -1,12 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PinBridge
 
 import graft.SparkTestBase
 
-/** The shared eager-pin helper: result identity, lineage truncation, and
-  * the reliable-vs-local checkpoint switch (r18 — the escape hatch every
-  * former hard-coded `localCheckpoint(true)` site now routes through).
+/** The shared eager-pin helper: result identity, lineage truncation, the
+  * reliable-vs-local checkpoint switch (r18 — the escape hatch every
+  * former hard-coded `localCheckpoint(true)` site now routes through),
+  * the measured size the pinned leaf carries, and `Pin.free`.
   */
 class PinSpec extends SparkTestBase {
 
@@ -63,6 +65,78 @@ class PinSpec extends SparkTestBase {
         s"pinned subtree evaluated ${evals.value} times for 40 rows")
       assert(pinned.as[(Int, Int)].collect().toSet ==
         (1 to 40).map(i => (i, i * 3)).toSet)
+    } finally {
+      org.apache.spark.GraftTestHooks.clearCheckpointDir(sc)
+    }
+  }
+
+  /** Size statistics the planner sees for `df`. */
+  private def planSize(df: org.apache.spark.sql.DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  test("Pin.eager: a 1,000-row aggregate's leaf reports its stored size, " +
+    "not the origin estimate, and a join then broadcasts it") {
+    val s = spark
+    // ~11.4 MiB of range input: the aggregate's estimate scales from it
+    val agg = s.range(0, 1500000)
+      .groupBy((col("id") % 1000).as("k")).agg(count(lit(1)).as("n"))
+    val origin = planSize(agg)
+    val pinned = Pin.eager(agg)
+    assert(pinned.count() == 1000L)
+    val stored = PinBridge.leafRdd(pinned).flatMap(PinBridge.storedBytes)
+    assert(stored.isDefined, "the local pin stored no blocks")
+    assert(planSize(pinned) == BigInt(stored.get),
+      s"leaf reports ${planSize(pinned)} B, blocks hold ${stored.get} B")
+    assert(origin > BigInt(10L * 1024 * 1024),
+      s"precondition: origin estimate $origin B is above the 10 MiB " +
+        "broadcast threshold")
+    assert(planSize(pinned) * 10 < origin,
+      s"stored ${planSize(pinned)} B vs origin estimate $origin B")
+    // the drop-list shape: only the right side of a left_anti can be
+    // built, so it broadcasts iff its statistics are under the threshold
+    def joinOf(right: org.apache.spark.sql.DataFrame): String =
+      s.range(0, 2000000).join(right, col("id") === col("k"), "left_anti")
+        .queryExecution.sparkPlan.toString
+    assert(joinOf(pinned).contains("BroadcastHashJoin"), joinOf(pinned))
+    assert(joinOf(agg).contains("SortMergeJoin"),
+      "precondition: the unpinned aggregate's estimate forbids a broadcast")
+    Pin.free(pinned)
+  }
+
+  test("Pin.free drops a local pin's blocks from getPersistentRDDs") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val pinned = Pin.eager((1 to 200).toDF("x").groupBy(col("x") % 9).count())
+    val id = PinBridge.leafRdd(pinned).get.id
+    assert(sc.getPersistentRDDs.contains(id), "precondition: pin not stored")
+    Pin.free(pinned)
+    assert(!sc.getPersistentRDDs.contains(id), s"RDD $id still persistent")
+    // the blocks themselves go asynchronously
+    val deadline = System.nanoTime() + 10000000000L
+    while (PinBridge.storedBytes(PinBridge.leafRdd(pinned).get).isDefined &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(PinBridge.storedBytes(PinBridge.leafRdd(pinned).get).isEmpty,
+      "freed pin's blocks are still stored")
+  }
+
+  test("a reliable pin reports its checkpoint-file bytes and Pin.free " +
+    "deletes the files") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val dir = tempDir("pin_free").toString
+    sc.setCheckpointDir(dir)
+    try {
+      val pinned = Pin.eager((1 to 300).toDF("x").withColumn("y", col("x") * 2))
+      val ckpt = new org.apache.hadoop.fs.Path(
+        PinBridge.leafRdd(pinned).get.getCheckpointFile.get)
+      val fs = ckpt.getFileSystem(sc.hadoopConfiguration)
+      val bytes = fs.getContentSummary(ckpt).getLength
+      assert(bytes > 0 && planSize(pinned) == BigInt(bytes),
+        s"leaf reports ${planSize(pinned)} B, files hold $bytes B")
+      Pin.free(pinned)
+      assert(!fs.exists(ckpt), s"$ckpt survived Pin.free")
     } finally {
       org.apache.spark.GraftTestHooks.clearCheckpointDir(sc)
     }

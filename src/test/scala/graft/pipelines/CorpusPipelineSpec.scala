@@ -68,6 +68,71 @@ class CorpusPipelineSpec extends SparkTestBase {
     assert(kept(SigHash.Md5) == kept(SigHash.Engine), kept)
   }
 
+  test("funnel plan guard: the drop-list anti-joins broadcast and no " +
+    "execution of the curated write sort-merges") {
+    import graft.TestSpark.spark.implicits._
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      SortMergeJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // 200 documents, enough that a leaf keeping a join's product
+    // estimate would exceed the broadcast threshold: 160 distinct, 20
+    // exact and 20 near copies of them; the reference holds 50 of them
+    val vocab = "the and of river stone light green cold warm field road " +
+      "book child window garden house night morning bird tree water hill"
+    val words = vocab.split(" ")
+    def text(i: Int): String = {
+      val r = new scala.util.Random(i)
+      Seq.fill(24)(words(r.nextInt(words.length))).mkString(" ") + s" w$i"
+    }
+    val docs = (0 until 160).map(i => (i.toLong, text(i))) ++
+      (0 until 20).map(i => (1000L + i, text(i))) ++
+      (20 until 40).map(i => (2000L + i, text(i).replaceFirst("^\\S+", "zzz")))
+    val increment = docs.toDF("doc_id", "text")
+    val cfg = CorpusPipeline.Config(minQuality = 0.0, keepLangs = Seq("en"),
+      minTokens = 5, shingleSize = 3, numHashes = 64, bands = 16,
+      minEstJaccard = 0.5, featureDim = 4)
+    val refSigs = Dedup.minhashSignatures(
+      (100 until 150).map(i => (5000L + i, text(i))).toDF("doc_id", "text"),
+      col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
+    object Nodes extends AdaptiveSparkPlanHelper {
+      def apply(p: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(p) { case n => n }
+    }
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[SparkPlan]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (kept, handles) = try {
+      val (curated, keptSigs, handles) =
+        CorpusPipeline.curateIncrementManaged(increment, refSigs, cfg)
+      curated.write.format("noop").mode(SaveMode.Overwrite).save()
+      val kept = keptSigs.select("doc_id").as[Long].collect().toSet
+      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      (kept, handles)
+    } finally spark.listenerManager.unregister(listener)
+    handles.foreach(graft.operators.Pin.free)
+    // exact and near copies and the reference's docs are dropped
+    assert(kept.forall(id => id < 100 || (id >= 150 && id < 160)), kept)
+    assert(kept.size == 110, kept.size)
+    import scala.jdk.CollectionConverters._
+    val nodes = plans.asScala.toSeq.flatMap(p => Nodes(p))
+    val smj = nodes.collect { case j: SortMergeJoinExec => j }
+    assert(smj.isEmpty, smj.map(_.simpleString(200)).mkString("\n"))
+    val antiJoins = nodes.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+    }
+    // selfClean's drop of the self pairs, clean's drop of the cross pairs
+    assert(antiJoins.size >= 2,
+      s"${antiJoins.size} broadcast anti-joins in ${plans.size} executions")
+  }
+
   test("cluster products derive from the STORED label table, not a recompute") {
     // the production path behind dedup_cluster_sizes: materialize the
     // (doc_id, component) cluster view once, then every cluster-level

@@ -31,7 +31,8 @@ class JdbcSinkSpec extends SparkTestBase {
     // O4: dual-sink reconcile against the real serving side
     val staging = tempDir("jdbc_staging").toString + "/t1"
     ParquetSink.write(df, staging, SaveMode.Overwrite)
-    val (staged, served, ok) = Reconcile.check(spark, staging, sink, "oob_ddl")
+    val (staged, served, ok) =
+      Reconcile.check(spark, staging, df.schema, sink, "oob_ddl")
     assert(staged == 3 && served == 1 && !ok) // counts differ -> flagged
   }
 

@@ -2,11 +2,14 @@
 """Compare two graft.PlanDump output dirs query by query: the formatted
 physical plans must be identical once run-specific ids are stripped
 (expression ids `#123`, `plan_id=123`, lambda variable counters `x_12`,
-JVM lambda object names, Spark application ids, the warehouse dir).
+JVM lambda object names, Spark application ids, the warehouse dir, the
+session's RDD counter `MapPartitionsRDD[201]` and the source line of an
+RDD's call site `at localCheckpoint at Pin.scala:50`).
 Usage: python3 tools/diff_plans.py DIR_A DIR_B [only_csv] [-v]
          [--suffix-a S] [--suffix-b S]
 Files are matched as <query><suffix>.txt (PlanDump's naming; suffixes
-default to ""). Prints one line per differing query (with the
+default to ""). Prints one line per differing query with its Exchange,
+SortMergeJoin and BroadcastHashJoin line counts on both sides (the
 differing lines under -v) and a summary; exits 1 if any plan differs
 or is missing on one side."""
 import argparse
@@ -23,13 +26,26 @@ STRIP = [
     (re.compile(r"(lambda [a-z]+)_\d+"), r"\1_"),
     (re.compile(r"Lambda\$[\d/x0-9a-f]*@[0-9a-f]+"), "Lambda"),
     (re.compile(r"file:\S*/spark-warehouse/"), "spark-warehouse/"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"(at \w+ at \w+\.scala):\d+"), r"\1:"),
 ]
+
+# operators whose counts classify a plan change: a shuffle, and the two
+# join strategies a size-statistics change flips between
+OPERATORS = ["Exchange", "SortMergeJoin", "BroadcastHashJoin"]
+OPERATOR_RE = {op: re.compile(r"\b%s\b" % op) for op in OPERATORS}
 
 
 def normalize(text):
     for pat, rep in STRIP:
         text = pat.sub(rep, text)
     return text.splitlines()
+
+
+def operator_counts(lines):
+    """Lines naming each of OPERATORS, as 'Exchange 3 SortMergeJoin 0 ...'."""
+    return " ".join(f"{op} {sum(bool(OPERATOR_RE[op].search(l)) for l in lines)}"
+                    for op in OPERATORS)
 
 
 def plans(d, suffix):
@@ -67,6 +83,8 @@ def main():
         plus = sum(l.startswith("+") for l in d)
         print(f"DIFF {q}: -{len(d) - plus} +{plus} lines "
               f"({len(la)} vs {len(lb)})")
+        print(f"    a: {operator_counts(la)}")
+        print(f"    b: {operator_counts(lb)}")
         if args.v:
             for l in d:
                 print(f"    {l}")
