@@ -94,9 +94,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * writer persisted its stats: [[attachFromStats]] takes a
   * [[graft.operators.Layout.rawZoneMap]]-shaped frame (the
   * `<path>.__zonemap` convention), [[attachFromStore]] folds an
-  * append-only slice store ([[graft.streaming.SliceStore.ZoneStats]],
-  * compactable through its `compact`) — both read
-  * only bucket-bounded stats rows (ZoneMapPruningSpec proves it by
+  * append-only slice store ([[graft.streaming.SliceStore.ZoneStats]]:
+  * the files of its commit log's latest version, so a torn append or
+  * compaction is never half-read; compactable through its `compact`)
+  * — both read only bucket-bounded stats rows (ZoneMapPruningSpec proves it by
   * attaching with the table itself absent). [[attach]] without stats
   * derives them with one aggregation over the table — the bootstrap
   * path for a table whose writer kept none; at 100 TB that is a full
@@ -551,9 +552,10 @@ object ZoneMapPruning {
   /** Register `path` for pruning from an APPEND-ONLY zone-stats slice
     * store ([[graft.streaming.SliceStore.ZoneStats]]: one
     * [[graft.operators.Layout.rawZoneMap]] slice per micro-batch,
-    * stamped `batch_id`): the store's view — replay-collapse per
-    * (batch_id, bucket), then the box-union merge. Bucket-bounded
-    * metadata I/O only.
+    * stamped `batch_id`): the store's view — the latest committed
+    * version's files, replay-collapse per (batch_id, bucket), then the
+    * box-union merge. Bucket-bounded metadata I/O only: the file set
+    * comes from the store's log, with no directory listing.
     */
   def attachFromStore(spark: SparkSession, path: String, bucketCol: String,
                       storePath: String): Unit =

@@ -1,34 +1,34 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.{Layout, Maintenance}
+import graft.operators.Layout
 import graft.operators.Maintenance.CompactionResult
 
 /** An APPEND-ONLY SLICE STORE — the reference's incremental cadence
   * (append one slice per calendar batch, serve a merged view, compact
   * later; `jhub_proc.py:268-276`) as one protocol over a parquet
-  * directory: an ordered log of slice commits plus compaction, the
-  * table-format design (Delta Lake, VLDB 2020) without the log file.
-  * One value per store kind ([[SliceStore.Bloom]], [[SliceStore.Ivf]],
-  * [[SliceStore.Count]], [[SliceStore.Cardinality]],
-  * [[SliceStore.ZoneMap]], [[SliceStore.ZoneStats]]); every kind gets
-  * the same operations:
+  * directory and its commit log ([[StoreLog]], the table-format design
+  * of Delta Lake, VLDB 2020). One value per store kind
+  * ([[SliceStore.Bloom]], [[SliceStore.Ivf]], [[SliceStore.Count]],
+  * [[SliceStore.Cardinality]], [[SliceStore.ZoneMap]],
+  * [[SliceStore.ZoneStats]]); every kind gets the same operations:
   *
-  *   - [[append]] stamps a slice with its `batch_id` and appends it;
-  *     [[stream]] is the `foreachBatch` shell around it, so a streaming
-  *     query maintains the store one micro-batch slice at a time and
-  *     history is never rescanned;
-  *   - [[view]] is the one crash-consistent read, then the kind's
-  *     replay collapse, then its cross-slice merge;
-  *   - [[compact]] rewrites the store through the same collapse + merge
-  *     under the snapshot + manifest protocol of
-  *     [[graft.operators.Maintenance.compactStore]] (safe against a
-  *     concurrent appender; [[graft.operators.Maintenance
-  *     .recoverStoreCompaction]] repairs a torn run).
+  *   - [[append]] stamps a slice with its `batch_id`, stages its files
+  *     and commits a version that adds them; [[stream]] is the
+  *     `foreachBatch` shell around it, so a streaming query maintains
+  *     the store one micro-batch slice at a time and history is never
+  *     rescanned;
+  *   - [[view]] reads the latest version's files (one root read, never
+  *     a listing), then the kind's replay collapse, then its
+  *     cross-slice merge;
+  *   - [[compact]] folds the latest version's files through the same
+  *     collapse + merge and commits a version that removes them and adds
+  *     the fold. Its removals are files of its own snapshot only, so a
+  *     concurrent append survives; a crash before the commit leaves the
+  *     store as it was.
   *
   * Replay model: `foreachBatch` is at-least-once — a batch that crashed
   * after its append re-appends the IDENTICAL slice under the SAME
@@ -58,11 +58,12 @@ final class SliceStore private (
 
   /** Append one slice under `batchId` (replacing any `batch_id` column
     * the slice carries), partitioned by the kind's partition column if
-    * it has one. */
+    * it has one: its files are staged, then one version adds them. */
   def append(slice: DataFrame, batchId: Long, path: String): Unit = {
-    val w = slice.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Append)
-    partitionColumn.fold(w)(w.partitionBy(_)).parquet(path)
+    val log = new StoreLog(slice.sparkSession, path)
+    val added = log.stage(slice.withColumn("batch_id", lit(batchId)),
+      partitionColumn)
+    log.commit("append", batchId)(v => Some(StoreLog.files(v) ++ added))
   }
 
   /** Maintain the store from a stream: every micro-batch becomes
@@ -78,10 +79,14 @@ final class SliceStore private (
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
 
-  /** What the store currently serves: the crash-consistent read, the
+  /** What the store currently serves: the latest version's files, the
     * replay collapse, the cross-slice merge. */
-  def view(spark: SparkSession, path: String): DataFrame =
-    serve(SliceStore.read(spark, path))
+  def view(spark: SparkSession, path: String): DataFrame = {
+    val log = new StoreLog(spark, path)
+    val (_, v) = log.latest().getOrElse(throw new IllegalArgumentException(
+      s"$kind store $path has no committed version"))
+    serve(log.read(v.files))
+  }
 
   /** Rewrite the store through its own collapse + merge; the served
     * view is identical before and after by construction. `throughBatch`
@@ -91,17 +96,32 @@ final class SliceStore private (
               throughBatch: Option[Long] = None): CompactionResult =
     compactWith(spark, path, throughBatch, identity)
 
-  /** [[compact]] with a test seam: `tap` runs on the folded frame AFTER
-    * the snapshot listing and before the tmp write — exactly where a
-    * concurrent `foreachBatch` append lands relative to the protocol. */
+  /** [[compact]] with a test seam: `tap` runs on the folded frame after
+    * the snapshot is resolved and before the fold is written — exactly
+    * where a concurrent `foreachBatch` append lands relative to it. */
   private[graft] def compactWith(spark: SparkSession, path: String,
                                  throughBatch: Option[Long],
                                  tap: DataFrame => DataFrame): CompactionResult = {
     require(throughBatch.isDefined == batchBounded,
       if (batchBounded) s"$kind store compaction needs throughBatch"
       else s"$kind store compaction folds every slice; drop throughBatch")
-    Maintenance.compactStore(spark, path, df => tap(fold(df, throughBatch)),
-      partitionColumn = partitionColumn)
+    val log = new StoreLog(spark, path)
+    val snapshot = StoreLog.files(log.latest())
+    if (snapshot.isEmpty) return CompactionResult(0, 0L, 0, 0L)
+    val folded = tap(fold(log.read(snapshot), throughBatch))
+    val added = log.stage(partitionColumn.fold(folded.coalesce(1))(c =>
+      folded.repartition(col(c))), partitionColumn)
+    val snapped = snapshot.map(_.path).toSet
+    val (_, committed) = log.commit("compact", throughBatch.getOrElse(-1L)) {
+      latest =>
+        val live = StoreLog.files(latest)
+        require(snapped.subsetOf(live.map(_.path).toSet),
+          s"$kind store $path: a concurrent compaction retired part of " +
+            "this one's snapshot; re-run it on the new version")
+        Some(live.filterNot(f => snapped(f.path)) ++ added)
+    }.get
+    CompactionResult(snapshot.size, snapshot.map(_.size).sum,
+      committed.files.size, committed.files.map(_.size).sum)
   }
 
   private def fold(df: DataFrame, throughBatch: Option[Long]): DataFrame = {
@@ -239,53 +259,4 @@ object SliceStore {
       },
       d => Layout.mergeRawZoneMaps(dims(d))(d.drop("batch_id")))
   }
-
-  /** The one read of a slice store, crash-consistent against an
-    * interrupted [[graft.operators.Maintenance.compactStore]]: when a
-    * compaction manifest is present the pre-compaction file set is read
-    * instead of the (possibly partial) directory, without mutating the
-    * store (recovery stays the writer's job; see
-    * [[graft.operators.Maintenance.consistentStoreFiles]]). That set
-    * can span TWO roots — files still in the store and files already
-    * parked under `<store>.__compact_parked` (same `k=v` leaf layout) —
-    * and partition discovery rejects one read over two base paths, so
-    * each root is read under its own `basePath` (keeping a partition
-    * column) and the halves union.
-    *
-    * A LIVE compaction can race the footer pass two ways, and a
-    * FileNotFoundException does not distinguish them: (a) it COMMITTED
-    * (manifest deleted, parked files gone) — the directory is whole
-    * again and the plain read is right; (b) it PARKED a file this
-    * listing saw as live — the manifest persists and a plain read
-    * would serve a partial store. The manifest arbitrates: re-derive
-    * the consistent listing while it persists, fall back to the plain
-    * read once it is gone, and fail loudly when retries run out. The
-    * guard covers construction; a view held across a commit can still
-    * fail at action time if the engine re-lists — re-derive the view.
-    */
-  private def read(spark: SparkSession, path: String,
-                   retries: Int = 3): DataFrame =
-    Maintenance.consistentStoreFiles(spark, path) match {
-      case None => spark.read.parquet(path)
-      case Some(files) =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val base = fs.makeQualified(p).toString
-        val parkedBase = base + ".__compact_parked"
-        val (parked, live) = files.partition(_.startsWith(parkedBase + "/"))
-        try Seq(live -> base, parked -> parkedBase).collect {
-            case (group, root) if group.nonEmpty =>
-              spark.read.option("basePath", root).parquet(group: _*)
-          }.reduce(_ unionByName _)
-        catch { case e: java.io.FileNotFoundException =>
-          if (!fs.exists(new Path(path + ".__compact_manifest")))
-            spark.read.parquet(path)
-          else if (retries > 0) read(spark, path, retries - 1)
-          else throw new java.io.FileNotFoundException(
-            s"store $path: listed files kept vanishing while a compaction " +
-              "manifest is present (live compaction park race, retries " +
-              "exhausted) — refusing the plain directory read, which would " +
-              s"serve a partial mid-compaction store: ${e.getMessage}")
-        }
-    }
 }

@@ -1,0 +1,184 @@
+package graft.streaming
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
+import org.apache.spark.sql.graftbridge.StoreFileIndex
+
+/** One data file of a store version: its path relative to the store
+  * root (`part-….parquet`, `list_id=3/part-…`, `gen-…/part-…`), its
+  * length and its modification time, so a read needs no listing. */
+final case class StoreFile(path: String, size: Long, modificationTime: Long)
+
+/** One committed version: the WHOLE live file set (not a delta — a read
+  * is one `getLatest`, with no replay) and the `(appId, batchId)` of the
+  * writer that committed it. */
+final case class StoreVersion(files: Seq[StoreFile], appId: String,
+                              batchId: Long)
+
+/** The commit log under a store's `_log/` directory — the one crash
+  * protocol of the slice stores ([[SliceStore]]) and the CDC store
+  * ([[Streams.cdcMergeStream]]); the table-format design of Delta Lake
+  * (VLDB 2020) reduced to what these stores use. Spark's directory reads
+  * skip `_`-prefixed names, so the log and the `_staging/` area are
+  * invisible to a plain read of the root.
+  *
+  *   - Versions are Spark's [[HDFSMetadataLog]]: one file per version,
+  *     written through `CheckpointFileManager.createAtomic`, and `add`
+  *     refuses a version that already exists. A writer whose commit
+  *     loses that race re-reads the latest version and retries with the
+  *     file set rebuilt from it, so a compaction (which removes only
+  *     files of its own snapshot) never drops a concurrent append.
+  *   - A writer stages its data files under `_staging/`, moves them to
+  *     their place under the root, then commits the version naming
+  *     them. A crash before the version leaves orphan files no version
+  *     names: every read ignores them.
+  *   - A file a version removed is deleted only after a LATER version
+  *     commits (versions older than the newest `retain` are purged, with
+  *     the files only they named). A view resolved just before a
+  *     concurrent commit therefore keeps every file it reads; a crash
+  *     between a commit and its deletions leaves the old versions in the
+  *     log, and the next commit deletes what they alone named.
+  *   - A root that holds data files but no log fails loudly: no writer
+  *     bootstraps an empty store over data it cannot account for.
+  */
+final class StoreLog(spark: SparkSession, root: String) {
+  private val rootPath = new Path(root)
+  private val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val qualifiedRoot = fs.makeQualified(rootPath)
+  private val logPath = new Path(rootPath, "_log")
+
+  // HDFSMetadataLog creates its directory: open it only to write, or
+  // when it already exists
+  private def log = new HDFSMetadataLog[StoreVersion](spark, logPath.toString)
+
+  /** The newest committed version; None for a store nothing committed
+    * to yet. Fails when the root holds data files but no log. */
+  def latest(): Option[(Long, StoreVersion)] =
+    if (fs.exists(logPath)) log.getLatest()
+    else {
+      val data = if (fs.exists(rootPath)) StoreLog.dataFiles(fs, rootPath) else Nil
+      require(data.isEmpty,
+        s"store $root holds data files (${data.take(3).map(_.getPath.getName)
+          .mkString(", ")}…) but no _log — refusing to treat it as empty")
+      None
+    }
+
+  /** Every retained version, oldest first. */
+  def versions(): Seq[(Long, StoreVersion)] =
+    if (fs.exists(logPath)) log.get(None, None).toSeq else Nil
+
+  /** One root read of `files` (relative to `under`, itself relative to
+    * the root; "" for the root): the file set is served as the root's
+    * listing, never passed as explicit paths. */
+  def read(files: Seq[StoreFile], under: String = ""): DataFrame = {
+    val base = if (under.isEmpty) qualifiedRoot else new Path(qualifiedRoot, under)
+    val blockSize = fs.getDefaultBlockSize(rootPath)
+    StoreFileIndex.read(spark, base, files.map { f =>
+      new FileStatus(f.size, false, 1, blockSize, f.modificationTime,
+        new Path(qualifiedRoot, f.path))
+    })
+  }
+
+  /** Write `df` (parquet, partitioned by `partitionColumn` if given) to a
+    * fresh staging directory and move its data files under `dir`
+    * (relative to the root; "" for the root itself), keeping their
+    * `k=v` paths. Returns the moved files; no version names them yet.
+    * The log directory exists from here on, so a store whose first
+    * commit crashed reads as empty, its files as orphans.
+    */
+  def stage(df: DataFrame, partitionColumn: Option[String] = None,
+            dir: String = ""): Seq[StoreFile] = {
+    latest() // fails on data without a log, before any file lands
+    fs.mkdirs(logPath)
+    val staging = new Path(rootPath,
+      s"_staging/${java.util.UUID.randomUUID().toString.take(13)}")
+    val w = df.write
+    partitionColumn.fold(w)(w.partitionBy(_)).parquet(staging.toString)
+    val stagingUri = fs.makeQualified(staging).toUri.getPath
+    val moved = StoreLog.dataFiles(fs, staging).map { st =>
+      val rel = (if (dir.isEmpty) "" else dir + "/") +
+        st.getPath.toUri.getPath.stripPrefix(stagingUri + "/")
+      val dest = new Path(rootPath, rel)
+      fs.mkdirs(dest.getParent)
+      require(fs.rename(st.getPath, dest), s"could not move ${st.getPath} to $dest")
+      StoreFile(rel, st.getLen, st.getModificationTime)
+    }
+    fs.delete(staging, true)
+    moved
+  }
+
+  /** Commit the next version: `next` gets the latest committed version
+    * and returns the new live file set, or None to commit nothing. When
+    * another writer commits first, `next` runs again on that version;
+    * files an earlier attempt proposed and the retry does not are
+    * deleted. After the commit, versions older than the newest `retain`
+    * are purged and the files only they named are deleted. Returns the
+    * committed version, or the latest one when `next` declined.
+    */
+  def commit(appId: String, batchId: Long, retain: Int = 2)
+            (next: Option[(Long, StoreVersion)] => Option[Seq[StoreFile]])
+      : Option[(Long, StoreVersion)] = {
+    require(retain >= 2, s"a store log retains at least 2 versions, got $retain")
+    @annotation.tailrec
+    def attempt(proposed: Set[String]): Option[(Long, StoreVersion)] = {
+      val current = latest()
+      val files = next(current)
+      val kept = files.toSeq.flatten.map(_.path).toSet
+      deleteFiles(proposed -- kept -- StoreLog.files(current).map(_.path))
+      files match {
+        case None => current
+        case Some(live) =>
+          val v = current.fold(0L)(_._1 + 1)
+          val version = StoreVersion(live, appId, batchId)
+          val won =
+            try log.add(v, version)
+            catch { case _: java.util.ConcurrentModificationException |
+                         _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+          if (won) { vacuum(v, retain); Some(v -> version) } else attempt(kept)
+      }
+    }
+    attempt(Set.empty)
+  }
+
+  /** Purge versions older than the newest `retain` (`newest` and the
+    * ones before it), deleting the files only they named. */
+  private def vacuum(newest: Long, retain: Int): Unit = {
+    val keepFrom = newest - retain + 1
+    val (old, kept) = versions().partition(_._1 < keepFrom)
+    if (old.nonEmpty) {
+      val live = kept.flatMap(_._2.files.map(_.path)).toSet
+      deleteFiles(old.flatMap(_._2.files.map(_.path)).toSet -- live)
+      log.purge(keepFrom)
+    }
+  }
+
+  /** Delete `rel` files, then each parent directory (below the root)
+    * they left empty. The directory delete is non-recursive, so one a
+    * concurrent writer has meanwhile moved a file into stays. */
+  private def deleteFiles(rel: Set[String]): Unit = {
+    val paths = rel.toSeq.map(new Path(rootPath, _))
+    paths.foreach(fs.delete(_, false))
+    paths.map(_.getParent).distinct.filter(fs.makeQualified(_) != qualifiedRoot)
+      .foreach(d => try fs.delete(d, false) catch { case _: java.io.IOException => })
+  }
+}
+
+object StoreLog {
+
+  /** The live file set of a version; none before the first commit. */
+  def files(v: Option[(Long, StoreVersion)]): Seq[StoreFile] =
+    v.fold(Seq.empty[StoreFile])(_._2.files)
+
+  /** Data files under `dir` and one directory level down (`k=v` and
+    * generation directories), skipping `_`- and `.`-prefixed names. */
+  def dataFiles(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[FileStatus] = {
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val top = fs.listStatus(dir).toSeq.filter(visible)
+    top.filter(_.isFile) ++ top.filter(_.isDirectory)
+      .flatMap(d => fs.listStatus(d.getPath).toSeq.filter(st => st.isFile && visible(st)))
+  }
+}

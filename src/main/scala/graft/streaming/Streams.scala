@@ -239,67 +239,43 @@ object Streams {
     * ordering is likewise covered (stale stragglers in a later batch
     * lose to the stored seq; tombstones block resurrections).
     *
-    * Store layout: generation directories + a CURRENT pointer file —
-    * the store can't be overwritten in place while its own files back
-    * the batch's base frame, and a crash between writes must never
-    * lose the last committed generation. Generation numbers are a
-    * per-STORE monotone counter (successor of CURRENT's generation),
-    * never the stream's batch id: batch ids restart at 0 with every
-    * fresh checkpoint, and a gen name derived from them collides
-    * across checkpoint lifetimes — the original design's failure mode,
-    * where a new stream's batch 0 either overwrote gen-0 or was
-    * silently skipped as a "replay". The new generation is fully
-    * written BEFORE the pointer moves (a torn run leaves an orphan
-    * gen dir, never a broken store).
+    * Store layout: one generation directory per version of the
+    * store's commit log ([[StoreLog]]). Each batch writes the whole
+    * folded snapshot into a fresh `gen-<version>-<tag>` directory and
+    * commits a version naming exactly its files; the base it folds onto
+    * is the latest version's files, never overwritten in place. A crash
+    * before the commit leaves an orphan directory no version names, and
+    * the replay folds onto the committed base again. A store directory
+    * holding data but no log fails the batch loudly instead of
+    * bootstrapping an empty base over it; an empty one bootstraps from
+    * the change stream's own schema.
     *
-    * Crash recovery, the full matrix:
-    *   - crash after the gen write, before the pointer swap → orphan
-    *     gen dir; CURRENT still names the previous generation; replay
-    *     folds onto it and writes the NEXT number (the orphan is GC'd);
-    *   - crash between `delete(CURRENT)` and `rename(tmp, CURRENT)` —
-    *     the torn swap — leaves no CURRENT but a fully-written
-    *     CURRENT.tmp (it is created and closed before the delete):
-    *     the next batch COMPLETES the swap (rename tmp into place) and
-    *     proceeds from it; readers ([[cdcStoreView]]) fall back to the
-    *     tmp without mutating. Bootstrapping an empty base instead
-    *     would silently drop the accumulated store;
-    *   - no CURRENT, no CURRENT.tmp, but gen-* dirs present → the
-    *     store is corrupt in a way no automatic choice can repair
-    *     (which generation is live?); the batch FAILS loudly instead
-    *     of starting over empty;
-    *   - nothing at all → genuine bootstrap from the change stream's
-    *     own schema.
+    * Replay semantics: each version records the `(writerEpoch,
+    * batchId)` that committed it, with one epoch per cdcMergeStream
+    * call (so it changes on every restart, like the engine's runId). A
+    * batch whose pair matches the latest version already applied —
+    * only the stream's checkpoint commit was lost — and commits
+    * nothing. A replay from a DIFFERENT epoch (a same-checkpoint
+    * restart, or a fresh checkpoint re-feeding old data) is
+    * indistinguishable from new data by name: it re-applies, which the
+    * versioned fold makes a semantic no-op (stale seqs are shielded),
+    * into a new version. Batch ids restart at 0 under a fresh
+    * checkpoint, which is why neither generation names nor the guard
+    * use the batch id alone.
     *
-    * Replay semantics: CURRENT records, besides the gen name, the
-    * identity of the batch that committed it (a per-writer epoch +
-    * the batch id). A batch whose identity matches CURRENT already
-    * applied — only the stream's checkpoint commit was lost — and is
-    * skipped: proceeding would read base FROM that generation while
-    * Overwrite-writing the fold back TO it, deleting the very files
-    * the lazy base scan needs. A replay from a DIFFERENT writer epoch
-    * (same-checkpoint restart, or a fresh checkpoint re-feeding old
-    * data) is indistinguishable from new data by name — it re-applies,
-    * which the versioned fold makes a semantic no-op (stale seqs are
-    * shielded), and writes a fresh generation number, so the
-    * self-overwrite hazard cannot recur. (A plain `return` in
-    * foreachBatch would be a non-local return — a thrown
-    * NonLocalReturnControl that FAILS the batch — hence the guard
-    * shape below.)
-    *
-    * GC keeps the newest `keepGenerations` generations (the live one
-    * included; default 2 = live + its immediate predecessor) and
-    * deletes older ones: a reader that resolved CURRENT just before a
-    * concurrent swap still has every file of its snapshot on disk for
-    * a full batch interval, and [[readGeneration]] /
-    * [[generationDiff]] can time-travel `keepGenerations − 1` steps
-    * back — raise it to make "diff me against last week" survive the
-    * GC policy (retention is generations × batch cadence of history,
-    * priced in snapshots on disk). The floor is 2: retaining only the
-    * live generation would delete the snapshot a concurrent reader
-    * just resolved. This is the two-phase shape every table format
-    * uses (manifest-then-data, retained-snapshot GC); at 100 TB you'd
-    * swap this writer for MERGE INTO on a transactional table and
-    * keep the same versioned-fold semantics upstream.
+    * Retention: the log keeps the newest `keepGenerations` versions
+    * (the live one included; default 2 = live + its predecessor) and
+    * deletes an older generation only after a later version commits: a
+    * reader that resolved the live version just before a concurrent
+    * commit still has every file of its snapshot on disk, and
+    * [[readGeneration]] / [[generationDiff]] can time-travel
+    * `keepGenerations − 1` steps back — raise it to make "diff me
+    * against last week" survive (retention is generations × batch
+    * cadence of history, priced in snapshots on disk). The floor is 2:
+    * retaining only the live generation would delete the snapshot a
+    * concurrent reader just resolved. At 100 TB you'd swap this writer
+    * for MERGE INTO on a transactional table and keep the same
+    * versioned-fold semantics upstream.
     */
   def cdcMergeStream(changes: DataFrame, storePath: String,
                      checkpointDir: String, id: String,
@@ -311,126 +287,72 @@ object Streams {
       s"keepGenerations must be >= 2 (live + superseded — retaining " +
         s"only the live generation would delete the snapshot a " +
         s"concurrent reader just resolved), got $keepGenerations")
-    // writer epoch: one per cdcMergeStream CALL, so it changes on every
-    // restart (like the engine's runId) but is stable across batches of
-    // one run — exactly the scope a same-run redelivery shares
     val writerEpoch = java.util.UUID.randomUUID().toString.take(8)
     changes.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = new org.apache.hadoop.fs.Path(storePath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val current = new org.apache.hadoop.fs.Path(root, "CURRENT")
-        val tmp = new org.apache.hadoop.fs.Path(root, "CURRENT.tmp")
-        // resolve the committed pointer, completing a torn swap if one
-        // is in flight (no CURRENT, fully-written CURRENT.tmp)
-        if (!fs.exists(current) && fs.exists(tmp)) fs.rename(tmp, current)
-        val pointer: Option[(String, String)] =
-          if (fs.exists(current)) {
-            val in = fs.open(current)
-            val lines =
-              try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-                java.nio.charset.StandardCharsets.UTF_8).split("\n").toSeq
-              finally in.close()
-            Some((lines.head.trim, lines.drop(1).headOption.getOrElse("").trim))
-          } else None
-        val existingGens = listGenerations(fs, root)
-        require(pointer.nonEmpty || existingGens.isEmpty,
-          s"cdc store $storePath has generation dirs " +
-            s"(${existingGens.mkString(",")}) but no CURRENT pointer — " +
-            "refusing to bootstrap an empty base over an existing store")
-        val identity = s"$writerEpoch:$batchId"
-        if (!pointer.exists(_._2 == identity)) {
-          val base = pointer match {
-            case Some((g, _)) =>
-              spark.read.parquet(
-                new org.apache.hadoop.fs.Path(root, g).toString)
-            case None =>
-              // bootstrap: empty versioned store with the payload schema
-              // derived from the change stream itself
-              graft.operators.Cdc.versionSnapshot(
-                batch.toDF().drop(seq, op).limit(0))
-          }
-          // successor of the highest generation on disk, not CURRENT's
-          // (an orphan gen from a torn run may outrank CURRENT; writing
-          // over it with Overwrite would also be fine, but skipping its
-          // number keeps "gen number = commit order" readable)
-          val genName = f"gen-${
-            existingGens.lastOption.map(genNumber).getOrElse(0L) + 1}%012d"
-          val next0 = graft.operators.Cdc.applyChangeSetVersioned(
-            base, batch.toDF(), id, seq, op)
-          // generationFiles: every batch REWRITES the store, so the
-          // merge's shuffle parallelism would otherwise dictate the
-          // file count of even a tiny snapshot forever (the small-file
-          // problem inside our own store). The coalesce adds no
-          // exchange — it concatenates the join's partitions, the same
-          // shuffle-free bin-packing Maintenance.compactTable uses.
-          // Leave None when the snapshot is genuinely large: natural
-          // partitioning IS the parallelism of the next batch's scan.
-          val next = generationFiles.map(next0.coalesce).getOrElse(next0)
-          next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(new org.apache.hadoop.fs.Path(root, genName).toString)
-          // pointer swap: write CURRENT.tmp fully, then rename into place
-          // (delete-then-rename of the tiny pointer — the data itself is
-          // never in the window, and CURRENT.tmp survives a torn swap)
-          val outS = fs.create(tmp, true)
-          try outS.write(s"$genName\n$identity".getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally outS.close()
-          if (fs.exists(current)) fs.delete(current, false)
-          fs.rename(tmp, current)
-          // GC: keep the newest keepGenerations generations (numbers
-          // are the per-store monotone counter, so newest-by-name is
-          // newest-by-commit), plus — belt and braces for a torn-run
-          // orphan ranking above CURRENT — the generation the pointer
-          // named; delete everything older
-          val gens = listGenerations(fs, root)
-          val keep = gens.takeRight(keepGenerations).toSet +
-            genName ++ pointer.map(_._1)
-          gens.filterNot(keep).foreach { g =>
-            fs.delete(new org.apache.hadoop.fs.Path(root, g), true)
-          }
-        }
+        cdcMergeBatch(batch.toDF(), batchId, writerEpoch, storePath, id, seq,
+          op, generationFiles, keepGenerations)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
   }
 
-  private def genNumber(genName: String): Long =
-    genName.stripPrefix("gen-").toLong
-
-  private def listGenerations(fs: org.apache.hadoop.fs.FileSystem,
-                              root: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.matches("gen-\\d{12}")).toSeq.sorted
-
-  /** The generation names currently on disk under a [[cdcMergeStream]]
-    * store, oldest first — with the keep-N-1 GC at most the live
-    * generation and its predecessor (plus a not-yet-GC'd orphan from a
-    * torn run).
-    */
-  def listGenerations(spark: SparkSession, storePath: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    listGenerations(root.getFileSystem(
-      spark.sparkContext.hadoopConfiguration), root)
+  /** One [[cdcMergeStream]] micro-batch, committed under
+    * `(writerEpoch, batchId)`. */
+  private[graft] def cdcMergeBatch(batch: DataFrame, batchId: Long,
+      writerEpoch: String, storePath: String, id: String, seq: String,
+      op: String, generationFiles: Option[Int], keepGenerations: Int): Unit = {
+    val log = new StoreLog(batch.sparkSession, storePath)
+    log.commit(writerEpoch, batchId, keepGenerations) { latest =>
+      if (latest.exists { case (_, v) =>
+            v.appId == writerEpoch && v.batchId == batchId }) None
+      else {
+        val base = latest.fold(graft.operators.Cdc.versionSnapshot(
+          batch.drop(seq, op).limit(0))) { case (_, v) =>
+          log.read(v.files, generationOf(v))
+        }
+        val next0 = graft.operators.Cdc.applyChangeSetVersioned(
+          base, batch, id, seq, op)
+        // generationFiles: every batch REWRITES the store, so the
+        // merge's shuffle parallelism would otherwise dictate the file
+        // count of even a tiny snapshot forever (the small-file problem
+        // inside our own store). The coalesce adds no exchange — it
+        // concatenates the join's partitions, the same shuffle-free
+        // bin-packing Maintenance.compactTable uses. Leave None when
+        // the snapshot is genuinely large: natural partitioning IS the
+        // parallelism of the next batch's scan.
+        val next = generationFiles.map(next0.coalesce).getOrElse(next0)
+        Some(log.stage(next, dir = f"gen-${latest.fold(0L)(_._1 + 1)}%012d-" +
+          java.util.UUID.randomUUID().toString.take(8)))
+      }
+    }
   }
 
-  /** Time travel: the VERSIONED frame of one named generation (as
+  /** The generation directory of a CDC store version. */
+  private def generationOf(v: StoreVersion): String =
+    v.files.head.path.takeWhile(_ != '/')
+
+  /** The generations a [[cdcMergeStream]] store's log retains, oldest
+    * first, the live one last — at most `keepGenerations` of them.
+    */
+  def listGenerations(spark: SparkSession, storePath: String): Seq[String] =
+    new StoreLog(spark, storePath).versions().map(v => generationOf(v._2))
+
+  /** Time travel: the VERSIONED frame of one retained generation (as
     * [[graft.operators.Cdc.applyChangeSetVersioned]] wrote it —
     * project through [[graft.operators.Cdc.snapshotView]] for the live
-    * rows). With keep-N-1 GC the previous generation is always
-    * readable; older ones only until their GC.
+    * rows). With the default retention the previous generation is
+    * always readable.
     */
   def readGeneration(spark: SparkSession, storePath: String,
                      genName: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(root, genName)
-    require(fs.exists(dir),
-      s"generation $genName not on disk under $storePath " +
-        s"(have: ${listGenerations(fs, root).mkString(",")})")
-    spark.read.parquet(dir.toString)
+    val log = new StoreLog(spark, storePath)
+    val retained = log.versions().map(_._2)
+    val v = retained.find(generationOf(_) == genName).getOrElse(
+      throw new IllegalArgumentException(s"generation $genName is not " +
+        s"retained under $storePath (have: " +
+        s"${retained.map(generationOf).mkString(",")})"))
+    log.read(v.files, genName)
   }
 
   /** What changed between two generations of a [[cdcMergeStream]]
@@ -450,37 +372,21 @@ object Streams {
       id, content)
 
   /** Read the live snapshot a [[cdcMergeStream]] store currently
-    * serves (resolve CURRENT, project the live rows). Falls back to a
-    * fully-written CURRENT.tmp when CURRENT is missing — the torn-swap
-    * window — WITHOUT mutating the store (completing the swap is the
-    * writer's job; a reader must stay read-only).
+    * serves: the latest version's files, projected to the live rows.
     *
-    * Concurrency contract: the pointer is resolved eagerly but the
-    * generation's files are scanned lazily, so materialize the view
-    * promptly. The writer's keep-N-1 GC guarantees the resolved
-    * generation's files survive at least one further batch commit — a
-    * view is safe across ONE concurrent swap, not an unbounded backlog
-    * (pin a longer retention by reading [[readGeneration]] output into
-    * a persisted frame if you need a long-lived handle).
+    * Concurrency contract: the version is resolved eagerly but its
+    * files are scanned lazily, so materialize the view promptly. The
+    * log deletes a superseded generation only after a LATER version
+    * commits, so a view is safe across ONE concurrent commit, not an
+    * unbounded backlog (pin a longer retention by reading
+    * [[readGeneration]] output into a persisted frame if you need a
+    * long-lived handle).
     */
   def cdcStoreView(spark: SparkSession, storePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current = new org.apache.hadoop.fs.Path(root, "CURRENT")
-    val tmp = new org.apache.hadoop.fs.Path(root, "CURRENT.tmp")
-    val pointer =
-      if (fs.exists(current)) current
-      else if (fs.exists(tmp)) tmp
-      else throw new IllegalArgumentException(
-        s"no CURRENT pointer (or in-flight CURRENT.tmp) under $storePath")
-    val in = fs.open(pointer)
-    val gen =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").head.trim
-      finally in.close()
-    graft.operators.Cdc.snapshotView(
-      spark.read.parquet(new org.apache.hadoop.fs.Path(root, gen).toString))
+    val log = new StoreLog(spark, storePath)
+    val (_, v) = log.latest().getOrElse(throw new IllegalArgumentException(
+      s"no committed version under $storePath"))
+    graft.operators.Cdc.snapshotView(log.read(v.files, generationOf(v)))
   }
 
   /** Stream-static enrichment: join each micro-batch against a dimension

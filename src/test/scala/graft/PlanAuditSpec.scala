@@ -39,9 +39,9 @@ class PlanAuditSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
     val model = operators.Ivf.fitDistributed(vecs, col("vec_id"),
       col("embedding"), nlist = 3, maxIter = 5, seed = 7L)
-    operators.Ivf.assign(model, vecs, col("vec_id"), col("embedding"))
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("list_id").parquet(store)
+    graft.streaming.SliceStore.Ivf.append(
+      operators.Ivf.assign(model, vecs, col("vec_id"), col("embedding")),
+      0L, store)
     val probed = graft.streaming.SliceStore.Ivf.view(spark, store)
       .where(col("list_id").isin(0, 2))
     val plan = planOf(probed)

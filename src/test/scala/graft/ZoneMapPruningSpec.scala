@@ -182,8 +182,9 @@ class ZoneMapPruningSpec extends SparkTestBase {
         b.toLong, store)
     }
     // a replayed appendix of batch 1 must be absorbed by the view
-    val slice1 = spark.read.parquet(store).where(col("batch_id") === 1)
-    slice1.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+    SliceStore.ZoneStats.append(Layout.rawZoneMap(
+      t.where(col("payload") % 3 === 1), col("z_bucket"), Seq("x", "y")),
+      1L, store)
     // view == full rebuild (the fold is exact)
     val served = SliceStore.ZoneStats.view(spark, store)
       .collect().map(r => r.getAs[Long]("bucket") ->

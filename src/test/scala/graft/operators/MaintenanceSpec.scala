@@ -211,7 +211,9 @@ class MaintenanceSpec extends SparkTestBase {
     val r = SliceStore.Ivf.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(probe == before, "compaction changed probe results")
-    val rows = spark.read.parquet(store)
+    // the live set, not the directory: the retired files stay on disk
+    // until the next commit
+    val rows = SliceStore.Ivf.view(spark, store)
     assert(rows.count() == 200L, "duplicates must be gone")
     assert(rows.select("list_id").distinct().count() > 1,
       "list partitioning must survive")
@@ -248,7 +250,7 @@ class MaintenanceSpec extends SparkTestBase {
       df
     })
     assert(appended && r.filesAfter < r.filesBefore, r.toString)
-    val rows = spark.read.parquet(store)
+    val rows = SliceStore.Ivf.view(spark, store)
     assert(rows.where(col("vec_id") < 200L).count() == 200L,
       "snapshot rows deduped exactly once")
     assert(rows.where(col("vec_id") >= 200L).count() == 40L,
@@ -262,9 +264,9 @@ class MaintenanceSpec extends SparkTestBase {
     assert(probe.nonEmpty)
   }
 
-  test("a torn IVF store compaction: the view serves the pre-crash " +
-    "index through the manifest; recovery restores the leafs") {
-    import org.apache.spark.sql.functions.{col, lit}
+  test("a torn IVF store compaction (fold written into the list " +
+    "directories, no version) serves the pre-crash index; a re-run commits") {
+    import org.apache.spark.sql.functions.col
     import graft.operators.Ivf
     val store = tempDir("ivf_torn").toString
     val vecs = (0L until 120L).map(i =>
@@ -280,38 +282,27 @@ class MaintenanceSpec extends SparkTestBase {
         col("vec_id"), col("embedding"), k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = probe
-    // crash mid-PARK: a MIXED state — some leaves' files already parked
-    // (preserving the list_id=N relative layout), others still live in
-    // the store — plus one torn folded file promoted and the manifest
-    // present with its RELATIVE path. The mixed state is the hard case
-    // for the reader: the pre-crash file set spans two roots, which a
-    // single-basePath partition-discovery read rejects outright
-    val storeDir = new java.io.File(store)
-    val parked = new java.io.File(store + ".__compact_parked")
-    val leaves = storeDir.listFiles().filter(d => d.isDirectory &&
-      d.getName.startsWith("list_id="))
-    assert(leaves.length > 1, "fixture needs multiple leaves for the mix")
-    leaves.zipWithIndex.filter(_._2 % 2 == 0).map(_._1).foreach { leaf =>
-      val dest = new java.io.File(parked, leaf.getName)
-      assert(dest.mkdirs())
-      leaf.listFiles().filter(f => f.isFile && !f.getName.startsWith(".") &&
-          !f.getName.startsWith("_"))
-        .foreach(f => assert(f.renameTo(new java.io.File(dest, f.getName))))
-    }
-    val tornRel = "list_id=0/part-00000-torn.snappy.parquet"
-    java.nio.file.Files.write(
-      new java.io.File(storeDir, tornRel).toPath, Array[Byte](7))
-    java.nio.file.Files.write(
-      new java.io.File(store + ".__compact_manifest").toPath,
-      tornRel.getBytes("UTF-8"))
-    assert(probe == before,
-      "view must serve the pre-crash index through the manifest")
-    Maintenance.recoverStoreCompaction(spark, store)
-    assert(!new java.io.File(storeDir, tornRel).exists() && !parked.exists())
-    assert(probe == before, "recovery must restore the exact store")
-    // and a fresh compaction completes on the recovered store
+    // crash before the commit: the fold's files sit in the list_id=N
+    // directories beside the originals, and no version names them
+    SliceStore.Ivf.compact(spark, store)
+    tearNewestVersion(store)
+    assert(new java.io.File(store).listFiles().count(d => d.isDirectory &&
+      d.getName.startsWith("list_id=") && d.listFiles().count(f =>
+        f.getName.endsWith(".parquet")) > 1) > 1,
+      "fixture: orphan fold files beside the originals")
+    assert(probe == before, "view must serve the pre-crash index")
+    assert(SliceStore.Ivf.view(spark, store).count() == 120L)
     val r = SliceStore.Ivf.compact(spark, store)
     assert(r.filesAfter >= 1 && probe == before, r.toString)
+    assert(SliceStore.Ivf.view(spark, store).count() == 120L)
+  }
+
+  /** A crash between writing a version's data files and committing
+    * it: drop the newest version file of the store's log. */
+  private def tearNewestVersion(store: String): Unit = {
+    val v = new graft.streaming.StoreLog(spark, store).latest().get._1
+    assert(new java.io.File(store, s"_log/$v").delete())
+    new java.io.File(store, s"_log/.$v.crc").delete()
   }
 
   test("compactCardinalityStore keeps estimates and row counts; " +
@@ -359,18 +350,13 @@ class MaintenanceSpec extends SparkTestBase {
     append(1, Seq.fill(6)(("a", 2)))
     def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    // the fold callback runs AFTER the snapshot listing — appending a
-    // new slice from inside it is exactly a concurrent foreachBatch
-    // landing mid-compaction
+    // the tap runs AFTER the snapshot is resolved — appending a new
+    // slice from inside it is exactly a concurrent foreachBatch landing
+    // mid-compaction
     var appended = false
-    val r = Maintenance.compactStore(spark, store, { df =>
+    val r = SliceStore.Count.compactWith(spark, store, Some(1L), { df =>
       if (!appended) { appended = true; append(2, Seq.fill(3)(("a", 3))) }
-      df.groupBy(col("batch_id"), col("group"), col("bucket"))
-        .agg(org.apache.spark.sql.functions.max(col("cnt")).as("cnt"))
-        .groupBy(col("group"), col("bucket"))
-        .agg(org.apache.spark.sql.functions.sum(col("cnt")).as("cnt"))
-        .select(col("group"), col("bucket"), col("cnt"),
-          org.apache.spark.sql.functions.lit(1L).as("batch_id"))
+      df
     })
     assert(appended && r.filesAfter >= 1, r.toString)
     val after = snap
@@ -380,8 +366,8 @@ class MaintenanceSpec extends SparkTestBase {
       "the concurrently appended slice must survive the compaction swap")
   }
 
-  test("a torn store compaction rolls back: manifest-listed folded " +
-    "files are removed, parked originals restored, view unchanged") {
+  test("a torn store compaction (fold written, no version committed) " +
+    "serves the pre-compaction rows; the next compaction commits") {
     import org.apache.spark.sql.functions.col
     val store = tempDir("rollback_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
@@ -392,71 +378,52 @@ class MaintenanceSpec extends SparkTestBase {
     def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val before = snap
-    // simulate a crash mid-promotion: originals parked, one folded file
-    // already promoted, manifest still present (= not committed)
-    val storeDir = new java.io.File(store)
-    val parked = new java.io.File(store + ".__compact_parked")
-    assert(parked.mkdirs())
-    val dataFiles = storeDir.listFiles().filter(f =>
-      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    dataFiles.foreach { f =>
-      assert(f.renameTo(new java.io.File(parked, f.getName)))
-    }
-    val foldedName = "part-00000-torn-fold.snappy.parquet"
-    java.nio.file.Files.write(
-      new java.io.File(storeDir, foldedName).toPath,
-      Array[Byte](1, 2, 3)) // torn garbage — rollback must remove it
-    java.nio.file.Files.write(
-      new java.io.File(store + ".__compact_manifest").toPath,
-      foldedName.getBytes("UTF-8"))
-    Maintenance.recoverStoreCompaction(spark, store)
-    assert(!new java.io.File(storeDir, foldedName).exists(),
-      "manifest-listed folded file must be rolled back")
-    assert(!parked.exists() &&
-      !new java.io.File(store + ".__compact_manifest").exists())
-    assert(snap == before, "rollback must restore the exact store")
-    // and the next compaction (which auto-recovers) proceeds cleanly
+    SliceStore.Count.compact(spark, store, throughBatch = Some(0))
+    tearNewestVersion(store)
+    // the orphan fold double-counts batch 0 in a raw directory read;
+    // the view reads the committed version only
+    assert(spark.read.parquet(store).count() == 4L)
+    assert(snap == before, "the view must ignore the uncommitted fold")
     val r = SliceStore.Count.compact(spark, store, throughBatch = Some(0))
-    assert(r.filesAfter >= 1 && snap == before, r.toString)
+    assert(r.filesBefore == 2 && r.filesAfter == 1 && snap == before,
+      r.toString)
   }
 
-  test("a CRASHED store compaction does not partially serve: the view " +
-    "reads the pre-compaction rows through the manifest, read-only, " +
-    "before anyone runs recovery") {
+  test("a store compaction that crashed after its commit, before " +
+    "deleting the files it retired, serves the folded rows; the next " +
+    "commit deletes them") {
     import org.apache.spark.sql.functions.col
     val store = tempDir("crashview_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
       SliceStore.Count.append(graft.operators.Anomaly.countSeries(
         rows.toDF("g", "b"), col("g"), col("b")), batch, store)
+    def dataFiles = new java.io.File(store).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
+    val originals = dataFiles
+    SliceStore.Count.compact(spark, store, throughBatch = Some(1))
+    // the retired originals outlive the compaction's own commit (a view
+    // resolved before it may still read them) ...
+    assert(originals.subsetOf(dataFiles))
     def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val before = snap
-    // crash mid-promotion: ALL originals parked, a torn folded file in
-    // the store, manifest present — a raw directory read would see
-    // only unreadable garbage (history gone)
-    val storeDir = new java.io.File(store)
-    val parked = new java.io.File(store + ".__compact_parked")
-    assert(parked.mkdirs())
-    storeDir.listFiles().filter(f =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .foreach(f => assert(f.renameTo(new java.io.File(parked, f.getName))))
-    val foldedName = "part-00000-crash-fold.snappy.parquet"
-    java.nio.file.Files.write(
-      new java.io.File(storeDir, foldedName).toPath, Array[Byte](9, 9))
-    java.nio.file.Files.write(
-      new java.io.File(store + ".__compact_manifest").toPath,
-      foldedName.getBytes("UTF-8"))
-    // the view serves the exact pre-compaction verdicts, WITHOUT
-    // mutating the store (recovery stays the writer's job)
-    assert(snap == before, "view must reconstruct the pre-crash store")
-    assert(new java.io.File(store + ".__compact_manifest").exists() &&
-      parked.exists() && new java.io.File(storeDir, foldedName).exists(),
-      "a reader must not have mutated the crashed store")
-    // writer-side recovery then restores the directory itself
-    Maintenance.recoverStoreCompaction(spark, store)
-    assert(snap == before)
+    val folded = snap
+    assert(folded == Map(("a", 1) -> 4L, ("a", 2) -> 6L), folded.toString)
+    // ... and the next commit deletes them; a crash between that
+    // commit and its deletions leaves every file and log version the
+    // deletions would have removed
+    val saved = new java.io.File(store + ".saved")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(store), saved)
+    append(2, Seq.fill(3)(("a", 3)))
+    org.apache.commons.io.FileUtils.copyDirectory(saved, new java.io.File(store))
+    assert(originals.subsetOf(dataFiles), "fixture: the crash state")
+    assert(snap == folded + (("a", 3) -> 3L),
+      "the view serves the committed version, not the retired files")
+    append(3, Seq.fill(2)(("a", 4)))
+    assert(originals.intersect(dataFiles).isEmpty,
+      s"retired files survived a later commit: ${originals & dataFiles}")
+    assert(snap == folded + (("a", 3) -> 3L) + (("a", 4) -> 2L))
   }
 
   test("compactZoneStore folds boxes through the merge algebra") {

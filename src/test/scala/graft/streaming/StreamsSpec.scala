@@ -261,21 +261,6 @@ class StreamsSpec extends SparkTestBase {
   }
 
   test("incrementalDedupStream: batch 2 drops a re-sent batch-1 doc via the signature store") {
-    import graft.TestSpark.spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-      TestSpark.sqlContext
-    val textA = "the cat and the dog walk to the old mill by the river road"
-    val textB = "the sun is warm and the wind is cold over the high green hills"
-    val cfg = graft.pipelines.CorpusPipeline.Config(minQuality = 0.0,
-      keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
-      numHashes = 64, bands = 16, minEstJaccard = 0.5, featureDim = 4)
-    val sigStore = tempDir("dedup_sigs").toString
-    val curated = tempDir("dedup_curated").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = Streams.incrementalDedupStream(mem.toDF().toDF("doc_id", "text"),
-        sigStore, curated, tempDir("dedup_stream_ckpt").toString, cfg,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .start()
     // every batch frees the funnel's persisted intermediates: neither
     // the persistent RDDs nor the cache manager's plan entries (which
     // `Dataset.unpersist` removes and an RDD-level unpersist would leak)
@@ -291,9 +276,49 @@ class StreamsSpec extends SparkTestBase {
         s"batch $batch leaked ${now._2 - last._2} cache-manager entr(ies)")
       last = now
     }
+    dedupThreeBatches("dedup")(assertNoGrowth)
+  }
+
+  test("incrementalDedupStream: with a checkpoint dir set (reliable " +
+      "pins), the checkpoint dir holds no more files after batch 3 than " +
+      "after batch 1") {
+    val sc = spark.sparkContext
+    val dir = tempDir("dedup_pin_ckpt").toFile
+    sc.setCheckpointDir(dir.toString)
+    def files: Int = java.nio.file.Files.walk(dir.toPath).toArray
+      .count(p => java.nio.file.Files.isRegularFile(
+        p.asInstanceOf[java.nio.file.Path]))
+    var afterFirst = -1
+    try dedupThreeBatches("dedup_reliable") {
+      case 1 => afterFirst = files
+      case 3 => assert(files <= afterFirst,
+        s"checkpoint dir grew from $afterFirst to $files files over two batches")
+      case _ =>
+    } finally org.apache.spark.GraftTestHooks.clearCheckpointDir(sc)
+    assert(afterFirst >= 0 && sc.getCheckpointDir.isEmpty)
+  }
+
+  /** Three `incrementalDedupStream` batches with their output checks;
+    * `afterBatch(n)` runs once batch n is processed. */
+  private def dedupThreeBatches(tag: String)(afterBatch: Int => Unit): Unit = {
+    import graft.TestSpark.spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      TestSpark.sqlContext
+    val textA = "the cat and the dog walk to the old mill by the river road"
+    val textB = "the sun is warm and the wind is cold over the high green hills"
+    val cfg = graft.pipelines.CorpusPipeline.Config(minQuality = 0.0,
+      keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
+      numHashes = 64, bands = 16, minEstJaccard = 0.5, featureDim = 4)
+    val sigStore = tempDir(s"${tag}_sigs").toString
+    val curated = tempDir(s"${tag}_curated").toString
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.incrementalDedupStream(mem.toDF().toDF("doc_id", "text"),
+        sigStore, curated, tempDir(s"${tag}_stream_ckpt").toString, cfg,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .start()
     mem.addData((1L, textA), (2L, textB))
     q.processAllAvailable()
-    assertNoGrowth(1)
+    afterBatch(1)
     // batch 1 bootstrapped an empty store: both docs kept, sigs appended
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L))
@@ -303,7 +328,7 @@ class StreamsSpec extends SparkTestBase {
     val textC = "the children read the books and the teacher is glad today"
     mem.addData((10L, textA), (11L, textC))
     q.processAllAvailable()
-    assertNoGrowth(2)
+    afterBatch(2)
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 11L))
     // and batch 2's survivor handed its signature forward for batch 3
@@ -315,7 +340,7 @@ class StreamsSpec extends SparkTestBase {
       (21L, "a small red boat sails past the grey harbour wall at dawn"))
     q.processAllAvailable()
     q.stop()
-    assertNoGrowth(3)
+    afterBatch(3)
     assert(spark.read.parquet(curated).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 11L, 21L))
     assert(spark.read.parquet(sigStore).select("doc_id").as[Long]
@@ -646,8 +671,8 @@ class StreamsSpec extends SparkTestBase {
     val v2 = Streams.cdcStoreView(spark, store)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(v2 == Map(2L -> "beta2", 3L -> "gamma"))
-    // keep-N-1 GC: the live generation AND its predecessor remain (a
-    // reader that resolved the old CURRENT mid-swap must stay valid)
+    // retention 2: the live generation AND its predecessor remain (a
+    // reader that resolved the previous version mid-commit stays valid)
     val gens = Streams.listGenerations(spark, store)
     assert(gens.length == 2, gens.mkString(","))
     // time travel: the PREVIOUS generation is batch 1's snapshot
@@ -841,8 +866,8 @@ class StreamsSpec extends SparkTestBase {
       3L -> ("gamma", "us")), got.toString)
   }
 
-  test("cdcMergeStream: torn pointer swap (no CURRENT, CURRENT.tmp " +
-      "present) recovers the committed store instead of restarting empty") {
+  test("cdcMergeStream: a torn commit (generation written, no version) " +
+      "serves and folds onto the committed store instead of restarting empty") {
     import graft.TestSpark.spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       TestSpark.sqlContext
@@ -855,20 +880,25 @@ class StreamsSpec extends SparkTestBase {
       .start()
     mem1.addData((1L, 1L, "upsert", "alpha"))
     q1.processAllAvailable()
+    mem1.addData((1L, 3L, "upsert", "alpha2"), (3L, 3L, "upsert", "gamma"))
+    q1.processAllAvailable()
     q1.stop()
-    // simulate the torn window: CURRENT deleted, its content parked in
-    // CURRENT.tmp (exactly the state a crash between delete and rename
-    // leaves behind, since tmp is fully written first)
-    val cur = new java.io.File(store, "CURRENT")
-    val tmp = new java.io.File(store, "CURRENT.tmp")
-    java.nio.file.Files.move(cur.toPath, tmp.toPath)
-    // a READER resolves through the tmp without mutating the store
+    // simulate the torn window: the second batch's generation is fully
+    // written but its version never committed (the newest version file
+    // is gone — exactly what a crash before the log's add leaves)
+    val gens = Streams.listGenerations(spark, store)
+    assert(gens.length == 2, gens.mkString(","))
+    val v = new StoreLog(spark, store).latest().get._1
+    assert(new java.io.File(store, s"_log/$v").delete())
+    new java.io.File(store, s"_log/.$v.crc").delete()
+    assert(new java.io.File(store, gens.last).isDirectory,
+      "fixture: the orphan generation stays on disk")
+    // a READER serves the committed version, ignoring the orphan
     val vTorn = Streams.cdcStoreView(spark, store)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(vTorn == Map(1L -> "alpha"))
-    assert(!cur.exists(), "reader must not complete the swap")
-    // the next WRITER batch completes the swap and folds onto the
-    // recovered base — not onto an empty bootstrap
+    // the next WRITER batch folds onto the committed base — not onto
+    // an empty bootstrap, and not onto the orphan
     val mem2 = MemoryStream[(Long, Long, String, String)]
     val q2 = Streams.cdcMergeStream(
         mem2.toDF().toDF("id", "seq", "op", "txt"), store,
@@ -879,12 +909,12 @@ class StreamsSpec extends SparkTestBase {
     q2.processAllAvailable()
     assert(q2.exception.isEmpty, q2.exception.toString)
     q2.stop()
-    val v = Streams.cdcStoreView(spark, store)
+    val got = Streams.cdcStoreView(spark, store)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(v == Map(1L -> "alpha", 2L -> "beta"))
+    assert(got == Map(1L -> "alpha", 2L -> "beta"))
   }
 
-  test("cdcMergeStream: generations without any pointer fail loudly " +
+  test("cdcMergeStream: generations without any log fail loudly " +
       "instead of silently bootstrapping an empty base") {
     import graft.TestSpark.spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
@@ -899,7 +929,9 @@ class StreamsSpec extends SparkTestBase {
     mem1.addData((1L, 1L, "upsert", "alpha"))
     q1.processAllAvailable()
     q1.stop()
-    assert(new java.io.File(store, "CURRENT").delete())
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(store, "_log"))
+    intercept[IllegalArgumentException](Streams.cdcStoreView(spark, store))
     val mem2 = MemoryStream[(Long, Long, String, String)]
     val q2 = Streams.cdcMergeStream(
         mem2.toDF().toDF("id", "seq", "op", "txt"), store,
@@ -912,8 +944,10 @@ class StreamsSpec extends SparkTestBase {
       catch { case _: org.apache.spark.sql.streaming.StreamingQueryException |
                    _: IllegalArgumentException => true }
     assert(failed || q2.exception.nonEmpty,
-      "batch against a pointerless store with generations must fail")
+      "batch against a store with generations but no log must fail")
     q2.stop()
+    assert(!new java.io.File(store, "_log").exists(),
+      "the failed batch must not have started a log over the old data")
   }
 
   test("cardinalityStream: appended sketches serve the exact distinct view") {

@@ -43,6 +43,17 @@ so expect false positives when mixing shapes.
 Exit 1 (gate fails) if any shared query regressed by more than
 `threshold` (default 1.5x). New and removed queries are listed but do
 not fail the gate.
+
+OLD NEW also prints the median per-query NEW/OLD ratio beside the
+hostmark ratio, and a "host shift not explained by hostmark" line when
+the two disagree by more than half the gate's margin (1.25x at the
+default 1.5x threshold): a window where the whole bench moved while the
+single-thread hostmark moved less (bench_spread_pr6_change.json ->
+bench_spread_pr7_change.json read a 1.60x median against a 1.18x
+hostmark) flags queries no code change
+reaches, so its REGRESSED lines need a same-window parent run before
+they mean anything. Diagnostic only: the gate and the exit code do not
+change.
 """
 import json
 import sys
@@ -318,6 +329,19 @@ def selftest():
     # an exactly-zero hostmark must not normalize (and not crash)
     r = cmp_run(mk(1.0, 0.0), mk(1.6, 1.6))
     assert r.returncode == 1 and "host shift" not in r.stdout, r.stdout
+    # host-shift diagnostic: a matched shift prints the median beside
+    # the hostmark and no warning; a whole-bench 1.6x move under a 1.18x
+    # hostmark warns but still passes (1.6 / 1.18 < 1.5); a 2x move
+    # under the same hostmark warns AND fails — the gate is unchanged
+    r = cmp_run(mk(1.0, 1.0), mk(1.6, 1.6))
+    assert "median per-query ratio: 1.600x raw (hostmark 1.600x)" in \
+        r.stdout and "not explained" not in r.stdout, r.stdout
+    r = cmp_run(mk(1.0, 1.0), mk(1.6, 1.18))
+    assert r.returncode == 0 and \
+        "host shift not explained by hostmark" in r.stdout, r.stdout
+    r = cmp_run(mk(1.0, 1.0), mk(2.0, 1.18))
+    assert r.returncode == 1 and "REGRESSED" in r.stdout and \
+        "host shift not explained by hostmark" in r.stdout, r.stdout
 
     # --docs: consistent claim passes; a host-shifted re-capture (total
     # and hostmark moved together) still passes; a stale total fails;
@@ -403,6 +427,24 @@ def main():
                   "shift-normalized (raw ratios shown alongside)")
 
     shared = sorted(set(old) & set(new))
+    ratios = sorted(new[q][0] / old[q][0] for q in shared if old[q][0] > 0)
+    if ratios:
+        mid = len(ratios) // 2
+        median = (ratios[mid] if len(ratios) % 2
+                  else (ratios[mid - 1] + ratios[mid]) / 2)
+        hm_ratio = (hm_new / hm_old if hm_old and hm_new is not None
+                    else None)
+        print(f"median per-query ratio: {median:.3f}x raw" +
+              (f" (hostmark {hm_ratio:.3f}x)" if hm_ratio else
+               " (no hostmark on both sides)"))
+        band = 1 + (threshold - 1) / 2
+        if hm_ratio and not (1 / band <= median / hm_ratio <= band):
+            print(f"host shift not explained by hostmark: median "
+                  f"per-query ratio {median:.3f}x vs hostmark "
+                  f"{hm_ratio:.3f}x (residual {median / hm_ratio:.3f}x, "
+                  f"outside the {band:.2f}x band) — the per-query verdicts below "
+                  "may be the host, not the code; compare against a "
+                  "same-window parent run")
     regressed = []
     for q in shared:
         (o, okind), (n, nkind) = old[q], new[q]
