@@ -43,6 +43,8 @@ object Bench {
     * (e.g. plan stringification) is not cancellable — the thread is
     * abandoned to its fate (daemon: it cannot block JVM exit) and the
     * loop moves on, which is exactly the containment that matters.
+    * The body runs in one [[graft.operators.Pin.scope]], so no frame
+    * the query caches or pins outlives it.
     */
   def timedPass(spark: SparkSession, name: String, body: () => Unit,
                 timeoutSec: Int): Either[String, Double] = {
@@ -53,7 +55,8 @@ object Bench {
     val th = new Thread(() => {
       try {
         spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-        try body() finally spark.sparkContext.clearJobGroup()
+        try graft.operators.Pin.scope(body())
+        finally spark.sparkContext.clearJobGroup()
       } catch { case t: Throwable => err.set(t) }
       finally done.countDown()
     }, group)
@@ -230,10 +233,9 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: $reason")
             failures += name
         }
-        // Queries that persist their fan-out lineage (ngram/minhash/CC)
-        // have no safe in-query unpersist point; dropping the blocks
-        // here keeps one query's cache from pressuring the next 60's
-        // memory and makes every timed pass equally cold. ONLY
+        // Each query's own caches and pins are freed by its timedPass
+        // scope; clearing the cache here also drops the memoized BM25
+        // index's blocks, so every timed pass is equally cold. ONLY
         // clearCache() runs between queries: the round-13 harness ran a
         // listTables sweep + System.gc() here and inflated every
         // subsequent timed pass ~1.3× (full-GC aftermath — weak-ref

@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graftbridge.PinBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.operators.Pin
+
 /** Physical-plan evidence dump: writes `.explain("formatted")` for the
   * named registered queries to `<outDir>/<name><suffix>.txt` — the
   * before/after plan artifacts the optimization rounds commit under
@@ -9,6 +15,13 @@ import java.nio.file.{Files, Paths}
   * PushedFilters) are checkable without running Spark.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...|all>
+  *
+  * A query that pins frames while it is built runs those pins' jobs
+  * before its own plan exists, and their joins never show in it; the
+  * formatted plan of each such job goes to `<name><suffix>.pins.txt`,
+  * in run order. Each query is built and explained in one
+  * [[graft.operators.Pin.scope]], so its pins and caches are freed
+  * before the next query is built.
   *
   * The session is [[SessionFactory.driver]], the one [[Bench]] times,
   * so the dumped plan is the one the bench runs.
@@ -21,6 +34,15 @@ object PlanDump {
     val names =
       if (namesArg == "all") SparkEntry.queries.keys.toSeq.sorted
       else namesArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val pinPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "checkpoint" || funcName == "localCheckpoint")
+          pinPlans.add(qe.explainString(FormattedMode))
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    })
     var failed = List.empty[String]
     for (name <- names) {
       SparkEntry.queries.get(name) match {
@@ -29,14 +51,21 @@ object PlanDump {
           System.err.println(s"[plandump] no such query: $name")
         case Some(fn) =>
           try {
-            val df = fn(spark, sfDir)
+            PinBridge.drainListeners(spark.sparkContext)
+            pinPlans.clear()
             // queryExecution.explainString == df.explain("formatted"),
             // captured instead of printed
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val txt = Pin.scope(
+              fn(spark, sfDir).queryExecution.explainString(FormattedMode))
             Files.write(Paths.get(outDir, s"$name$suffix.txt"),
               txt.getBytes("UTF-8"))
             println(s"[plandump] wrote $outDir/$name$suffix.txt")
+            PinBridge.drainListeners(spark.sparkContext)
+            if (!pinPlans.isEmpty) {
+              Files.write(Paths.get(outDir, s"$name$suffix.pins.txt"),
+                pinPlans.toArray.mkString("\n").getBytes("UTF-8"))
+              println(s"[plandump] wrote $outDir/$name$suffix.pins.txt")
+            }
           } catch {
             case e: Exception =>
               failed ::= name

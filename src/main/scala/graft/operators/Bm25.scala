@@ -30,8 +30,8 @@ import graft.functions.TextFunctions
   * (doc, token) aggregate, and `dl` (doc length) and `df` both derive
   * from the already-reduced `tf` table — never a second pass over the
   * corpus. `tf` fans out three ways (score rows, dl, df), so it is
-  * persisted by default (same Catalyst non-reuse rationale and lifecycle
-  * contract as [[TermWeights.tfidfTopTerms]]). The df/avgdl aggregates
+  * cached (same Catalyst non-reuse rationale as
+  * [[TermWeights.tfidfTopTerms]]). The df/avgdl aggregates
   * keep map-side partial combine; the vocabulary-sized df table
   * broadcasts back (`broadcastVocab`), and the two corpus scalars
   * (N, avgdl) ride a broadcast 1-row cross join. Search-side, the query
@@ -48,18 +48,13 @@ object Bm25 {
   def bm25Index(df: DataFrame, id: Column, text: Column,
                 k1: Double = 1.2, b: Double = 0.75,
                 weight: TermWeights.IdfWeight = TermWeights.LogIdf,
-                broadcastVocab: Boolean = true,
-                persistTf: Boolean = true): DataFrame = {
+                broadcastVocab: Boolean = true): DataFrame = {
     require(k1 >= 0.0, s"k1 must be >= 0, got $k1")
     require(b >= 0.0 && b <= 1.0, s"b must be in [0, 1], got $b")
     val tok = df.select(id.as("doc_id"),
       explode(TextFunctions.tokens(text)).as("token"))
-    val tfUncached = tok.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val tf =
-      if (persistTf)
-        tfUncached.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tfUncached
+    val tf = Pin.cache(tok.groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val vocab = if (broadcastVocab) broadcast(dfreq) else dfreq

@@ -113,27 +113,30 @@ object BpeStats {
     require(steps >= 0, s"steps must be non-negative: $steps")
     require(persistEvery > 0, s"persistEvery must be positive: $persistEvery")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var frame = docs.select(split(text, " ").as("__toks"))
-    var anchored: Option[DataFrame] = None
-    var step = 0
-    while (step < steps) {
-      val top = pairCountsTokens(frame, col("__toks"), k = 1).collect()
-      if (top.isEmpty) return merges.toSeq // corpus fully merged
-      val (a, b) = (top(0).getString(0), top(0).getString(1))
-      merges += ((a, b))
-      frame = frame.select(applyMerge(col("__toks"), a, b, sep).as("__toks"))
-      step += 1
-      probe(frame)
-      if (step % persistEvery == 0 && step < steps) {
-        // eager truncation materializes the frame AND replaces its plan
-        // with a leaf; the previous anchor's blocks are then safe to drop
-        val p = Pin.eager(frame)
-        anchored.foreach(Pin.free)
-        anchored = Some(p)
-        frame = p
+    // the scope frees the last anchor, also on the early return
+    def train(): Unit = {
+      var frame = docs.select(split(text, " ").as("__toks"))
+      var anchored: Option[DataFrame] = None
+      var step = 0
+      while (step < steps) {
+        val top = pairCountsTokens(frame, col("__toks"), k = 1).collect()
+        if (top.isEmpty) return // corpus fully merged
+        val (a, b) = (top(0).getString(0), top(0).getString(1))
+        merges += ((a, b))
+        frame = frame.select(applyMerge(col("__toks"), a, b, sep).as("__toks"))
+        step += 1
+        probe(frame)
+        if (step % persistEvery == 0 && step < steps) {
+          // eager truncation materializes the frame AND replaces its plan
+          // with a leaf; the previous anchor's blocks are then safe to drop
+          val p = Pin.eager(frame)
+          anchored.foreach(Pin.free)
+          anchored = Some(p)
+          frame = p
+        }
       }
     }
-    anchored.foreach(Pin.free)
+    Pin.scope(train())
     merges.toSeq
   }
 }

@@ -39,14 +39,13 @@ import org.apache.spark.sql.functions._
   * is one driver-side action (a scalar count, same contract as the
   * A1 metric gates).
   *
-  * Cache lifecycle: the raw symmetrized edge list is persisted only
-  * until the degree-annotated copy materializes (the two hold the same
-  * rows — caching both doubled the footprint for nothing), and the
-  * RETURNED frame is an eager localCheckpoint: the iterations run
-  * exactly once inside this call, every caller action scans the
-  * checkpointed result instead of replaying the whole loop, and both
-  * intermediate caches are released before returning. CentralitySpec
-  * pins the returned plan free of the iteration joins.
+  * Cache lifecycle: each iterative operator runs in a nested
+  * [[Pin.scoped]] scope. The RETURNED frame is an eager pin owned by
+  * the caller's scope: the iterations run exactly once inside this
+  * call, every caller action scans the pinned result instead of
+  * replaying the whole loop, and the pair cache, the edge cache and the
+  * loop's pins are freed before returning. CentralitySpec pins the
+  * returned plan free of the iteration joins.
   */
 object Centrality {
 
@@ -63,53 +62,50 @@ object Centrality {
     require(scale >= 1000L, s"scale must be >= 1000, got $scale")
     require(truncateEvery >= 1,
       s"truncateEvery must be >= 1, got $truncateEvery")
-    val ids = nodes.select(id.as("id"))
-    // Pin the PAIR frame, not the exploded edge list (r17): the degree
-    // join consumes edges twice (probe + agg side), so the expensive
-    // pair generation must be materialized exactly once — but pinning
-    // the small thresholded pair frame makes the explode + degree join
-    // trivially recomputable from cache, which retires the old
-    // edges.persist / degreed.count() / edges.unpersist release dance
-    // (the eager fill now runs pair generation alone, not pair
-    // generation + explode + degree join). Symmetrize with ONE explode
-    // rather than a self-union: a union of two selects would
-    // re-evaluate the subtree once per branch inside the same job.
-    val p = pairs.select(col("id_a"), col("id_b")).persist()
-    p.count() // eager fill; released after the result checkpoint below
-    val edges = p
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val degreed = edges
-      .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .persist() // reused every iteration (fills on iteration 1's scan)
-    val n = ids.count()
-    require(n > 0, "PageRank over an empty node set")
-    val s0 = scale / n
-    val base = 15L * s0 / 100L
-    var scores = ids.select(col("id"), lit(s0).as("score"))
-    for (iter <- 1 to iterations) {
-      val inflow = degreed
-        .join(scores, degreed("src") === scores("id"))
-        .select(col("dst"), expr("score div deg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("inflow"))
-      scores = ids
-        .join(inflow, ids("id") === inflow("dst"), "left_outer")
-        .select(col("id"),
-          (lit(base) +
-            coalesce(expr("(85 * inflow) div 100"), lit(0L))).as("score"))
-      if (iter % truncateEvery == 0 && iter < iterations)
-        scores = Pin.eager(scores)
+    Pin.scoped {
+      val ids = nodes.select(id.as("id"))
+      // Cache the PAIR frame, not the exploded edge list (r17): the
+      // degree join consumes edges twice (probe + agg side), so the
+      // expensive pair generation must be materialized exactly once —
+      // but caching the small thresholded pair frame makes the explode +
+      // degree join trivially recomputable from cache (the eager fill
+      // runs pair generation alone, not pair generation + explode +
+      // degree join). Symmetrize with ONE explode rather than a
+      // self-union: a union of two selects would re-evaluate the
+      // subtree once per branch inside the same job.
+      val p = Pin.cache(pairs.select(col("id_a"), col("id_b")))
+      p.count() // eager fill
+      val edges = p
+        .select(explode(array(
+          struct(col("id_a").as("src"), col("id_b").as("dst")),
+          struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      // reused every iteration (fills on iteration 1's scan)
+      val degreed = Pin.cache(edges
+        .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+      val n = ids.count()
+      require(n > 0, "PageRank over an empty node set")
+      val s0 = scale / n
+      val base = 15L * s0 / 100L
+      var scores = ids.select(col("id"), lit(s0).as("score"))
+      for (iter <- 1 to iterations) {
+        val inflow = degreed
+          .join(scores, degreed("src") === scores("id"))
+          .select(col("dst"), expr("score div deg").as("contrib"))
+          .groupBy(col("dst"))
+          .agg(sum(col("contrib")).as("inflow"))
+        scores = ids
+          .join(inflow, ids("id") === inflow("dst"), "left_outer")
+          .select(col("id"),
+            (lit(base) +
+              coalesce(expr("(85 * inflow) div 100"), lit(0L))).as("score"))
+        if (iter % truncateEvery == 0 && iter < iterations)
+          scores = Pin.eager(scores)
+      }
+      // pinned into the caller's scope: the iterations run ONCE here and
+      // callers get a frame whose plan is just the pinned scan
+      scores
     }
-    // eager checkpoint: run the iterations ONCE here, hand callers a
-    // frame whose plan is just the checkpointed scan — then the
-    // iteration cache is done and releases immediately
-    val result = Pin.eager(scores)
-    degreed.unpersist(blocking = false)
-    p.unpersist(blocking = false)
-    result
   }
 
   /** WEIGHTED fixed-point PageRank: each undirected pair carries a
@@ -141,45 +137,43 @@ object Centrality {
     require(scale >= 1000L, s"scale must be >= 1000, got $scale")
     require(truncateEvery >= 1,
       s"truncateEvery must be >= 1, got $truncateEvery")
-    val ids = nodes.select(id.as("id"))
-    // same pair-frame pin rationale as [[fixedPointPageRank]]
-    val p = pairs
-      .select(col("id_a"), col("id_b"), weight.cast("long").as("w"))
-      .where(col("w") > 0)
-      .persist()
-    p.count() // eager fill; released after the result checkpoint below
-    val edges = p
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst"), col("w")),
-        struct(col("id_b").as("src"), col("id_a").as("dst"), col("w"))))
-        .as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
-    val weighted = edges
-      .join(edges.groupBy(col("src")).agg(sum(col("w")).as("wsum")), "src")
-      .persist() // reused every iteration (fills on iteration 1's scan)
-    val n = ids.count()
-    require(n > 0, "PageRank over an empty node set")
-    val s0 = scale / n
-    val base = 15L * s0 / 100L
-    var scores = ids.select(col("id"), lit(s0).as("score"))
-    for (iter <- 1 to iterations) {
-      val inflow = weighted
-        .join(scores, weighted("src") === scores("id"))
-        .select(col("dst"), expr("(score * w) div wsum").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("inflow"))
-      scores = ids
-        .join(inflow, ids("id") === inflow("dst"), "left_outer")
-        .select(col("id"),
-          (lit(base) +
-            coalesce(expr("(85 * inflow) div 100"), lit(0L))).as("score"))
-      if (iter % truncateEvery == 0 && iter < iterations)
-        scores = Pin.eager(scores)
+    Pin.scoped {
+      val ids = nodes.select(id.as("id"))
+      // same pair-frame cache rationale as [[fixedPointPageRank]]
+      val p = Pin.cache(pairs
+        .select(col("id_a"), col("id_b"), weight.cast("long").as("w"))
+        .where(col("w") > 0))
+      p.count() // eager fill
+      val edges = p
+        .select(explode(array(
+          struct(col("id_a").as("src"), col("id_b").as("dst"), col("w")),
+          struct(col("id_b").as("src"), col("id_a").as("dst"), col("w"))))
+          .as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
+      // reused every iteration (fills on iteration 1's scan)
+      val weighted = Pin.cache(edges
+        .join(edges.groupBy(col("src")).agg(sum(col("w")).as("wsum")), "src"))
+      val n = ids.count()
+      require(n > 0, "PageRank over an empty node set")
+      val s0 = scale / n
+      val base = 15L * s0 / 100L
+      var scores = ids.select(col("id"), lit(s0).as("score"))
+      for (iter <- 1 to iterations) {
+        val inflow = weighted
+          .join(scores, weighted("src") === scores("id"))
+          .select(col("dst"), expr("(score * w) div wsum").as("contrib"))
+          .groupBy(col("dst"))
+          .agg(sum(col("contrib")).as("inflow"))
+        scores = ids
+          .join(inflow, ids("id") === inflow("dst"), "left_outer")
+          .select(col("id"),
+            (lit(base) +
+              coalesce(expr("(85 * inflow) div 100"), lit(0L))).as("score"))
+        if (iter % truncateEvery == 0 && iter < iterations)
+          scores = Pin.eager(scores)
+      }
+      scores
     }
-    val result = Pin.eager(scores)
-    weighted.unpersist(blocking = false)
-    p.unpersist(blocking = false)
-    result
   }
 
   /** Per-node triangle participation and local clustering coefficient
@@ -295,36 +289,32 @@ object Centrality {
     require(k >= 1, s"k must be >= 1, got $k")
     require(truncateEvery >= 1,
       s"truncateEvery must be >= 1, got $truncateEvery")
-    // eager edge materialization (see kCoreBounded: both endpoint
-    // semi-joins of round 1 would otherwise race the lazy cache and
-    // run pair generation twice); rounds are serialized by their
-    // count() actions, so lazy persist suffices for the survivor lists
-    val und = Pin.eager(canonicalEdges(pairs))
-    val all = nodes.select(id.as("id"))
-    var surv = all
-    var prev = surv.count()
-    var round = 0
-    var done = false
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    while (!done) {
-      round += 1
-      // persist every round (each peel scans its input twice);
-      // checkpoint on the truncate cadence so the PLAN stays bounded
-      // too — persist alone bounds recompute, only checkpointing
-      // bounds lineage (the CC lesson)
-      surv = peelOnce(und, surv, k)
-      if (round % truncateEvery == 0) surv = Pin.eager(surv)
-      else { surv = surv.persist(); cached += surv }
-      val n = surv.count()
-      done = n == prev
-      prev = n
+    Pin.scoped {
+      // eager edge materialization (see kCoreBounded: both endpoint
+      // semi-joins of round 1 would otherwise race the lazy cache and
+      // run pair generation twice); rounds are serialized by their
+      // count() actions, so a lazy cache suffices for the survivor lists
+      val und = Pin.eager(canonicalEdges(pairs))
+      val all = nodes.select(id.as("id"))
+      var surv = all
+      var prev = surv.count()
+      var round = 0
+      var done = false
+      while (!done) {
+        round += 1
+        // cache every round (each peel scans its input twice); pin on
+        // the truncate cadence so the PLAN stays bounded too — a cache
+        // alone bounds recompute, only pinning bounds lineage (the CC
+        // lesson)
+        surv = peelOnce(und, surv, k)
+        surv = if (round % truncateEvery == 0) Pin.eager(surv) else Pin.cache(surv)
+        val n = surv.count()
+        done = n == prev
+        prev = n
+      }
+      all.join(surv.withColumn("__in", lit(true)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__in"), lit(false)).as("in_kcore"))
     }
-    val result = Pin.eager(all
-      .join(surv.withColumn("__in", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__in"), lit(false)).as("in_kcore")))
-    cached.foreach(_.unpersist(blocking = false))
-    Pin.free(und)
-    result
   }
 
   /** Community detection by synchronous label propagation (Raghavan,
@@ -367,80 +357,72 @@ object Centrality {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(truncateEvery >= 1,
       s"truncateEvery must be >= 1, got $truncateEvery")
-    val ids = nodes.select(id.as("id"))
-    // same pair-frame pin rationale as [[fixedPointPageRank]]: pin the
-    // small thresholded pair frame, derive the (2x-sized) edge list
-    // from cache per round instead of caching it
-    val p = pairs.select(col("id_a"), col("id_b")).persist()
-    p.count() // eager fill; released after the result checkpoint below
-    val edges = p
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("dst")).orderBy(col("c").desc, col("label").asc)
-    var labels = ids.select(col("id"), col("id").as("label"))
-    for (iter <- 1 to iterations) {
-      val pick = edges
-        .join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
-        .select(col("dst"), col("label").as("__new"))
-      labels = ids.join(pick, ids("id") === pick("dst"), "left")
-        .select(col("id"), coalesce(col("__new"), col("id")).as("label"))
-      if (iter % truncateEvery == 0 && iter < iterations)
-        labels = Pin.eager(labels)
+    Pin.scoped {
+      val ids = nodes.select(id.as("id"))
+      // same pair-frame cache rationale as [[fixedPointPageRank]]: cache
+      // the small thresholded pair frame, derive the (2x-sized) edge list
+      // from cache per round instead of caching it
+      val p = Pin.cache(pairs.select(col("id_a"), col("id_b")))
+      p.count() // eager fill
+      val edges = p
+        .select(explode(array(
+          struct(col("id_a").as("src"), col("id_b").as("dst")),
+          struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("dst")).orderBy(col("c").desc, col("label").asc)
+      var labels = ids.select(col("id"), col("id").as("label"))
+      for (iter <- 1 to iterations) {
+        val pick = edges
+          .join(labels, edges("src") === labels("id"))
+          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
+          .withColumn("__rn", row_number().over(w))
+          .where(col("__rn") === 1)
+          .select(col("dst"), col("label").as("__new"))
+        labels = ids.join(pick, ids("id") === pick("dst"), "left")
+          .select(col("id"), coalesce(col("__new"), col("id")).as("label"))
+        if (iter % truncateEvery == 0 && iter < iterations)
+          labels = Pin.eager(labels)
+      }
+      labels
     }
-    val result = Pin.eager(labels)
-    p.unpersist(blocking = false)
-    result
   }
 
   def triangleStats(nodes: DataFrame, id: Column,
                     pairs: DataFrame): DataFrame = {
-    // persist the canonical edge list FIRST: `pairs` is typically an
+    // cache the canonical edge list FIRST: `pairs` is typically an
     // expensive similarity join, and und feeds the degree agg, both
     // annotate joins and (via deg) the final zero-fill — without the
     // cache the pair generation re-runs once per consumer (measured
     // 10.8s -> 2.9s on the sf0.1 near-dup graph). deg is node-sized;
     // caching it spares three re-aggregations of und.
     //
-    // LAZY persists, deliberately (r18 re-measured): eager Pin.eager
-    // pins were tried here and REJECTED — a pinned frame is an
-    // ExistingRDD leaf with no size statistics, so every downstream
-    // broadcast-hash join (the degree annotates, the wedge-closing
-    // join) flipped to sort-merge (plan diff: 54 BroadcastHashJoins ->
-    // 0) and the 10x closed-vocab fixture regressed 28 s -> 40-52 s.
-    // The sibling-race duplicate evaluation the pins would close is
-    // bounded here (the persists fill early, and the duplicate is the
-    // thresholded pair frame, not the shingle stream), so statistics
-    // beat eagerness.
-    val und = pairs
-      .select(least(col("id_a"), col("id_b")).as("u"),
-        greatest(col("id_a"), col("id_b")).as("v"))
-      .where(col("u") < col("v")).distinct()
-      .persist()
-    val deg = und.select(col("u").as("n"))
+    // LAZY caches. r18 tried eager pins here and rejected them: a pin's
+    // leaf then kept the origin plan's size estimate, so every
+    // downstream broadcast-hash join (the degree annotates, the
+    // wedge-closing join) flipped to sort-merge (plan diff: 54
+    // BroadcastHashJoins -> 0) and the 10x closed-vocab fixture
+    // regressed 28 s -> 40-52 s. Pins have carried their measured size
+    // since, so that objection is gone; converting these caches to pins
+    // (closing the sibling-race duplicate evaluation, bounded here: the
+    // caches fill early, and the duplicate is the thresholded pair
+    // frame, not the shingle stream) is a separate, measured change.
+    val und = Pin.cache(canonicalEdges(pairs))
+    val deg = Pin.cache(und.select(col("u").as("n"))
       .unionAll(und.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      .persist()
+      .groupBy(col("n")).agg(count(lit(1)).as("d")))
     // annotate both endpoints with degree, then orient low -> high
     val ann = und
       .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-    // persist: the oriented edge list is scanned three times (both
-    // wedge sides + the closing join); lazy-return convention — the
-    // cache lives with the query (the documented persist-and-leave
-    // trade-off, same as the gate caches in SparkEntry)
-    val oriented = ann.select(
+    // cached: the oriented edge list is scanned three times (both
+    // wedge sides + the closing join)
+    val oriented = Pin.cache(ann.select(
       when(struct(col("du").as("d"), col("u").as("i")) <
           struct(col("dv").as("d"), col("v").as("i")),
         struct(col("u").as("s"), col("v").as("t")))
         .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"))
-      .persist()
+      .select(col("e.s").as("s"), col("e.t").as("t")))
     // wedges from each apex's out-neighbors; closed iff v->w oriented.
     // Exactly one of (v,w)/(w,v) can match: orientation is a DAG.
     val wedges = oriented.as("o1")

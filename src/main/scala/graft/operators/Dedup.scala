@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{Fnv64, SigHash, TextFunctions}
 
@@ -47,10 +48,9 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column, n: Int,
                         minJaccard: Double,
                         maxDocFreq: Option[Long] = None,
-                        hashShingles: Boolean = true,
-                        persistLineage: Boolean = true): DataFrame = {
+                        hashShingles: Boolean = true): DataFrame = {
     val (sizes, inter) = shinglePairCounts(df, id, text, n, maxDocFreq,
-      hashShingles, persistLineage)
+      hashShingles)
     inter
       .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
@@ -68,8 +68,7 @@ object Dedup {
     */
   private def shinglePairCounts(df: DataFrame, id: Column, text: Column,
                                 n: Int, maxDocFreq: Option[Long],
-                                hashShingles: Boolean,
-                                persistLineage: Boolean)
+                                hashShingles: Boolean)
       : (DataFrame, DataFrame) = {
     // Shingles are hashed to int64 before the self-join by default: an
     // 8-byte fixed-width key shuffles a fraction of the raw text and
@@ -104,11 +103,8 @@ object Dedup {
     // result is the exact Jaccard / containment over the capped shingle
     // universe (hash-checkable by a twin with the identical cap).
     //
-    // Fans out 3 ways (self-join both sides + sizes); persist beats
-    // recomputing the shingle explode per consumer. The blocks live until
-    // session cache cleanup (no safe unpersist point inside a lazy
-    // lineage) - long-lived sessions issuing many calls can pass
-    // persistLineage=false or spark.catalog.clearCache() between runs.
+    // Fans out 3 ways (self-join both sides + sizes); caching beats
+    // recomputing the shingle explode per consumer.
     //
     // CAPPED case: the persist goes on the RAW shingle stream, not the
     // capped one (r18) — the hot-shingle aggregate AND the anti-join probe
@@ -120,21 +116,12 @@ object Dedup {
     // and every downstream consumer pays one cheap broadcast-hash probe
     // over cached 8-byte rows instead.
     val sh = maxDocFreq match {
-      case None =>
-        if (persistLineage)
-          shRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else shRaw
+      case None => Pin.cache(shRaw)
       case Some(cap) =>
-        val base =
-          if (persistLineage)
-            shRaw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          else shRaw
+        val base = Pin.cache(shRaw, StorageLevel.DISK_ONLY)
         val hot = base.groupBy("sh").agg(count(lit(1)).as("df"))
           .filter(col("df") > cap).select("sh")
-        val capped = base.join(broadcast(hot), Seq("sh"), "left_anti")
-        if (persistLineage)
-          capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else capped
+        Pin.cache(base.join(broadcast(hot), Seq("sh"), "left_anti"))
     }
     // Per-doc set sizes as ONE eagerly-materialized frame (r17): the
     // callers' endpoint joins consume `sizes`, and with a lazy frame
@@ -175,14 +162,13 @@ object Dedup {
   def ngramContainmentPairs(df: DataFrame, id: Column, text: Column, n: Int,
                             minContainment: Double,
                             maxDocFreq: Option[Long] = None,
-                            hashShingles: Boolean = true,
-                            persistLineage: Boolean = true): DataFrame = {
-    // Same skew guard, consistency rule and persist contract as
+                            hashShingles: Boolean = true): DataFrame = {
+    // Same skew guard, consistency rule and cache as
     // ngramJaccardPairs (its helper). A df-capped shingle is boilerplate
     // by definition — it stops being evidence that one doc CONTAINS
     // another precisely because everything contains it.
     val (sizes, inter) = shinglePairCounts(df, id, text, n, maxDocFreq,
-      hashShingles, persistLineage)
+      hashShingles)
     // mirror AFTER the reduction, and as ONE explode projection — a
     // union of two selects over `inter` makes Catalyst plan the whole
     // self-join + aggregate subtree TWICE (observed in the physical
@@ -223,8 +209,7 @@ object Dedup {
     */
   def sourceJaccardExact(df: DataFrame, group: Column, text: Column,
                          n: Int,
-                         hashShingles: Boolean = true,
-                         persistLineage: Boolean = true): DataFrame = {
+                         hashShingles: Boolean = true): DataFrame = {
     val shingleKey =
       if (hashShingles) xxhash64(col("sh_text")) else col("sh_text")
     val shRaw = df
@@ -232,12 +217,9 @@ object Dedup {
         explode(TextFunctions.wordShingles(text, n)).as("sh_text"))
       .select(col("source"), shingleKey.as("sh"))
       .distinct()
-    // fans out 3 ways (sizes + both self-join sides), same lifecycle
-    // contract as ngramJaccardPairs
-    val sh =
-      if (persistLineage)
-        shRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shRaw
+    // fans out 3 ways (sizes + both self-join sides), cached as in
+    // ngramJaccardPairs
+    val sh = Pin.cache(shRaw)
     // group universe from the INPUT, not the shingle stream: a group
     // whose docs are all too short for a single shingle still audits
     // (n=0, every pair 0/0-guarded), instead of silently vanishing
@@ -353,8 +335,8 @@ object Dedup {
     * is pointwise non-increasing (every round takes a min over a superset
     * that includes the old label), so an unchanged sum is an exact
     * fixpoint test — one map-side-partial aggregate per round instead of
-    * a labels⋈labels diff join. Each round's labels are persisted and the
-    * previous round unpersisted, so RE-COMPUTE cost stays O(1) rounds
+    * a labels⋈labels diff join. Each round's labels are cached and the
+    * previous round freed, so RE-COMPUTE cost stays O(1) rounds
     * while cached (on cached-block loss, replay is bounded by the rounds
     * run — the usual iterative-algorithm caveat). Deterministic: the
     * label is min(reachable ids), independent of iteration order.
@@ -398,98 +380,97 @@ object Dedup {
     * Contract: throws IllegalStateException if maxIter rounds don't reach
     * the fixpoint (silently returning split components would corrupt
     * downstream canonical-doc picks); raise maxIter for deep chains. The
-    * RETURNED DataFrame is persisted (it is the materialized fixpoint) —
-    * callers should `.unpersist()` it when done. Output: (id, component)
+    * RETURNED DataFrame is the materialized fixpoint, cached or pinned
+    * and owned by the caller's [[Pin.scope]]; every intermediate is freed
+    * before returning. Output: (id, component)
     * for every id occurring in `pairs`; callers left-join singletons back
     * if they need total coverage.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           checkpointEvery: Int = 4,
                           driverEdgeLimit: Long = 2000000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(checkpointEvery >= 0,
       s"checkpointEvery must be >= 0 (0 = off), got $checkpointEvery")
     require(driverEdgeLimit >= 0,
       s"driverEdgeLimit must be >= 0 (0 = always distributed), got " +
         driverEdgeLimit)
-    // reliable checkpoint when a dir is configured, executor-local
-    // otherwise — the trade-off documented in the contract note above
-    // (the rule is centralized in Pin since r18)
-    def truncate(df: DataFrame): DataFrame = Pin.eager(df)
-    // the pair lineage is typically expensive (an n-gram or LSH self-join)
-    // and the symmetric union below references it twice — persist it so
-    // edge materialization computes it once. If the CALLER already cached
-    // it, respect their cache and leave its lifecycle to them (persist
-    // returns the same Dataset, so unpersisting here would evict theirs).
-    val callerCached = pairs.storageLevel != StorageLevel.NONE
-    val p = if (callerCached) pairs
-      else pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    // Size-gated driver fast path: label propagation pays ~1 s of
-    // scheduler latency PER ROUND (join + agg + convergence action +
-    // periodic checkpoint — several multi-stage jobs) regardless of
-    // data size, so a small pair graph burns seconds of fixed cost on
-    // microseconds of work. Near-dup pair lists are usually small even
-    // when the corpus is not (they're threshold-filtered), so when the
-    // materialized pair count fits `driverEdgeLimit`, collect it and
-    // run union-find on the driver: identical output by construction
-    // (component label = min reachable id — union-by-min-root keeps
-    // exactly that invariant), deterministic under any edge order, and
-    // ~80 MB of driver arrays at the 2M default (well under any sane
-    // driver heap). Above the limit — the genuinely big graphs the
-    // operator exists for — the distributed loop below runs unchanged.
-    // The count is one cheap aggregate over the already-persisted pair
-    // frame the loop would materialize anyway. `driverEdgeLimit = 0`
-    // forces the distributed path (the lineage specs pin it).
-    val pairCount = p.count()
-    if (pairCount <= driverEdgeLimit) {
-      val rows = p.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .collect()
-      if (!callerCached) p.unpersist()
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](
-        math.max(16, rows.length * 2))
-      def find(x0: Long): Long = {
-        var x = x0
-        var px = parent.get(x).longValue()
-        while (px != x) {
-          val ppx = parent.get(px).longValue()
-          parent.put(x, ppx) // path halving
-          x = ppx
-          px = parent.get(x).longValue()
-        }
-        x
-      }
-      rows.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        parent.putIfAbsent(a, a)
-        parent.putIfAbsent(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val labelled = new Array[(Long, Long)](parent.size())
-      val it = parent.keySet().iterator()
-      var i = 0
-      while (it.hasNext) {
-        val id = it.next().longValue()
-        labelled(i) = (id, find(id))
-        i += 1
-      }
-      return labelled.toSeq.toDF("id", "comp")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    Pin.scoped {
+      // the pair lineage is typically expensive (an n-gram or LSH self-join)
+      // and the symmetric union below references it twice — cache it so
+      // edge materialization computes it once (a caller's cache is reused)
+      val p = Pin.cache(pairs)
+      // Size-gated driver fast path: label propagation pays ~1 s of
+      // scheduler latency PER ROUND (join + agg + convergence action +
+      // periodic checkpoint — several multi-stage jobs) regardless of
+      // data size, so a small pair graph burns seconds of fixed cost on
+      // microseconds of work. Near-dup pair lists are usually small even
+      // when the corpus is not (they're threshold-filtered), so when the
+      // materialized pair count fits `driverEdgeLimit`, collect it and
+      // run union-find on the driver: identical output by construction
+      // (component label = min reachable id — union-by-min-root keeps
+      // exactly that invariant), deterministic under any edge order, and
+      // ~80 MB of driver arrays at the 2M default (well under any sane
+      // driver heap). Above the limit — the genuinely big graphs the
+      // operator exists for — the distributed loop below runs unchanged.
+      // The count is one cheap aggregate over the already-cached pair
+      // frame the loop would materialize anyway. `driverEdgeLimit = 0`
+      // forces the distributed path (the lineage specs pin it).
+      if (p.count() <= driverEdgeLimit) unionFindLabels(p)
+      else propagateLabels(p, maxIter, checkpointEvery)
     }
+  }
+
+  /** [[connectedComponents]]' driver path: union-find over `p`. */
+  private def unionFindLabels(p: DataFrame): DataFrame = {
+    val rows = p.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .collect()
+    val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](
+      math.max(16, rows.length * 2))
+    def find(x0: Long): Long = {
+      var x = x0
+      var px = parent.get(x).longValue()
+      while (px != x) {
+        val ppx = parent.get(px).longValue()
+        parent.put(x, ppx) // path halving
+        x = ppx
+        px = parent.get(x).longValue()
+      }
+      x
+    }
+    rows.foreach { r =>
+      val a = r.getLong(0); val b = r.getLong(1)
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    val spark = p.sparkSession
+    import spark.implicits._
+    val labelled = new Array[(Long, Long)](parent.size())
+    val it = parent.keySet().iterator()
+    var i = 0
+    while (it.hasNext) {
+      val id = it.next().longValue()
+      labelled(i) = (id, find(id))
+      i += 1
+    }
+    Pin.cache(labelled.toSeq.toDF("id", "comp"))
+  }
+
+  /** [[connectedComponents]]' distributed path: label propagation. */
+  private def propagateLabels(p: DataFrame, maxIter: Int,
+                              checkpointEvery: Int): DataFrame = {
     // edges joins into EVERY round's plan — truncating its lineage here
-    // (one materialization, which the persist below pays anyway) keeps
+    // (one materialization, which the cache below pays anyway) keeps
     // the pair-generation plan from re-inlining into each round
     val edgesBase = p.select(col("id_a").as("s"), col("id_b").as("t"))
       .union(p.select(col("id_b").as("s"), col("id_a").as("t")))
     val edges =
-      if (checkpointEvery > 0) truncate(edgesBase)
-      else edgesBase.persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("s").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      if (checkpointEvery > 0) Pin.eager(edgesBase)
+      else Pin.cache(edgesBase)
+    var labels = Pin.cache(edges.select(col("s").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")))
     // ids are arbitrary longs; decimal(38,0) keeps the convergence sum
     // exact (a double would round above 2^53 and could miss a change);
     // empty input sums to SQL NULL -> ZERO
@@ -518,29 +499,26 @@ object Dedup {
         .agg(min(col("comp")).as("comp"))
       // eager checkpoint both materializes AND truncates lineage — the
       // round's labels become a leaf, so later rounds (and any replay)
-      // never re-walk the join chain behind it. persist() alone keeps
+      // never re-walk the join chain behind it. A cache alone keeps
       // the full logical plan. Reliable (dir-backed) when available;
       // executor-local otherwise — see the contract note above.
       val next =
         if (checkpointEvery > 0 && (iter + 1) % checkpointEvery == 0)
-          truncate(nextBase)
-        else nextBase.persist(StorageLevel.MEMORY_AND_DISK)
+          Pin.eager(nextBase)
+        else Pin.cache(nextBase)
       val curSum = labelSum(next)
-      labels.unpersist()
+      // rolling free: at most two rounds' labels are held at once
+      Pin.free(labels)
       labels = next
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       iter += 1
     }
-    edges.unpersist()
-    if (!callerCached) p.unpersist()
-    if (!converged) {
-      labels.unpersist()
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — a " +
           "component's diameter exceeds maxIter; raise it (labels would " +
           "be WRONG: one real component split into several ids)")
-    }
     labels
   }
 
@@ -609,9 +587,7 @@ object Dedup {
     * Ivf.fit. `expectedItems` sizes the filter (a stats estimate in a
     * real pipeline); overestimating costs bits, underestimating costs
     * false-positive rate, never correctness. The eval shingle set is
-    * persisted across its two uses (bloom build + verify join); callers
-    * running long-lived sessions should clearCache() between runs, as
-    * with the other fan-out operators.
+    * cached across its two uses (bloom build + verify join).
     */
   def bloomShingleContamination(corpus: DataFrame, eval: DataFrame,
                                 id: Column, text: Column, n: Int,
@@ -621,10 +597,9 @@ object Dedup {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     require(bitsPerItem > 0, s"bitsPerItem must be positive, got $bitsPerItem")
-    val evSh = eval
+    val evSh = Pin.cache(eval
       .select(explode(TextFunctions.wordShingles(text, n)).as("sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val bloomBytes = bloomOverShingles(evSh, expectedItems, bitsPerItem)
     val mightContain = ColumnBridge.column(BloomFilterMightContain(
       ColumnBridge.expression(lit(bloomBytes)),
@@ -684,9 +659,7 @@ object Dedup {
     * 8-byte longs) crosses the wire: one groupBy(fp) counts document
     * frequency, and the per-doc shared/total counts are fp- and
     * doc-keyed aggregates of that same exploded sample, which is
-    * persisted at its 3-way fan-out (same lifecycle contract as the
-    * other fan-out operators — clearCache() between runs in long-lived
-    * sessions). Fingerprints are FNV-1a engine hashes by default
+    * cached at its 3-way fan-out. Fingerprints are FNV-1a engine hashes by default
     * (`SigHash.Md5` gives the md5-hex variant, identical window
     * semantics, that answers an exact DuckDB oracle).
     */
@@ -700,9 +673,8 @@ object Dedup {
     // fingerprints, and a plain explode would drop it from the output
     // entirely (r7 advice) — the outer row carries fp=null and the doc
     // surfaces as (n_fp=0, n_shared=0, boilerplate_frac=0.0)
-    val fps = df.select(id.as("doc_id"),
-        explode_outer(array_distinct(fpArr)).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = Pin.cache(df.select(id.as("doc_id"),
+        explode_outer(array_distinct(fpArr)).as("fp")))
     // per-doc distinct fps (array_distinct above), so count per fp IS
     // the document frequency; null fps (fingerprint-less docs) must not
     // form a df group of their own
@@ -750,20 +722,15 @@ object Dedup {
     */
   private def hotSpanPositions(df: DataFrame, id: Column, text: Column,
                                n: Int, minCount: Long,
-                               hashShingles: Boolean,
-                               persistLineage: Boolean): DataFrame = {
+                               hashShingles: Boolean): DataFrame = {
     require(n >= 2, s"span length must be >= 2 tokens, got $n")
     require(minCount >= 2, s"minCount must be >= 2, got $minCount")
     val shingleKey =
       if (hashShingles) xxhash64(col("sh_text")) else col("sh_text")
-    val gramsRaw = df
+    val grams = Pin.cache(df
       .select(id.as("doc_id"),
         posexplode(TextFunctions.wordShingles(text, n)).as(Seq("pos", "sh_text")))
-      .select(col("doc_id"), col("pos"), shingleKey.as("sh"))
-    val grams =
-      if (persistLineage)
-        gramsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else gramsRaw
+      .select(col("doc_id"), col("pos"), shingleKey.as("sh")))
     val hot = grams.groupBy("sh").agg(count(lit(1)).as("__cnt"))
       .filter(col("__cnt") >= minCount).select("sh")
     grams.join(hot, Seq("sh"), "left_semi")
@@ -838,9 +805,8 @@ object Dedup {
     * left_semi-joined back; only the HOT positions (a small fraction of
     * the corpus by construction) reach the per-doc window that unions
     * overlapping spans via the lag-gap identity
-    * `covered = Σ min(n, pos - prev_pos)`. The gram stream persists at
-    * its 2-way fan-out (count + semi-join), same cache lifecycle
-    * contract as [[ngramJaccardPairs]].
+    * `covered = Σ min(n, pos - prev_pos)`. The gram stream is cached at
+    * its 2-way fan-out (count + semi-join), as in [[ngramJaccardPairs]].
     *
     * Output (all-integral, hash-stable for the DuckDB oracle):
     * (doc_id, n_tokens, n_dup_spans, dup_tokens) — every input doc
@@ -848,12 +814,10 @@ object Dedup {
     */
   def duplicateSpanStats(df: DataFrame, id: Column, text: Column,
                          n: Int = 8, minCount: Long = 2,
-                         hashShingles: Boolean = true,
-                         persistLineage: Boolean = true): DataFrame = {
+                         hashShingles: Boolean = true): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val covered = hotSpanPositions(df, id, text, n, minCount,
-        hashShingles, persistLineage)
+    val covered = hotSpanPositions(df, id, text, n, minCount, hashShingles)
       .withColumn("__prev", lag(col("pos"), 1).over(w))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_dup_spans"),
@@ -892,10 +856,8 @@ object Dedup {
     */
   def stripDuplicateSpans(df: DataFrame, id: Column, text: Column,
                           n: Int = 8, minCount: Long = 2,
-                          hashShingles: Boolean = true,
-                          persistLineage: Boolean = true): DataFrame = {
-    val starts = hotSpanPositions(df, id, text, n, minCount,
-        hashShingles, persistLineage)
+                          hashShingles: Boolean = true): DataFrame = {
+    val starts = hotSpanPositions(df, id, text, n, minCount, hashShingles)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("__starts"))
     df.select(id.as("doc_id"), text.as("__text"))
@@ -971,29 +933,24 @@ object Dedup {
   def minhashDedupPairs(df: DataFrame, id: Column, text: Column,
                         numHashes: Int = 128, shingleSize: Int = 5,
                         bands: Int = 32, minEstJaccard: Double = 0.5,
-                        persistLineage: Boolean = true,
                         hash: SigHash = SigHash.Engine): DataFrame = {
     // The signature lineage fans out 4 ways (both sides of the banding
-    // self-join + both est_jaccard lookups); without persist Spark
-    // recomputes the full minhash kernel per consumer. Same cache
-    // lifecycle note as ngramJaccardPairs.
-    val sigsRaw = minhashSignatures(df, id, text, numHashes, shingleSize, hash)
-    val sigs =
-      if (persistLineage)
-        sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigsRaw
+    // self-join + both est_jaccard lookups); without the cache Spark
+    // recomputes the full minhash kernel per consumer.
+    val sigs = Pin.cache(
+      minhashSignatures(df, id, text, numHashes, shingleSize, hash))
     minhashDedupPairsFromSigs(sigs, numHashes, bands, minEstJaccard, hash)
   }
 
   /** Within-corpus LSH pair generation over PRE-COMPUTED signatures — the
     * body of [[minhashDedupPairs]], split out (r18) so a caller that
-    * already holds a (persisted) signature frame — e.g. the incremental
+    * already holds a (cached or pinned) signature frame — e.g. the incremental
     * funnel, which needs the SAME signatures again for its cross-corpus
     * join — generates self-pairs without paying the per-row minhash
     * kernel a second time. `sigs` is a (doc_id, sig, n_sh) frame from
     * [[minhashSignatures]] under the same `hash`; it is referenced four
     * times here (both banding sides + both verification lookups), so the
-    * caller should persist it.
+    * caller should cache or pin it.
     */
   def minhashDedupPairsFromSigs(sigs: DataFrame, numHashes: Int, bands: Int,
                                 minEstJaccard: Double,
@@ -1040,13 +997,8 @@ object Dedup {
     */
   def minhashVerifiedPairs(df: DataFrame, id: Column, text: Column,
                            numHashes: Int = 128, shingleSize: Int = 3,
-                           bands: Int = 64, minJaccard: Double = 0.5,
-                           persistLineage: Boolean = true): DataFrame = {
-    val sigsRaw = minhashSignatures(df, id, text, numHashes, shingleSize)
-    val sigs =
-      if (persistLineage)
-        sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigsRaw
+                           bands: Int = 64, minJaccard: Double = 0.5): DataFrame = {
+    val sigs = Pin.cache(minhashSignatures(df, id, text, numHashes, shingleSize))
     val cands = selfBandCandidates(sigs, numHashes, bands, SigHash.Engine)
     // exact verification: distinct TEXT shingle sets joined onto the
     // (small) candidate pair set. The pair side broadcasts, so the
@@ -1090,23 +1042,15 @@ object Dedup {
   def minhashPairsAgainst(newSigs: DataFrame, refSigs: DataFrame,
                           numHashes: Int, bands: Int,
                           minEstJaccard: Double,
-                          persistLineage: Boolean = true,
                           hash: SigHash = SigHash.Engine): DataFrame = {
     // the REFERENCE side is consumed twice (banding + candidate
     // verification) and its lineage is typically the expensive half — a
     // full annotate/gate/minhash chain over the accumulated corpus when
     // no signature store is staged (dedup_incremental's shape) — so it
-    // is persisted here unless the caller already cached it (respect
-    // their lifecycle, the connectedComponents convention). The NEW side
-    // is also read twice, but every funnel caller hands in an
-    // already-persisted (or trivially derived) frame, so its lifecycle
-    // stays with the caller.
-    val refCached =
-      refSigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val ref =
-      if (persistLineage && !refCached)
-        refSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else refSigs
+    // is cached here (a caller's cache is reused). The NEW side is also
+    // read twice, but every funnel caller hands in an already-pinned (or
+    // trivially derived) frame.
+    val ref = Pin.cache(refSigs)
     val bn = lshBands(newSigs, numHashes, bands, hash)
     val cands = bandCandidates(lshBands(ref, numHashes, bands, hash), bn,
       sameBand && col("a.doc_id") =!= col("b.doc_id"))
@@ -1198,8 +1142,7 @@ object Dedup {
     // text)) and pushdown plants the HASH KERNEL inside each side's scan
     // Filter — 2 extra kernel evals per row per side (the lshBands
     // pushdown lesson; same persist convention as minhashDedupPairs)
-    val codes = simhash64(df, id, text, hash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val codes = Pin.cache(simhash64(df, id, text, hash))
     val blockVals = array((0 until 4).map { b =>
       shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xffffL))
     }: _*)

@@ -100,14 +100,9 @@ object Dsir {
                         targetText: Column, buckets: Int,
                         salt: String = "dsir",
                         portableHash: Boolean = true): DataFrame = {
-    val rawFeats = hashedFeatures(raw, id, text, buckets, salt, portableHash)
-      // fans out twice (bucket model fit + the scored join below).
-      // Never explicitly unpersisted — the returned frame is lazy, so
-      // there is no safe in-plan release point; repeat callers
-      // accumulate cache entries until LRU eviction (Bench bounds this
-      // with its per-pass clearCache — the repo's documented
-      // persist-and-leave convention for lazy fan-out queries)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // fans out twice (bucket model fit + the scored join below)
+    val rawFeats = Pin.cache(
+      hashedFeatures(raw, id, text, buckets, salt, portableHash))
     val targetFeats =
       hashedFeatures(target, targetId, targetText, buckets, salt, portableHash)
     val model = bucketModel(targetFeats, rawFeats)

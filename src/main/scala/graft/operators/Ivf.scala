@@ -292,17 +292,15 @@ object Ivf {
     */
   def fitDistributed(corpus: DataFrame, id: Column, vec: Column, nlist: Int,
                      maxIter: Int = 10, tol: Double = 1e-6, seed: Long = 42L,
-                     persistInput: Boolean = true,
                      quantScale: Double = 1e6): IvfModel = {
     require(nlist > 0, s"nlist must be positive, got $nlist")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    val vecsRaw = corpus
-      .select(id.cast("string").as("__kid"), vec.cast("array<double>").as("v"))
-      .filter(col("v").isNotNull)
-    val vecs = if (persistInput)
-      vecsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else vecsRaw
-    try {
+    // the input is read once per Lloyd round: cached for the fit, freed
+    // when it returns (the model holds driver values only)
+    Pin.scope {
+      val vecs = Pin.cache(corpus
+        .select(id.cast("string").as("__kid"), vec.cast("array<double>").as("v"))
+        .filter(col("v").isNotNull))
       val initRows = vecs
         .select(col("v"), md5(concat(col("__kid"), lit(s"#$seed"))).as("__h"))
         .orderBy(col("__h")) // TakeOrderedAndProject: nlist rows to driver
@@ -354,8 +352,6 @@ object Ivf {
       import spark.implicits._
       val rows = mat.toSeq.zipWithIndex.map { case (cn, i) => (i, cn) }
       IvfModel(rows.toDF("list_id", "centroid"), mat)
-    } finally {
-      if (persistInput) vecs.unpersist()
     }
   }
 

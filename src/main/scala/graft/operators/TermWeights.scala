@@ -25,14 +25,11 @@ import graft.functions.TextFunctions
   * (doc, token) aggregate of it; `df` is then derived from `tf` (count
   * of rows per token — already deduplicated), NOT from a second explode
   * of the corpus. `tf` fans out two ways (the score join and the df
-  * aggregate), so it is persisted by default — lineage-sharing alone
+  * aggregate), so it is cached ([[Pin.cache]]) — lineage-sharing alone
   * does not help here because Catalyst prunes the count from the df
   * branch's copy of the aggregate, making the two exchange subtrees
   * non-identical and hence non-reusable (observed: two full
-  * explode+agg passes without the persist). Same lifecycle contract as
-  * Dedup's `persistLineage`: no safe in-query unpersist point exists
-  * in a lazy plan, so long-lived sessions pass `persistTf = false` or
-  * `spark.catalog.clearCache()` between runs. The df aggregate keeps
+  * explode+agg passes without the cache). The df aggregate keeps
   * map-side partial combine (no hot-token skew: a token's rows
   * collapse before the shuffle), and the vocabulary-sized result
   * broadcasts (`broadcastVocab = true`, right up to ~100M-token
@@ -55,17 +52,12 @@ object TermWeights {
     */
   def tfidfTopTerms(df: DataFrame, id: Column, text: Column, k: Int,
                     weight: IdfWeight = RationalIdf,
-                    broadcastVocab: Boolean = true,
-                    persistTf: Boolean = true): DataFrame = {
+                    broadcastVocab: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val tok = df.select(id.as("doc_id"),
       explode(TextFunctions.tokens(text)).as("token"))
-    val tfUncached = tok.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val tf =
-      if (persistTf)
-        tfUncached.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tfUncached
+    val tf = Pin.cache(tok.groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf")))
     // df from the reduced tf table: one row per (doc, token) already
     val dfreq = tf.groupBy(col("token"))
       .agg(count(lit(1)).as("df"))

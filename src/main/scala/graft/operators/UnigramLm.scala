@@ -34,9 +34,7 @@ import graft.functions.TextFunctions
   * before the shuffle) and BROADCASTS back (vocabulary-sized, fine to
   * ~100M tokens; `broadcastVocab = false` falls back to a shuffle
   * join). `tf` fans out two ways (vocab aggregate + score join), so it
-  * is persisted by default — the TermWeights lineage-sharing argument;
-  * same lifecycle contract (`persistTf = false` or
-  * `spark.catalog.clearCache()` for long-lived sessions). The corpus
+  * is cached — the TermWeights lineage-sharing argument. The corpus
   * total N is a 1-row aggregate attached by broadcast. Per-doc
   * aggregation is an equi-shuffle on doc_id — documents are the
   * parallelism unit.
@@ -44,16 +42,11 @@ import graft.functions.TextFunctions
 object UnigramLm {
 
   def docUnigramStats(df: DataFrame, id: Column, text: Column,
-                      broadcastVocab: Boolean = true,
-                      persistTf: Boolean = true): DataFrame = {
+                      broadcastVocab: Boolean = true): DataFrame = {
     val tok = df.select(id.as("doc_id"),
       explode(TextFunctions.tokens(text)).as("token"))
-    val tfUncached = tok.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val tf =
-      if (persistTf)
-        tfUncached.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tfUncached
+    val tf = Pin.cache(tok.groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf")))
     val cfAgg = tf.groupBy(col("token")).agg(sum(col("tf")).as("cf"))
     val vocab = if (broadcastVocab) broadcast(cfAgg) else cfAgg
     val totals = tf.agg(sum(col("tf")).as("__n_total"))
@@ -106,27 +99,22 @@ object UnigramLm {
     * the vocab table itself (corpus never re-scanned), and the scored
     * join broadcasts the vocabulary back (`broadcastVocab = false` for
     * a shuffle join when the bigram vocab outgrows broadcast). `tf`
-    * fans out (vocab + score join) and is persisted by default.
+    * fans out (vocab + score join) and is cached.
     */
   def docBigramStats(df: DataFrame, id: Column, text: Column,
                      lambda: Double = 0.75,
-                     broadcastVocab: Boolean = true,
-                     persistTf: Boolean = true): DataFrame = {
+                     broadcastVocab: Boolean = true): DataFrame = {
     require(lambda > 0.0 && lambda <= 1.0, s"lambda must be in (0,1]: $lambda")
     val grams = df.select(id.as("doc_id"),
       explode(TextFunctions.wordShingles(text, 2)).as("gram"))
-    val tfUncached = grams.groupBy(col("doc_id"), col("gram"))
-      .agg(count(lit(1)).as("tf"))
-    val tf =
-      if (persistTf)
-        tfUncached.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tfUncached
+    val tf = Pin.cache(grams.groupBy(col("doc_id"), col("gram"))
+      .agg(count(lit(1)).as("tf")))
     val cf2 = tf.groupBy(col("gram")).agg(sum(col("tf")).as("cf2"))
       .withColumn("__w1", substring_index(col("gram"), " ", 1))
       .withColumn("__w2", substring_index(col("gram"), " ", -1))
-    // both marginals are groupBys of the VOCAB-SIZED cf2 table; persist
+    // both marginals are groupBys of the VOCAB-SIZED cf2 table; cache
     // it across its 3-way fan-out (left, right, score join)
-    val cf2P = cf2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cf2P = Pin.cache(cf2)
     val leftM = cf2P.groupBy(col("__w1")).agg(sum(col("cf2")).as("left_n"))
     val rightM = cf2P.groupBy(col("__w2")).agg(sum(col("cf2")).as("right_n"))
     val vocabAll = cf2P

@@ -3,8 +3,8 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Pin
 import graft.sinks.{Contract, ParquetSink, Reconcile, ServingSink}
 
 /** Shared pipeline machinery mirroring the reference's orchestration
@@ -82,9 +82,11 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
 
   /** O7: sibling stages run at once, each branch on its own thread
     * carrying the caller's Spark local properties (job group, job
-    * description, scheduler pool) and active session. Returns only after
-    * every branch has finished, so `persisted(df) { m => parallel(...) }`
-    * never unpersists under a live reader. `stage`/`guard` failures inside
+    * description, scheduler pool), active session and open
+    * [[graft.operators.Pin.scope]]s, so what a branch caches is owned by
+    * the forking scope. Returns only after every branch has finished, so
+    * `persisted(df) { m => parallel(...) }` never frees under a live
+    * reader. `stage`/`guard` failures inside
     * a branch stay recorded and isolated (O2); a branch's uncaught
     * throwable is rethrown after the join — the first in declaration
     * order, the others suppressed onto it. Each call owns its threads, so
@@ -92,6 +94,7 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
     */
   def parallel(branches: (() => Unit)*): Unit = {
     val outer = buffer.get
+    val scopes = Pin.openScopes
     val threads = java.util.concurrent.Executors.newCachedThreadPool()
     try {
       val running = branches.map { branch =>
@@ -100,7 +103,8 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
             spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
             threads) {
           buffer.set(own)
-          try { branch(); None } catch { case e: Throwable => Some(e) }
+          try { Pin.adopt(scopes)(branch()); None }
+          catch { case e: Throwable => Some(e) }
         }
       }
       val errors = running.flatMap(_._2.join())
@@ -316,9 +320,8 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
     if (!df.columns.exists(_.equalsIgnoreCase(column))) 0L
     else df.agg(coalesce(sum(col(column)), lit(0L)).cast("long")).first().getLong(0)
 
-  /** O6 fix: persist a lineage that feeds several tables. */
-  def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(df) finally { df.unpersist(); () }
-  }
+  /** O6 fix: cache a lineage that feeds several tables, in one scope
+    * with whatever `body` caches. */
+  def persisted[T](df: DataFrame)(body: DataFrame => T): T =
+    Pin.scope(body(Pin.cache(df)))
 }

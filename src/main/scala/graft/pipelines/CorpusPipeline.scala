@@ -98,49 +98,25 @@ object CorpusPipeline {
     * one banded equi-join against a signature table (a few hundred bytes
     * per accumulated doc), not a re-scan of the accumulated text.
     *
-    * Both returned frames share pinned intermediates, whose blocks live
-    * until the frames are garbage-collected ([[curateIncrementManaged]]
-    * hands them back for an explicit free).
+    * Both returned frames read the funnel's pins and the ref side's
+    * cache, all owned by the caller's [[Pin.scope]]: materialize both
+    * results inside it (the streaming loop runs one scope per batch).
     */
   def curateIncrement(newDocs: DataFrame, refSigs: DataFrame,
                       cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val (curated, keptSigs, _) = curateIncrementManaged(newDocs, refSigs, cfg)
-    (curated, keptSigs)
-  }
-
-  /** [[curateIncrement]] plus handles to the funnel's pinned and
-    * persisted intermediates, for callers that own a long-lived session
-    * (e.g. the streaming loop) and must free them with [[Pin.free]]
-    * after materializing both results: the funnel's four pins hold
-    * blocks until freed, and the ref side's `persist` a cache-manager
-    * plan entry that an RDD-level unpersist would leak — one leaked
-    * entry per batch, scanned by every subsequent query's cache lookup.
-    *
-    * Free order matters only for the ref side's persist, the one cache
-    * entry left: unpersisting a frame that other cached frames are built
-    * on makes the cache manager walk and re-examine each of them. The
-    * pins are leaves the cache manager never sees, so the ref handle
-    * comes last and drops with no dependent entry to walk.
-    */
-  def curateIncrementManaged(newDocs: DataFrame, refSigs: DataFrame,
-                             cfg: Config = Config()): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    // persist the ref side HERE (not inside minhashPairsAgainst, which
-    // would also do it) so the handle rides the managed seq and the
-    // streaming loop can free it per batch; a caller-cached ref is
-    // respected, matching the operator's own convention
-    import org.apache.spark.storage.StorageLevel
-    val refCached = refSigs.storageLevel != StorageLevel.NONE
-    val ref = if (refCached) refSigs
-      else refSigs.persist(StorageLevel.MEMORY_AND_DISK)
-    val (curated, keptSigs, pinned) = curateAgainst(newDocs, cfg)(sigs =>
+    // cache the ref side FIRST so the scope frees it LAST: unpersisting
+    // a frame that other cached frames are built on makes the cache
+    // manager walk and re-examine each of them, and the pins registered
+    // after it are leaves the cache manager never sees
+    val ref = Pin.cache(refSigs)
+    curateAgainst(newDocs, cfg)(sigs =>
       Dedup.minhashPairsAgainst(sigs, ref,
         cfg.numHashes, cfg.bands, cfg.minEstJaccard, hash = cfg.hash))
-    (curated, keptSigs, if (refCached) pinned else pinned :+ ref)
   }
 
   /** The shared incremental funnel: gate → exact dedup + signatures →
     * self-pairs → cross-pairs (strategy supplied by the caller) → prune
-    * → enrich. Returns (curated, keptSigs, the funnel's pins).
+    * → enrich. Returns (curated, keptSigs).
     *
     * Each stage that more than one consumer reads is an eager [[Pin]]:
     * four small jobs, each planned over the leaves of the stage before
@@ -151,7 +127,7 @@ object CorpusPipeline {
     * broadcasting the thresholded pair lists.
     */
   private def curateAgainst(newDocs: DataFrame, cfg: Config)(
-      crossPairsOf: DataFrame => DataFrame): (DataFrame, DataFrame, Seq[DataFrame]) = {
+      crossPairsOf: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val gated = Pin.eager(qualityGate(annotate(newDocs), cfg))
     // the exact survivors, planned once, each row carrying its MinHash
     // signature (a pure per-row function of the text): the self-LSH
@@ -173,8 +149,7 @@ object CorpusPipeline {
     // keeps the cross-corpus band join from running once per consumer
     val clean = Pin.eager(Dedup.applyPairDedup(selfClean, col("doc_id"),
       crossPairsOf(selfClean)))
-    (enrich(clean.drop("sig", "n_sh"), cfg), clean.select("doc_id", "sig", "n_sh"),
-      Seq(clean, selfPairs, exactSigs, gated))
+    (enrich(clean.drop("sig", "n_sh"), cfg), clean.select("doc_id", "sig", "n_sh"))
   }
 
   /** Stage a day's kept signatures as the accumulated signature STORE —
@@ -242,18 +217,17 @@ object CorpusPipeline {
   def curateIncrementFromStore(newDocs: DataFrame, table: String,
                                cfg: Config = Config()): (DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
-    val (curated, keptSigs, _) = curateAgainst(newDocs, cfg)(sigs =>
+    curateAgainst(newDocs, cfg)(sigs =>
       Dedup.minhashPairsAgainstBanded(sigs, spark.table(s"${table}_banded"),
         spark.table(table), cfg.numHashes, cfg.bands, cfg.minEstJaccard,
         cfg.hash))
-    (curated, keptSigs)
   }
 
   /** Full run, staged to parquet; returns per-stage row counts. */
   def run(ctx: PipelineContext, docs: DataFrame,
           cfg: Config = Config()): Map[String, Long] = {
     // gated feeds exactDuplicateIds (twice: keep + join) AND the anti-join
-    // left side — without persist the annotate filters (HOF langId etc.)
+    // left side — without the cache the annotate filters (HOF langId etc.)
     // run 3x; same for the exact-deduped lineage feeding LSH + anti-join
     ctx.persisted(qualityGate(annotate(docs), cfg)) { gated =>
       val exact = exactDedup(gated)

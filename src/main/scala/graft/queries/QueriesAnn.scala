@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fingerprint, Fnv64, LogParse, TextFunctions, Timestamps, VectorFunctions}
-import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Sampling, Similarity}
+import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Pin, Sampling, Similarity}
 import graft.sources.Tables
 
 import QueryHelpers._
@@ -387,8 +387,8 @@ private[graft] object QueriesAnn {
           col("n")).cast("long").as("m"))
         .collect()
       val m: Seq[Long] = mRows.sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
-      val y = q.select(col("vec_id"),
-        zip_with(col("q"), typedLit(m), (a, b) => a - b).as("y")).persist()
+      val y = Pin.cache(q.select(col("vec_id"),
+        zip_with(col("q"), typedLit(m), (a, b) => a - b).as("y")))
       var v: Seq[Long] = Seq.fill(m.length)(1024L)
       for (_ <- 1 to 3) {
         val sCol = aggregate(zip_with(col("y"), typedLit(v),
@@ -636,13 +636,13 @@ private[graft] object QueriesAnn {
       // the 2000-vector exact window (two consumers). The checkpointed
       // frames are the small thresholded outputs, never the candidate
       // fan-out.
-      val approx = graft.operators.Pin.eager(
+      val approx = Pin.eager(
         SemDedup.nearDupPairsIvf(corpus, col("vec_id"),
           col("embedding"), minCosine = 0.5, nlist = op.nlist, nprobe = 4))
       val truth = embs.filter(col("vec_id") < 500L)
         .select(col("vec_id").as("query_id"),
           (col("vec_id") + lit(1000000000L)).as("neighbor_id"))
-      val exactWindow = graft.operators.Pin.eager(
+      val exactWindow = Pin.eager(
         Dedup.embeddingNearDupPairs(
           embs.filter(col("vec_id") < 2000L), col("vec_id"),
           col("embedding"), minCosine = 0.5, dim = 64, bits = 0, bands = 1)
@@ -699,11 +699,11 @@ private[graft] object QueriesAnn {
           col("vec_id"), col("embedding"), minCosine = tau,
           nlist = p.nlist, nprobe = 4))
       }
-      val approx = graft.operators.Pin.eager(approx0)
+      val approx = Pin.eager(approx0)
       val truth = embs.filter(col("vec_id") < 500L)
         .select(col("vec_id").as("query_id"),
           (col("vec_id") + lit(1000000000L)).as("neighbor_id"))
-      val exactWindow = graft.operators.Pin.eager(
+      val exactWindow = Pin.eager(
         D.embeddingNearDupPairs(
           embs.filter(col("vec_id") < 2000L), col("vec_id"),
           col("embedding"), minCosine = tau, dim = 64, bits = 0, bands = 1)
@@ -899,15 +899,15 @@ private[graft] object QueriesAnn {
       // subspace — at 8 subspaces the per-job scheduler latency was
       // the whole cost (10.4 s → ~4 s at sf0.1), and one corpus pass
       // for all m sub-fits is the shape a real PQ fit wants anyway
-      val sv = embs.select(col("vec_id"), quantized(col("embedding")).as("q"))
+      val sv = Pin.cache(embs
+        .select(col("vec_id"), quantized(col("embedding")).as("q"))
         .select(col("vec_id"), posexplode(array((0 until m).map(j =>
           struct(lit(j).as("j"),
             slice(col("q"), j * sub + 1, sub).as("v"),
             md5(concat(col("vec_id").cast("string"), lit(s"#pq13s$j")))
               .as("h"))): _*)).as(Seq("__i", "s")))
         .select(col("vec_id"), col("s.j").as("j"), col("s.v").as("v"),
-          col("s.h").as("h"))
-        .persist()
+          col("s.h").as("h")))
       val w = org.apache.spark.sql.expressions.Window
       // md5-rank seeds, all subspaces in one action
       val seedRows = sv
@@ -1255,7 +1255,7 @@ private[graft] object QueriesAnn {
       // so the two references planned the whole docUnigramStats subtree
       // twice per run (r18, guide §2.4); the eager pin materializes the
       // small (n_docs-row) stats frame once and hands both passes a leaf.
-      val stats = graft.operators.Pin.eager(
+      val stats = Pin.eager(
         UnigramLm.docUnigramStats(t(s, dir, "documents"),
           col("doc_id"), col("text"))
           .select(col("doc_id"), col("mean_freq")))

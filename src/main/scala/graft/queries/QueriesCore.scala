@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fingerprint, Fnv64, LogParse, TextFunctions, Timestamps, VectorFunctions}
-import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Sampling, Similarity}
+import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Pin, Sampling, Similarity}
 import graft.sources.Tables
 
 import QueryHelpers._
@@ -136,16 +136,10 @@ private[graft] object QueriesCore {
       // Rows-only (the sketch layout is engine-specific) — the exact
       // side is covered by the vocabulary oracles.
       import graft.functions.Kernels
-      val toks = t(s, dir, "documents")
+      // fans out 3 ways (exact counts, top terms, sketches)
+      val toks = Pin.cache(t(s, dir, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-        // fans out 3 ways (exact counts, top terms, sketches). The
-        // persist is never explicitly released — a lazy query has no
-        // safe in-plan unpersist point — so repeated re-registration
-        // accumulates entries until LRU eviction; Bench's per-pass
-        // clearCache() is what bounds it there (documented convention,
-        // same as Dsir.importanceWeights)
-        .persist()
+        .filter(length(col("term")) > 0))
       val exact = toks.groupBy(col("source"), col("term"))
         .agg(count(lit(1)).as("n_exact"))
       val top = toks.groupBy(col("term"))

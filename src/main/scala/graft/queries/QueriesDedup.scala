@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fingerprint, Fnv64, LogParse, SigHash, TextFunctions, Timestamps, VectorFunctions}
-import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Sampling, Similarity}
+import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Pin, Sampling, Similarity}
 import graft.sources.Tables
 
 import QueryHelpers._
@@ -995,21 +995,21 @@ private[graft] object QueriesDedup {
       import graft.operators.BloomIndex
       val orders = t(s, dir, "orders")
       val chunkCol = expr("CAST(o_orderkey DIV 256 AS BIGINT)")
-      // persist the shared frames: the audit references the index,
+      // cache the shared frames: the audit references the index,
       // candidates and truth 2-3 times each, and without pinning them
       // the plan re-scans orders four times (measured — ReuseExchange
       // does not fire across the differently-aliased subtrees). All
       // three are index-sized, not table-sized.
-      val index = BloomIndex.build(orders, chunkCol, col("o_custkey"),
-        3, 4096).persist()
+      val index = Pin.cache(BloomIndex.build(orders, chunkCol,
+        col("o_custkey"), 3, 4096))
       val probes = Seq("7", "42", "137", "999", "1250",
         "100007", "100042", "100137").toDF("probe_key")
-      val cand = BloomIndex.candidates(index, probes, col("probe_key"),
-        3, 4096).persist()
-      val truth = orders
+      val cand = Pin.cache(BloomIndex.candidates(index, probes,
+        col("probe_key"), 3, 4096))
+      val truth = Pin.cache(orders
         .select(chunkCol.as("chunk"),
           col("o_custkey").cast("string").as("probe_key"))
-        .join(broadcast(probes), Seq("probe_key")).distinct().persist()
+        .join(broadcast(probes), Seq("probe_key")).distinct())
       val candCnt = cand.groupBy("probe_key")
         .agg(count(lit(1)).as("n_candidates"))
       val trueCnt = truth.groupBy("probe_key").agg(count(lit(1)).as("n_true"))

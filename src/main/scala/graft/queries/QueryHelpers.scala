@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fingerprint, Fnv64, LogParse, TextFunctions, Timestamps, VectorFunctions}
-import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Sampling, Similarity}
+import graft.operators.{Dedup, Explodes, Flatten, Multimodal, Pin, Sampling, Similarity}
 import graft.sources.Tables
 
 /** Shared plumbing behind the [[graft.SparkEntry]] query registry —
@@ -176,6 +176,8 @@ private[graft] object QueryHelpers {
     bm25IndexCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir, weight.getClass.getSimpleName), {
         import graft.operators.Bm25
+        // the one raw persist in src/main: an application-lifetime
+        // memo, which no query scope may own (and free under later reads)
         val idx = Bm25.bm25Index(Tables.load(s, dir, "documents"),
             col("doc_id"), col("text"), k1 = 1.2, b = 0.75, weight = weight)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -398,7 +400,7 @@ private[graft] object QueryHelpers {
                                   dir: String): (DataFrame, Array[Seq[Long]]) =
     integerLloydCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir),
-      integerLloydFit(s, dir, keepPersisted = true))
+      integerLloydFit(s, dir))
 
   private[graft] def integerLloydAssigned(s: SparkSession, dir: String): DataFrame =
     integerLloydFitMemo(s, dir)._1
@@ -407,22 +409,17 @@ private[graft] object QueryHelpers {
     * the probe-side queries (`ann_ivf_topk_portable`) rank centroids
     * exactly like the fit's assignment step did.
     *
-    * `keepPersisted` — the quantized frame `q` backs the fit's 3
-    * driver actions (seed collect + 2 centroid updates) and MUST be
-    * cached for them; whether it stays cached afterwards is the
-    * caller's lifetime decision. The memoized path passes true (one
-    * pinned frame per application, shared by every twin). The default
-    * false unpersists q before returning so an unmemoized call
-    * (`kmeans_profile_portable` — deliberately re-fits, it IS the
-    * fit's bench entry) never leaks a cached frame per invocation;
-    * the returned assignment then lazily re-derives q (one scan +
-    * quantize) on its single downstream action.
+    * The quantized frame `q` backs the fit's 3 driver actions (seed
+    * collect + 2 centroid updates) and is cached for them, owned by the
+    * calling query's scope; the returned assignment is lazy over `q`,
+    * so a consumer outside that scope (the memo's later readers)
+    * re-derives it (one scan + quantize) on its downstream action.
     */
-  private[graft] def integerLloydFit(s: SparkSession, dir: String,
-      keepPersisted: Boolean = false): (DataFrame, Array[Seq[Long]]) = {
+  private[graft] def integerLloydFit(s: SparkSession,
+                                     dir: String): (DataFrame, Array[Seq[Long]]) = {
     val embs = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-    val q = embs.select(col("vec_id"), quantized(col("embedding")).as("q"))
-      .persist()
+    val q = Pin.cache(
+      embs.select(col("vec_id"), quantized(col("embedding")).as("q")))
     val seedRows = q.select(col("q"),
         md5(concat(col("vec_id").cast("string"), lit("#kp13"))).as("h"))
       .orderBy(col("h")).limit(8).collect()
@@ -456,7 +453,6 @@ private[graft] object QueryHelpers {
       }
       cents = next.map(_.toSeq)
     }
-    if (!keepPersisted) q.unpersist(blocking = false)
     (assigned.select(col("vec_id"), col("q"), col("list_id"), col("dist")),
       cents)
   }

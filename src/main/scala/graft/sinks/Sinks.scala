@@ -165,43 +165,45 @@ object ParquetSink {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val part = spark.read.format(format).load(path)
       .filter(org.apache.spark.sql.functions.col(partitionCol) === partitionValue)
-    // localCheckpoint CUTS the lineage: Spark (rightly) refuses to
-    // overwrite a path its write plan still reads from. The partition is
-    // materialized to executor block storage for the duration — fine for
-    // a per-partition maintenance pass (one partition, not the table).
-    val compacted = part.repartition(targetFiles).localCheckpoint(true)
-    val rows = compacted.count()
-    if (rows > 0) {
-      // row-preserving rewrite: keep the zone-map file fingerprint (if
-      // the table keeps stats) in step so the next attach doesn't read
-      // the compaction as an out-of-band append; the pre-write
-      // snapshot guards the tripwire (an already-stale fingerprint
-      // stays stale)
-      val dirName = partitionCol + "=" + org.apache.spark.sql.catalyst
-        .catalog.ExternalCatalogUtils.escapePathName(partitionValue)
-      val snapshot = graft.plans.ZoneMapPruning.fingerprintSnapshot(
-        spark, path, Seq(dirName))
-      write(compacted, path, SaveMode.Overwrite,
-        partitionBy = Seq(partitionCol), format = format)
-      // own-output accounting for the refresh's fresh-coming-out check:
-      // this listing is taken the moment the overwrite commits, so an
-      // out-of-band append racing the (job-sized) fingerprint refresh
-      // is caught by the listing disagreement and keeps the fingerprint
-      // stale; only the commit→this-listStatus instant remains exposed
-      // (a filesystem without transactions can't close it entirely)
-      val expected = graft.plans.ZoneMapPruning.fingerprintSnapshot(
-        spark, path, Seq(dirName))
-      // best-effort bookkeeping (see compactPartitioned): never undo a
-      // completed rewrite over a fingerprint refresh failure
-      try graft.plans.ZoneMapPruning.refreshFileFingerprints(spark, path,
-        Seq(dirName), snapshot, expected)
-      catch { case e: Exception =>
-        System.err.println(s"[compactPartition] zone-map fingerprint " +
-          s"refresh failed for $path (rewrite is intact; repair via " +
-          s"ZoneMapPruning.rederiveBucket): ${e.getMessage}")
+    // a pin CUTS the lineage: Spark (rightly) refuses to overwrite a
+    // path its write plan still reads from. The partition is held for
+    // the duration of the rewrite and freed after it — fine for a
+    // per-partition maintenance pass (one partition, not the table).
+    graft.operators.Pin.scope {
+      val compacted = graft.operators.Pin.eager(part.repartition(targetFiles))
+      val rows = compacted.count()
+      if (rows > 0) {
+        // row-preserving rewrite: keep the zone-map file fingerprint (if
+        // the table keeps stats) in step so the next attach doesn't read
+        // the compaction as an out-of-band append; the pre-write
+        // snapshot guards the tripwire (an already-stale fingerprint
+        // stays stale)
+        val dirName = partitionCol + "=" + org.apache.spark.sql.catalyst
+          .catalog.ExternalCatalogUtils.escapePathName(partitionValue)
+        val snapshot = graft.plans.ZoneMapPruning.fingerprintSnapshot(
+          spark, path, Seq(dirName))
+        write(compacted, path, SaveMode.Overwrite,
+          partitionBy = Seq(partitionCol), format = format)
+        // own-output accounting for the refresh's fresh-coming-out check:
+        // this listing is taken the moment the overwrite commits, so an
+        // out-of-band append racing the (job-sized) fingerprint refresh
+        // is caught by the listing disagreement and keeps the fingerprint
+        // stale; only the commit→this-listStatus instant remains exposed
+        // (a filesystem without transactions can't close it entirely)
+        val expected = graft.plans.ZoneMapPruning.fingerprintSnapshot(
+          spark, path, Seq(dirName))
+        // best-effort bookkeeping (see compactPartitioned): never undo a
+        // completed rewrite over a fingerprint refresh failure
+        try graft.plans.ZoneMapPruning.refreshFileFingerprints(spark, path,
+          Seq(dirName), snapshot, expected)
+        catch { case e: Exception =>
+          System.err.println(s"[compactPartition] zone-map fingerprint " +
+            s"refresh failed for $path (rewrite is intact; repair via " +
+            s"ZoneMapPruning.rederiveBucket): ${e.getMessage}")
+        }
       }
+      rows
     }
-    rows
   }
 
   /** Bucketed catalog table: pre-shuffles once at write time so that

@@ -189,21 +189,23 @@ object Streams {
                              trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val hPath = new org.apache.hadoop.fs.Path(sigStorePath)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // empty-store bootstrap: derive the signature schema from an
-        // empty slice of the batch instead of hand-declaring it
-        val refSigs =
-          if (fs.exists(hPath) &&
-              fs.listStatus(hPath).exists(_.getPath.getName.endsWith(".parquet")))
-            spark.read.parquet(sigStorePath)
-          else graft.operators.Dedup.minhashSignatures(batch.toDF().limit(0),
-            col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, cfg.hash)
-        val (curated, keptSigs, handles) =
-          graft.pipelines.CorpusPipeline.curateIncrementManaged(
-            batch.toDF(), refSigs, cfg)
-        try {
+        // one scope per batch: the funnel's pins and the ref side's
+        // cache are freed when the batch's two appends are done, so no
+        // cache state carries from one batch to the next
+        graft.operators.Pin.scope {
+          val spark = batch.sparkSession
+          val hPath = new org.apache.hadoop.fs.Path(sigStorePath)
+          val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          // empty-store bootstrap: derive the signature schema from an
+          // empty slice of the batch instead of hand-declaring it
+          val refSigs =
+            if (fs.exists(hPath) &&
+                fs.listStatus(hPath).exists(_.getPath.getName.endsWith(".parquet")))
+              spark.read.parquet(sigStorePath)
+            else graft.operators.Dedup.minhashSignatures(batch.toDF().limit(0),
+              col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, cfg.hash)
+          val (curated, keptSigs) = graft.pipelines.CorpusPipeline
+            .curateIncrement(batch.toDF(), refSigs, cfg)
           graft.sinks.ParquetSink.write(curated, curatedPath,
             org.apache.spark.sql.SaveMode.Append)
           // signatures append AFTER the curated write, to the same path
@@ -212,14 +214,6 @@ object Streams {
           // and see the replay-semantics note for why this order
           graft.sinks.ParquetSink.write(keptSigs, sigStorePath,
             org.apache.spark.sql.SaveMode.Append)
-        } finally {
-          // free this batch's pins and the ref side's persist: pinned
-          // blocks would otherwise accumulate per batch for the stream's
-          // lifetime, and the persist's cache-manager plan entry would
-          // slow every cache lookup (Pin.free unpersists it through the
-          // DATASET handle, which removes the entry; an RDD-level
-          // unpersist would not)
-          handles.foreach(graft.operators.Pin.free)
         }
       }
       .option("checkpointLocation", checkpointDir)

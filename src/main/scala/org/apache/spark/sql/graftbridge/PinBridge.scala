@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -14,7 +15,8 @@ import org.apache.spark.storage.RDDBlockId
   * pattern as [[ColumnBridge]]) re-exposes what `graft.operators.Pin`
   * needs to give the leaf a measured size and to release it: the
   * leaf's RDD, the bytes the block manager stores for an RDD, a quiet
-  * release of those blocks, and a copy of the leaf with new statistics.
+  * release of those blocks, and a copy of the leaf with new statistics;
+  * and, for `graft.PlanDump`'s pin plans, a drain of the listener bus.
   * No Spark internals are modified.
   */
 object PinBridge {
@@ -38,6 +40,13 @@ object PinBridge {
       })
     if (sizes.isEmpty) None else Some(sizes.sum)
   }
+
+  /** Block until every event posted so far has reached its listeners:
+    * `graft.PlanDump` reads the plans of pin jobs through a
+    * `QueryExecutionListener`, which the listener bus calls
+    * asynchronously.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Drop `rdd`'s stored blocks without blocking. Unlike `RDD.unpersist`
     * this logs no warning for a locally checkpointed RDD: the pin that

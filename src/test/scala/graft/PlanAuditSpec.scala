@@ -187,6 +187,7 @@ class PlanAuditSpec extends SparkTestBase {
   test("bucketed signature store: band join plans no store-side exchange") {
     import TestSpark.spark.implicits._
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     import graft.pipelines.CorpusPipeline
@@ -236,22 +237,23 @@ class PlanAuditSpec extends SparkTestBase {
 
       // contrast: the same join against a NON-bucketed reference must
       // shuffle the store side — bucketing is what removes the exchange.
-      // persistLineage=false so the ref side stays a visible
-      // FileSourceScan (the default persist (r18) would wrap it in an
-      // InMemoryRelation and hide the scan this path-check walks to)
-      val unbucketed = Dedup.minhashPairsAgainst(newSigs, spark.table(table),
-        cfg.numHashes, cfg.bands, minEstJaccard = 0.5,
-        persistLineage = false)
+      // The operator caches the ref side, so the path walks into the
+      // InMemoryTableScan's cached plan down to the FileSourceScan
       def pathToRawScan(p: SparkPlan): Option[List[SparkPlan]] = p match {
         case s: FileSourceScanExec
             if s.tableIdentifier.exists(_.table == table) => Some(List(s))
+        case m: InMemoryTableScanExec =>
+          pathToRawScan(m.relation.cachedPlan).map(m :: _)
         case _ => p.children.view.flatMap(pathToRawScan).headOption
           .map(p :: _)
       }
       // the raw table is scanned twice (banding + sig lookup); the banding
       // path is the one feeding the first join
-      val upath = pathToRawScan(unbucketed.queryExecution.executedPlan)
-        .getOrElse(fail("no scan of the raw store in the plan"))
+      val upath = graft.operators.Pin.scope {
+        val unbucketed = Dedup.minhashPairsAgainst(newSigs, spark.table(table),
+          cfg.numHashes, cfg.bands, minEstJaccard = 0.5)
+        pathToRawScan(unbucketed.queryExecution.executedPlan)
+      }.getOrElse(fail("no scan of the raw store in the plan"))
       val ubelow = upath.drop(upath.lastIndexWhere(isJoin) + 1)
       assert(ubelow.exists(_.isInstanceOf[ShuffleExchangeExec]),
         upath.mkString("\n"))

@@ -43,7 +43,7 @@ class Bm25Spec extends SparkTestBase {
   private def indexMap(weight: TermWeights.IdfWeight,
                        k1: Double = 1.2, b: Double = 0.75) =
     Bm25.bm25Index(tiny, col("doc_id"), col("text"), k1 = k1, b = b,
-      weight = weight, persistTf = false)
+      weight = weight)
       .select("doc_id", "token", "score").as[(Long, String, Double)]
       .collect().map(r => ((r._1, r._2), r._3)).toMap
 
@@ -78,8 +78,7 @@ class Bm25Spec extends SparkTestBase {
   }
 
   test("search ranks by summed matched weights, ties on doc_id") {
-    val idx = Bm25.bm25Index(tiny, col("doc_id"), col("text"),
-      persistTf = false)
+    val idx = Bm25.bm25Index(tiny, col("doc_id"), col("text"))
     val queries = Seq((10L, "cat mile"), (20L, "dog"),
       (30L, "unicorn"), (40L, "cat cat")).toDF("qid", "qtext")
     val got = Bm25.bm25Search(idx, queries, col("qid"), col("qtext"), k = 2)

@@ -358,7 +358,7 @@ class DedupSpec extends SparkTestBase {
     ).toDF("source", "text")
     for (hashed <- Seq(true, false)) {
       val got = Dedup.sourceJaccardExact(docs, col("source"), col("text"),
-          n = 3, hashShingles = hashed, persistLineage = false)
+          n = 3, hashShingles = hashed)
         .collect()
         .map(r => (r.getString(0), r.getString(1)) ->
           ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
@@ -380,7 +380,7 @@ class DedupSpec extends SparkTestBase {
     val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001",
       "documents")
     val exact = Dedup.sourceJaccardExact(docs, col("source"), col("text"),
-        n = 3, persistLineage = false)
+        n = 3)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(4)).toMap
     val sigs = Dedup.minhashSignatures(docs, col("doc_id"), col("text"),
         numHashes = 64, shingleSize = 3)

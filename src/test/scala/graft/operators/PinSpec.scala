@@ -8,7 +8,8 @@ import graft.SparkTestBase
 /** The shared eager-pin helper: result identity, lineage truncation, the
   * reliable-vs-local checkpoint switch (r18 — the escape hatch every
   * former hard-coded `localCheckpoint(true)` site now routes through),
-  * the measured size the pinned leaf carries, and `Pin.free`.
+  * the measured size the pinned leaf carries, and `Pin.free` (the only
+  * release of a pin). Scope ownership is [[ScopeSpec]]'s.
   */
 class PinSpec extends SparkTestBase {
 
@@ -118,6 +119,21 @@ class PinSpec extends SparkTestBase {
         System.nanoTime() < deadline) Thread.sleep(50)
     assert(PinBridge.storedBytes(PinBridge.leafRdd(pinned).get).isEmpty,
       "freed pin's blocks are still stored")
+  }
+
+  test("neither clearCache() nor Dataset.unpersist releases a pin; Pin.free does") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val pinned = Pin.eager((1 to 200).toDF("x").groupBy(col("x") % 11).count())
+    val id = PinBridge.leafRdd(pinned).get.id
+    s.catalog.clearCache()
+    assert(sc.getPersistentRDDs.contains(id), "clearCache() released the pin")
+    pinned.unpersist(blocking = true)
+    assert(sc.getPersistentRDDs.contains(id), "Dataset.unpersist released the pin")
+    assert(pinned.count() == 11L)
+    Pin.free(pinned)
+    assert(!sc.getPersistentRDDs.contains(id), s"RDD $id still persistent")
   }
 
   test("a reliable pin reports its checkpoint-file bytes and Pin.free " +

@@ -61,17 +61,6 @@ class TermWeightsSpec extends SparkTestBase {
     } finally spark.catalog.clearCache()
   }
 
-  test("tfidfTopTerms: persistTf=false trades the cache for a second pass") {
-    spark.catalog.clearCache()
-    val plan = TermWeights
-      .tfidfTopTerms(docs, col("doc_id"), col("text"), k = 2,
-        persistTf = false)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("InMemoryTableScan"), plan)
-    // without the cache the df branch genuinely re-explodes
-    assert("Generate explode".r.findAllIn(plan).length == 2, plan)
-  }
-
   test("tfidfTopTerms rejects k < 1") {
     intercept[IllegalArgumentException] {
       TermWeights.tfidfTopTerms(docs, col("doc_id"), col("text"), k = 0)

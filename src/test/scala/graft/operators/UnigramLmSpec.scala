@@ -58,7 +58,7 @@ class UnigramLmSpec extends SparkTestBase {
   test("docUnigramStats: broadcast and shuffle vocab joins agree") {
     def run(b: Boolean) =
       UnigramLm.docUnigramStats(docs, col("id"), col("text"),
-        broadcastVocab = b, persistTf = false)
+        broadcastVocab = b)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4))).toSet
     assert(run(true) == run(false))
@@ -115,7 +115,7 @@ class UnigramLmSpec extends SparkTestBase {
   test("docBigramStats: broadcast and shuffle vocab joins agree") {
     def run(b: Boolean) =
       UnigramLm.docBigramStats(docs, col("id"), col("text"),
-        broadcastVocab = b, persistTf = false)
+        broadcastVocab = b)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4))).toSet
     assert(run(true) == run(false))

@@ -109,15 +109,14 @@ class CorpusPipelineSpec extends SparkTestBase {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val (kept, handles) = try {
-      val (curated, keptSigs, handles) =
-        CorpusPipeline.curateIncrementManaged(increment, refSigs, cfg)
+    val kept = try graft.operators.Pin.scope {
+      val (curated, keptSigs) =
+        CorpusPipeline.curateIncrement(increment, refSigs, cfg)
       curated.write.format("noop").mode(SaveMode.Overwrite).save()
       val kept = keptSigs.select("doc_id").as[Long].collect().toSet
       org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
-      (kept, handles)
+      kept
     } finally spark.listenerManager.unregister(listener)
-    handles.foreach(graft.operators.Pin.free)
     // exact and near copies and the reference's docs are dropped
     assert(kept.forall(id => id < 100 || (id >= 150 && id < 160)), kept)
     assert(kept.size == 110, kept.size)
