@@ -35,11 +35,28 @@ object SessionFactory {
     * that made most of a 200-document stream batch's tasks. The price,
     * as Spark documents it: a cached frame's output partitioning may
     * change, so a query reading it may need one more shuffle.
+    *
+    * `codegen.cache.maxEntries` sizes the JVM-wide LRU cache of compiled
+    * generated classes (a static conf: it takes effect only in the
+    * session that starts the context). The Spark 4.1.2 default, 100, is
+    * smaller than one pass of the five parity ELT pipelines, which
+    * compiles 118 classes over the benchmark lake (and over the test
+    * fixtures): an LRU that cycles through 118 keys in 100 slots keeps
+    * missing, so every pass after the first recompiled 56–78 of them
+    * instead of none. The incremental curation stream compiles under 100
+    * over a whole run, and fits either way. Sizing rule: twice the
+    * largest measured per-pass working set (the ELT pass, 118), so a
+    * pipeline can grow before the cache thrashes again, while the
+    * 238-query registry still cannot keep everything it ever compiled.
+    * `CodegenSteadyStateSpec` fails when a repeated pass or stream batch
+    * compiles what the cache should have kept, or a pass's working set
+    * passes half the cap.
     */
   def baseConf(shufflePartitions: Int = 32): Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> "256",
     "spark.sql.maxPlanStringLength" -> "1000000",
     "spark.sql.extensions" -> classOf[GraftExtensions].getName,
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->

@@ -95,11 +95,12 @@ object Tables {
 
   /** Sum over files of ceil(len / maxPartitionBytes) — the same quantum
     * the FileSourceScan planner uses, via a cheap FS status call per file
-    * (no RDD materialization).
+    * (no RDD materialization). The split size is a byte string ("128m",
+    * "134217728b"), parsed as the conf entry itself parses it.
     */
   private def estimatedSplits(spark: SparkSession, files: Array[String]): Long = {
-    val maxBytes = spark.conf.get("spark.sql.files.maxPartitionBytes",
-      "134217728").stripSuffix("b").toLong
+    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val hc = spark.sparkContext.hadoopConfiguration
     files.iterator.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)

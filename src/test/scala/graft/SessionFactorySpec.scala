@@ -19,6 +19,8 @@ class SessionFactorySpec extends SparkTestBase {
     assert(c("spark.sql.extensions") == "graft.GraftExtensions")
     // cache fills keep AQE's final-stage coalescing (scaladoc)
     assert(c("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    // one ELT pass's generated classes fit the codegen cache (scaladoc)
+    assert(c("spark.sql.codegen.cache.maxEntries") == "256")
   }
 
   test("a persisted small aggregate fills into fewer than shuffle.partitions") {
@@ -74,6 +76,10 @@ class SessionFactorySpec extends SparkTestBase {
     SessionFactory.s3aConf(endpoint = None).foreach { case (k, v) =>
       assert(spark.sparkContext.hadoopConfiguration.get(k) == v, k)
     }
+    // a static conf: it reaches the session only because the builder
+    // that started the suite's context carried it
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "256")
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") == "256")
   }
 
   test("session() retrofits fs settings and SQL functions onto a live context") {

@@ -23,11 +23,6 @@ class PipelineSpec extends SparkTestBase with PipelineFixtures {
 
   // --- jhub -------------------------------------------------------------
 
-  private def jhubFixture: String = jsonFixture(Seq(
-    """{"log": "[I 2024-01-01 10:00:00.123 JupyterHub app:200] GET /hub/home", "time": "2024-01-01T10:00:00.123456789Z", "kubernetes": {"container_name": "hub", "host": "node1", "pod_name": "hub-1", "annotations": {"noisy": "1"}, "labels": {"app": "jhub"}}}""",
-    """{"log": "no brackets at all", "time": "2024-01-01T11:00:00.000000000Z", "kubernetes": {"container_name": "hub", "host": "node2", "pod_name": "hub-2", "annotations": {"noisy": "2"}, "labels": {"app": "jhub"}}}"""),
-    "jhub")
-
   test("jhub: end-to-end with contract schema and fallback line") {
     val (c, sink) = ctx("jhub")
     JhubPipeline.run(c, jhubFixture)
@@ -53,50 +48,6 @@ class PipelineSpec extends SparkTestBase with PipelineFixtures {
   }
 
   // --- zoom -------------------------------------------------------------
-
-  private def meeting(id: Long, uuid: String, nRecs: Int): String = {
-    val recs = (0 until nRecs).map { i =>
-      s"""{"download_url": "https://dl/$uuid/$i", "file_extension": "MP4",
-         | "file_size": ${1000 + i}, "file_type": "MP4", "id": "rec-$uuid-$i",
-         | "meeting_id": "$uuid", "play_url": "https://play/$uuid/$i",
-         | "recording_end": "2024-01-01T11:00:0${i}Z",
-         | "recording_start": "2024-01-01T10:00:0${i}Z",
-         | "recording_type": "shared_screen", "status": "completed"}"""
-        .stripMargin.replaceAll("\n", "")
-    }.mkString(",")
-    s"""{"account_id": "acc1", "duration": ${30 + id}, "host_email": "h@x.io",
-       | "host_id": "host$id", "id": $id, "recording_count": $nRecs,
-       | "share_url": "https://share/$id",
-       | "start_time": "2024-01-01T09:00:00Z", "timezone": "UTC",
-       | "topic": "Topic $id", "total_size": ${5000 * id}, "type": 2,
-       | "uuid": "$uuid", "recording_files": [$recs]}"""
-      .stripMargin.replaceAll("\n", "")
-  }
-
-  private def zoomMeetingsFixture: String = jsonFixture(Seq(
-    s"""{"from": "2024-01-01", "to": "2024-01-02", "total_records": 2,
-       | "meetings": [${meeting(1, "uuid-1", 2)}, ${meeting(2, "uuid-2", 1)}]}"""
-      .stripMargin.replaceAll("\n", "")), "zoom_meetings")
-
-  private def participant(id: Int): String =
-    s"""{"camera": "cam$id", "connection_type": "UDP", "customer_key": "ck",
-       | "data_center": "EU", "device": "Mac", "domain": "d", "email": "p$id@x.io",
-       | "from_sip_uri": "", "full_data_center": "EU-FR", "harddisk_id": "hd",
-       | "id": "pid$id", "internal_ip_addresses": ["10.0.0.$id", "10.0.1.$id"],
-       | "ip_address": "1.2.3.$id", "join_time": "2024-01-01T09:05:0${id}Z",
-       | "leave_reason": "left", "leave_time": "2024-01-01T09:55:0${id}Z",
-       | "location": "Paris", "mac_addr": "aa:bb", "microphone": "mic",
-       | "network_type": "Wifi", "participant_user_id": "pu$id", "pc_name": "pc",
-       | "recording": ${id % 2 == 0}, "registrant_id": "r$id", "role": "host",
-       | "share_application": false, "share_desktop": true,
-       | "share_whiteboard": false, "sip_uri": "", "speaker": "spk",
-       | "status": "in_meeting", "user_id": "u$id", "user_name": "User $id",
-       | "version": "5.0"}""".stripMargin.replaceAll("\n", "")
-
-  private def zoomParticipantsFixture: String = jsonFixture(Seq(
-    s"""{"uuid": "uuid-1", "participants_data": {"participants": [${participant(1)}, ${participant(2)}]}}""",
-    s"""{"uuid": "uuid-2", "participants_data": {"participants": [${participant(3)}]}}"""),
-    "zoom_participants")
 
   test("zoom: paginated per-date dumps — glob unions pages, repeated totals don't double rows") {
     // The dump APIs are offset/cursor-paginated, so a scaled per-date dump

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TestSpark}
 
 class TablesSpec extends SparkTestBase {
 
@@ -40,6 +40,31 @@ class TablesSpec extends SparkTestBase {
     Tables.names.foreach { name =>
       val df = Tables.load(spark, "/root/testdata/sf0.001", name)
       assert(df.count() > 0, name)
+    }
+  }
+
+  test("S3: documents/embeddings read a byte-string split size") {
+    // a deployment sets the split size the usual way; the under-split
+    // check must parse it as the conf entry does
+    val key = "spark.sql.files.maxPartitionBytes"
+    TestSpark.withConfRestored() {
+      try {
+        Seq("64m", "128MB", "134217728b", "134217728").foreach { v =>
+          spark.conf.set(key, v)
+          Seq("documents", "embeddings").foreach { name =>
+            val df = Tables.load(spark, "/root/testdata/sf0.001", name)
+            // one small file is under-split: hashed across the cores
+            assert(df.rdd.getNumPartitions == spark.sparkContext.defaultParallelism,
+              s"$name at $v")
+            assert(df.count() > 0, s"$name at $v")
+          }
+        }
+        // 1 KiB splits: the 64 KiB documents file already splits past the
+        // core count, so it is read as it is
+        spark.conf.set(key, "1k")
+        val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+        assert(docs.rdd.getNumPartitions > spark.sparkContext.defaultParallelism)
+      } finally spark.conf.unset(key)
     }
   }
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """One row per Spark job from a Spark event log.
 
-  python3 tools/eventlog_jobs.py <event-log-dir> [--jobs N-M]
+  python3 tools/eventlog_jobs.py <event-log-dir> [--jobs N-M] [--by-site]
 
 For every application log in the directory (oldest first), prints per
 job: the job id, the SQL execution id that submitted it (`-` if none),
@@ -10,6 +10,14 @@ the stages that ran with their task counts (`name (tasks)`, joined by
 the job's wall time (submission to completion) in ms. A stage is counted
 in the first job that lists it; later jobs that reuse its shuffle output
 skip it. `--jobs N-M` keeps only job ids N..M (inclusive).
+
+`--by-site` prints one row per call site instead, most jobs first: the
+number of jobs, their summed wall time and summed executor run time. A
+job that a SQL execution submitted is keyed by the execution's
+description plus the first `graft.` frame of its call stack (the
+execution's `details`), so e.g. every `count()` of the serving sink's
+write is one site; any other job is keyed by its result stage's name
+(`count at Sinks.scala:95`).
 
 Spark 4 writes each application's log as a rolling-log directory
 (`eventlog_v2_<app>/events_<n>_<app>[.zstd]`); its parts are read in
@@ -22,6 +30,14 @@ Event logs need no code change to turn on, e.g. for the benchmark:
   JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true \\
     -Dspark.eventLog.dir=file:///tmp/eventlogs" \\
     python3 perfbench/run.py --workload curate_stream --seed 7 --seconds 30 --trace 0
+
+Nor does a census of generated-code compiles: `tools/log4j2-codegen.properties`
+keeps the root logger at WARN and logs one `CodeGenerator: Code generated
+in N ms` line per compiled class (add it to the same JAVA_TOOL_OPTIONS):
+
+  JAVA_TOOL_OPTIONS="-Dlog4j2.configurationFile=$PWD/tools/log4j2-codegen.properties" \\
+    python3 perfbench/run.py --workload elt_backfill --seed 11 --seconds 30 --trace 0 \\
+    2>&1 | grep -c "Code generated"
 """
 import argparse
 import json
@@ -64,19 +80,37 @@ def events(files):
                 pass
 
 
+SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+
+
+def graft_frame(details):
+    """The first `graft.` frame of a call stack, or `-`."""
+    for line in (details or "").splitlines():
+        line = line.strip()
+        if line.startswith("graft."):
+            return line
+    return "-"
+
+
 def jobs_of(evs):
     """(job rows, application name) from one application's events."""
-    jobs, stage_job, stages, app = {}, {}, {}, "?"
+    jobs, stage_job, stages, app, sql = {}, {}, {}, "?", {}
     for e in evs:
         kind = e.get("Event")
-        if kind == "SparkListenerApplicationStart":
+        if kind == SQL_START:
+            sql[str(e.get("executionId"))] = (
+                f"{e.get('description', '?')} @ {graft_frame(e.get('details'))}")
+        elif kind == "SparkListenerApplicationStart":
             app = e.get("App ID") or e.get("App Name", "?")
         elif kind == "SparkListenerJobStart":
             jid = e["Job ID"]
             props = e.get("Properties") or {}
+            names = {s["Stage ID"]: s.get("Stage Name", "?")
+                     for s in e.get("Stage Infos", [])}
             jobs[jid] = {"exec": props.get("spark.sql.execution.id", "-"),
                          "start": e.get("Submission Time"), "end": None,
-                         "stages": []}
+                         "stages": [],
+                         "result": names[max(names)] if names else "?"}
             for sid in e.get("Stage IDs", []):
                 stage_job.setdefault(sid, jid)
         elif kind == "SparkListenerJobEnd":
@@ -101,7 +135,8 @@ def jobs_of(evs):
         j = jobs[jid]
         wall = (j["end"] - j["start"]) if j["end"] and j["start"] else None
         ran = [stages[s] for s in j["stages"]]
-        rows.append({"job": jid, "exec": j["exec"],
+        site = sql.get(j["exec"]) or j["result"]
+        rows.append({"job": jid, "exec": j["exec"], "site": site,
                      "stages": "; ".join(f"{s['name']} ({s['tasks']})" for s in ran),
                      "tasks": sum(s["tasks"] for s in ran),
                      "run_ms": sum(s["run_ms"] for s in ran),
@@ -109,10 +144,32 @@ def jobs_of(evs):
     return rows, app
 
 
+def print_jobs(rows):
+    print(f"  {'job':>5} {'exec':>5} {'tasks':>5} {'run_ms':>8} {'wall_ms':>8}  stages")
+    for r in rows:
+        wall = "-" if r["wall_ms"] is None else r["wall_ms"]
+        print(f"  {r['job']:>5} {r['exec']:>5} {r['tasks']:>5} {r['run_ms']:>8} "
+              f"{wall:>8}  {r['stages']}")
+
+
+def print_sites(rows):
+    sites = {}
+    for r in rows:
+        s = sites.setdefault(r["site"], {"jobs": 0, "wall_ms": 0, "run_ms": 0})
+        s["jobs"] += 1
+        s["wall_ms"] += r["wall_ms"] or 0
+        s["run_ms"] += r["run_ms"]
+    print(f"  {'jobs':>5} {'wall_ms':>8} {'run_ms':>8}  site")
+    for site, s in sorted(sites.items(), key=lambda kv: (-kv[1]["jobs"], kv[0])):
+        print(f"  {s['jobs']:>5} {s['wall_ms']:>8} {s['run_ms']:>8}  {site}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("path", help="event-log directory (spark.eventLog.dir)")
     ap.add_argument("--jobs", help="job id range N-M (inclusive)")
+    ap.add_argument("--by-site", action="store_true",
+                    help="one row per call site instead of per job")
     a = ap.parse_args()
     lo, hi = 0, sys.maxsize
     if a.jobs:
@@ -125,11 +182,7 @@ def main():
         rows, app = jobs_of(events(files))
         rows = [r for r in rows if lo <= r["job"] <= hi]
         print(f"{app}: {len(rows)} jobs, {sum(r['tasks'] for r in rows)} tasks")
-        print(f"  {'job':>5} {'exec':>5} {'tasks':>5} {'run_ms':>8} {'wall_ms':>8}  stages")
-        for r in rows:
-            wall = "-" if r["wall_ms"] is None else r["wall_ms"]
-            print(f"  {r['job']:>5} {r['exec']:>5} {r['tasks']:>5} {r['run_ms']:>8} "
-                  f"{wall:>8}  {r['stages']}")
+        (print_sites if a.by_site else print_jobs)(rows)
 
 
 if __name__ == "__main__":
