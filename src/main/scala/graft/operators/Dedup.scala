@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.JoinBridge
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{Fnv64, SigHash, TextFunctions}
@@ -1052,7 +1053,14 @@ object Dedup {
     // trivially derived) frame.
     val ref = Pin.cache(refSigs)
     val bn = lshBands(newSigs, numHashes, bands, hash)
-    val cands = bandCandidates(lshBands(ref, numHashes, bands, hash), bn,
+    // the reference's bands are never the broadcast side: the reference
+    // is the side that grows, so the band join builds on the new bands
+    // or shuffles both. Left to sizes, a reference about the size of
+    // the new side (a young store) is broadcast or not by which of the
+    // two runtime sizes adaptive execution reads first, and each flip
+    // plans, and compiles, another join
+    val cands = bandCandidates(
+      JoinBridge.noBroadcast(lshBands(ref, numHashes, bands, hash)), bn,
       sameBand && col("a.doc_id") =!= col("b.doc_id"))
     verifyCandidatePairs(cands, newSigs, ref, minEstJaccard, hash)
   }

@@ -375,7 +375,10 @@ object Ivf {
 
   /** ANN top-k: probe the `nprobe` closest lists per query (per-row
     * kernel, no shuffle of the query side), rerank exactly. Candidate
-    * generation = equi-join on list_id.
+    * generation = equi-join on list_id. `assigned` is [[assign]]'s output
+    * or a stored index of the same rows (the view of a
+    * [[graft.streaming.SliceStore.Ivf]] store, whose `list_id`
+    * directories the join's filter prunes).
     */
   def topK(model: IvfModel, assigned: DataFrame, queries: DataFrame,
            queryId: Column, queryVec: Column, k: Int, nprobe: Int,
@@ -385,36 +388,6 @@ object Ivf {
         explode(Kernels.topCentroidsCol(queryVec, model.matrix, nprobe))
           .as("list_id"))
     val candsAll = assigned.join(probes, Seq("list_id"))
-    val cands = if (excludeSelf)
-      candsAll.filter(col("query_id") =!= col("vec_id")) else candsAll
-    val scored = cands.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      VectorFunctions.cosine(col("qv"), col("v")).as("cosine"))
-    Similarity.rankTopK(scored, k)
-  }
-
-  /** [[topK]] against a STORED index (an append-only parquet table of
-    * `(list_id, vec_id, v)` rows, e.g. one maintained by
-    * [[graft.streaming.SliceStore.Ivf]]) — identical semantics,
-    * plus tolerance for the store's replay model: an at-least-once
-    * appender can leave duplicate appendixes of a whole batch, so
-    * candidates are deduplicated per (query_id, vec_id) AFTER the probe
-    * join. Post-join is the scale-correct spot — the dedup then touches
-    * |q|·nprobe·list-sized candidate rows instead of re-shuffling the
-    * whole index at view time (a store-side dropDuplicates would scan
-    * and exchange every list on every query batch, and would also sit
-    * above the partition-pruned scan the `list_id` layout exists for).
-    * Duplicate rows are bit-identical (same vector, same kernel-derived
-    * list), so which copy survives is immaterial.
-    */
-  def topKStored(model: IvfModel, index: DataFrame, queries: DataFrame,
-                 queryId: Column, queryVec: Column, k: Int, nprobe: Int,
-                 excludeSelf: Boolean = true): DataFrame = {
-    val probes = queries
-      .select(queryId.as("query_id"), queryVec.as("qv"),
-        explode(Kernels.topCentroidsCol(queryVec, model.matrix, nprobe))
-          .as("list_id"))
-    val candsAll = index.join(probes, Seq("list_id"))
-      .dropDuplicates("query_id", "vec_id")
     val cands = if (excludeSelf)
       candsAll.filter(col("query_id") =!= col("vec_id")) else candsAll
     val scored = cands.select(col("query_id"), col("vec_id").as("neighbor_id"),

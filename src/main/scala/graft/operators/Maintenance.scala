@@ -33,7 +33,9 @@ import org.apache.spark.sql.{Column, SaveMode, SparkSession}
   *
   * The streaming stores do not use this swap: their compaction is a
   * commit in the store's log ([[graft.streaming.SliceStore.compact]],
-  * [[graft.streaming.StoreLog]]), safe against a concurrent appender.
+  * [[graft.streaming.StoreLog]]) that folds the whole snapshot, safe
+  * against a concurrent appender and against any later replay (the log
+  * commits each stream batch once).
   *
   * Crash matrix of the directory swap (the parked original is never
   * deleted before the compacted copy is live):

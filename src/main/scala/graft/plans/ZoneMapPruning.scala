@@ -62,7 +62,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     The contract is the external-index contract: the stats writer
   *     and the table writer must move together (the
   *     [[graft.streaming.SliceStore.ZoneStats]] stream does, one
-  *     stats slice per data micro-batch), and any out-of-band rewrite
+  *     stats slice per data micro-batch, committed once however often
+  *     the batch replays), and any out-of-band rewrite
   *     requires re-attach. As a cheap tripwire, the metadata attach
   *     paths VALIDATE bucket coverage when the table directory is
   *     reachable: every `bucketCol=...` partition directory present on
@@ -96,7 +97,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `<path>.__zonemap` convention), [[attachFromStore]] folds an
   * append-only slice store ([[graft.streaming.SliceStore.ZoneStats]]:
   * the files of its commit log's latest version, so a torn append or
-  * compaction is never half-read; compactable through its `compact`)
+  * compaction is never half-read and a replayed append never counted
+  * twice; compactable through its `compact`)
   * — both read only bucket-bounded stats rows (ZoneMapPruningSpec proves it by
   * attaching with the table itself absent). [[attach]] without stats
   * derives them with one aggregation over the table — the bootstrap
@@ -552,9 +554,9 @@ object ZoneMapPruning {
   /** Register `path` for pruning from an APPEND-ONLY zone-stats slice
     * store ([[graft.streaming.SliceStore.ZoneStats]]: one
     * [[graft.operators.Layout.rawZoneMap]] slice per micro-batch,
-    * stamped `batch_id`): the store's view — the latest committed
-    * version's files, replay-collapse per (batch_id, bucket), then the
-    * box-union merge. Bucket-bounded metadata I/O only: the file set
+    * committed once per micro-batch by the store's log): the store's
+    * view — the latest committed version's files through the box-union
+    * merge. Bucket-bounded metadata I/O only: the file set
     * comes from the store's log, with no directory listing.
     */
   def attachFromStore(spark: SparkSession, path: String, bucketCol: String,

@@ -240,16 +240,17 @@ private[graft] object QueriesAnn {
       // twin: ivf_topk re-assigns the corpus inline, so its number
       // conflates index build with the probe; this entry probes a
       // PRE-MATERIALIZED list-partitioned index (built once per
-      // session+dir, the SliceStore.Ivf layout: slices stamped with
-      // batch ids, partitioned by list_id so probes prune directories —
-      // PlanAuditSpec pins the PartitionFilters). The store carries a
-      // deliberately REPLAYED appendix of slice 1, so the self-hit gate
-      // below doubles as the replay-absorption certificate: without
-      // topKStored's post-prune dedup every odd-id query would see its
-      // self-hit TWICE and the === 1 assert fails. Full identity to the
-      // fresh in-memory index is spec-pinned (StreamsSpec).
+      // session+dir, the SliceStore.Ivf layout: one slice per batch,
+      // partitioned by list_id so probes prune directories —
+      // PlanAuditSpec pins the PartitionFilters). The build REPLAYS
+      // slice 1 under the same transaction, which the store's log
+      // commits nothing for, so the self-hit gate below doubles as the
+      // replay certificate: had the replay landed, every odd-id query
+      // would see its self-hit TWICE and the === 1 assert fails. Full
+      // identity to the fresh in-memory index is spec-pinned
+      // (StreamsSpec).
       import graft.operators.Ivf
-      import graft.streaming.SliceStore
+      import graft.streaming.{SliceStore, Txn}
       val model = ivfModelFor(s, dir) // memoized bit-stable fit
       val embs = t(s, dir, "embeddings")
       val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "")
@@ -270,14 +271,15 @@ private[graft] object QueriesAnn {
         }
         def appendSlice(p: Column, bid: Long): Unit =
           SliceStore.Ivf.append(Ivf.assign(model, embs.filter(p),
-            col("vec_id"), col("embedding")), bid, store.toString)
+            col("vec_id"), col("embedding")), Txn("ivf_stored_topk", bid),
+            store.toString)
         appendSlice(col("vec_id") % 2 === 0, 0L)
         appendSlice(col("vec_id") % 2 === 1, 1L)
-        appendSlice(col("vec_id") % 2 === 1, 1L) // the replayed appendix
+        appendSlice(col("vec_id") % 2 === 1, 1L) // the replay: a no-op
       }
       val q = embs.filter(col("vec_id") < 64)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Ivf.topKStored(model, SliceStore.Ivf.view(s, store.toString), q,
+      Ivf.topK(model, SliceStore.Ivf.view(s, store.toString), q,
           col("qid"), col("qv"), k = 10, nprobe = 4, excludeSelf = false)
         .withColumn("__self",
           sum(when(col("query_id") === col("neighbor_id"), 1L).otherwise(0L))

@@ -918,7 +918,7 @@ private[graft] object QueriesDedup {
     "bloom_store_compaction" -> ((s, dir) => {
       // OPTIMIZE for the streaming Bloom store: four "daily" partial
       // builds appended as SliceStore.Bloom slices, one OR-fold
-      // compaction (crash-safe manifest protocol), then the
+      // compaction (one commit of the store's log), then the
       // SERVED VIEW is the query result — and its oracle is the
       // bloom_index_build SQL VERBATIM, because OR-folding partial
       // builds must equal building over the whole table. A hash match
@@ -926,7 +926,7 @@ private[graft] object QueriesDedup {
       // op, not a checksum-boolean; the driver-side require pins the
       // file-count drop.
       import graft.operators.BloomIndex
-      import graft.streaming.SliceStore
+      import graft.streaming.{SliceStore, Txn}
       val storePath = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft_bloomstore_" + java.lang.Integer.toHexString(dir.hashCode) +
@@ -940,7 +940,7 @@ private[graft] object QueriesDedup {
         SliceStore.Bloom.append(
           BloomIndex.build(orders.where(col("o_orderkey") % 4 === i),
             expr("CAST(o_orderkey DIV 256 AS BIGINT)"), col("o_custkey"),
-            3, 4096), i.toLong, storePath)
+            3, 4096), Txn("bloom_store_compaction", i.toLong), storePath)
       }
       val res = SliceStore.Bloom.compact(s, storePath)
       require(res.filesAfter < res.filesBefore,
@@ -949,16 +949,15 @@ private[graft] object QueriesDedup {
     }),
     "count_store_compaction" -> ((s, dir) => {
       // the count-store twin of bloom_store_compaction: the events
-      // stream's count partials staged as three "committed batch"
-      // SliceStore.Count slices, compacted through batch 1 (0-1 — a
-      // committed later batch supersedes them, the documented replay
-      // contract), then the served ANOMALY VERDICT is the query
+      // stream's count partials appended as three batches of one
+      // writer to a SliceStore.Count store, compacted into one slice,
+      // then the served ANOMALY VERDICT is the query
       // result — and its oracle is event_anomalies' SQL VERBATIM,
       // because fold-then-detect must equal detecting over all events
       // ever streamed. Hash match == losslessness proof for the
       // maintenance op; driver require pins the file-count drop.
       import graft.operators.Anomaly
-      import graft.streaming.SliceStore
+      import graft.streaming.{SliceStore, Txn}
       val storePath = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft_countstore_" + java.lang.Integer.toHexString(dir.hashCode) +
@@ -972,9 +971,9 @@ private[graft] object QueriesDedup {
         SliceStore.Count.append(
           Anomaly.countSeries(ev.where(col("event_id") % 3 === i),
             col("event_type"), ntz(date_trunc("hour", col("ts")))),
-          i.toLong, storePath)
+          Txn("count_store_compaction", i.toLong), storePath)
       }
-      val res = SliceStore.Count.compact(s, storePath, throughBatch = Some(1))
+      val res = SliceStore.Count.compact(s, storePath)
       require(res.filesAfter < res.filesBefore,
         s"count store compaction did not reduce files: $res")
       Anomaly.robustCountAnomaliesFromSeries(
@@ -1037,14 +1036,14 @@ private[graft] object QueriesDedup {
       // PartitionFilters and the bail-outs). Registration is a
       // METADATA READ, not a rescan: the build appends per-ingest
       // rawZoneMap slices to a SliceStore.ZoneStats store (what its
-      // stream does per micro-batch), compacts it through batch 1,
+      // stream does per micro-batch), compacts it into one slice,
       // and attachFromStore collects only the bucket-bounded boxes —
       // the spec proves it by attaching with the table absent. The
       // oracle recomputes the SAME filter over raw lineitem — a hash
       // match is the proof the rewrite lost and duplicated nothing.
       import graft.operators.Layout
       import graft.plans.ZoneMapPruning
-      import graft.streaming.SliceStore
+      import graft.streaming.{SliceStore, Txn}
       val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "")
       val wh = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir"))
@@ -1082,10 +1081,9 @@ private[graft] object QueriesDedup {
           SliceStore.ZoneStats.append(
             Layout.rawZoneMap(clustered.where(col("l_orderkey") % 3 === b),
               col("z_bucket"), Seq("l_partkey", "l_suppkey")),
-            b.toLong, statsStore.toString)
+            Txn("zonemap_prune_scan", b.toLong), statsStore.toString)
         }
-        val cres = SliceStore.ZoneStats.compact(s, statsStore.toString,
-          throughBatch = Some(1))
+        val cres = SliceStore.ZoneStats.compact(s, statsStore.toString)
         require(cres.filesAfter < cres.filesBefore,
           s"zone-stats compaction did not reduce files: $cres")
         ZoneMapPruning.attachFromStore(s, store.toString, "z_bucket",

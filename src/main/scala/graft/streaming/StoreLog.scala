@@ -6,23 +6,58 @@ import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.graftbridge.StoreFileIndex
 
 /** One data file of a store version: its path relative to the store
-  * root (`part-….parquet`, `list_id=3/part-…`, `gen-…/part-…`), its
-  * length and its modification time, so a read needs no listing. */
+  * root (`<tag>.part-….parquet`, `list_id=3/<tag>.part-…`,
+  * `gen-…/<tag>.part-…`), its length and its modification time, so a
+  * read needs no listing. */
 final case class StoreFile(path: String, size: Long, modificationTime: Long)
 
 /** One committed version: the WHOLE live file set (not a delta — a read
-  * is one `getLatest`, with no replay) and the `(appId, batchId)` of the
-  * writer that committed it. */
-final case class StoreVersion(files: Seq[StoreFile], appId: String,
-                              batchId: Long)
+  * is one `getLatest`, with no replay) and, per writer id, the last batch
+  * that writer committed (carried forward from the version before). */
+final case class StoreVersion(files: Seq[StoreFile], txns: Map[String, Long])
 
-/** The commit log under a store's `_log/` directory — the one crash
-  * protocol of the slice stores ([[SliceStore]]) and the CDC store
-  * ([[Streams.cdcMergeStream]]); the table-format design of Delta Lake
-  * (VLDB 2020) reduced to what these stores use. Spark's directory reads
-  * skip `_`-prefixed names, so the log and the `_staging/` area are
-  * invisible to a plain read of the root.
+/** A writer's transaction: batch `batchId` of writer `appId` (Delta
+  * Lake's `txn` action). A stream writer's id is its streaming query id
+  * ([[Txn.ofStream]]); a direct caller names its own. The id names the
+  * files the transaction stages, so it is limited to letters, digits,
+  * `-` and `_`, and cannot start with `_` (a name Spark's reads skip). */
+final case class Txn(appId: String, batchId: Long) {
+  require(appId.matches("[A-Za-z0-9-][A-Za-z0-9_-]*"),
+    s"a writer id is [A-Za-z0-9_-]+ and does not start with _: '$appId'")
+
+  /** The name prefix of every file this transaction stages. */
+  def tag: String = s"$appId.$batchId"
+}
+
+object Txn {
+
+  /** The transaction of a `foreachBatch` call. Spark sets the streaming
+    * query id as the `sql.streaming.queryId` local property of the thread
+    * that runs the batch; the id lives in the checkpoint, so it survives a
+    * restart from the same checkpoint (whose replayed batch then commits
+    * nothing) and changes under a fresh one (whose batch ids restart at 0
+    * as a new writer). */
+  def ofStream(spark: SparkSession, batchId: Long): Txn =
+    Txn(Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+      .getOrElse(throw new IllegalStateException(
+        "no streaming query id on this thread: call from foreachBatch")),
+      batchId)
+}
+
+/** The commit log under a store's `_log/` directory — the one crash and
+  * replay protocol of the slice stores ([[SliceStore]]), the CDC store
+  * ([[Streams.cdcMergeStream]]) and the signature store
+  * ([[Streams.incrementalDedupStream]]); the table-format design of
+  * Delta Lake (VLDB 2020) reduced to what these stores use. Spark's
+  * directory reads skip `_`-prefixed names, so the log and the
+  * `_staging/` area are invisible to a plain read of the root.
   *
+  *   - Exactly once per transaction: a version records, per writer id,
+  *     the last batch that writer committed, and a commit under a
+  *     [[Txn]] at or below that batch commits nothing. `foreachBatch` is
+  *     at-least-once — a batch that crashed after its commit replays
+  *     under the same query id and batch id — so this one rule makes
+  *     every store's replay a no-op, whatever its merge.
   *   - Versions are Spark's [[HDFSMetadataLog]]: one file per version,
   *     written through `CheckpointFileManager.createAtomic`, and `add`
   *     refuses a version that already exists. A writer whose commit
@@ -30,9 +65,15 @@ final case class StoreVersion(files: Seq[StoreFile], appId: String,
   *     file set rebuilt from it, so a compaction (which removes only
   *     files of its own snapshot) never drops a concurrent append.
   *   - A writer stages its data files under `_staging/`, moves them to
-  *     their place under the root, then commits the version naming
-  *     them. A crash before the version leaves orphan files no version
-  *     names: every read ignores them.
+  *     their place under the root, named after its transaction, then
+  *     commits the version naming them. A crash before the version
+  *     leaves files no version names: every read ignores them, and the
+  *     transaction's replay deletes them before it stages again. No
+  *     other writer owns them: Spark runs one active run per query id,
+  *     and a batch replays only after its earlier attempt died. Files of
+  *     an attempt that never replays (a stream restarted under a fresh
+  *     checkpoint, a direct caller that gives up, a torn compaction)
+  *     stay on disk, unread by every view.
   *   - A file a version removed is deleted only after a LATER version
   *     commits (versions older than the newest `retain` are purged, with
   *     the files only they named). A view resolved just before a
@@ -83,11 +124,11 @@ final class StoreLog(spark: SparkSession, root: String) {
   /** Write `df` (parquet, partitioned by `partitionColumn` if given) to a
     * fresh staging directory and move its data files under `dir`
     * (relative to the root; "" for the root itself), keeping their
-    * `k=v` paths. Returns the moved files; no version names them yet.
-    * The log directory exists from here on, so a store whose first
-    * commit crashed reads as empty, its files as orphans.
+    * `k=v` paths and prefixing each file name with `tag`. Returns the
+    * moved files; no version names them yet. The log directory exists
+    * from here on, so a store whose first commit crashed reads as empty.
     */
-  def stage(df: DataFrame, partitionColumn: Option[String] = None,
+  def stage(df: DataFrame, tag: String, partitionColumn: Option[String] = None,
             dir: String = ""): Seq[StoreFile] = {
     latest() // fails on data without a log, before any file lands
     fs.mkdirs(logPath)
@@ -97,8 +138,10 @@ final class StoreLog(spark: SparkSession, root: String) {
     partitionColumn.fold(w)(w.partitionBy(_)).parquet(staging.toString)
     val stagingUri = fs.makeQualified(staging).toUri.getPath
     val moved = StoreLog.dataFiles(fs, staging).map { st =>
-      val rel = (if (dir.isEmpty) "" else dir + "/") +
-        st.getPath.toUri.getPath.stripPrefix(stagingUri + "/")
+      val partitionDirs = st.getPath.toUri.getPath
+        .stripPrefix(stagingUri + "/").split('/').init
+      val rel = (Option(dir).filter(_.nonEmpty).toSeq ++ partitionDirs :+
+        s"$tag.${st.getPath.getName}").mkString("/")
       val dest = new Path(rootPath, rel)
       fs.mkdirs(dest.getParent)
       require(fs.rename(st.getPath, dest), s"could not move ${st.getPath} to $dest")
@@ -108,37 +151,63 @@ final class StoreLog(spark: SparkSession, root: String) {
     moved
   }
 
+  /** Stage `df` under `txn` and commit a version that adds its files —
+    * nothing at all when the writer already committed this batch. */
+  def append(df: DataFrame, txn: Txn, partitionColumn: Option[String] = None): Unit =
+    if (!StoreLog.committed(latest(), txn)) {
+      sweep(txn)
+      val added = stage(df, txn.tag, partitionColumn)
+      commit(Some(txn))(StoreLog.files(_) ++ added)
+    }
+
   /** Commit the next version: `next` gets the latest committed version
-    * and returns the new live file set, or None to commit nothing. When
-    * another writer commits first, `next` runs again on that version;
-    * files an earlier attempt proposed and the retry does not are
-    * deleted. After the commit, versions older than the newest `retain`
-    * are purged and the files only they named are deleted. Returns the
-    * committed version, or the latest one when `next` declined.
+    * and returns the new live file set. Under a `txn` its writer already
+    * committed (this batch or a later one), nothing is committed: `next`
+    * does not run and the files staged under the transaction are
+    * deleted. A commit with no `txn` (a compaction) carries the writer
+    * table forward unchanged. When another writer commits first, the
+    * attempt runs again on that version. After the commit, versions
+    * older than the newest `retain` are purged and the files only they
+    * named are deleted. Returns the committed version, or the latest
+    * one when nothing was committed.
     */
-  def commit(appId: String, batchId: Long, retain: Int = 2)
-            (next: Option[(Long, StoreVersion)] => Option[Seq[StoreFile]])
+  def commit(txn: Option[Txn], retain: Int = 2)
+            (next: Option[(Long, StoreVersion)] => Seq[StoreFile])
       : Option[(Long, StoreVersion)] = {
     require(retain >= 2, s"a store log retains at least 2 versions, got $retain")
     @annotation.tailrec
-    def attempt(proposed: Set[String]): Option[(Long, StoreVersion)] = {
+    def attempt(): Option[(Long, StoreVersion)] = {
       val current = latest()
-      val files = next(current)
-      val kept = files.toSeq.flatten.map(_.path).toSet
-      deleteFiles(proposed -- kept -- StoreLog.files(current).map(_.path))
-      files match {
-        case None => current
-        case Some(live) =>
-          val v = current.fold(0L)(_._1 + 1)
-          val version = StoreVersion(live, appId, batchId)
-          val won =
-            try log.add(v, version)
-            catch { case _: java.util.ConcurrentModificationException |
-                         _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-          if (won) { vacuum(v, retain); Some(v -> version) } else attempt(kept)
+      if (txn.exists(StoreLog.committed(current, _))) {
+        txn.foreach(sweep)
+        current
+      } else {
+        val v = current.fold(0L)(_._1 + 1)
+        val txns = current.fold(Map.empty[String, Long])(_._2.txns)
+        val version = StoreVersion(next(current),
+          txn.fold(txns)(t => txns + (t.appId -> t.batchId)))
+        val won =
+          try log.add(v, version)
+          catch { case _: java.util.ConcurrentModificationException |
+                       _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+        if (won) { vacuum(v, retain); Some(v -> version) } else attempt()
       }
     }
-    attempt(Set.empty)
+    attempt()
+  }
+
+  /** Delete the data files staged under `txn` that no retained version
+    * names: what a crashed attempt of the same transaction left. A
+    * transactional writer calls it before it stages; it lists the root
+    * and each directory under it (one listing per `list_id=k/` of a
+    * partitioned store). A compaction's tag is fresh, so it skips this. */
+  def sweep(txn: Txn): Unit = if (fs.exists(rootPath)) {
+    val base = qualifiedRoot.toUri.getPath
+    val mine = StoreLog.dataFiles(fs, rootPath)
+      .filter(_.getPath.getName.startsWith(txn.tag + "."))
+      .map(_.getPath.toUri.getPath.stripPrefix(base + "/"))
+    if (mine.nonEmpty)
+      deleteFiles(mine.toSet -- versions().flatMap(_._2.files.map(_.path)))
   }
 
   /** Purge versions older than the newest `retain` (`newest` and the
@@ -169,6 +238,10 @@ object StoreLog {
   /** The live file set of a version; none before the first commit. */
   def files(v: Option[(Long, StoreVersion)]): Seq[StoreFile] =
     v.fold(Seq.empty[StoreFile])(_._2.files)
+
+  /** Whether `txn`'s writer committed its batch, or a later one, by `v`. */
+  def committed(v: Option[(Long, StoreVersion)], txn: Txn): Boolean =
+    v.exists(_._2.txns.get(txn.appId).exists(_ >= txn.batchId))
 
   /** Data files under `dir` and one directory level down (`k=v` and
     * generation directories), skipping `_`- and `.`-prefixed names. */

@@ -126,16 +126,16 @@ object Streams {
     * Ordering makes the composition safe: the slice is written only
     * AFTER the dual-sink stage succeeded — a failed batch rethrows
     * first ([[dualSinkStream]]'s checkpoint-holding contract), so the
-    * replay re-runs BOTH halves; the replayed slice collapses
-    * idempotently in the store view (per-(batch_id, bucket) replay
-    * collapse) and the replayed data append is the reference's
-    * append-mode idempotency model. Stats therefore never lead the
-    * data, and a batch's rows are never served prunable before their
-    * slice lands only in the window between the two writes of ITS OWN
-    * batch — an attach in that window sees the store MISSING the
-    * freshly written bucket only on day one (whole-bucket coverage
-    * check fails loudly), or a box union that simply hasn't widened
-    * yet; re-attach after the drain, as the daily cadence does.
+    * replay re-runs BOTH halves; the replayed slice commits nothing (the
+    * store log takes each (query id, batch id) once) and the replayed
+    * data append is the reference's append-mode idempotency model.
+    * Stats therefore never lead the data, and a batch's rows are never
+    * served prunable before their slice lands only in the window
+    * between the two writes of ITS OWN batch — an attach in that
+    * window sees the store MISSING the freshly written bucket only on
+    * day one (whole-bucket coverage check fails loudly), or a box union
+    * that simply hasn't widened yet; re-attach after the drain, as the
+    * daily cadence does.
     */
   def dualSinkZoneStatsStream(stream: DataFrame,
       ctx: graft.pipelines.PipelineContext, contract: graft.sinks.Contract,
@@ -150,7 +150,8 @@ object Streams {
         SliceStore.ZoneStats.append(graft.operators.Layout.rawZoneMap(
             contract.select(batch.toDF()).withColumn("load_date",
               lit(loadDate)),
-            col("load_date"), zoneDims), batchId, storePath)
+            col("load_date"), zoneDims),
+          Txn.ofStream(batch.sparkSession, batchId), storePath)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -161,26 +162,27 @@ object Streams {
     * micro-batch of raw (doc_id, text) documents is quality-gated,
     * deduped against itself AND against the accumulated signature store,
     * its survivors appended to `curatedPath` and their MinHash
-    * signatures appended to `sigStorePath` — so the NEXT batch dedups
-    * against everything kept so far, including earlier batches of this
-    * same stream. The store is re-read each batch (fresh file listing),
-    * and a batch's dedup cost is one banded equi-join against
-    * signatures — accumulated text is never rescanned, which is what
-    * makes the shape viable on an unbounded stream.
+    * signatures committed to the store at `sigStorePath` — so the NEXT
+    * batch dedups against everything kept so far, including earlier
+    * batches of this same stream. The store is a [[StoreLog]] store:
+    * each batch reads the latest version's files (no listing) and
+    * commits one version adding its signatures, and a batch's dedup
+    * cost is one banded equi-join against signatures — accumulated text
+    * is never rescanned, which is what makes the shape viable on an
+    * unbounded stream.
     *
     * Same effectively-once model as [[dualSinkStream]]: a failing batch
     * fails the query (foreachBatch exceptions propagate), so the
-    * checkpoint cannot advance past dropped rows. Replay semantics are
-    * append-mode: a batch that crashed AFTER both appends re-appends
-    * nothing new on replay (its docs now match their own stored
-    * signatures and are dropped — the first append stands); a batch
-    * that crashed BETWEEN the curated append and the signature append
-    * re-appends its curated rows (duplicates in `curatedPath`).
-    * Signatures are deliberately appended last — the other order would
-    * make a replayed batch's docs match their own signatures and never
-    * land in `curatedPath` at all (data loss beats duplication is the
-    * wrong trade). Downstream consumers wanting exactly-once should
-    * exact-dedup on doc_id, which is one hash aggregate.
+    * checkpoint cannot advance past dropped rows. Replay: a batch whose
+    * signature commit landed is skipped whole (the store log records the
+    * query id's last committed batch); a batch that crashed BETWEEN the
+    * curated append and the signature commit re-appends its curated rows
+    * (duplicates in `curatedPath`). Signatures are deliberately
+    * committed last — the other order would let a replayed batch skip
+    * rows that never landed in `curatedPath` (data loss beats
+    * duplication is the wrong trade). Downstream consumers wanting
+    * exactly-once should exact-dedup on doc_id, which is one hash
+    * aggregate.
     */
   def incrementalDedupStream(docs: DataFrame, sigStorePath: String,
                              curatedPath: String, checkpointDir: String,
@@ -188,32 +190,29 @@ object Streams {
                                graft.pipelines.CorpusPipeline.Config(),
                              trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        val store = new StoreLog(spark, sigStorePath)
+        val txn = Txn.ofStream(spark, batchId)
+        val latest = store.latest()
         // one scope per batch: the funnel's pins and the ref side's
-        // cache are freed when the batch's two appends are done, so no
+        // cache are freed when the batch's two writes are done, so no
         // cache state carries from one batch to the next
-        graft.operators.Pin.scope {
-          val spark = batch.sparkSession
-          val hPath = new org.apache.hadoop.fs.Path(sigStorePath)
-          val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!StoreLog.committed(latest, txn)) graft.operators.Pin.scope {
           // empty-store bootstrap: derive the signature schema from an
           // empty slice of the batch instead of hand-declaring it
-          val refSigs =
-            if (fs.exists(hPath) &&
-                fs.listStatus(hPath).exists(_.getPath.getName.endsWith(".parquet")))
-              spark.read.parquet(sigStorePath)
-            else graft.operators.Dedup.minhashSignatures(batch.toDF().limit(0),
-              col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize, cfg.hash)
+          val refSigs = latest.fold(graft.operators.Dedup.minhashSignatures(
+              batch.toDF().limit(0), col("doc_id"), col("text"),
+              cfg.numHashes, cfg.shingleSize, cfg.hash))(v => store.read(v._2.files))
           val (curated, keptSigs) = graft.pipelines.CorpusPipeline
             .curateIncrement(batch.toDF(), refSigs, cfg)
           graft.sinks.ParquetSink.write(curated, curatedPath,
             org.apache.spark.sql.SaveMode.Append)
-          // signatures append AFTER the curated write, to the same path
-          // refSigs reads: refSigs snapshotted its file listing above, so
-          // the new files don't feed back into this batch's own dedup —
-          // and see the replay-semantics note for why this order
-          graft.sinks.ParquetSink.write(keptSigs, sigStorePath,
-            org.apache.spark.sql.SaveMode.Append)
+          // signatures commit AFTER the curated write (see the replay
+          // note for why this order); refSigs names the files of the
+          // version read above, so they don't feed back into this
+          // batch's own dedup
+          store.append(keptSigs, txn)
         }
       }
       .option("checkpointLocation", checkpointDir)
@@ -235,27 +234,22 @@ object Streams {
     *
     * Store layout: one generation directory per version of the
     * store's commit log ([[StoreLog]]). Each batch writes the whole
-    * folded snapshot into a fresh `gen-<version>-<tag>` directory and
+    * folded snapshot into a fresh `gen-<version>-<random>` directory and
     * commits a version naming exactly its files; the base it folds onto
     * is the latest version's files, never overwritten in place. A crash
-    * before the commit leaves an orphan directory no version names, and
-    * the replay folds onto the committed base again. A store directory
-    * holding data but no log fails the batch loudly instead of
-    * bootstrapping an empty base over it; an empty one bootstraps from
-    * the change stream's own schema.
+    * before the commit leaves an orphan directory no version names; the
+    * batch's replay deletes it and folds onto the committed base again.
+    * A store directory holding data but no log fails the batch loudly
+    * instead of bootstrapping an empty base over it; an empty one
+    * bootstraps from the change stream's own schema.
     *
-    * Replay semantics: each version records the `(writerEpoch,
-    * batchId)` that committed it, with one epoch per cdcMergeStream
-    * call (so it changes on every restart, like the engine's runId). A
-    * batch whose pair matches the latest version already applied —
-    * only the stream's checkpoint commit was lost — and commits
-    * nothing. A replay from a DIFFERENT epoch (a same-checkpoint
-    * restart, or a fresh checkpoint re-feeding old data) is
-    * indistinguishable from new data by name: it re-applies, which the
-    * versioned fold makes a semantic no-op (stale seqs are shielded),
-    * into a new version. Batch ids restart at 0 under a fresh
-    * checkpoint, which is why neither generation names nor the guard
-    * use the batch id alone.
+    * Replay: each batch commits under its streaming query id and batch
+    * id, and the log commits a transaction at most once ([[StoreLog]]).
+    * A batch that replays after its version landed (only the stream's
+    * checkpoint commit was lost) commits nothing; a fresh checkpoint is
+    * a new writer, so its batch 0 applies. Data re-fed under a fresh
+    * checkpoint re-applies, which the versioned fold makes a semantic
+    * no-op (stale seqs are shielded), into a new version.
     *
     * Retention: the log keeps the newest `keepGenerations` versions
     * (the live one included; default 2 = live + its predecessor) and
@@ -281,44 +275,39 @@ object Streams {
       s"keepGenerations must be >= 2 (live + superseded — retaining " +
         s"only the live generation would delete the snapshot a " +
         s"concurrent reader just resolved), got $keepGenerations")
-    val writerEpoch = java.util.UUID.randomUUID().toString.take(8)
     changes.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcMergeBatch(batch.toDF(), batchId, writerEpoch, storePath, id, seq,
-          op, generationFiles, keepGenerations)
+        cdcMergeBatch(batch.toDF(), Txn.ofStream(batch.sparkSession, batchId),
+          storePath, id, seq, op, generationFiles, keepGenerations)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
   }
 
-  /** One [[cdcMergeStream]] micro-batch, committed under
-    * `(writerEpoch, batchId)`. */
-  private[graft] def cdcMergeBatch(batch: DataFrame, batchId: Long,
-      writerEpoch: String, storePath: String, id: String, seq: String,
-      op: String, generationFiles: Option[Int], keepGenerations: Int): Unit = {
+  /** One [[cdcMergeStream]] micro-batch, committed under `txn`. */
+  private[graft] def cdcMergeBatch(batch: DataFrame, txn: Txn,
+      storePath: String, id: String, seq: String, op: String,
+      generationFiles: Option[Int], keepGenerations: Int): Unit = {
     val log = new StoreLog(batch.sparkSession, storePath)
-    log.commit(writerEpoch, batchId, keepGenerations) { latest =>
-      if (latest.exists { case (_, v) =>
-            v.appId == writerEpoch && v.batchId == batchId }) None
-      else {
-        val base = latest.fold(graft.operators.Cdc.versionSnapshot(
-          batch.drop(seq, op).limit(0))) { case (_, v) =>
-          log.read(v.files, generationOf(v))
-        }
-        val next0 = graft.operators.Cdc.applyChangeSetVersioned(
-          base, batch, id, seq, op)
-        // generationFiles: every batch REWRITES the store, so the
-        // merge's shuffle parallelism would otherwise dictate the file
-        // count of even a tiny snapshot forever (the small-file problem
-        // inside our own store). The coalesce adds no exchange — it
-        // concatenates the join's partitions, the same shuffle-free
-        // bin-packing Maintenance.compactTable uses. Leave None when
-        // the snapshot is genuinely large: natural partitioning IS the
-        // parallelism of the next batch's scan.
-        val next = generationFiles.map(next0.coalesce).getOrElse(next0)
-        Some(log.stage(next, dir = f"gen-${latest.fold(0L)(_._1 + 1)}%012d-" +
-          java.util.UUID.randomUUID().toString.take(8)))
+    log.commit(Some(txn), keepGenerations) { latest =>
+      val base = latest.fold(graft.operators.Cdc.versionSnapshot(
+        batch.drop(seq, op).limit(0))) { case (_, v) =>
+        log.read(v.files, generationOf(v))
       }
+      val next0 = graft.operators.Cdc.applyChangeSetVersioned(
+        base, batch, id, seq, op)
+      // generationFiles: every batch REWRITES the store, so the
+      // merge's shuffle parallelism would otherwise dictate the file
+      // count of even a tiny snapshot forever (the small-file problem
+      // inside our own store). The coalesce adds no exchange — it
+      // concatenates the join's partitions, the same shuffle-free
+      // bin-packing Maintenance.compactTable uses. Leave None when
+      // the snapshot is genuinely large: natural partitioning IS the
+      // parallelism of the next batch's scan.
+      val next = generationFiles.map(next0.coalesce).getOrElse(next0)
+      log.sweep(txn)
+      log.stage(next, txn.tag, dir = f"gen-${latest.fold(0L)(_._1 + 1)}%012d-" +
+        java.util.UUID.randomUUID().toString.take(8))
     }
   }
 

@@ -41,7 +41,7 @@ class PlanAuditSpec extends SparkTestBase {
       col("embedding"), nlist = 3, maxIter = 5, seed = 7L)
     graft.streaming.SliceStore.Ivf.append(
       operators.Ivf.assign(model, vecs, col("vec_id"), col("embedding")),
-      0L, store)
+      graft.streaming.Txn("audit", 0L), store)
     val probed = graft.streaming.SliceStore.Ivf.view(spark, store)
       .where(col("list_id").isin(0, 2))
     val plan = planOf(probed)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.plans.ZoneMapPruning
-import graft.streaming.SliceStore
+import graft.streaming.{SliceStore, Txn}
 
 /** The zone-map skipping optimizer rule: result identity with the
   * unpruned scan (soundness), actual directory pruning in the physical
@@ -179,12 +179,12 @@ class ZoneMapPruningSpec extends SparkTestBase {
     (0 until 3).foreach { b =>
       SliceStore.ZoneStats.append(Layout.rawZoneMap(
         t.where(col("payload") % 3 === b), col("z_bucket"), Seq("x", "y")),
-        b.toLong, store)
+        Txn("ingest", b.toLong), store)
     }
-    // a replayed appendix of batch 1 must be absorbed by the view
+    // a replay of batch 1 commits nothing
     SliceStore.ZoneStats.append(Layout.rawZoneMap(
       t.where(col("payload") % 3 === 1), col("z_bucket"), Seq("x", "y")),
-      1L, store)
+      Txn("ingest", 1L), store)
     // view == full rebuild (the fold is exact)
     val served = SliceStore.ZoneStats.view(spark, store)
       .collect().map(r => r.getAs[Long]("bucket") ->
@@ -197,10 +197,8 @@ class ZoneMapPruningSpec extends SparkTestBase {
           r.getAs[Long]("min_y"), r.getAs[Long]("max_y"),
           r.getAs[Long]("n_rows"))).toMap
     assert(served == rebuilt, "store view diverged from full rebuild")
-    // compact the store (batches 0-1 superseded by committed 2) —
-    // served stats must be invariant
-    val res = SliceStore.ZoneStats.compact(spark, store,
-      throughBatch = Some(1))
+    // compact the store — served stats must be invariant
+    val res = SliceStore.ZoneStats.compact(spark, store)
     assert(res.filesAfter < res.filesBefore, res.toString)
     assert(SliceStore.ZoneStats.view(spark, store)
       .collect().map(r => r.getAs[Long]("bucket") ->

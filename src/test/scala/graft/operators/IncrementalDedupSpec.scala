@@ -40,6 +40,42 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(pairs.toSeq == Seq((1L, 10L, 1.0))) // exact copy: every band agrees
   }
 
+  test("minhashPairsAgainst builds its band join on the new side even " +
+    "when the reference is the smaller one") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object Nodes extends AdaptiveSparkPlanHelper {
+      def apply(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+    }
+    // one reference document against twenty new ones, both sides' sizes
+    // measured (the reference's cache filled, the new side pinned): by
+    // size alone the reference's bands would be the broadcast side
+    val refSigs = Dedup.minhashSignatures(Seq((1L, refText1)).toDF("doc_id", "text"),
+      col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
+    val newSigs = Dedup.minhashSignatures(
+      (10L until 30L).map(i => (i, if (i == 10L) refText1 else s"$novel $i"))
+        .toDF("doc_id", "text"),
+      col("doc_id"), col("text"), cfg.numHashes, cfg.shingleSize)
+    val (pairs, plan) = Pin.scope {
+      val ref = Pin.cache(refSigs)
+      ref.count()
+      val p = Dedup.minhashPairsAgainst(Pin.eager(newSigs), ref,
+        cfg.numHashes, cfg.bands, cfg.minEstJaccard)
+      (p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
+        p.queryExecution.executedPlan)
+    }
+    assert(pairs == Seq((1L, 10L, 1.0)))
+    val bandJoins = Nodes(plan).collect {
+      case j: BroadcastHashJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "band_idx")) => j
+    }
+    assert(bandJoins.nonEmpty, plan.toString)
+    assert(bandJoins.forall(_.buildSide == BuildRight),
+      bandJoins.map(_.simpleString(200)).mkString("\n"))
+  }
+
   test("curateIncrement: drops cross-increment and within-increment dups, keeps novel, gates junk") {
     val increment = Seq(
       (10L, refText1), // exact copy of accumulated doc 1 -> dropped cross

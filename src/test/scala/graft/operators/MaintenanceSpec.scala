@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.streaming.SliceStore
+import graft.streaming.{SliceStore, Txn}
 
 class MaintenanceSpec extends SparkTestBase {
   import graft.TestSpark.spark
@@ -147,7 +147,7 @@ class MaintenanceSpec extends SparkTestBase {
       (120 until 150).map(i => (i / 30L, i.toLong)))
     batches.zipWithIndex.foreach { case (b, i) =>
       SliceStore.Bloom.append(BloomIndex.build(b.toDF("chunk", "key"),
-        col("chunk"), col("key"), 3, 1024), i.toLong, store)
+        col("chunk"), col("key"), 3, 1024), Txn("w", i.toLong), store)
     }
     def served = SliceStore.Bloom.view(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -155,9 +155,9 @@ class MaintenanceSpec extends SparkTestBase {
     val r = SliceStore.Bloom.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(served == before, "compaction changed the served index")
-    // a batch replayed AFTER compaction re-ORs harmlessly
+    // a batch replayed AFTER compaction commits nothing
     SliceStore.Bloom.append(BloomIndex.build(batches(1).toDF("chunk", "key"),
-      col("chunk"), col("key"), 3, 1024), 1L, store)
+      col("chunk"), col("key"), 3, 1024), Txn("w", 1L), store)
     assert(served == before, "post-compaction replay changed the index")
   }
 
@@ -167,29 +167,27 @@ class MaintenanceSpec extends SparkTestBase {
     val store = tempDir("count_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
       SliceStore.Count.append(graft.operators.Anomaly.countSeries(
-        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
+        rows.toDF("g", "b"), col("g"), col("b")), Txn("w", batch), store)
     append(0, (1 to 5).flatMap(b => Seq.fill(4)(("a", b))))
     append(1, Seq.fill(6)(("a", 6)) ++ Seq.fill(2)(("a", 2)))   // late b=2
     append(2, Seq.fill(3)(("a", 7)))
     def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val before = snap
-    // batches 0 and 1 are superseded by committed batch 2 -> foldable
-    val r = SliceStore.Count.compact(spark, store, throughBatch = Some(1))
+    val r = SliceStore.Count.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(snap == before, "compaction changed the served counts")
     assert(before(("a", 2)) == 6L, "late partial must stay folded in")
-    // the stream keeps appending; a replay of the still-uncommitted
-    // LAST batch (the only one the checkpoint can replay) collapses
-    // exactly as before compaction
+    // the stream keeps appending; a replay of the LAST batch (the only
+    // one the checkpoint can replay) commits nothing after compaction
     append(2, Seq.fill(3)(("a", 7)))
     assert(snap == before, "replay of the tail batch double-counted")
     append(3, Seq.fill(2)(("a", 8)))
     assert(snap(("a", 8)) == 2L)
   }
 
-  test("compactIvfStore drops replay duplicates and keeps the " +
-    "list-partitioned layout and probe results intact") {
+  test("compactIvfStore keeps the list-partitioned layout and probe " +
+    "results intact; a replayed batch leaves no duplicates") {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.operators.Ivf
     val store = tempDir("ivf_cstore").toString
@@ -199,11 +197,12 @@ class MaintenanceSpec extends SparkTestBase {
     val model = Ivf.fitDistributed(vecs, col("vec_id"), col("embedding"),
       nlist = 4)
     def append(batch: Long): Unit = SliceStore.Ivf.append(
-      Ivf.assign(model, vecs, col("vec_id"), col("embedding")), batch, store)
+      Ivf.assign(model, vecs, col("vec_id"), col("embedding")),
+      Txn("w", batch), store)
     append(0)
-    append(0) // replayed appendix: bit-identical duplicate of batch 0
+    append(0) // a replay of batch 0: commits nothing
     val queries = vecs.where(col("vec_id") % 40 === 0)
-    def probe = Ivf.topKStored(model,
+    def probe = Ivf.topK(model,
         SliceStore.Ivf.view(spark, store), queries,
         col("vec_id"), col("embedding"), k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -214,7 +213,7 @@ class MaintenanceSpec extends SparkTestBase {
     // the live set, not the directory: the retired files stay on disk
     // until the next commit
     val rows = SliceStore.Ivf.view(spark, store)
-    assert(rows.count() == 200L, "duplicates must be gone")
+    assert(rows.count() == 200L, "the replay must not have landed")
     assert(rows.select("list_id").distinct().count() > 1,
       "list partitioning must survive")
     // partition pruning still works on the compacted layout
@@ -239,24 +238,31 @@ class MaintenanceSpec extends SparkTestBase {
       nlist = 4)
     def append(df: org.apache.spark.sql.DataFrame, batch: Long): Unit =
       SliceStore.Ivf.append(
-        Ivf.assign(model, df, col("vec_id"), col("embedding")), batch, store)
+        Ivf.assign(model, df, col("vec_id"), col("embedding")),
+        Txn("w", batch), store)
     append(vecs, 0)
-    append(vecs, 0) // replayed duplicate appendix
-    // the tap runs after the snapshot listing — this append is a live
-    // SliceStore.Ivf stream batch landing mid-compaction
+    append(vecs, 0) // a replay of batch 0: commits nothing
+    // the tap runs after the snapshot is resolved — this append is a
+    // live SliceStore.Ivf stream batch landing mid-compaction
     var appended = false
-    val r = SliceStore.Ivf.compactWith(spark, store, None, { df =>
+    val r = SliceStore.Ivf.compactWith(spark, store, { df =>
       if (!appended) { appended = true; append(late, 1) }
       df
     })
-    assert(appended && r.filesAfter < r.filesBefore, r.toString)
+    // the live set is the fold (fewer files than the snapshot) plus the
+    // concurrent batch's files, named after its transaction
+    val live = new graft.streaming.StoreLog(spark, store).latest().get._2.files
+    val (concurrent, fold) = live.partition(
+      _.path.split('/').last.startsWith(Txn("w", 1L).tag + "."))
+    assert(appended && concurrent.nonEmpty && fold.size < r.filesBefore &&
+      r.filesAfter == live.size, (r, live))
     val rows = SliceStore.Ivf.view(spark, store)
     assert(rows.where(col("vec_id") < 200L).count() == 200L,
-      "snapshot rows deduped exactly once")
+      "snapshot rows appear exactly once")
     assert(rows.where(col("vec_id") >= 200L).count() == 40L,
       "the concurrently appended slice must survive the compaction")
-    // probes see every vector, replay absorption intact
-    val probe = Ivf.topKStored(model,
+    // probes see every vector
+    val probe = Ivf.topK(model,
         SliceStore.Ivf.view(spark, store),
         late.where(col("vec_id") % 20 === 0),
         col("vec_id"), col("embedding"), k = 3, nprobe = 4)
@@ -275,8 +281,9 @@ class MaintenanceSpec extends SparkTestBase {
     val model = Ivf.fitDistributed(vecs, col("vec_id"), col("embedding"),
       nlist = 4)
     SliceStore.Ivf.append(
-      Ivf.assign(model, vecs, col("vec_id"), col("embedding")), 0L, store)
-    def probe = Ivf.topKStored(model,
+      Ivf.assign(model, vecs, col("vec_id"), col("embedding")),
+      Txn("w", 0L), store)
+    def probe = Ivf.topK(model,
         SliceStore.Ivf.view(spark, store),
         vecs.where(col("vec_id") % 30 === 0),
         col("vec_id"), col("embedding"), k = 5, nprobe = 2)
@@ -313,7 +320,7 @@ class MaintenanceSpec extends SparkTestBase {
     def append(batch: Long, rows: Seq[(String, String)]): Unit =
       SliceStore.Cardinality.append(Cardinality.sliceSketches(
           rows.toDF("g", "v"), org.apache.spark.sql.functions.lit(batch),
-          col("g"), col("v"), lgK = 12).drop("slice"), batch, store)
+          col("g"), col("v"), lgK = 12).drop("slice"), Txn("w", batch), store)
     append(0, (0 until 200).map(i => (s"g${i % 2}", s"v${i % 30}")))
     append(1, (0 until 150).map(i => (s"g${i % 2}", s"v${i % 50}")))
     append(2, (0 until 80).map(i => (s"g${i % 2}", s"v${i % 10}")))
@@ -322,16 +329,15 @@ class MaintenanceSpec extends SparkTestBase {
         (r.getAs[Long]("n_distinct"), r.getAs[Long]("n_rows"),
           r.getAs[Long]("n_slices"))).toMap
     val before = snap
-    val r = SliceStore.Cardinality.compact(spark, store,
-      throughBatch = Some(1))
+    val r = SliceStore.Cardinality.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     val after = snap
     after.foreach { case (g, (est, n, slices)) =>
       assert(est == before(g)._1, s"estimate moved for $g")
       assert(n == before(g)._2, s"row count moved for $g")
-      assert(slices == 2L, s"expected 1 folded + 1 tail slice for $g")
+      assert(slices == 1L, s"expected 1 folded slice for $g")
     }
-    // the tail batch still replays idempotently
+    // a replay of the last batch commits nothing
     append(2, (0 until 80).map(i => (s"g${i % 2}", s"v${i % 10}")))
     snap.foreach { case (g, (est, n, _)) =>
       assert(est == before(g)._1 && n == before(g)._2,
@@ -345,7 +351,7 @@ class MaintenanceSpec extends SparkTestBase {
     val store = tempDir("concurrent_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
       SliceStore.Count.append(graft.operators.Anomaly.countSeries(
-        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
+        rows.toDF("g", "b"), col("g"), col("b")), Txn("w", batch), store)
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
     def snap = SliceStore.Count.view(spark, store)
@@ -354,7 +360,7 @@ class MaintenanceSpec extends SparkTestBase {
     // slice from inside it is exactly a concurrent foreachBatch landing
     // mid-compaction
     var appended = false
-    val r = SliceStore.Count.compactWith(spark, store, Some(1L), { df =>
+    val r = SliceStore.Count.compactWith(spark, store, { df =>
       if (!appended) { appended = true; append(2, Seq.fill(3)(("a", 3))) }
       df
     })
@@ -372,19 +378,19 @@ class MaintenanceSpec extends SparkTestBase {
     val store = tempDir("rollback_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
       SliceStore.Count.append(graft.operators.Anomaly.countSeries(
-        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
+        rows.toDF("g", "b"), col("g"), col("b")), Txn("w", batch), store)
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
     def snap = SliceStore.Count.view(spark, store)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val before = snap
-    SliceStore.Count.compact(spark, store, throughBatch = Some(0))
+    SliceStore.Count.compact(spark, store)
     tearNewestVersion(store)
-    // the orphan fold double-counts batch 0 in a raw directory read;
+    // the orphan fold double-counts both batches in a raw directory read;
     // the view reads the committed version only
     assert(spark.read.parquet(store).count() == 4L)
     assert(snap == before, "the view must ignore the uncommitted fold")
-    val r = SliceStore.Count.compact(spark, store, throughBatch = Some(0))
+    val r = SliceStore.Count.compact(spark, store)
     assert(r.filesBefore == 2 && r.filesAfter == 1 && snap == before,
       r.toString)
   }
@@ -396,13 +402,13 @@ class MaintenanceSpec extends SparkTestBase {
     val store = tempDir("crashview_cstore").toString
     def append(batch: Long, rows: Seq[(String, Int)]): Unit =
       SliceStore.Count.append(graft.operators.Anomaly.countSeries(
-        rows.toDF("g", "b"), col("g"), col("b")), batch, store)
+        rows.toDF("g", "b"), col("g"), col("b")), Txn("w", batch), store)
     def dataFiles = new java.io.File(store).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
     append(0, Seq.fill(4)(("a", 1)))
     append(1, Seq.fill(6)(("a", 2)))
     val originals = dataFiles
-    SliceStore.Count.compact(spark, store, throughBatch = Some(1))
+    SliceStore.Count.compact(spark, store)
     // the retired originals outlive the compaction's own commit (a view
     // resolved before it may still read them) ...
     assert(originals.subsetOf(dataFiles))
@@ -434,17 +440,17 @@ class MaintenanceSpec extends SparkTestBase {
     val ny = Layout.normalize16(col("y"), 255L)
     def append(batch: Long, rows: Seq[(Long, Long)]): Unit =
       SliceStore.ZoneMap.append(Layout.zoneMap(rows.toDF("x", "y"), nx, ny, 4),
-        batch, store)
+        Txn("w", batch), store)
     append(0, (0 until 200).map(i => ((i * 613L) % 256, (i * 389L) % 256)))
     append(1, (0 until 150).map(i => ((i * 97L) % 256, (i * 31L) % 256)))
     append(2, (0 until 50).map(i => ((i * 17L) % 256, (i * 11L) % 256)))
     def snap = SliceStore.ZoneMap.view(spark, store)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     val before = snap
-    val r = SliceStore.ZoneMap.compact(spark, store, throughBatch = Some(1))
+    val r = SliceStore.ZoneMap.compact(spark, store)
     assert(r.filesAfter < r.filesBefore, r.toString)
     assert(snap == before, "compaction changed the served zone map")
-    // the tail batch still replays into the view exactly as before
+    // a replay of the last batch commits nothing
     append(2, (0 until 50).map(i => ((i * 17L) % 256, (i * 11L) % 256)))
     assert(snap == before, "replay of the tail batch changed the view")
   }

@@ -13,14 +13,17 @@ import graft.SparkTestBase
 import graft.operators.{Anomaly, BloomIndex, Cardinality, Cdc, Ivf, Layout}
 
 /** The store commit log as a property, per store kind (the six slice
-  * stores and the CDC store): random sequences of append, replayed
-  * append (the same slice re-appended under the same batch id),
-  * compaction and the log's two crash points must leave the served
-  * view equal to the batch recompute over every distinct committed
-  * batch, after every step. The crash points are built by hand:
+  * stores, the CDC store and the signature store): random sequences of
+  * append, replayed append (the same slice re-appended under the same
+  * transaction), a restart under a fresh checkpoint (a new writer id
+  * whose batch ids start again at 0, with new rows), compaction and the
+  * log's two crash points must leave the served view equal to the
+  * batch recompute over every committed batch, after every step. The
+  * crash points are built by hand:
   *   - Torn: a write's data files landed but its version did not (the
   *     newest version file is deleted after the commit); the view must
-  *     ignore the orphans, and the stream's replay then commits it;
+  *     ignore the orphans, and the stream's replay under the same
+  *     transaction then commits it;
   *   - Unswept: a version committed but the files it retired were not
   *     yet deleted (every file the commit's clean-up deleted, data and
   *     log, is restored); the next commit must clean them up.
@@ -30,7 +33,7 @@ class SliceStoreSpec extends SparkTestBase {
   import SliceStoreSpec._
 
   private val steps: Gen[List[Step]] = Gen.listOfN(6, Gen.frequency(
-    3 -> Gen.const(Append), 1 -> Gen.const(Replay),
+    3 -> Gen.const(Append), 1 -> Gen.const(Replay), 1 -> Gen.const(Fresh),
     2 -> Gen.const(Compact), 2 -> Gen.const(Torn), 2 -> Gen.const(Unswept)))
 
   private def keyed(df: DataFrame, key: Int): Map[Any, Seq[Any]] =
@@ -43,7 +46,6 @@ class SliceStoreSpec extends SparkTestBase {
     _ => Gen.listOfN(40, Gen.zip(Gen.choose(0L, 4L), Gen.choose(0L, 500L))),
     _.toDF("chunk", "key"),
     BloomIndex.build(_, col("chunk"), col("key"), k = 3, mBits = 512),
-    batchBounded = false,
     df => df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap,
     all => BloomIndex.build(all, col("chunk"), col("key"), 3, 512).collect()
@@ -52,7 +54,6 @@ class SliceStoreSpec extends SparkTestBase {
   private val count = Kind.slices[(String, Int)](SliceStore.Count,
     _ => Gen.listOfN(30, Gen.zip(Gen.oneOf("a", "b"), Gen.choose(1, 6))),
     _.toDF("g", "b"), Anomaly.countSeries(_, col("g"), col("b")),
-    batchBounded = true,
     _.collect().map(_.toSeq).toSet,
     Anomaly.countSeries(_, col("g"), col("b")).collect().map(_.toSeq).toSet)
 
@@ -62,7 +63,6 @@ class SliceStoreSpec extends SparkTestBase {
     _.toDF("g", "v"),
     Cardinality.sliceSketches(_, lit(0L), col("g"), col("v"), lgK = 12)
       .drop("slice"),
-    batchBounded = true,
     view => view.collect().map(r => r.getAs[String]("group") ->
       (r.getAs[Long]("n_distinct"), r.getAs[Long]("n_rows"))).toMap,
     all => {
@@ -76,7 +76,7 @@ class SliceStoreSpec extends SparkTestBase {
   private val ny = Layout.normalize16(col("y"), 255L)
   private val zoneMap = Kind.slices[(Long, Long)](SliceStore.ZoneMap,
     _ => Gen.listOfN(40, xy), _.toDF("x", "y"),
-    Layout.zoneMap(_, nx, ny, bucketBits = 3), batchBounded = true,
+    Layout.zoneMap(_, nx, ny, bucketBits = 3),
     keyed(_, 0), all => keyed(Layout.zoneMap(all, nx, ny, 3), 0))
 
   private val zoneStats = Kind.slices[(Long, String)](SliceStore.ZoneStats,
@@ -84,7 +84,6 @@ class SliceStoreSpec extends SparkTestBase {
       Gen.choose(0, 999).map(i => f"s$i%03d"))),
     _.toDF("x", "s"),
     Layout.rawZoneMap(_, shiftright(col("x"), 5), Seq("x", "s")),
-    batchBounded = true,
     keyed(_, 0),
     all => keyed(Layout.rawZoneMap(all, shiftright(col("x"), 5),
       Seq("x", "s")), 0))
@@ -112,9 +111,8 @@ class SliceStoreSpec extends SparkTestBase {
       .map(_.zipWithIndex.map { case (v, i) => (b * 100 + i, v) }),
     _.toDF("vec_id", "embedding"),
     Ivf.assign(model, _, col("vec_id"), col("embedding")),
-    batchBounded = false,
     view => (view.select("vec_id", "list_id").as[(Long, Int)].collect()
-      .toSet, probeSet(Ivf.topKStored(model, view, ivfQueries, col("qid"),
+      .toSet, probeSet(Ivf.topK(model, view, ivfQueries, col("qid"),
       col("qv"), k = 4, nprobe = 2, excludeSelf = false))),
     all => {
       val fresh = Ivf.assign(model, all, col("vec_id"), col("embedding"))
@@ -134,14 +132,29 @@ class SliceStoreSpec extends SparkTestBase {
         (id, i * 16L + b, op, if (op == "delete") null else s"t$t")
       }),
     _.toDF("id", "seq", "op", "txt"),
-    (df, b, path, epoch) => Streams.cdcMergeBatch(df, b, epoch, path, "id",
-      "seq", "op", None, 2),
+    (df, txn, path) => Streams.cdcMergeBatch(df, txn, path, "id", "seq", "op",
+      None, 2),
     compact = None,
     view = Streams.cdcStoreView(spark, _),
     served = _.collect().map(r => r.getLong(0) -> r.getString(1)).toMap,
     recompute = all => Cdc.snapshotView(Cdc.applyChangeSetVersioned(
         Cdc.versionSnapshot(all.drop("seq", "op").limit(0)), all, "id"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
+
+  // the signature store of Streams.incrementalDedupStream: raw rows
+  // appended through the log, read back as the latest version's files;
+  // a replay that landed would show as duplicate rows
+  private val signatures = Kind[(Long, Long)]("signatures",
+    b => Gen.listOfN(10, Gen.choose(0L, 99L)).map(_.map(h => (b, h))),
+    _.toDF("doc_id", "sig"),
+    (df, txn, path) => new StoreLog(spark, path).append(df, txn),
+    compact = None,
+    view = path => {
+      val log = new StoreLog(spark, path)
+      log.read(StoreLog.files(log.latest()))
+    },
+    served = _.as[(Long, Long)].collect().toSeq.sorted,
+    recompute = _.as[(Long, Long)].collect().toSeq.sorted)
 
   /** Every file under `root` (data and log), by path relative to it. */
   private def allFiles(root: File): Map[String, File] =
@@ -163,65 +176,61 @@ class SliceStoreSpec extends SparkTestBase {
   }
 
   /** Crash point "data written, no version": drop the newest version
-    * file and return the data files only it named. */
-  private def tearNewest(store: String): Set[String] = {
-    val versions = new StoreLog(spark, store).versions()
-    val (v, newest) = versions.last
-    val before = versions.init.lastOption
-      .fold(Set.empty[String])(_._2.files.map(_.path).toSet)
+    * file. */
+  private def tearNewest(store: String): Unit = {
+    val v = new StoreLog(spark, store).latest().get._1
     new File(store, s"_log/$v").delete()
     new File(store, s"_log/.$v.crc").delete()
-    newest.files.map(_.path).toSet -- before
   }
 
   private def run[R](kind: Kind[R], seed: Long): Unit = {
     val store = tempDir(s"slicestore_${kind.name}").resolve("s").toString
     val backup = tempDir(s"slicestore_${kind.name}_backup").toFile
     val plan = planOf(seed)
-    val rnd = new scala.util.Random(seed)
-    var epoch = s"e$seed"
+    // the stream writer: its id (one per checkpoint) and its next batch
+    var writer = 0
+    var nextBatch = 0L
+    // every committed batch's rows, and the last committed transaction
     var batches = Vector.empty[Seq[R]]
-    var orphans = Set.empty[String]
-    def appendBatch(b: Long): Unit =
-      kind.append(kind.toDF(batches(b.toInt)), b, store, epoch)
+    var last: (Txn, Seq[R]) = null
+    def append(txn: Txn, rows: Seq[R]): Unit =
+      kind.append(kind.toDF(rows), txn, store)
+    def appendNext(i: Int): Unit = {
+      val rows = kind.rows(batches.size.toLong)
+        .pureApply(Gen.Parameters.default, Seed(seed * 31 + i))
+      last = (Txn(s"w$seed-$writer", nextBatch), rows)
+      nextBatch += 1
+      append(last._1, rows)
+      batches :+= rows
+    }
     def check(what: String): Unit = {
       val expected = kind.recompute(kind.toDF(batches.flatten))
       assert(kind.served(kind.view(store)) == expected,
         s"${kind.name} seed $seed: view diverged after $what (plan $plan)")
     }
-    def next(i: Int): Unit = batches :+= kind.rows(batches.size.toLong)
-      .pureApply(Gen.Parameters.default, Seed(seed * 31 + i))
-    // a compaction where the kind has one and a batch is foldable, else
-    // an append of the next batch
-    def compactOrAppend(i: Int): Unit = {
-      val last = batches.size - 1L
-      kind.compact match {
-        case Some(c) if !kind.batchBounded => c(store, None)
-        // bounded kinds fold only batches a LATER committed batch has
-        // superseded; with a single batch there is nothing foldable yet
-        case Some(c) if last >= 1 =>
-          c(store, Some(rnd.nextInt(last.toInt).toLong))
-        case _ => next(i); appendBatch(batches.size - 1L)
-      }
-    }
+    // a compaction where the kind has one, else an append
+    def compactOrAppend(i: Int): Unit =
+      kind.compact.fold(appendNext(i))(_(store))
     plan.zipWithIndex.foreach { case (step, i) =>
       step match {
-        case Append => next(i); appendBatch(batches.size - 1L)
-        case Replay => appendBatch(batches.size - 1L)
+        case Append => appendNext(i)
+        case Replay => append(last._1, last._2)
+        case Fresh =>
+          // a restart under a fresh checkpoint: a new query id, batch
+          // ids from 0 again, genuinely new rows
+          writer += 1
+          nextBatch = 0L
+          appendNext(i)
         case Compact => compactOrAppend(i)
         case Torn =>
-          next(i)
-          val b = batches.size - 1L
-          val torn = batches.last
-          appendBatch(b)
-          orphans ++= tearNewest(store)
+          appendNext(i)
+          tearNewest(store)
           batches = batches.init
           check(s"step $i (torn append)")
           // the crashed batch never committed to the stream's
-          // checkpoint: a restarted writer replays it
-          batches :+= torn
-          epoch = s"e$seed.$i"
-          appendBatch(b)
+          // checkpoint: the restarted writer (same query id) replays it
+          append(last._1, last._2)
+          batches :+= last._2
         case Unswept =>
           val saved = allFiles(new File(store))
           saved.foreach { case (rel, f) =>
@@ -240,12 +249,12 @@ class SliceStoreSpec extends SparkTestBase {
       check(s"step $i ($step)")
     }
     // one more commit sweeps every retired file: what stays on disk is
-    // named by a retained version or orphaned by a torn commit
-    next(plan.size); appendBatch(batches.size - 1L)
+    // named by a retained version
+    appendNext(plan.size)
     check("final append")
-    val leaked = dataOnDisk(store) -- named(store) -- orphans
-    assert(leaked.isEmpty, s"${kind.name} seed $seed: retired files " +
-      s"survived the next commit: $leaked (plan $plan)")
+    val leaked = dataOnDisk(store) -- named(store)
+    assert(leaked.isEmpty, s"${kind.name} seed $seed: files no version " +
+      s"names survived the next commit: $leaked (plan $plan)")
   }
 
   private def planOf(seed: Long): List[Step] =
@@ -255,7 +264,8 @@ class SliceStoreSpec extends SparkTestBase {
 
   test("the seeded step plans cover every step kind") {
     assert(seeds.flatMap(planOf).toSet ==
-      Set[Step](Append, Replay, Compact, Torn, Unswept), seeds.map(planOf))
+      Set[Step](Append, Replay, Fresh, Compact, Torn, Unswept),
+      seeds.map(planOf))
   }
 
   test("Bloom store: view equals the rebuild under append/replay/compact/torn") {
@@ -287,12 +297,18 @@ class SliceStoreSpec extends SparkTestBase {
     seeds.foreach(run(cdc, _))
   }
 
+  test("signature store: the committed rows equal every batch's rows " +
+    "once under append/replay/fresh/torn") {
+    seeds.foreach(run(signatures, _))
+  }
+
   test("a view of 48 live files plans with no more Spark jobs than a " +
     "directory read of the same files") {
     val store = tempDir("slicestore_wide").resolve("s").toString
     SliceStore.Bloom.append(BloomIndex.build(
       (0 until 2000).map(i => (i % 50L, i.toLong)).toDF("chunk", "key"),
-      col("chunk"), col("key"), k = 3, mBits = 512).repartition(48), 0L, store)
+      col("chunk"), col("key"), k = 3, mBits = 512).repartition(48),
+      Txn("wide", 0L), store)
     val files = new StoreLog(spark, store).latest().get._2.files
     assert(files.size == 48, files.size)
     val sc = spark.sparkContext
@@ -317,28 +333,40 @@ class SliceStoreSpec extends SparkTestBase {
     "version and keeps the winner's files") {
     val store = tempDir("storelog_race").resolve("s").toString
     val log = new StoreLog(spark, store)
-    def files(n: Int) = log.stage(Seq(n).toDF("x"))
+    def files(n: Int) = log.stage(Seq(n).toDF("x"), s"w$n.0")
     val (a, b, c) = (files(1), files(2), files(3))
-    log.commit("a", 0L)(v => Some(StoreLog.files(v) ++ a))
+    log.commit(Some(Txn("a", 0L)))(StoreLog.files(_) ++ a)
     var attempts = 0
-    val (v, won) = log.commit("c", 2L) { latest =>
+    val (v, won) = log.commit(Some(Txn("c", 2L))) { latest =>
       attempts += 1
       // another writer commits between this one's read and its add
       if (attempts == 1)
-        new StoreLog(spark, store).commit("b", 1L)(w => Some(StoreLog.files(w) ++ b))
-      Some(StoreLog.files(latest) ++ c)
+        new StoreLog(spark, store).commit(Some(Txn("b", 1L)))(
+          StoreLog.files(_) ++ b)
+      StoreLog.files(latest) ++ c
     }.get
-    assert(attempts == 2 && v == 2L && won.appId == "c", (attempts, v, won))
+    assert(attempts == 2 && v == 2L, (attempts, v, won))
+    assert(won.txns == Map("a" -> 0L, "b" -> 1L, "c" -> 2L), won.txns)
     assert(won.files.map(_.path).toSet == (a ++ b ++ c).map(_.path).toSet)
     assert(log.read(won.files).as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
   }
 
-  test("compaction refuses a throughBatch the kind does not take") {
-    val store = tempDir("slicestore_contract").resolve("s").toString
-    intercept[IllegalArgumentException](
-      SliceStore.Count.compact(spark, store))
-    intercept[IllegalArgumentException](
-      SliceStore.Bloom.compact(spark, store, throughBatch = Some(0)))
+  test("a commit under a batch its writer already committed commits " +
+    "nothing and deletes the files staged for it") {
+    val store = tempDir("storelog_txn").resolve("s").toString
+    val log = new StoreLog(spark, store)
+    log.append(Seq(1).toDF("x"), Txn("w", 1L))
+    val (v, committed) = log.latest().get
+    // a replay of batch 1, or a straggler of batch 0, that got past the
+    // append's check: the commit refuses both and sweeps their files
+    Seq(Txn("w", 1L), Txn("w", 0L)).foreach { txn =>
+      val staged = log.stage(Seq(2).toDF("x"), txn.tag)
+      assert(log.commit(Some(txn))(_ => sys.error("must not run")) ==
+        Some(v -> committed))
+      staged.foreach(f => assert(!new File(store, f.path).exists(), f))
+    }
+    assert(committed.files.forall(f => new File(store, f.path).exists()))
+    assert(log.read(committed.files).as[Int].collect().toSeq == Seq(1))
   }
 }
 
@@ -346,32 +374,32 @@ object SliceStoreSpec {
   private sealed trait Step
   private case object Append extends Step
   private case object Replay extends Step
+  private case object Fresh extends Step
   private case object Compact extends Step
   private case object Torn extends Step
   private case object Unswept extends Step
 
   /** `rows(batch)` generates one batch's input rows; `append` commits
-    * them as batch `b` (under a writer epoch), `compact` folds the store
-    * (through a batch, for the bounded kinds); `served` turns the store
-    * view into a comparable value and `recompute` derives the same value
-    * from all distinct input rows with the batch operator. */
+    * them under a transaction, `compact` folds the store; `served` turns
+    * the store view into a comparable value and `recompute` derives the
+    * same value from all committed input rows with the batch operator. */
   private final case class Kind[R](name: String,
       rows: Long => Gen[Seq[R]], toDF: Seq[R] => DataFrame,
-      append: (DataFrame, Long, String, String) => Unit,
-      compact: Option[(String, Option[Long]) => Unit],
+      append: (DataFrame, Txn, String) => Unit,
+      compact: Option[String => Unit],
       view: String => DataFrame, served: DataFrame => Any,
-      recompute: DataFrame => Any, batchBounded: Boolean = false)
+      recompute: DataFrame => Any)
 
   private object Kind {
     def slices[R](store: SliceStore, rows: Long => Gen[Seq[R]],
                   toDF: Seq[R] => DataFrame, slice: DataFrame => DataFrame,
-                  batchBounded: Boolean, served: DataFrame => Any,
+                  served: DataFrame => Any,
                   recompute: DataFrame => Any): Kind[R] = {
       val spark = graft.TestSpark.spark
       Kind(store.kind, rows, toDF,
-        (df, b, path, _) => store.append(slice(df), b, path),
-        Some((path, through) => store.compact(spark, path, through)),
-        store.view(spark, _), served, recompute, batchBounded)
+        (df, txn, path) => store.append(slice(df), txn, path),
+        Some(store.compact(spark, _)),
+        store.view(spark, _), served, recompute)
     }
   }
 }

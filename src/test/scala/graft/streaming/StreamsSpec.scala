@@ -10,6 +10,28 @@ import graft.SparkTestBase
 
 class StreamsSpec extends SparkTestBase {
 
+  /** A real replay of a query's last batch: delete the batch's commit
+    * from the checkpoint at `ckpt` (the state a crash after the batch's
+    * writes and before its checkpoint commit leaves), then `start` the
+    * query again from that checkpoint and drain it; the engine re-runs
+    * the batch with the same id and input. */
+  private def replayLastBatch(ckpt: String)
+      (start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    val q = start
+    try q.processAllAvailable() finally q.stop()
+    assert(q.exception.isEmpty, q.exception.toString)
+    assert(new java.io.File(commits, last.toString).exists(),
+      s"batch $last did not run again")
+  }
+
+  /** The newest version number of the store at `path`. */
+  private def storeVersion(path: String): Long =
+    new StoreLog(spark, path).latest().get._1
+
   test("jhubStream: AvailableNow drains the input dir through the batch transform") {
     val in = tempDir("stream_in")
     val out = tempDir("stream_out")
@@ -201,24 +223,29 @@ class StreamsSpec extends SparkTestBase {
     // one streaming RUN per day (the daily cadence); each micro-batch
     // is one hour's worth of jhub-shaped logs, hr = ISO hour prefix so
     // a predicate on the DATA column maps onto days
-    def day(d: String, hours: Seq[Int]): Unit = {
-      val mem = MemoryStream[(Long, String, String)]
-      val q = Streams.dualSinkZoneStatsStream(
+    val ckpts = scala.collection.mutable.Map.empty[String, String]
+    def ckpt(d: String) = ckpts.getOrElseUpdate(d, tempDir(s"dszs_ckpt_$d").toString)
+    def start(d: String, mem: MemoryStream[(Long, String, String)]) =
+      Streams.dualSinkZoneStatsStream(
           mem.toDF().toDF("uid", "hr", "msg"), ctx, contract,
-          tempDir(s"dszs_ckpt_$d").toString, java.sql.Date.valueOf(d),
+          ckpt(d), java.sql.Date.valueOf(d),
           zoneDims = Seq("uid", "hr"), storePath = store,
           trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
         .start()
+    def day(d: String, hours: Seq[Int]): MemoryStream[(Long, String, String)] = {
+      val mem = MemoryStream[(Long, String, String)]
+      val q = start(d, mem)
       hours.foreach { h =>
         mem.addData((1 to 5).map(i =>
           (h * 100L + i, f"${d}T$h%02d", s"login user-$i")): _*)
         q.processAllAvailable()
       }
       q.stop()
+      mem
     }
     day("2024-05-01", Seq(10, 11)) // two hourly increments
     day("2024-05-02", Seq(9))
-    day("2024-05-03", Seq(14))
+    val day3 = day("2024-05-03", Seq(14))
     assert(ctx.failed.isEmpty, ctx.report.toString)
     // the composed path kept both halves in lockstep: attach is a
     // metadata read of the slice store and passes its whole-bucket
@@ -233,22 +260,13 @@ class StreamsSpec extends SparkTestBase {
         .matches(".*PartitionFilters: \\[[^\\]]*load_date[^\\]]*IN.*"),
         graft.plans.PlanInspect.planString(q1))
     } finally ZoneMapPruning.detach(spark, path)
-    // REPLAYED batch (a restart re-running foreachBatch): both halves
-    // re-land — the data re-append is the reference's append-mode
-    // idempotency model, the duplicate slice collapses per
-    // (batch_id, bucket) in the store view — and pruning still serves
-    // the exact same answer
-    val d3 = java.sql.Date.valueOf("2024-05-03")
-    val replay = (1 to 5).map(i => (1400L + i, "2024-05-03T14",
-      s"login user-$i")).toDF("uid", "hr", "msg")
-    ctx.saveTable(replay, contract,
-      modeOverride = Some(org.apache.spark.sql.SaveMode.Append),
-      loadDate = Some(d3))
-    graft.operators.Layout.rawZoneMap(
-        replay.withColumn("load_date", lit(d3)), col("load_date"),
-        Seq("uid", "hr"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+    // REPLAYED batch (day 3's run restarted after a crash that lost the
+    // batch's checkpoint commit): the data half re-appends — the
+    // reference's append-mode idempotency model — while the stats
+    // slice commits nothing, and pruning still serves the same answer
+    val v = storeVersion(store)
+    replayLastBatch(ckpt("2024-05-03"))(start("2024-05-03", day3))
+    assert(storeVersion(store) == v, "the replayed stats slice committed")
     ZoneMapPruning.attachFromStore(spark, path, "load_date", store)
     try {
       val q2 = spark.read.parquet(path).where(col("hr") === "2024-05-03T14")
@@ -345,6 +363,39 @@ class StreamsSpec extends SparkTestBase {
       .collect().sorted.toSeq == Seq(1L, 2L, 11L, 21L))
     assert(spark.read.parquet(sigStore).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 11L, 21L))
+  }
+
+  test("incrementalDedupStream: a replayed batch whose signatures " +
+    "committed is skipped whole") {
+    import graft.TestSpark.spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      TestSpark.sqlContext
+    val cfg = graft.pipelines.CorpusPipeline.Config(minQuality = 0.0,
+      keepLangs = Seq("en"), minTokens = 5, shingleSize = 3,
+      numHashes = 64, bands = 16, minEstJaccard = 0.5, featureDim = 4)
+    val sigStore = tempDir("dedup_replay_sigs").toString
+    val curated = tempDir("dedup_replay_curated").toString
+    val ckpt = tempDir("dedup_replay_ckpt").toString
+    val mem = MemoryStream[(Long, String)]
+    def start() = Streams.incrementalDedupStream(
+        mem.toDF().toDF("doc_id", "text"), sigStore, curated, ckpt, cfg,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .start()
+    val q = start()
+    mem.addData((1L, "the cat and the dog walk to the old mill by the river road"))
+    q.processAllAvailable()
+    mem.addData((2L, "the sun is warm and the wind is cold over the high green hills"))
+    q.processAllAvailable()
+    q.stop()
+    def ids(path: String) =
+      spark.read.parquet(path).select("doc_id").as[Long].collect().sorted.toSeq
+    val v = storeVersion(sigStore)
+    val curatedFiles = new java.io.File(curated).list().length
+    replayLastBatch(ckpt)(start())
+    assert(storeVersion(sigStore) == v, "the replayed batch committed")
+    assert(new java.io.File(curated).list().length == curatedFiles,
+      "the replayed batch wrote curated rows")
+    assert(ids(curated) == Seq(1L, 2L) && ids(sigStore) == Seq(1L, 2L))
   }
 
   test("streamStreamJoin: time-bounded attribution over two memory streams") {
@@ -765,22 +816,26 @@ class StreamsSpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       TestSpark.sqlContext
     val store = tempDir("cdc_replay_store").toString
+    val ckpt = tempDir("cdc_replay_ckpt1").toString
     val mem1 = MemoryStream[(Long, Long, String, String)]
-    val q1 = Streams.cdcMergeStream(
-        mem1.toDF().toDF("id", "seq", "op", "txt"), store,
-        tempDir("cdc_replay_ckpt1").toString, id = "id",
+    def start() = Streams.cdcMergeStream(
+        mem1.toDF().toDF("id", "seq", "op", "txt"), store, ckpt, id = "id",
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       .start()
+    val q1 = start()
     mem1.addData((1L, 1L, "upsert", "alpha"), (2L, 2L, "upsert", "beta"))
     q1.processAllAvailable()
     q1.stop()
-    // a FRESH checkpoint replays the same data as batch 0 against a
-    // store that already applied it — the worst-case at-least-once
-    // replay (applied, pointer swapped, commit lost). The new writer
-    // epoch makes this indistinguishable from new data, so it
-    // RE-APPLIES — into a FRESH generation number (no self-overwrite
-    // possible), and the versioned fold shields every stored seq, so
-    // the snapshot is unchanged: a semantic no-op.
+    // the batch replays from its checkpoint (applied, version committed,
+    // checkpoint commit lost): same query id, same batch id, so the
+    // store commits nothing
+    val v = storeVersion(store)
+    replayLastBatch(ckpt)(start())
+    assert(storeVersion(store) == v, "the replayed batch committed")
+    // a FRESH checkpoint re-feeds the same data as batch 0: a new
+    // writer, so it RE-APPLIES — into a fresh generation (no
+    // self-overwrite possible), and the versioned fold shields every
+    // stored seq, so the snapshot is unchanged: a semantic no-op.
     val mem2 = MemoryStream[(Long, Long, String, String)]
     val q2 = Streams.cdcMergeStream(
         mem2.toDF().toDF("id", "seq", "op", "txt"), store,
@@ -791,9 +846,10 @@ class StreamsSpec extends SparkTestBase {
     q2.processAllAvailable()
     assert(q2.exception.isEmpty, q2.exception.toString)
     q2.stop()
-    val v = Streams.cdcStoreView(spark, store)
+    assert(storeVersion(store) == v + 1)
+    val got = Streams.cdcStoreView(spark, store)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(v == Map(1L -> "alpha", 2L -> "beta"))
+    assert(got == Map(1L -> "alpha", 2L -> "beta"))
   }
 
   test("cdcMergeStream: a fresh checkpoint's GENUINELY NEW batch 0 " +
@@ -812,8 +868,7 @@ class StreamsSpec extends SparkTestBase {
     q1.processAllAvailable()
     q1.stop()
     // new stream, new checkpoint, DIFFERENT data — its batch id is 0
-    // again. The old design keyed replay detection on the batch id and
-    // silently dropped this batch; the epoch-scoped identity must not.
+    // again, under a new query id: a new writer, so the batch applies
     val mem2 = MemoryStream[(Long, Long, String, String)]
     val q2 = Streams.cdcMergeStream(
         mem2.toDF().toDF("id", "seq", "op", "txt"), store,
@@ -982,15 +1037,6 @@ class StreamsSpec extends SparkTestBase {
       assert(est == full(g), s"served view diverged for $g")
       assert(nRows == 250L && nSlices == 2L, s"bookkeeping for $g")
     }
-    // replayed batch: a duplicate appendix of slice 0 must not change
-    // the served view (idempotent union + max-n_rows collapse)
-    val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
-    slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    val replayed = SliceStore.Cardinality.view(spark, store)
-      .collect().map(r => r.getAs[String]("group") ->
-        (r.getAs[Long]("n_distinct"), r.getAs[Long]("n_rows"),
-          r.getAs[Long]("n_slices"))).toMap
-    assert(replayed == served, s"replay changed the view: $replayed")
   }
 
   test("anomalyStream: served verdict equals the batch recompute, " +
@@ -1000,12 +1046,14 @@ class StreamsSpec extends SparkTestBase {
       TestSpark.sqlContext
     import graft.operators.Anomaly
     val store = tempDir("anom_store").toString
+    val ckpt = tempDir("anom_ckpt").toString
     val mem = MemoryStream[(String, Int)]
-    val q = SliceStore.Count.stream(mem.toDF().toDF("g", "b"),
-        store, tempDir("anom_ckpt").toString,
+    def start() = SliceStore.Count.stream(mem.toDF().toDF("g", "b"),
+        store, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
         Anomaly.countSeries(_, col("g"), col("b")))
       .start()
+    val q = start()
     // batch 1: steady traffic; batch 2: a spike bucket PLUS late
     // events for bucket 2 (already counted in batch 1)
     val b1 = (1 to 8).flatMap(b => Seq.fill(10)(("a", b)))
@@ -1025,10 +1073,11 @@ class StreamsSpec extends SparkTestBase {
     assert(served == full, s"served=$served\nfull=$full")
     assert(served(("a", 2))._1 == 12L, "late events must fold into bucket 2")
     assert(served(("a", 9))._2, "the spike bucket must flag")
-    // replay attack: re-append batch 0's partials verbatim — the view
-    // must collapse them (max per batch) and stay identical
-    val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
-    slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+    // a real replay of batch 1 (its checkpoint commit lost) commits
+    // nothing, so the verdict stays identical
+    val v = storeVersion(store)
+    replayLastBatch(ckpt)(start())
+    assert(storeVersion(store) == v, "the replayed batch committed")
     assert(snap(Anomaly.robustCountAnomaliesFromSeries(
       SliceStore.Count.view(spark, store))) == served,
       "replayed appendix changed the verdict")
@@ -1043,6 +1092,49 @@ class StreamsSpec extends SparkTestBase {
       "drift view diverged from the batch recompute")
   }
 
+  test("SliceStore.stream: a batch's writer id is its streaming query " +
+    "id, the same across a restart from the checkpoint and new under a " +
+    "fresh one, whose batch 0 adds to the store") {
+    import graft.TestSpark.spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      TestSpark.sqlContext
+    import graft.operators.Anomaly
+    val store = tempDir("qid_store").toString
+    val ckpt = tempDir("qid_ckpt").toString
+    val mem = MemoryStream[(String, Int)]
+    def start(rows: MemoryStream[(String, Int)], checkpoint: String) =
+      SliceStore.Count.stream(rows.toDF().toDF("g", "b"), store, checkpoint,
+          trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
+          Anomaly.countSeries(_, col("g"), col("b")))
+        .start()
+    def run(rows: MemoryStream[(String, Int)], checkpoint: String,
+            data: Seq[(String, Int)]): String = {
+      val q = start(rows, checkpoint)
+      rows.addData(data: _*)
+      try q.processAllAvailable() finally q.stop()
+      q.id.toString
+    }
+    // the store's writer table holds the ids the batches committed under
+    def txns = new StoreLog(spark, store).latest().get._2.txns
+    def counts = SliceStore.Count.view(spark, store).as[(String, Int, Long)]
+      .collect().map { case (g, b, n) => (g, b) -> n }.toMap
+    val id = run(mem, ckpt, Seq.fill(3)(("a", 1)))
+    assert(txns == Map(id -> 0L), txns)
+    assert(run(mem, ckpt, Seq.fill(2)(("a", 2))) == id)
+    assert(txns == Map(id -> 1L), txns)
+    // batch 1 replays under the same id and commits nothing
+    val v = storeVersion(store)
+    replayLastBatch(ckpt)(start(mem, ckpt))
+    assert(storeVersion(store) == v && txns == Map(id -> 1L), txns)
+    assert(counts == Map(("a", 1) -> 3L, ("a", 2) -> 2L), counts)
+    // a fresh checkpoint: a new id whose batch 0 carries new rows; its
+    // partial for bucket 1 sums with the first writer's batch 0
+    val fresh = run(MemoryStream[(String, Int)], tempDir("qid_ckpt2").toString,
+      Seq.fill(4)(("a", 1)))
+    assert(fresh != id && txns == Map(id -> 1L, fresh -> 0L), txns)
+    assert(counts == Map(("a", 1) -> 7L, ("a", 2) -> 2L), counts)
+  }
+
   test("bloomIndexStream: OR-fold view equals a full rebuild and " +
     "absorbs replays with zero bookkeeping") {
     import graft.TestSpark.spark.implicits._
@@ -1050,12 +1142,14 @@ class StreamsSpec extends SparkTestBase {
       TestSpark.sqlContext
     import graft.operators.BloomIndex
     val store = tempDir("bloom_store").toString
+    val ckpt = tempDir("bloom_ckpt").toString
     val mem = MemoryStream[(Long, Long)]
-    val q = SliceStore.Bloom.stream(mem.toDF().toDF("chunk", "key"),
-        store, tempDir("bloom_ckpt").toString,
+    def start() = SliceStore.Bloom.stream(mem.toDF().toDF("chunk", "key"),
+        store, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
         BloomIndex.build(_, col("chunk"), col("key"), k = 3, mBits = 1024))
       .start()
+    val q = start()
     val b1 = (0 until 100).map(i => (i / 40L, i.toLong))
     val b2 = (100 until 160).map(i => (i / 40L, i.toLong)) // extends chunk 2, adds 3
     mem.addData(b1: _*)
@@ -1069,9 +1163,10 @@ class StreamsSpec extends SparkTestBase {
     val rebuilt = m(BloomIndex.build((b1 ++ b2).toDF("chunk", "key"),
       col("chunk"), col("key"), 3, 1024))
     assert(served == rebuilt, "served index diverged from full rebuild")
-    // replay: OR is idempotent — no batch ids, no dedup, still exact
-    val slice = spark.read.parquet(store).limit(50)
-    slice.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
+    // a real replay of batch 1 commits nothing
+    val v = storeVersion(store)
+    replayLastBatch(ckpt)(start())
+    assert(storeVersion(store) == v, "the replayed batch committed")
     assert(m(SliceStore.Bloom.view(spark, store)) == rebuilt,
       "replayed appendix changed the index")
   }
@@ -1109,12 +1204,6 @@ class StreamsSpec extends SparkTestBase {
         .shiftright(col("x"), 4))
     assert(snap(SliceStore.ZoneStats.view(spark, store)) ==
       snap(Layout.rawZoneMap(all, col("z_bucket"), Seq("x", "y"))))
-    // replayed slice 0: min/max absorb it, n_rows deduped per batch
-    val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
-    slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    assert(snap(SliceStore.ZoneStats.view(spark, store)) ==
-      snap(Layout.rawZoneMap(all, col("z_bucket"), Seq("x", "y"))),
-      "replayed appendix changed the served stats")
   }
 
   test("zoneMapStream: appended slices merge to the exact batch zone map") {
@@ -1143,13 +1232,6 @@ class StreamsSpec extends SparkTestBase {
     val full = Layout.zoneMap((b1 ++ b2).toDF("x", "y"), nx, ny, 4)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     assert(served == full)
-    // replayed batch: appending a duplicate of slice 0 must not change
-    // the served view (per-(batch_id, bucket) dedup)
-    val slice0 = spark.read.parquet(store).where(col("batch_id") === 0)
-    slice0.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(store)
-    val replayed = SliceStore.ZoneMap.view(spark, store)
-      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-    assert(replayed == full)
   }
 
   test("ivfIndexStream: slices accumulate a list-partitioned index; " +
@@ -1172,12 +1254,14 @@ class StreamsSpec extends SparkTestBase {
     val model = Ivf.fitDistributed(all, col("vec_id"), col("embedding"),
       nlist = 3, maxIter = 10, seed = 7L)
     val store = tempDir("ivf_index_store").toString
+    val ckpt = tempDir("ivf_index_ckpt").toString
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = SliceStore.Ivf.stream(mem.toDF().toDF("vec_id", "embedding"),
-        store, tempDir("ivf_index_ckpt").toString,
+    def start() = SliceStore.Ivf.stream(mem.toDF().toDF("vec_id", "embedding"),
+        store, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))(
         Ivf.assign(model, _, col("vec_id"), col("embedding")))
       .start()
+    val q = start()
     mem.addData(batch1: _*)
     q.processAllAvailable()
     mem.addData(batch2: _*)
@@ -1202,17 +1286,15 @@ class StreamsSpec extends SparkTestBase {
         .as[(Long, Long, Int)].collect().toSet
     val exp = res(Ivf.topK(model, fresh, queries, col("qid"), col("qv"),
       k = 5, nprobe = 2, excludeSelf = false))
-    assert(res(Ivf.topKStored(model, view, queries, col("qid"), col("qv"),
+    assert(res(Ivf.topK(model, view, queries, col("qid"), col("qv"),
       k = 5, nprobe = 2, excludeSelf = false)) == exp)
-    // replay attack: re-append batch 2's slice verbatim (same batch_id,
-    // the at-least-once failure mode) — topKStored's post-prune dedup
-    // must keep the answer identical
-    Ivf.assign(model, batch2.toDF("vec_id", "embedding"), col("vec_id"),
-        col("embedding"))
-      .withColumn("batch_id", lit(1L))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("list_id").parquet(store)
-    assert(res(Ivf.topKStored(model,
+    // a real replay of batch 2 (the at-least-once failure mode) commits
+    // nothing: no duplicate rows, the same answer
+    val v = storeVersion(store)
+    replayLastBatch(ckpt)(start())
+    assert(storeVersion(store) == v, "the replayed batch committed")
+    assert(SliceStore.Ivf.view(spark, store).count() == 30L)
+    assert(res(Ivf.topK(model,
       SliceStore.Ivf.view(spark, store), queries, col("qid"), col("qv"),
       k = 5, nprobe = 2, excludeSelf = false)) == exp)
   }
