@@ -26,8 +26,7 @@ final case class TableResult(table: String, rows: Long, served: Long,
                              consistent: Boolean)
 
 final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
-                            val stagingDir: String, val mode: SaveMode,
-                            val stagingFormat: String = "parquet") {
+                            val stagingDir: String, val mode: SaveMode) {
 
   private type Entry = (String, Either[Throwable, TableResult])
 
@@ -191,8 +190,7 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
       case _ => ()
     }
     ParquetSink.write(out, path, m,
-      partitionBy = if (loadDate.isDefined) Seq("load_date") else Nil,
-      format = stagingFormat)
+      partitionBy = if (loadDate.isDefined) Seq("load_date") else Nil)
     loadDate.foreach { d =>
       if (zoneMapCols.nonEmpty) refreshZoneMapStats(out, path, d, m,
         zoneMapCols)
@@ -205,8 +203,7 @@ final class PipelineContext(val spark: SparkSession, val sink: ServingSink,
       case None    => serving.write(out, contract.table, m)
     }
     val (staged, served, ok) =
-      Reconcile.check(spark, path, out.schema, serving, contract.table,
-        stagingFormat)
+      Reconcile.check(spark, path, out.schema, serving, contract.table)
     TableResult(contract.table, staged, served, ok)
   }
 

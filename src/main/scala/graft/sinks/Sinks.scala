@@ -1,5 +1,7 @@
 package graft.sinks
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -81,7 +83,10 @@ class JdbcSink(url: String, user: String, password: String,
 
 /** In-memory mock for tests: records DDL, stores row counts — dated
   * writes tracked per (table, date) so partition-level overwrites model
-  * the JDBC delete-then-append faithfully.
+  * the JDBC delete-then-append faithfully. A write runs the job shape
+  * of the [[JdbcSink]] write it stands in for: one job that consumes
+  * every row (a `noop` write), with the rows counted on that job by an
+  * `Observation` rather than by a `count()` of its own.
   */
 class MockServingSink extends ServingSink {
   val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -89,10 +94,17 @@ class MockServingSink extends ServingSink {
   private val counts =
     scala.collection.mutable.Map.empty[(String, Option[java.sql.Date]), Long]
   override def execute(sql: String): Unit = synchronized { ddl += sql }
-  // the row count runs OUTSIDE the monitor: a Spark job held under it
+  // the write job runs OUTSIDE the monitor: a Spark job held under it
   // would block every other caller of a shared mock for the job's length
+  private def served(df: DataFrame): Long = {
+    val rows = org.apache.spark.sql.Observation()
+    df.observe(rows, org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)).as("n"))
+      .write.format("noop").mode(SaveMode.Overwrite).save()
+    rows.get("n").asInstanceOf[Long]
+  }
   override def write(df: DataFrame, table: String, mode: SaveMode): Unit = {
-    val n = df.count()
+    val n = served(df)
     synchronized {
       val k = (table, Option.empty[java.sql.Date])
       if (mode == SaveMode.Append) counts(k) = counts.getOrElse(k, 0L) + n
@@ -104,7 +116,7 @@ class MockServingSink extends ServingSink {
   }
   override def writeDated(df: DataFrame, table: String, mode: SaveMode,
                           dateCol: String, date: java.sql.Date): Unit = {
-    val n = df.count()
+    val n = served(df)
     synchronized {
       val k = (table, Some(date): Option[java.sql.Date])
       if (mode == SaveMode.Append) counts(k) = counts.getOrElse(k, 0L) + n
@@ -252,16 +264,32 @@ case class Contract(table: String, schema: StructType) {
 }
 
 object Reconcile {
-  /** O4: dual-sink consistency — staging count vs serving count.
-    * `schema` is the schema of the frame just written to `stagingPath`:
-    * reading with it skips the schema inference a schema-less load runs
-    * as a job of its own (a footer read per table).
+  /** O4: dual-sink consistency — staging count vs serving count, with no
+    * Spark job. `staged` is the sum of the row-group row counts in the
+    * Parquet footers of the files a scan of `stagingPath` reads: the
+    * file set comes from that scan's own listing (read with `schema`,
+    * the schema of the frame just written, so no inference job runs),
+    * and it is the count Spark's column-less Parquet `count()` returns,
+    * which reads the same row-group counts. Driver cost: one listing and
+    * one footer read per staged file. A file in the table directory that
+    * is not Parquet fails the footer read, as it fails the scan.
     */
   def check(spark: SparkSession, stagingPath: String, schema: StructType,
-            sink: ServingSink, table: String,
-            format: String = "parquet"): (Long, Long, Boolean) = {
-    val staged = spark.read.format(format).schema(schema).load(stagingPath)
-      .count()
+            sink: ServingSink, table: String): (Long, Long, Boolean) = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    // one conf for every footer: opening a file with no conf of its own
+    // builds (and parses the XML defaults of) a fresh one per file
+    val conf = spark.sessionState.newHadoopConf()
+    val staged = spark.read.schema(schema).parquet(stagingPath).inputFiles
+      .map { f =>
+        val file = HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf)
+        // NO_FILTER keeps the row groups, and with them their row counts
+        ParquetFooterReader.readFooter(file, ParquetMetadataConverter.NO_FILTER)
+          .getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
     val served = sink.count(table)
     (staged, served, staged == served)
   }

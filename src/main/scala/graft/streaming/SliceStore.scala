@@ -27,7 +27,9 @@ import graft.operators.Maintenance.CompactionResult
   *     merge and commits a version that removes them and adds the fold.
   *     Its removals are files of its own snapshot only, so a concurrent
   *     append survives; a crash before the commit leaves the store as it
-  *     was.
+  *     was (its fold stays on disk, unread), and a commit that throws —
+  *     a concurrent compaction retired part of the snapshot — deletes
+  *     the fold it staged.
   *
   * Replay: the log commits each `(appId, batchId)` transaction at most
   * once ([[StoreLog]]), so a replayed `foreachBatch` call appends
@@ -93,13 +95,15 @@ final class SliceStore private (
       s"compact-${java.util.UUID.randomUUID().toString.take(8)}",
       partitionColumn)
     val snapped = snapshot.map(_.path).toSet
-    val (_, committed) = log.commit(None) { latest =>
+    // only this compaction's fresh tag names `added`: when the commit
+    // throws, no one else can own them
+    val (_, committed) = try log.commit(None) { latest =>
       val live = StoreLog.files(latest)
       require(snapped.subsetOf(live.map(_.path).toSet),
         s"$kind store $path: a concurrent compaction retired part of " +
           "this one's snapshot; re-run it on the new version")
       live.filterNot(f => snapped(f.path)) ++ added
-    }.get
+    }.get catch { case e: Throwable => log.discard(added); throw e }
     CompactionResult(snapshot.size, snapshot.map(_.size).sum,
       committed.files.size, committed.files.map(_.size).sum)
   }

@@ -206,9 +206,15 @@ final class StoreLog(spark: SparkSession, root: String) {
     val mine = StoreLog.dataFiles(fs, rootPath)
       .filter(_.getPath.getName.startsWith(txn.tag + "."))
       .map(_.getPath.toUri.getPath.stripPrefix(base + "/"))
-    if (mine.nonEmpty)
-      deleteFiles(mine.toSet -- versions().flatMap(_._2.files.map(_.path)))
+    if (mine.nonEmpty) deleteUnnamed(mine.toSet)
   }
+
+  /** Delete `staged` files that no retained version names: what a
+    * commit that threw (a refused compaction) staged for itself. */
+  def discard(staged: Seq[StoreFile]): Unit = deleteUnnamed(staged.map(_.path).toSet)
+
+  private def deleteUnnamed(rel: Set[String]): Unit =
+    deleteFiles(rel -- versions().flatMap(_._2.files.map(_.path)))
 
   /** Purge versions older than the newest `retain` (`newest` and the
     * ones before it), deleting the files only they named. */

@@ -395,6 +395,37 @@ class MaintenanceSpec extends SparkTestBase {
       r.toString)
   }
 
+  test("a compaction refused because a concurrent compaction retired " +
+    "part of its snapshot leaves no compact- file behind") {
+    import org.apache.spark.sql.functions.col
+    val store = tempDir("refused_cstore").toString
+    def append(batch: Long, rows: Seq[(String, Int)]): Unit =
+      SliceStore.Count.append(graft.operators.Anomaly.countSeries(
+        rows.toDF("g", "b"), col("g"), col("b")), Txn("w", batch), store)
+    def compactFiles = new java.io.File(store).listFiles()
+      .map(_.getName).filter(_.startsWith("compact-")).toSet
+    append(0, Seq.fill(4)(("a", 1)))
+    append(1, Seq.fill(6)(("a", 2)))
+    def snap = SliceStore.Count.view(spark, store)
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val before = snap
+    // the tap runs after the snapshot is resolved: a second compaction
+    // that commits from inside it retires that snapshot
+    var inner = false
+    val e = intercept[IllegalArgumentException](
+      SliceStore.Count.compactWith(spark, store, { df =>
+        if (!inner) { inner = true; SliceStore.Count.compact(spark, store) }
+        df
+      }))
+    assert(inner && e.getMessage.contains("retired part of"), e.getMessage)
+    val live = new graft.streaming.StoreLog(spark, store).latest().get._2
+      .files.map(_.path).filter(_.startsWith("compact-")).toSet
+    assert(live.size == 1, live.toString)
+    assert(compactFiles == live,
+      s"the refused compaction left ${compactFiles -- live} on disk")
+    assert(snap == before)
+  }
+
   test("a store compaction that crashed after its commit, before " +
     "deleting the files it retired, serves the folded rows; the next " +
     "commit deletes them") {

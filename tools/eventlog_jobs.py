@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """One row per Spark job from a Spark event log.
 
-  python3 tools/eventlog_jobs.py <event-log-dir> [--jobs N-M] [--by-site]
+  python3 tools/eventlog_jobs.py <event-log-dir> [--jobs N-M] [--by-site | --sql-split]
 
 For every application log in the directory (oldest first), prints per
 job: the job id, the SQL execution id that submitted it (`-` if none),
@@ -18,6 +18,14 @@ description plus the first `graft.` frame of its call stack (the
 execution's `details`), so e.g. every `count()` of the serving sink's
 write is one site; any other job is keyed by its result stage's name
 (`count at Sinks.scala:95`).
+
+`--sql-split` prints one row per call site of SQL executions, most time
+first: the number of executions and their summed wall time, split into
+the time before the execution's first job started (driver-side planning),
+from its first job's start to its last job's end (inside jobs), and after
+its last job ended (e.g. a write's commit). An execution that ran no job
+counts whole as "before". Sites are keyed as for `--by-site`; with
+`--jobs`, only executions that ran a kept job are shown.
 
 Spark 4 writes each application's log as a rolling-log directory
 (`eventlog_v2_<app>/events_<n>_<app>[.zstd]`); its parts are read in
@@ -81,6 +89,7 @@ def events(files):
 
 
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
 
 
 def graft_frame(details):
@@ -93,13 +102,19 @@ def graft_frame(details):
 
 
 def jobs_of(evs):
-    """(job rows, application name) from one application's events."""
-    jobs, stage_job, stages, app, sql = {}, {}, {}, "?", {}
+    """(job rows, SQL executions, application name) from one
+    application's events."""
+    jobs, stage_job, stages, app, sql, spans = {}, {}, {}, "?", {}, {}
     for e in evs:
         kind = e.get("Event")
         if kind == SQL_START:
             sql[str(e.get("executionId"))] = (
                 f"{e.get('description', '?')} @ {graft_frame(e.get('details'))}")
+            spans[str(e.get("executionId"))] = [e.get("time"), None]
+        elif kind == SQL_END:
+            span = spans.get(str(e.get("executionId")))
+            if span is not None:
+                span[1] = e.get("time")
         elif kind == "SparkListenerApplicationStart":
             app = e.get("App ID") or e.get("App Name", "?")
         elif kind == "SparkListenerJobStart":
@@ -140,8 +155,10 @@ def jobs_of(evs):
                      "stages": "; ".join(f"{s['name']} ({s['tasks']})" for s in ran),
                      "tasks": sum(s["tasks"] for s in ran),
                      "run_ms": sum(s["run_ms"] for s in ran),
-                     "wall_ms": wall})
-    return rows, app
+                     "start": j["start"], "end": j["end"], "wall_ms": wall})
+    executions = [{"exec": x, "site": sql[x], "start": t0, "end": t1}
+                  for x, (t0, t1) in spans.items() if t0 is not None and t1]
+    return rows, executions, app
 
 
 def print_jobs(rows):
@@ -164,12 +181,42 @@ def print_sites(rows):
         print(f"  {s['jobs']:>5} {s['wall_ms']:>8} {s['run_ms']:>8}  {site}")
 
 
+def print_sql_split(rows, executions):
+    """Per call site: SQL-execution time before, inside and after its jobs."""
+    by_exec = {}
+    for r in rows:
+        if r["start"] is not None and r["end"] is not None:
+            by_exec.setdefault(r["exec"], []).append(r)
+    sites = {}
+    for x in executions:
+        s = sites.setdefault(x["site"], {"n": 0, "wall": 0, "before": 0,
+                                         "inside": 0, "after": 0})
+        wall = x["end"] - x["start"]
+        js = by_exec.get(x["exec"], [])
+        first = min((j["start"] for j in js), default=x["end"])
+        last = max((j["end"] for j in js), default=x["end"])
+        s["n"] += 1
+        s["wall"] += wall
+        s["before"] += first - x["start"]
+        s["inside"] += last - first
+        s["after"] += x["end"] - last
+    print(f"  {'execs':>5} {'wall_ms':>8} {'before':>8} {'inside':>8} "
+          f"{'after':>8}  site")
+    for site, s in sorted(sites.items(), key=lambda kv: (-kv[1]["wall"], kv[0])):
+        print(f"  {s['n']:>5} {s['wall']:>8} {s['before']:>8} {s['inside']:>8} "
+              f"{s['after']:>8}  {site}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("path", help="event-log directory (spark.eventLog.dir)")
     ap.add_argument("--jobs", help="job id range N-M (inclusive)")
-    ap.add_argument("--by-site", action="store_true",
-                    help="one row per call site instead of per job")
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--by-site", action="store_true",
+                      help="one row per call site instead of per job")
+    mode.add_argument("--sql-split", action="store_true",
+                      help="per call site, SQL-execution time before, "
+                           "inside and after its jobs")
     a = ap.parse_args()
     lo, hi = 0, sys.maxsize
     if a.jobs:
@@ -179,10 +226,16 @@ def main():
     if not logs:
         raise SystemExit(f"no event logs under {a.path}")
     for files in logs:
-        rows, app = jobs_of(events(files))
+        rows, executions, app = jobs_of(events(files))
         rows = [r for r in rows if lo <= r["job"] <= hi]
         print(f"{app}: {len(rows)} jobs, {sum(r['tasks'] for r in rows)} tasks")
-        (print_sites if a.by_site else print_jobs)(rows)
+        if a.sql_split:
+            if a.jobs:
+                kept = {r["exec"] for r in rows}
+                executions = [x for x in executions if x["exec"] in kept]
+            print_sql_split(rows, executions)
+        else:
+            (print_sites if a.by_site else print_jobs)(rows)
 
 
 if __name__ == "__main__":
